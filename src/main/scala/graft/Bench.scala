@@ -8,8 +8,8 @@ object Bench {
   /** The timed terminal: a full-plan noop write, NOT count(). A bare
     * count() lets Catalyst prune everything cardinality-preserving that
     * the count doesn't need — unique-key left joins, windows, generates,
-    * whole aggregate subtrees (measured by `graft.CountPlan`: 38 of 175
-    * keys lost operators, text_lm_score lost its entire LM join) — so a
+    * whole aggregate subtrees (measured by `graft.Probe countplan`: 38 of
+    * 175 keys lost operators, text_lm_score lost its entire LM join) — so a
     * count-driven benchmark was timing a DIFFERENT, lighter query. The
     * noop sink executes the declared plan with every output column
     * (including the deterministic output sort the oracle gate also pays)
@@ -17,24 +17,31 @@ object Bench {
   def exec(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
+  /** Runs `body`; a failure is reported on stderr, never swallowed. */
+  private def attempt(label: String)(body: => Unit): Boolean =
+    try { body; true }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $label FAILED: ${e.getClass.getName}: ${e.getMessage}")
+      false
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional local-iteration filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 times
+    // just those queries (the driver never sets it — full run). Unknown
+    // names are refused here, before the session starts.
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(SparkEntry.select(_).toSet)
+    val spark = GraftSession.local()
     // Warm-up pass: run every query once untimed. This amortizes one-time
     // costs that are not query throughput — Janino whole-stage-codegen
     // compilation, JIT warm-up, parquet footer caching. The timed pass then
     // measures steady-state execution, which is what scales with data size.
-    // Optional local-iteration filter: SPARK_GRAFT_BENCH_ONLY=q1,q2 times
-    // just those queries (the driver never sets it — full run).
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     ordered.foreach { case (name, fn) =>
       val w0 = System.nanoTime()
-      try { exec(fn(spark, sfDir)) } catch { case _: Throwable => () }
+      attempt(s"warmup $name")(exec(fn(spark, sfDir)))
       System.err.println(f"[bench] warmup $name ${(System.nanoTime() - w0) / 1e9}%.1fs")
       spark.catalog.clearCache()
       // Reclaim the key's shuffle files NOW: ContextCleaner deletes them
@@ -63,11 +70,7 @@ object Bench {
     // timing independent of what ran before it.
     def timedPass(): Seq[(String, Double, Boolean)] = ordered.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok =
-        try { exec(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); false
-        }
+      val ok = attempt(name)(exec(fn(spark, sfDir)))
       val t = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] timed $name $t%.1fs")
       spark.catalog.clearCache()

@@ -59,8 +59,13 @@ object GraftSession {
       .config(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";")
         .filter(_.contains("=")).map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap)
 
+  /** The session every main runs on: `$SPARK_GRAFT_CPUS` local cores,
+    * by default all of the machine's processors, logging at WARN. */
   def local(): SparkSession = {
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    builder(cores).getOrCreate()
+    val cores = sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+    val spark = builder(cores).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

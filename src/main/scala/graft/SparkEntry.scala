@@ -24,6 +24,22 @@ object SparkEntry {
       TrainingQueries.queries ++ MediaQueries.queries ++ EcomQueries.queries ++
       E2EQueries.queries ++ GraphQueries.queries ++ TimeSeriesQueries.queries
 
+  /** The keys a comma-separated list names, in the order given; `ALL`
+    * selects every key, sorted. Any name not in [[queries]] is refused
+    * before work starts, all of them in one message: a misspelled key must
+    * not silently verify or time nothing. */
+  def select(csv: String): Seq[String] = {
+    val known = queries
+    if (csv == "ALL") known.keys.toSeq.sorted
+    else {
+      val keys = csv.split(",", -1).toSeq.distinct
+      val unknown = keys.filterNot(known.contains)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"unknown query keys: ${unknown.map(k => s"'$k'").mkString(", ")}")
+      keys
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

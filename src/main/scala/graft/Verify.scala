@@ -3,7 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A key whose dump
+  * throws fails the run: every other output is still written, then the
+  * failed keys are listed on stderr and the exit code is 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // A space-separated key list would silently verify only args(2) and
@@ -12,39 +14,52 @@ object Verify {
       s"usage: Verify <sfDir> <outDir> [comma,separated,keys] — got " +
         s"${args.length} args (join key lists with commas, not spaces)")
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional 3rd arg: comma-separated query names (fast local iteration).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional 3rd arg: comma-separated query names (fast local iteration);
+    // unknown names are refused before the session starts.
+    val only: Option[Set[String]] = args.lift(2).map(SparkEntry.select(_).toSet)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Queries are independent — run them as concurrent Spark jobs so the
     // scheduler overlaps their stages (cuts wall time ~3x vs sequential).
-    // Pool width follows SPARK_GRAFT_CPUS like the executor threads do
+    // Pool width follows the session's cores like the executor threads do
     // (VERDICT r15 #6): a fixed 4 leaves an 8+-CPU dump driver-bound —
     // queries plan on the driver before their tasks fan out, so the pool
     // must scale with the box. Floor 4 keeps small boxes overlapping I/O
     // with compute; cap 16 bounds concurrent result buffers.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(math.max(cpus, 4), 16))
+      math.min(math.max(spark.sparkContext.defaultParallelism, 4), 16))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futures = selected.toSeq.map { case (name, fn) =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
         }
       }
     }
-    scala.concurrent.Await.result(
+    val failed = scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
-      scala.concurrent.duration.Duration.Inf)
+      scala.concurrent.duration.Duration.Inf).flatten.sorted
     pool.shutdown()
+    writeOracleSql(outDir, only)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.length} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes `<outDir>/oracle_sql.json`, the DuckDB replay of every key.
+    * With a key subset (`only`), entries already in the file for other
+    * keys are kept. */
+  private[graft] def writeOracleSql(outDir: String, only: Option[Set[String]]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -75,6 +90,5 @@ object Verify {
     val json = merged
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -128,7 +128,7 @@ object AnalyticsQueries {
     * supports {3×2, 2×3571, 1×1.19M}), which needs K+1 > n/2 ≈ 600k for
     * the support-2 tier to certify. 2²⁰ clears that with headroom.
     *
-    * MEASURED on Zipf(1) co-purchase data (r12, `graft.TopkProbe` on the
+    * MEASURED on Zipf(1) co-purchase data (PERF.md round 12, on the
     * ScaleGen `skew` corpora): the smallest certifying capacity
     * k\* = ⌊n/s20⌋+1 is 681 / 1106 / 1678 across the skew0.01→skew1
     * CENTURY (n = 105 k → 10.9 M pairs) — sub-linear growth, so one
@@ -166,14 +166,7 @@ object AnalyticsQueries {
     * into a broadcast, and the pair total rides the same row into the
     * certification filter — no data-adjacent driver hop anywhere. */
   private val anBasketPairsTopk: Q = (s, dir) =>
-    basketPairsTopkWith(s, dir, BasketTopkK)
-
-  /** [[anBasketPairsTopk]] body with the MG capacity as a parameter —
-    * the query key always runs [[BasketTopkK]] (the oracle bakes that
-    * threshold in); `graft.TopkProbe` runs small K against a measured
-    * Zipf support law to earn the K ≪ 2²⁰ story (VERDICT r11 #1). */
-  private[graft] def basketPairsTopkWith(s: SparkSession, dir: String,
-      k: Int): DataFrame = basketTopkCore(s, dir, k)._1
+    basketTopkCore(s, dir, BasketTopkK)._1
 
   /** Candidate-count gate for the recount pass's part filter: when the
     * sketch is small, the recount pair stream is pre-shrunk to orders'
@@ -276,7 +269,7 @@ object AnalyticsQueries {
     * Misra–Gries capacity from the corpus's own support law instead of
     * hardcoding the flat-corpus worst case [[BasketTopkK]] = 2²⁰ (the
     * documented 2 GiB OOM floor: 32 partitions × 2²⁰ sketch entries is
-    * what the r12 PressureProbe measured dying at 2 GiB).
+    * what PERF.md's round-12 memory-pressure run measured dying at 2 GiB).
     *
     * Pass 1: [[basketTopkCore]] at [[BasketProbeK]] — one small-state
     * sketch over the pair stream, one part-filtered exact recount. If
@@ -302,7 +295,7 @@ object AnalyticsQueries {
     * So the auto key shares `an_basket_pairs_topk`'s oracle SQL verbatim
     * and is hash-graded against it. BasketAutoKSpec pins the one-pass
     * accept, both clamp edges, and the probe-underestimate overshoot;
-    * TopkProbe's `topk_auto` row measures it on the skew ladder.
+    * PERF.md round 14 measures it on the skew ladder.
     *
     * Flat-corpus toll (VERDICT r14 nit #1): the escalation pass threads
     * the probe's PERSISTED distinct order×part stream and checkpointed

@@ -91,7 +91,7 @@ object GraphQueries {
       // no checkpoint on visited (r18): it is a union of ALREADY
       // checkpointed frontiers — plan depth O(hops), not geometric — and
       // the per-hop eager materialization was one more barrier in a key
-      // StageProbe measured as barrier-bound (Σ stage wall 2.7 s inside a
+      // `Probe stages` measured as barrier-bound (Σ stage wall 2.7 s inside a
       // 3.9 s key)
       visited = visited.unionByName(frontier)
     }
@@ -107,7 +107,7 @@ object GraphQueries {
     * The directed half is `localCheckpoint`ed BEFORE the symmetric union
     * (r17, guide §2.4): Catalyst does no common-subexpression elimination
     * across union branches, so the un-checkpointed form computed the
-    * orders⋈lineitem join + distinct once PER BRANCH — StageProbe measured
+    * orders⋈lineitem join + distinct once PER BRANCH — `Probe stages` measured
     * the 12 MB parquet join re-running 3× inside one pagerank pass (two
     * union branches + a cache-population race on the persisted union).
     * After the checkpoint the union is a narrow re-read of the
@@ -241,8 +241,8 @@ object GraphQueries {
     * splits the skewed join partition — so the twin-join + salt-column
     * overhead buys nothing under a re-plannable shuffle.
     *
-    * PAYOFF DEMONSTRATED (r12, `graft.HubLayoutBench`,
-    * bench/BENCH_hubbucket_r12_01.json): in the regime this mechanism is
+    * PAYOFF DEMONSTRATED (r12, bench/BENCH_hubbucket_r12_01.json and
+    * PERF.md "Round 12: salted PageRank"): in the regime this mechanism is
     * FOR — edges pre-BUCKETED by source (so the per-round join is
     * zero-Exchange on the edge side and AQE's OptimizeSkewedJoin has no
     * shuffle to split), rank side past the broadcast threshold — the

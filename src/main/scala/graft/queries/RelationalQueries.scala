@@ -491,7 +491,7 @@ object RelationalQueries {
     * The projection is spread across the cluster first (r18, guide §1.2
     * per-task work): two of the casts FAIL on every row ('1-URGENT' →
     * INT, 'O' → DATE), and Spark's TRY mode pays a caught exception —
-    * message construction included — per failing row. StageProbe measured
+    * message construction included — per failing row. `Probe stages` measured
     * the old plan as two single-task CPU-bound stages (2.3 s range-sample
     * + 1.5 s shuffle-write: orders parquet is one split at this SF, and
     * the sort's sampling pass re-evaluates the projection), serializing
@@ -1137,7 +1137,7 @@ object RelationalQueries {
     // distinct rows (r18, guide §2.3): the old single groupBy mixed an
     // exact countDistinct with the HLL, which plans as an Expand (every
     // input row duplicated per aggregate path) plus a distinct-agg
-    // rewrite — StageProbe measured 4.6 cpu-s in that final aggregate at
+    // rewrite — `Probe stages` measured 4.6 cpu-s in that final aggregate at
     // sf0.1. HLL is a pure function of the SET of values (a duplicate
     // cannot raise a register's max rank), so sketching the deduped rows
     // yields bit-identical registers and the exact count becomes a plain

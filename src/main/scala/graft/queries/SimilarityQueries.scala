@@ -358,7 +358,7 @@ object SimilarityQueries {
     * the cluster before per-row-expensive work; at real scale the source
     * has many splits and this shuffle is a no-op cost-wise relative to the
     * projection it parallelizes. (Shared with the text/training packs —
-    * r18 StageProbe found the same single-task disease on their heavy
+    * r18's `Probe stages` found the same single-task disease on their heavy
     * per-row keys.) */
   private[queries] def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -504,10 +504,10 @@ object SimilarityQueries {
   }
 
   // ---- minhash-banded family: shared hashed-shingle pipeline ----------
-  // (VERDICT r15 → r16 #1.) BandMass (r16) measured the band-bucket
+  // (VERDICT r15 → r16 #1.) PERF.md round 16 measured the band-bucket
   // candidate mass Σ_b c_b(c_b−1)/2 FLAT on every graded corpus — 0.09
   // candidate pairs/doc from sf0.01 through skew10, max bucket 19 of
-  // 500 k docs — so the family's wall is NOT join mass; LshProfile traced
+  // 500 k docs — so the family's wall is NOT join mass; stage profiling traced
   // 12.5 of its 15 s at skew10 to the shingle→md5→band computation, which
   // the old pipeline repeated three times (banding + both verify-join
   // sides) and whose 15-char shingle strings it shuffled through the
@@ -655,7 +655,7 @@ object SimilarityQueries {
     * linear at ANY density. Candidates are a SUBSET of the exact
     * generator's (a sig-identical pair shares every band, so it is banded
     * too), making the dominance contract provable: capped ⊆ exact, with
-    * equality wherever no bucket exceeds the cap — which BandMass measured
+    * equality wherever no bucket exceeds the cap — which PERF.md round 16 measured
     * to be every graded corpus (max bucket 19 at skew10). Recall where
     * buckets DO saturate is measured, not argued:
     * dedup_minhash_capped_recall grades |capped ∩ exact| / |exact| the way
@@ -840,9 +840,9 @@ object SimilarityQueries {
   // index and persists it ([[BatchState]]), batch 2 reads the LANDED
   // state back and probes it one-sidedly. The oracles read the same
   // landed files, so a state-WRITE bug — not just probe math — lands in
-  // the hash compare. Build/probe are separate seams so IncBatch (the
-  // index-size-freedom measurement) can time the probe alone at a FIXED
-  // batch size against indexes a decade apart.
+  // the hash compare. Build/probe are separate seams, so the probe can be
+  // timed alone: at a FIXED batch size its wall stays flat against
+  // indexes a decade apart (PERF.md round 16, index-size freedom).
 
   /** Batch-1: band index + hashed-shingle features of docs < `split`,
     * persisted. */

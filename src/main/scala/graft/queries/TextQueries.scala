@@ -136,7 +136,7 @@ object TextQueries {
 
   /** Deterministic fingerprints: order-insensitive md5 of normalized text
     * plus the order-sensitive polynomial rolling hash.
-    * Spread first (r18): StageProbe measured the old plan as two
+    * Spread first (r18): `Probe stages` measured the old plan as two
     * single-task CPU stages (1.8 s + 1.5 s at sf0.1 — one parquet split,
     * and the output sort's range-sampling pass re-evaluates the
     * projection), i.e. the per-doc hashing ran twice on one core. Pure
@@ -172,7 +172,7 @@ object TextQueries {
   private val textLangidTrained: Q = (s, dir) => {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
-    // spread the trigram fan-out (r18): StageProbe measured it as ONE
+    // spread the trigram fan-out (r18): `Probe stages` measured it as ONE
     // 2.4 s single-task CPU stage at sf0.1 (single parquet split); the
     // profile/score aggregates are order-free integer counts
     val grams = SimilarityQueries.spread(docs)
@@ -293,7 +293,7 @@ object TextQueries {
       }
     }
     }
-    // spread the digest projection (r18): StageProbe measured two ~1 s
+    // spread the digest projection (r18): `Probe stages` measured two ~1 s
     // single-task CPU stages at sf0.1 (single parquet split + the output
     // sort's sampling pass); pure per-row work, values can't move
     SimilarityQueries.spread(Tables(s, dir, "documents"))
@@ -396,7 +396,7 @@ object TextQueries {
     * in SQL — the sketch is deterministic, so every cell hash-matches. */
   private val textCmsFreq: Q = (s, dir) => {
     import s.implicits._
-    // spread the tokenize fan-out (r18): StageProbe measured three ~1.25 s
+    // spread the tokenize fan-out (r18): `Probe stages` measured three ~1.25 s
     // single-task CPU stages (the sketch pass, the exact pass, and the
     // output sort's sampling pass each re-run the projection over the one
     // parquet split); counts are order-free

@@ -70,7 +70,7 @@ object TrainingQueries {
     val bigrams = zip_with(
       slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
       (a, b) => concat_ws(" ", a, b))
-    // spread (r18): StageProbe measured two single-task CPU stages
+    // spread (r18): `Probe stages` measured two single-task CPU stages
     // (0.96 s + 0.61 s at sf0.1) — pure per-row projection over the one
     // parquet split, re-run by the output sort's sampling pass
     SimilarityQueries.spread(Tables(s, dir, "documents"))
@@ -749,8 +749,8 @@ object TrainingQueries {
     * regime is the same plan over the new batch only. */
   private val sampleDsir: Q = (s, dir) => {
     import s.implicits._
-    // spread the tokenize+bigram+hash fan-out (r18): StageProbe measured
-    // it as three ~1.2 s single-task CPU stages at sf0.1 (single parquet
+    // spread the tokenize+bigram+hash fan-out (r18): `Probe stages`
+    // measured it as three ~1.2 s single-task CPU stages at sf0.1 (single parquet
     // split, two consumers + the output sort's sampling pass); every
     // downstream aggregate is an order-free integer sum
     val toks = SimilarityQueries.spread(Tables(s, dir, "documents"))

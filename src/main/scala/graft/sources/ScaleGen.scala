@@ -384,9 +384,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: ScaleGen <outDir> <sf> [seed] [fixed|zipf|hub|skew] [table,table,...]")
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     generate(spark, args(0), args(1).toDouble,
       if (args.length > 2) args(2).toLong else 42L,
       if (args.length > 3) args(3) else "fixed",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.queries.SimilarityQueries
 
 /** Governance of the minhash band-bucket stream (VERDICT r15 #1): the
-  * last exact family without a mass fence. BandMass (r16) measured the
+  * last exact family without a mass fence. PERF.md round 16 measured the
   * band-join candidate mass FLAT on every graded corpus (0.09 pairs/doc,
   * max bucket 19 of 500 k docs at skew10), so the fence's failure mode
   * must be constructed: a duplicate-saturated corpus where one band value

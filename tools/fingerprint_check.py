@@ -4,11 +4,9 @@ the pandas gate (the r15 skew10 interval-join protocol, generalized).
 
 Usage: python3 tools/fingerprint_check.py <dump_dir> <sf_dir> [key,key,...]
 
-For each <dump_dir>/<key> parquet directory (written by graft.Dump) with
-an oracle in <dump_dir>/oracle_sql.json OR the repo's committed
-oracle_sql (falls back to running graft.Verify's map via the sibling
-verify out dir's oracle_sql.json passed as dump_dir/oracle_sql.json):
-computes (count, SUM(hash(list_value(c1, c2, ...))), columns sorted by
+For each <dump_dir>/<key> parquet directory with an oracle in
+<dump_dir>/oracle_sql.json (`graft.Probe dump` writes both; a graft.Verify
+out dir works too): computes (count, SUM(hash(list_value(c1, c2, ...))), columns sorted by
 name) over BOTH the Spark parquet and the oracle SQL replay on the sf
 tables, and reports OK/MISMATCH. The LIST hash keeps column boundaries
 and NULLs first-class (ADVICE r16: the old '|'-concat with a '<null>'
