@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Lloyd's k-means over embedding columns as pure DataFrame ops — trains
   * the IVF coarse quantizer that [[graft.queries.SimilarityQueries]]'s
@@ -23,7 +22,7 @@ import org.apache.spark.sql.expressions.Window
   *    cent_id; fixed iteration count. Every step is replayable in SQL.
   *
   * Scale shape per iteration: one broadcast join (k centroids against n
-  * vectors) + rank-1 window for assignment, one posexplode + two-level
+  * vectors) + argmax aggregate for assignment, one posexplode + two-level
   * aggregation for the update — O(n·k·d) compute, no n² anywhere, k rows
   * of state between iterations.
   */
@@ -61,7 +60,7 @@ object KMeans {
   def icosPrenormed(dot: Column, na: Column, nb: Column): Column =
     dot / (na * nb)
 
-  /** The argmax tiebreak [[assign]]/[[assignSub]] share: max over
+  /** The argmax tiebreak of [[assignKeep]]: max over
     * struct(cos, −cent_id) picks the highest cosine and, on ties, the
     * LOWEST cent_id — the same (cos desc, cent_id asc) order the old
     * rank-1 window implemented. A hash aggregate replaces the window
@@ -72,146 +71,113 @@ object KMeans {
   private def best(cos: Column, centId: Column): Column =
     max(struct(cos.as("c"), (-centId).as("nc")))
 
-  /** Rank-1 nearest-centroid assignment: (id, cent_id). `cents` must be
+  /** Nearest-centroid assignment: (id, cent_id). `cents` must be
     * broadcastable (k rows). */
   def assign(q: DataFrame, cents: DataFrame): DataFrame =
-    assignKeep(q, cents).select(col("id"), col("cent_id"))
+    assignKeep(q, cents, Nil).select(col("id"), col("cent_id"))
 
-  /** [[assign]] keeping the row's `qv` (constant per id, so `first` in
-    * the same aggregate is deterministic) — lets [[fit]]'s update read
-    * member vectors straight off the assignment instead of re-joining
-    * the corpus by id (two exchanges per iteration saved).
-    *
-    * PRECONDITION: `id` is unique in `q`. The groupBy(id)+first(qv)
-    * collapses duplicate-id rows to one, whereas the old assign-then-
-    * rejoin shape fanned duplicates back into the centroid sums — every
-    * caller here feeds vec_id-unique corpora (and [[fit]]'s dense-id seed
-    * check would already trip on most duplicate-id inputs), but a new
-    * caller with a non-unique id corpus would silently train on
-    * deduplicated vectors. */
-  private def assignKeep(q: DataFrame, cents: DataFrame): DataFrame = {
-    val qn = q.withColumn("__qn", inorm(col("qv")))
-    val cn = broadcast(cents.select(col("cent_id"), col("cvec"))
-      .withColumn("__cn", inorm(col("cvec"))))
-    qn.crossJoin(cn)
-      .select(col("id"), col("qv"), col("cent_id"),
-        icosPrenormed(idot(col("qv"), col("cvec")), col("__qn"), col("__cn"))
-          .as("__cos"))
-      .groupBy(col("id"))
-      .agg(best(col("__cos"), col("cent_id")).as("__b"), first(col("qv")).as("qv"))
-      .select(col("id"), (-col("__b.nc")).as("cent_id"), col("qv"))
-  }
-
-  /** Rank-1 nearest-centroid assignment per SUBSPACE: input rows
-    * (id, j, qv), centroids (j, cent_id, cvec, ...) — broadcastable
-    * (subspaces × k rows). Returns (id, j, cent_id). Same hoisted norms
-    * + argmax aggregate as [[assign]], keyed (id, j). */
+  /** Nearest-centroid assignment per SUBSPACE: input rows (id, j, qv),
+    * centroids (j, cent_id, cvec, ...) — broadcastable (subspaces × k
+    * rows). Returns (id, j, cent_id). */
   def assignSub(sub: DataFrame, cents: DataFrame): DataFrame =
-    assignSubKeep(sub, cents).select(col("id"), col("j"), col("cent_id"))
+    assignKeep(sub, cents, Seq("j")).select(col("id"), col("j"), col("cent_id"))
 
-  private def assignSubKeep(sub: DataFrame, cents: DataFrame): DataFrame = {
-    val qn = sub.withColumn("__qn", inorm(col("qv")))
-    val cn = broadcast(cents.select(col("j"), col("cent_id"), col("cvec"))
+  /** The one assignment kernel: each (id, keys) row of `q` against the
+    * broadcast centroids of its key group, norms hoisted to one per row,
+    * [[best]] as the argmax. Returns (id, keys…, cent_id, qv) — keeping
+    * the row's `qv` (constant per group, so `first` in the same aggregate
+    * is deterministic) lets the Lloyd update read member vectors straight
+    * off the assignment instead of re-joining the corpus (r17: two
+    * exchanges per iteration saved). With no keys the join is the plain
+    * broadcast cartesian product.
+    *
+    * PRECONDITION: (id, keys) is unique in `q`. The groupBy+first(qv)
+    * collapses duplicate rows to one, whereas an assign-then-rejoin shape
+    * would fan duplicates back into the centroid sums — every caller here
+    * feeds vec_id-unique corpora (and [[lloyd]]'s seed check trips on most
+    * duplicate-id inputs), but a new caller with a non-unique id corpus
+    * would silently train on deduplicated vectors. */
+  private def assignKeep(q: DataFrame, cents: DataFrame, keys: Seq[String]): DataFrame = {
+    val kc = keys.map(col)
+    val qn = q.withColumn("__qn", inorm(col("qv")))
+    val cn = broadcast(cents.select(kc :+ col("cent_id") :+ col("cvec"): _*)
       .withColumn("__cn", inorm(col("cvec"))))
-    qn.join(cn, Seq("j"))
-      .select(col("id"), col("j"), col("qv"), col("cent_id"),
+    (if (keys.isEmpty) qn.crossJoin(cn) else qn.join(cn, keys))
+      .select(col("id") +: kc :+ col("qv") :+ col("cent_id") :+
         icosPrenormed(idot(col("qv"), col("cvec")), col("__qn"), col("__cn"))
-          .as("__cos"))
-      .groupBy(col("id"), col("j"))
+          .as("__cos"): _*)
+      .groupBy(col("id") +: kc: _*)
       .agg(best(col("__cos"), col("cent_id")).as("__b"), first(col("qv")).as("qv"))
-      .select(col("id"), col("j"), (-col("__b.nc")).as("cent_id"), col("qv"))
+      .select(col("id") +: kc :+ (-col("__b.nc")).as("cent_id") :+ col("qv"): _*)
   }
 
-  /** PRODUCT-QUANTIZATION trainer: one independent codebook PER SUBSPACE,
-    * all trained in ONE shared set of Spark jobs — the key (j) simply
-    * rides through every assignment window and update aggregation, so the
-    * job count equals a single [[fit]] regardless of how many subspaces
-    * there are (8 sequential fits would cost 8× the fixed per-job
-    * overhead AND 8 passes over the data; at 100 TB one pass is the only
-    * acceptable shape). Input: (id: long, j: int, qv: array<bigint>) —
-    * already-quantized subvectors, (id, j) unique (see [[assignKeep]]'s
-    * precondition). Returns (j, cent_id, cvec,
-    * n_members), where cvec is the member-SUM vector and n_members the
-    * exact member count of the SAME final update — so `cvec/n_members`
-    * is the centroid mean, the reconstruction value ADC scoring needs
-    * (cosine assignment is scale-free, but cross-subspace ADC sums are
-    * not). Same determinism contract as [[fit]]: exact BIGINT sums,
-    * first-k-ids init, cent_id tiebreaks, per-round lineage cuts. */
-  def fitSub(sub: DataFrame, k: Int, iterations: Int): DataFrame = {
+  /** The one Lloyd loop: an independent codebook per `keys` group of `q`
+    * (id, keys…, qv: array<bigint>), all groups trained in ONE shared set
+    * of Spark jobs — the key simply rides through every assignment and
+    * update aggregation, so the job count equals a single codebook's
+    * however many groups there are. Returns (keys…, cent_id, cvec,
+    * n_members): cvec is the member-SUM vector and n_members the exact
+    * member count of the SAME final update. Empty clusters keep their
+    * previous centroid; [[Iterate.rounds]] cuts the lineage each step.
+    *
+    * Init is "the k rows with id ∈ [0, k)" per group. An id space that is
+    * sparse or offset there would SILENTLY under-seed the codebook and
+    * every assignment downstream would look like "no neighbors", so every
+    * group must seed exactly k centroids (one small aggregate, one job). */
+  private def lloyd(q: DataFrame, keys: Seq[String], k: Int, iterations: Int,
+      caller: String): DataFrame = {
     require(k >= 1 && iterations >= 0)
-    var cents = sub.filter(col("id") < k)
-      .select(col("j"), col("id").as("cent_id"), col("qv").as("cvec"),
-        lit(1L).as("n_members"))
-    for (_ <- 1 to iterations) {
-      // assignment carries each member's qv (r17), so the update reads
-      // vectors off the assignment instead of re-joining `sub` by
-      // (id, j). r18: the member COUNT rides the sums aggregation instead
-      // of a second pass — every member vector contributes exactly one
-      // row per __pos (subvectors are fixed-width), so the level-1 group
-      // (j, cent_id, __pos) row count IS n_members, identical for every
-      // __pos of the group; max() just reads it out at level 2. With the
-      // update a single consumer, the per-iteration `assigned`
-      // localCheckpoint barrier (and the counts pass it existed for)
-      // disappears — one aggregation chain per Lloyd step.
-      val sums = assignSubKeep(sub, cents)
-        .select(col("j"), col("cent_id"), posexplode(col("qv")).as(Seq("__pos", "__v")))
-        .groupBy(col("j"), col("cent_id"), col("__pos"))
+    val kc = keys.map(col)
+    val init = q.filter(col("id") < k)
+      .select(kc :+ col("id").as("cent_id") :+ col("qv").as("cvec") :+
+        lit(1L).as("n_members"): _*)
+    val seeded = init.groupBy(kc: _*).count().collect().map(_.getLong(keys.size))
+    require(seeded.nonEmpty && seeded.forall(_ == k),
+      s"KMeans.$caller seeds centroids from ids [0, $k) but found " +
+        s"${if (seeded.isEmpty) "none" else seeded.distinct.sorted.mkString("/")} " +
+        s"of $k per codebook — the id column must be dense from 0 " +
+        "(re-index or lower k)")
+    Iterate.rounds(init, iterations) { states =>
+      val cents = states.last
+      // r18: the member COUNT rides the sums aggregation instead of a
+      // second pass — every member vector contributes exactly one row per
+      // __pos (vectors are fixed-width), so the level-1 group
+      // (keys, cent_id, __pos) row count IS n_members, identical for every
+      // __pos of the group; max() just reads it out at level 2.
+      val sums = assignKeep(q, cents, keys)
+        .select(kc :+ col("cent_id") :+ posexplode(col("qv")).as(Seq("__pos", "__v")): _*)
+        .groupBy(kc :+ col("cent_id") :+ col("__pos"): _*)
         .agg(sum(col("__v")).as("__s"), // exact BIGINT — order-free
           count(lit(1)).as("__n"))
-        .groupBy(col("j"), col("cent_id"))
+        .groupBy(kc :+ col("cent_id"): _*)
         .agg(transform(array_sort(collect_list(struct(col("__pos"), col("__s")))),
           s => s.getField("__s")).as("__newvec"),
           max(col("__n")).as("__n"))
-      cents = cents.join(sums, Seq("j", "cent_id"), "left")
-        .select(col("j"), col("cent_id"),
-          coalesce(col("__newvec"), col("cvec")).as("cvec"), // empty → keep
-          coalesce(col("__n"), col("n_members")).as("n_members"))
-        .localCheckpoint() // same geometric-lineage guard as fit()
-    }
-    cents
+      cents.join(sums, keys :+ "cent_id", "left")
+        .select(kc :+ col("cent_id") :+
+          coalesce(col("__newvec"), col("cvec")).as("cvec") :+ // empty → keep
+          coalesce(col("__n"), col("n_members")).as("n_members"): _*)
+    }.last
   }
+
+  /** PRODUCT-QUANTIZATION trainer: one codebook PER SUBSPACE `j`, all
+    * trained in one shared set of jobs by [[lloyd]] (8 sequential fits
+    * would cost 8× the fixed per-job overhead AND 8 passes over the data).
+    * Input: (id: long, j: int, qv: array<bigint>) — already-quantized
+    * subvectors, (id, j) unique, ids dense from 0 in every subspace.
+    * Returns (j, cent_id, cvec, n_members); `cvec/n_members` is the
+    * centroid mean, the reconstruction value ADC scoring needs (cosine
+    * assignment is scale-free, but cross-subspace ADC sums are not). */
+  def fitSub(sub: DataFrame, k: Int, iterations: Int): DataFrame =
+    lloyd(sub, Seq("j"), k, iterations, "fitSub")
 
   /** Train k centroids for `iterations` Lloyd steps. Returns
     * (cent_id, cvec: array<bigint>) where cvec is the member-SUM vector
-    * (cosine-equivalent to the mean). Empty clusters keep their previous
-    * centroid. Input: (idCol: long, vecCol: array<float|double>), idCol
-    * unique (see [[assignKeep]]'s precondition). */
+    * (cosine-equivalent to the mean). Input: (idCol: long, vecCol:
+    * array<float|double>), idCol unique and dense from 0. */
   def fit(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-      iterations: Int): DataFrame = {
-    require(k >= 1 && iterations >= 0)
-    val q = emb.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv"))
-    var cents = q.filter(col("id") < k)
-      .select(col("id").as("cent_id"), col("qv").as("cvec"))
-    // the documented init is "the k vectors with id ∈ [0, k)" — an id
-    // space that is sparse or offset there would SILENTLY under-seed the
-    // codebook and every assignment downstream would look like "no
-    // neighbors"; fail loudly instead (one k-row count, negligible)
-    val seeded = cents.count()
-    require(seeded == k,
-      s"KMeans.fit seeds centroids from ids [0, $k) but found only $seeded " +
-        s"of $k — the id column must be dense from 0 (re-index or lower k)")
-    for (_ <- 1 to iterations) {
-      // the assignment keeps qv (r17): no corpus re-join per iteration
-      val sums = assignKeep(q, cents)
-        .select(col("cent_id"), posexplode(col("qv")).as(Seq("__pos", "__v")))
-        .groupBy(col("cent_id"), col("__pos"))
-        .agg(sum(col("__v")).as("__s")) // exact BIGINT — order-free
-        .groupBy(col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("__pos"), col("__s")))),
-          s => s.getField("__s")).as("__newvec"))
-      cents = cents.join(sums, Seq("cent_id"), "left")
-        .select(col("cent_id"),
-          coalesce(col("__newvec"), col("cvec")).as("cvec")) // empty cluster → keep
-        // Truncate lineage EVERY round (VERDICT r6 #2): without this,
-        // iteration i's plan nests all i−1 prior assign+update plans — the
-        // exact geometric-lineage shape that hung the driver in the
-        // round-4 dedup_semantic incident (PERF.md), dormant here only
-        // while iterations stayed at 2. The state is k rows, so the
-        // checkpoint is free, and it mirrors Components' per-round spill.
-        // Values are unchanged (the BIGINT sums are already exact), so
-        // the oracle hash cannot move.
-        .localCheckpoint()
-    }
-    cents
-  }
+      iterations: Int): DataFrame =
+    lloyd(emb.select(col(idCol).as("id"), quantize(col(vecCol)).as("qv")),
+      Nil, k, iterations, "fit")
+      .select(col("cent_id"), col("cvec"))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Iterate
 
 /** Graph analytics over the order graph — the iterative-computation family
   * next to connected components (operators/Components) and k-means
@@ -48,21 +49,15 @@ object GraphQueries {
     * to end, so the curve replays exactly through the unrolled CTEs. */
   private val graphPagerankDelta: Q = (s, dir) => {
     import s.implicits._
-    val (ewd, deg, bcast) = edgesWithDeg(s, dir)
-    var mass = deg.select($"node", lit(1000000L).as("mass"))
-    val rounds = Seq.newBuilder[DataFrame]
-    var prev = mass
-    for (r <- 1 to 3) {
-      mass = rankRound(ewd, mass, bcast)
-      rounds += prev.select($"node", $"mass".as("m_prev"))
-        .join(mass.select($"node", $"mass".as("m_cur")), Seq("node"), "full_outer")
+    val masses = rankMasses(s, dir)
+    (1 until masses.size).map { r =>
+      masses(r - 1).select($"node", $"mass".as("m_prev"))
+        .join(masses(r).select($"node", $"mass".as("m_cur")), Seq("node"), "full_outer")
         .select(abs(coalesce($"m_cur", lit(150000L))
           - coalesce($"m_prev", lit(150000L))).as("d"))
         .agg(lit(r).as("round"), sum($"d").as("sum_abs_delta"),
           sum(when($"d" > 0, 1L).otherwise(0L)).as("n_moved"))
-      prev = mass
-    }
-    rounds.result().reduce(_ unionByName _).orderBy($"round")
+    }.reduce(_ unionByName _).orderBy($"round")
   }
 
   /** 3-hop BFS reach profile from a deterministic seed (the lowest
@@ -71,32 +66,28 @@ object GraphQueries {
     * expansion is the scale-correct BFS on Spark: each hop is ONE
     * edge-join of the CURRENT frontier (never the visited set) followed
     * by an anti-join against visited, so per-hop work is O(frontier ·
-    * avg-degree) regardless of graph size; localCheckpoint cuts lineage
-    * per hop exactly as in [[graphPagerank]]. The oracle unrolls the
-    * three hops as EXCEPT-chained CTEs. */
+    * avg-degree) regardless of graph size; [[Iterate.rounds]] cuts the
+    * lineage per hop. The oracle unrolls the three hops as EXCEPT-chained
+    * CTEs. */
   private val graphKhop: Q = (s, dir) => {
     import s.implicits._
     val e = edges(s, dir).persist()
     val seed = e.filter($"a" % 2 === 1).agg(min($"a")).head().getLong(0)
-    var frontier = s.range(1).select(lit(seed).as("node")).localCheckpoint()
-    var visited = frontier
-    val counts = Seq.newBuilder[(Int, Long)]
-    counts += ((0, 1L))
-    for (hop <- 1 to 3) {
-      frontier = e.join(frontier, $"a" === $"node")
-        .select($"b".as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
-        .localCheckpoint()
-      counts += ((hop, frontier.count()))
-      // no checkpoint on visited (r18): it is a union of ALREADY
-      // checkpointed frontiers — plan depth O(hops), not geometric — and
-      // the per-hop eager materialization was one more barrier in a key
-      // `Probe stages` measured as barrier-bound (Σ stage wall 2.7 s inside a
-      // 3.9 s key)
-      visited = visited.unionByName(frontier)
-    }
+    val frontiers = Iterate.rounds(Seq(seed).toDF("node"), 3)(khopHopPlan(e, _))
+    val counts = 1L +: frontiers.tail.map(_.count()) // hop 0 is the seed
     e.unpersist()
-    counts.result().toDF("hop", "n_nodes").orderBy($"hop")
+    frontiers.indices.zip(counts).toDF("hop", "n_nodes").orderBy($"hop")
+  }
+
+  /** One BFS hop before the lineage cut: expand the last frontier along
+    * `e`, drop nodes in any earlier frontier. Visited is the union of the
+    * checkpointed frontiers — plan depth O(hops), no eager job of its own.
+    * Exposed so PlanAssertionsSpec can pin the hop's join shape. */
+  private[graft] def khopHopPlan(e: DataFrame, frontiers: Seq[DataFrame]): DataFrame = {
+    import e.sparkSession.implicits._
+    e.join(frontiers.last, $"a" === $"node")
+      .select($"b".as("node")).distinct()
+      .join(frontiers.reduce(_ unionByName _), Seq("node"), "left_anti")
   }
 
   /** The symmetric customer↔supplier edge list. Distinct collapses the
@@ -112,7 +103,7 @@ object GraphQueries {
     * union branches + a cache-population race on the persisted union).
     * After the checkpoint the union is a narrow re-read of the
     * materialized half; every consumer (4 keys) inherits the fix. */
-  private def edges(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def edges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val e0 = Tables(s, dir, "orders")
       .join(Tables(s, dir, "lineitem"), $"o_orderkey" === $"l_orderkey")
@@ -164,9 +155,9 @@ object GraphQueries {
   /** One integer-PageRank round over [[edgesWithDeg]]'s edge table, before
     * the lineage cut: join the (node, mass) table onto the edge grain
     * (broadcast only under [[rankBroadcastGate]]), ship each edge's floor
-    * share, sum per receiver, add the restart mass. Factored from
-    * [[rankRound]] so GraphQueriesSpec can pin the join shape on the
-    * pre-checkpoint plan (broadcast below the gate, exchange above). */
+    * share, sum per receiver, add the restart mass. Exposed so
+    * GraphQueriesSpec can pin the join shape on the pre-checkpoint plan
+    * (broadcast below the gate, exchange above). */
   private[graft] def rankRoundPlan(ewd: DataFrame, mass: DataFrame,
       bcast: Boolean): DataFrame = {
     import ewd.sparkSession.implicits._
@@ -177,31 +168,36 @@ object GraphQueries {
       .agg((lit(150000L) + sum($"c")).as("mass"))
   }
 
-  private def rankRound(ewd: DataFrame, mass: DataFrame, bcast: Boolean): DataFrame =
-    rankRoundPlan(ewd, mass, bcast).localCheckpoint()
-
-  /** 3-round integer PageRank; output the top-10 nodes by final mass
-    * (deterministic boundary: mass desc, node asc).
-    *
-    * Per round: one node-grain join (mass ⋈ degree → per-edge share), one
-    * edge-grain join (share ⋈ edges), one hash aggregate on the receiving
-    * node — the standard 2-shuffle PageRank step. `localCheckpoint` after
-    * each round cuts lineage so round k's plan doesn't re-derive rounds
-    * 1..k-1 (the Components/BPE-train lesson); the edge list is persisted
-    * across rounds — on a cluster it would be pre-partitioned by src so
-    * every round's edge-side shuffle is free. The oracle replays all three
-    * rounds as unrolled CTEs with the identical floor arithmetic. */
-  private val graphPagerank: Q = (s, dir) => {
+  /** The integer-PageRank mass tables m0..m3 (the oracle's CTE names):
+    * m0 is the uniform 1 000 000 per node, each later one a
+    * [[rankRoundPlan]] round. */
+  private def rankMasses(s: SparkSession, dir: String): IndexedSeq[DataFrame] = {
     import s.implicits._
     val (ewd, deg, bcast) = edgesWithDeg(s, dir)
-    var mass = deg.select($"node", lit(1000000L).as("mass"))
-    for (_ <- 1 to 3) mass = rankRound(ewd, mass, bcast)
+    Iterate.rounds(deg.select($"node", lit(1000000L).as("mass")), 3)(
+      states => rankRoundPlan(ewd, states.last, bcast))
+  }
+
+  /** The top-10 nodes by mass (deterministic boundary: mass desc, node
+    * asc), tagged by kind — the output of all three pagerank keys. */
+  private def topRanked(mass: DataFrame): DataFrame = {
+    import mass.sparkSession.implicits._
     mass
       .select(when($"node" % 2 === 0, "cust").otherwise("supp").as("kind"),
         $"node", $"mass")
       .orderBy($"mass".desc, $"node")
       .limit(10)
   }
+
+  /** 3-round integer PageRank; output the top-10 nodes by final mass.
+    *
+    * Per round: one edge-grain join (edges-with-degree ⋈ mass → per-edge
+    * share) and one hash aggregate on the receiving node. The edge list
+    * is checkpointed once — on a cluster it would be pre-partitioned by
+    * src so every round's edge-side shuffle is free. The oracle replays
+    * all three rounds as unrolled CTEs with the identical floor
+    * arithmetic. */
+  private val graphPagerank: Q = (s, dir) => topRanked(rankMasses(s, dir).last)
 
   /** Salt fan-out for hub edges in [[graphPagerankSalted]]. */
   private val HubSalts = 8
@@ -279,9 +275,9 @@ object GraphQueries {
         (e.join(broadcast(hubs), Seq("a")).persist(),
           e.join(broadcast(hubs), Seq("a"), "left_anti").persist())
       else (null, e)
-    var mass = deg.select($"a".as("node"), lit(1000000L).as("mass"))
-    for (_ <- 1 to 3) {
-      val share = mass.join(deg.withColumnRenamed("a", "node"), "node")
+    val m0 = deg.select($"a".as("node"), lit(1000000L).as("mass"))
+    val masses = Iterate.rounds(m0, 3) { states =>
+      val share = states.last.join(deg.withColumnRenamed("a", "node"), "node")
         .select($"node".as("a"), expr("(mass * 85) div (100 * deg)").as("c"))
       val contrib =
         if (useSalt)
@@ -290,17 +286,12 @@ object GraphQueries {
               eHot, share.join(broadcast(hubs), "a"), Seq("a"), HubSalts)
               .select($"b", $"c"))
         else e.join(share, "a").select($"b", $"c")
-      mass = contrib
+      contrib
         .groupBy($"b".as("node"))
         .agg((lit(150000L) + sum($"c")).as("mass"))
-        .localCheckpoint()
     }
     if (useSalt) { eHot.unpersist(); eCold.unpersist() }
-    mass
-      .select(when($"node" % 2 === 0, "cust").otherwise("supp").as("kind"),
-        $"node", $"mass")
-      .orderBy($"mass".desc, $"node")
-      .limit(10)
+    topRanked(masses.last)
   }
 
   /** Degree histogram of the same graph, split by node kind — the profile

@@ -1475,8 +1475,8 @@ object SimilarityQueries {
     * "codebook" here is training-free (the first K vectors serve as
     * centroids — deterministic and oracle-replayable); a real deployment
     * swaps in k-means centroids without changing the plan shape:
-    * assignment and probing are broadcast joins + rank-1 windows, and the
-    * candidate set shrinks from N to N·probe/K. */
+    * assignment and probing are broadcast joins + bounded top-k
+    * aggregates, and the candidate set shrinks from N to N·probe/K. */
   private val annIvf: Q = (s, dir) => {
     import s.implicits._
     val emb = spread(Tables(s, dir, "embeddings"))
@@ -1521,18 +1521,11 @@ object SimilarityQueries {
 
   private val IvfTrainIters = 2
 
-  /** IVF with TRAINED centroids — [[graft.operators.KMeans]] (2 Lloyd
-    * iterations, deterministic integer-sum centroids) replaces annIvf's
-    * training-free first-K codebook; assignment/probing/scoring all run
-    * over the quantized vectors so the DuckDB oracle replays the ENTIRE
-    * training loop (unrolled CTEs) bit-for-bit. Same plan shape as
-    * ann_ivf: broadcast codebook, rank-1 windows, candidates shrink to
-    * n·probe/k. */
   /** Probe-and-score against a trained codebook: assign the quantized
     * corpus `q` to `cents`, probe each query's IvfProbe nearest cells,
     * rank candidates by integer cosine → (query_id, rank, neighbor_id).
     * Shared by [[annIvfTrained]] and both rungs of [[annIvfDrift]] —
-    * broadcast codebook, rank-1 windows, candidates shrink to
+    * broadcast codebook, bounded top-k aggregates, candidates shrink to
     * n·probe/k. */
   private def trainedProbeTop3(s: SparkSession, q: DataFrame,
       cents: DataFrame, queriesPred: org.apache.spark.sql.Column): DataFrame = {
@@ -1562,6 +1555,13 @@ object SimilarityQueries {
       .select($"query_id", ($"__r" + 1).as("rank"), $"__t.id".as("neighbor_id"))
   }
 
+  /** IVF with TRAINED centroids — [[graft.operators.KMeans]] (2 Lloyd
+    * iterations, deterministic integer-sum centroids) replaces annIvf's
+    * training-free first-K codebook; assignment/probing/scoring all run
+    * over the quantized vectors so the DuckDB oracle replays the ENTIRE
+    * training loop (unrolled CTEs) bit-for-bit. Same plan shape as
+    * ann_ivf: broadcast codebook, bounded top-k aggregates, candidates
+    * shrink to n·probe/k. */
   private val annIvfTrained: Q = (s, dir) => {
     import s.implicits._
     import graft.operators.KMeans
@@ -1629,7 +1629,7 @@ object SimilarityQueries {
     * exactly what a drift monitor reads to decide when the frozen
     * codebook has aged out (new data piling into few cells) and a
     * scheduled retrain is worth the rebuild. Assignment of the increment
-    * is a broadcast join + rank-1 window over ONLY the new rows — O(new ·
+    * is a broadcast join + argmax aggregate over ONLY the new rows — O(new ·
     * k), independent of index size. The DuckDB oracle replays the whole
     * thing: prefix-only Lloyd training, frozen-codebook assignment of all
     * rows, exact integer cohort counts. */
@@ -1753,25 +1753,6 @@ object SimilarityQueries {
   private val PqSubDim = 8 // dims per subspace
   private val PqK = 16 // centroids per subspace codebook
 
-  /** PRODUCT QUANTIZATION recall rung — the fourth member of the
-    * compressed-storage family (q8 scalar quantization, JL projection,
-    * IVF cells, now PQ): each vector is stored as [[PqSub]] one-byte
-    * codes (64× smaller than float32 at rest), one codebook per
-    * subspace, and queries score candidates with ASYMMETRIC DISTANCE
-    * COMPUTATION — a per-query lookup table of subspace
-    * dot-products-to-centroid-means, folded left-to-right over the
-    * candidate's codes. This is the storage layout a 10⁹-vector index
-    * actually serves from (IVF prunes candidates, PQ pays their memory),
-    * measured here the same way as [[annQ8Recall]]: top-3 over the
-    * compressed representation vs float-exact cosine truth, per query,
-    * as oracle-checked integers.
-    *
-    * Determinism: all 8 codebooks train in ONE shared job set
-    * ([[KMeans.fitSub]] — exact BIGINT sums); LUT values are
-    * `idot(q_j, cvec_j) / n_members` with identical operand order on
-    * both engines; and the ADC sum is a SEQUENTIAL expression fold over
-    * j (never a groupBy SUM of doubles, whose partial-agg order would
-    * differ between engines). */
   /** Shared PQ machinery: subvector rows, trained subspace codebooks, the
     * stored code index (8 codes per vector in j order), and the per-query
     * ADC lookup table for queries with id < 10 — used by both the
@@ -1830,6 +1811,25 @@ object SimilarityQueries {
       .orderBy($"query_id")
   }
 
+  /** PRODUCT QUANTIZATION recall rung — the fourth member of the
+    * compressed-storage family (q8 scalar quantization, JL projection,
+    * IVF cells, now PQ): each vector is stored as [[PqSub]] one-byte
+    * codes (64× smaller than float32 at rest), one codebook per
+    * subspace, and queries score candidates with ASYMMETRIC DISTANCE
+    * COMPUTATION — a per-query lookup table of subspace
+    * dot-products-to-centroid-means, folded left-to-right over the
+    * candidate's codes. This is the storage layout a 10⁹-vector index
+    * actually serves from (IVF prunes candidates, PQ pays their memory),
+    * measured here the same way as [[annQ8Recall]]: top-3 over the
+    * compressed representation vs float-exact cosine truth, per query,
+    * as oracle-checked integers.
+    *
+    * Determinism: all 8 codebooks train in ONE shared job set
+    * ([[KMeans.fitSub]] — exact BIGINT sums); LUT values are
+    * `idot(q_j, cvec_j) / n_members` with identical operand order on
+    * both engines; and the ADC sum is a SEQUENTIAL expression fold over
+    * j (never a groupBy SUM of doubles, whose partial-agg order would
+    * differ between engines). */
   private val annPqRecall: Q = (s, dir) => {
     import s.implicits._
     import graft.operators.KMeans

@@ -575,7 +575,9 @@ object TrainingQueries {
     * scoring round run as the real tokenizer-train loop: [[BpeTrainRounds]]
     * rounds of count-pairs → pick-winner → merge-everywhere, emitting the
     * merge TABLE (round, winning pair, its weighted count, total units
-    * remaining) a tokenizer ships.
+    * remaining) a tokenizer ships. Runs the loop once and returns (per-round
+    * merge rows, final segmentation) so the trainer and the segmenter share
+    * one definition.
     *
     * Representation: each word's unit segmentation is a pipe-delimited
     * string `|h|e|l|l|o|`; a merge of (l, r) replaces `|l|r|` with `|lr|`
@@ -589,12 +591,10 @@ object TrainingQueries {
     * Scale shape — the KMeans recipe applied to text: the corpus-sized
     * work (word-count aggregate) runs ONCE; every round after operates on
     * the VOCABULARY (token-domain-bounded, not corpus-bounded), with
-    * per-round `localCheckpoint` cutting the geometric lineage the same
-    * way `KMeans.fit` does. Winners stay in-plan as broadcast 1-row
-    * relations — no driver-side loop state beyond the round counter. */
-  /** Run the [[BpeTrainRounds]]-round loop once; returns (per-round merge
-    * rows, final checkpointed segmentation) so the trainer and the
-    * segmenter share one definition. */
+    * [[graft.operators.Iterate.rounds]] cutting the lineage per round.
+    * Winners stay in-plan as broadcast 1-row relations — round r's row
+    * reads its winner off segmentation r and its unit total off r+1 — so
+    * no driver-side loop state beyond the round counter. */
   private def bpeTrainLoop(s: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
     import s.implicits._
@@ -602,11 +602,11 @@ object TrainingQueries {
       .select(explode(Text.tokens(Text.normalized($"text"))).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("wc"))
       .filter(length($"word") >= 2)
-    var seg = words.select($"word", $"wc",
+    val seg0 = words.select($"word", $"wc",
         concat(lit("|"), regexp_replace($"word", "(.)", "$1|")).as("seg"))
       .localCheckpoint()
-    val rounds = (0 until BpeTrainRounds).map { r =>
-      val pairs = seg
+    def winner(seg: DataFrame): DataFrame =
+      seg
         .withColumn("u", filter(split($"seg", "\\|"), x => x =!= ""))
         // a fully-merged word (one unit) yields NO pairs: sequence(1, 0)
         // DESCENDS in Spark ([1,0] → ANSI index error) where the oracle's
@@ -616,21 +616,23 @@ object TrainingQueries {
           i => concat(element_at($"u", i), lit("|"), element_at($"u", i + 1))))
           .as("pair"))
         .groupBy($"pair").agg(sum($"wc").as("pair_count"))
-      val t = pairs.orderBy($"pair_count".desc, $"pair").limit(1)
+        .orderBy($"pair_count".desc, $"pair").limit(1)
         .select($"pair", $"pair_count")
+    val segs = graft.operators.Iterate.rounds(seg0, BpeTrainRounds) { states =>
       val pat = concat(lit("|"), $"pair", lit("|"))
       val rep = concat(lit("|"), translate($"pair", "|", ""), lit("|"))
-      seg = seg.crossJoin(broadcast(t))
+      states.last.crossJoin(broadcast(winner(states.last)))
         .select($"word", $"wc",
           replace(replace($"seg", pat, rep), pat, rep).as("seg"))
-        .localCheckpoint()
-      seg.agg(sum($"wc" *
+    }
+    val rounds = (0 until BpeTrainRounds).map { r =>
+      segs(r + 1).agg(sum($"wc" *
           (length($"seg") - length(replace($"seg", lit("|"), lit(""))) - 1))
           .cast("long").as("n_units_after"))
-        .crossJoin(broadcast(t))
+        .crossJoin(broadcast(winner(segs(r))))
         .select(lit(r).as("round"), $"pair", $"pair_count", $"n_units_after")
     }
-    (rounds, seg)
+    (rounds, segs.last)
   }
 
   private val textBpeTrain: Q = (s, dir) => {

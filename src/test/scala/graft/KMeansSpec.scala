@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.KMeans
 
@@ -72,5 +73,35 @@ class KMeansSpec extends SparkSpec {
     val cents = KMeans.fit(degenerate, "vec_id", "embedding", k = 4, iterations = 2)
     assert(cents.count() == 4)
     assert(cents.filter(col("cvec").isNull).count() == 0)
+  }
+
+  test("fitSub trains each subspace exactly as fit trains it alone") {
+    import spark.implicits._
+    // two subspaces: the planted clusters, and the same points reversed
+    val emb = planted
+    val subVec = Seq(col("embedding"), reverse(col("embedding")))
+    val sub = emb.select(col("vec_id").as("id"),
+        explode(array(subVec.zipWithIndex.map { case (v, j) =>
+          struct(lit(j).as("j"), KMeans.quantize(v).as("qv")) }: _*)).as("s"))
+      .select($"id", $"s.j".as("j"), $"s.qv".as("qv"))
+    val cents = KMeans.fitSub(sub, 3, 2)
+    def rows(df: DataFrame) = df.orderBy("cent_id").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
+    subVec.zipWithIndex.foreach { case (v, j) =>
+      val alone = KMeans.fit(emb.select($"vec_id", v.as("embedding")),
+        "vec_id", "embedding", 3, 2)
+      assert(rows(cents.filter($"j" === j).select("cent_id", "cvec")) == rows(alone),
+        s"subspace $j diverged from a single-codebook fit")
+    }
+    assert(cents.filter($"j" === 0).agg(sum("n_members")).head().getLong(0) == 90L)
+  }
+
+  test("fitSub refuses an id space that cannot seed every codebook") {
+    import spark.implicits._
+    // ids offset from 0: the first-k-ids init finds no seeds at all
+    val sub = (0 until 30).flatMap(i => (0 until 2).map(j =>
+      (100L + i, j, Seq.fill(4)((i % 3 + 1).toLong)))).toDF("id", "j", "qv")
+    val err = intercept[IllegalArgumentException](KMeans.fitSub(sub, 3, 2))
+    assert(err.getMessage.contains("[0, 3)"), err.getMessage)
   }
 }

@@ -275,9 +275,25 @@ class PlanAssertionsSpec extends SparkSpec {
   }
 
   test("graph_khop: frontier expansion never sort-merges the edge list") {
-    val plan = planOf("graph_khop")
-    assert(!plan.contains("CartesianProduct"),
-      s"khop must never cross-join:\n$plan")
+    // The key returns driver-side counts, so its own plan is a local scan;
+    // the join shape lives in the hop. Build the key's third hop exactly
+    // as the key does (persisted edges, two checkpointed frontiers before
+    // it) and read the plan that hop executes.
+    import org.apache.spark.sql.functions.{col, lit, min}
+    import graft.queries.GraphQueries
+    val e = GraphQueries.edges(spark, sfDir).persist()
+    try {
+      val seed = e.filter(col("a") % 2 === 1).agg(min(col("a"))).head().getLong(0)
+      val init = spark.range(1).select(lit(seed).as("node")).localCheckpoint()
+      val frontiers = graft.operators.Iterate.rounds(init, 2)(GraphQueries.khopHopPlan(e, _))
+      val hop = GraphQueries.khopHopPlan(e, frontiers)
+      hop.collect()
+      val plan = hop.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert(!plan.contains("SortMergeJoin"),
+        s"khop sort-merges the edge list against a frontier:\n$plan")
+      assert(!plan.contains("CartesianProduct"),
+        s"khop must never cross-join:\n$plan")
+    } finally e.unpersist()
   }
 
   test("new-family scans prune to exactly the touched columns") {
