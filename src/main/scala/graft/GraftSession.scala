@@ -9,8 +9,30 @@ import org.apache.spark.sql.SparkSession
   * broadcast demotion), small dims auto-broadcast, UTC session time so
   * timestamp results are oracle-comparable, micros parquet timestamps so
   * downstream engines (DuckDB/Arrow) read identical values.
+  *
+  * The generated-class cache holds [[CodegenCacheEntries]] classes, so a
+  * JVM compiles each generated class once. Spark's default of 100 thrashes:
+  * a medallion build needs ~330 distinct classes and one pass over the
+  * 243 keys ~4350 (sf0.001), requested in the same order every pass, and
+  * an LRU cache under a cyclic access pattern over more keys than it holds
+  * gets zero hits. At 100, every medallion pass recompiled ~340 classes
+  * (sf0.01, 4 cpus: 13–17 s of Janino time summed over task threads, and
+  * a pass ~30% longer); sized, a repeated pass compiles 6–30, the
+  * multi-`countDistinct` stages whose generated source differs from run to
+  * run (ROADMAP item 6). A cached class retains ~35–40 KB of heap (its
+  * source, the cache key, and Janino's bytecode), so the medallion's set
+  * costs ~13 MB and the full suite's ~170 MB. The cache is JVM-global and
+  * takes its size from the session conf active when the first class is
+  * generated, so the first session in a JVM fixes it.
+  * `SPARK_GRAFT_CONF` overrides it like any other setting.
   */
 object GraftSession {
+  /** 8192: the suite's ~4350 distinct classes plus the ~600 a repeated
+    * suite pass regenerates, rounded up to a power of two. Spark's cache
+    * is four LRU segments of a quarter of this each, so the headroom also
+    * absorbs an uneven spread of keys over segments. */
+  val CodegenCacheEntries = 8192
+
   def builder(cores: Int): SparkSession.Builder =
     SparkSession
       .builder()
@@ -55,6 +77,7 @@ object GraftSession {
       // DuckDB's nanos→micros cast).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // Ad-hoc experiment overrides: SPARK_GRAFT_CONF="k=v;k=v".
       .config(sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";")
         .filter(_.contains("=")).map(_.split("=", 2)).map(a => a(0) -> a(1)).toMap)

@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -15,7 +17,9 @@ import graft.operators.Sync
   * modes over the named query keys.
   *
   *  - `stages`: an untimed warm-up pass, then one timed [[Bench.exec]]
-  *    pass, printing the wall seconds and one line per stage of the timed
+  *    pass, printing the wall seconds, the classes Janino compiled during
+  *    it and their compile seconds (a warm pass should compile next to
+  *    nothing, see [[GraftSession]]), then one line per stage of the timed
   *    pass (tasks, input / shuffle / spill bytes, cpu and GC seconds, call
   *    site). The UI is disabled, so the listener stands in for its Stages
   *    tab and attributes a key's wall time to operators.
@@ -65,6 +69,11 @@ object Probe {
 
   final case class Stage(id: Int, name: String, wall: Double, tasks: Int, input: Long,
       shufRead: Long, shufWrite: Long, spill: Long, cpu: Double, gc: Double, run: Double)
+
+  /** One key's `stages` record: the timed pass's seconds, the classes
+    * compiled during it and their compile seconds, and its stages. */
+  final case class Timed(key: String, sec: Double, compiled: Long, compileSec: Double,
+      stages: Vector[Stage])
 
   /** Spill and peak task execution memory over one key's tasks. */
   final case class Memory(memSpill: Long, diskSpill: Long, peakExec: Long)
@@ -138,27 +147,36 @@ object Probe {
   private def query(spark: SparkSession, sfDir: String, key: String): DataFrame =
     SparkEntry.queries(key)(spark, sfDir)
 
-  /** Per key: the timed pass's seconds and its completed stages. */
+  /** Janino compiles so far in this JVM and their nanoseconds; the
+    * counters are JVM-global and only grow. */
+  private def compiles(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** Per key: the timed pass's seconds, compiles and completed stages. */
   def stages(spark: SparkSession, sfDir: String, keys: Seq[String])
-      : Seq[(String, Double, Vector[Stage])] = recording(spark) { rec =>
+      : Seq[Timed] = recording(spark) { rec =>
     def mb(b: Long): String = f"${b / 1048576.0}%8.1f"
     keys.map { k =>
       Bench.exec(query(spark, sfDir, k)) // warm-up: codegen, JIT, footers
       settle(spark)
       rec.drain()
       rec.reset()
+      val (n0, ns0) = compiles()
       val (_, sec) = timed(Bench.exec(query(spark, sfDir, k)))
+      val (n1, ns1) = compiles()
       rec.drain()
       val snap = rec.stages
       settle(spark)
-      println(f"== $k: $sec%.2f s, ${snap.size} stages "
+      val t = Timed(k, sec, n1 - n0, (ns1 - ns0) / 1e9, snap)
+      println(f"== $k: $sec%.2f s, ${snap.size} stages, ${t.compiled} classes compiled "
+        + f"in ${t.compileSec}%.2f s "
         + f"(Σ stage wall ${snap.map(_.wall).sum}%.2f s — overlap makes this > key wall)")
       println("   wall  tasks  input_MB  shuf_r_MB  shuf_w_MB  spill_MB   cpu_s    gc_s   run_s  stage")
       snap.sortBy(-_.wall).take(40).foreach { s =>
         println(f"  ${s.wall}%5.2f  ${s.tasks}%5d  ${mb(s.input)}  ${mb(s.shufRead)}   "
           + f"${mb(s.shufWrite)}  ${mb(s.spill)}  ${s.cpu}%6.2f  ${s.gc}%6.2f  ${s.run}%6.2f  [${s.id}] ${s.name.take(80)}")
       }
-      (k, sec, snap)
+      t
     }
   }
 

@@ -52,12 +52,18 @@ trait TableFormat {
   * restores a backup orphaned between the renames. */
 object ParquetFormat extends TableFormat {
   def ident(base: String, name: String): String = s"$base/$name"
-  def exists(spark: SparkSession, ident: String): Boolean =
-    try { spark.read.parquet(ident).limit(1).count() >= 0 }
+  /** A missing directory is absent without a Spark read (which would log
+    * a FileNotFoundException stack trace per cold incremental model); an
+    * existing one must read, so corrupt data throws. */
+  def exists(spark: SparkSession, ident: String): Boolean = {
+    val (fs, target, _, _) = paths(spark, ident)
+    if (!fs.exists(target)) false
+    else try { spark.read.parquet(ident).limit(1).count() >= 0 }
     catch {
       case _: org.apache.spark.sql.AnalysisException |
            _: java.io.FileNotFoundException => false
     }
+  }
   def read(spark: SparkSession, ident: String): DataFrame =
     spark.read.parquet(ident)
   def overwrite(df: DataFrame, ident: String): Unit =

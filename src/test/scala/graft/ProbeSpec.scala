@@ -30,9 +30,12 @@ class ProbeSpec extends SparkSpec {
   }
 
   test("stages records the timed pass's stages") {
-    val Seq((k, sec, stages)) = Probe.stages(spark, sfDir, Seq(key))
-    assert(k == key && sec > 0)
-    assert(stages.nonEmpty)
+    val Seq(t) = Probe.stages(spark, sfDir, Seq(key))
+    assert(t.key == key && t.sec > 0)
+    assert(t.stages.nonEmpty)
+    // the warm-up pass compiled the key's classes; the timed pass reuses them
+    assert(t.compiled <= 2, s"timed pass compiled ${t.compiled} classes")
+    assert(t.compileSec == 0 || t.compiled > 0)
   }
 
   test("pressure's fingerprint equals Sync.fingerprint of the same key") {
