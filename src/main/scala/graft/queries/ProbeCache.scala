@@ -2,18 +2,19 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-/** Session × dir memo for Long-valued fence probes (VERDICT r15 #5 /
-  * ADVICE r15): every saturation fence runs a linear probe scan before
-  * admitting its exact baseline, and Bench's warmup + 2 timed runs (and
-  * Verify's concurrent dump) would otherwise repeat that scan per
-  * invocation — three redundant full passes per bench key. One shared
-  * memo gives every probe the same governance deconJoinWork already had.
+/** Session × dir memo for Long-valued fence probes and corpus counts
+  * (VERDICT r15 #5 / ADVICE r15): every saturation fence runs a linear
+  * probe scan before admitting its exact baseline, and Bench's warmup + 2
+  * timed runs (and Verify's concurrent dump) would otherwise repeat that
+  * scan per invocation — three redundant full passes per bench key. One
+  * shared memo gives every probe the same governance deconJoinWork
+  * already had.
   *
-  * WEAK session keys (the cachedCount treatment, ADVICE r5): a stopped
-  * session is not pinned by the cache and collects normally, while a dir
-  * regenerated with different data is re-probed by any new session
-  * instead of being served a stale mass. Callers key by `"<probe>#<dir>"`
-  * so distinct probes over the same dir don't collide.
+  * WEAK session keys (ADVICE r5): a stopped session is not pinned by the
+  * cache and collects normally, while a dir regenerated with different
+  * data is re-probed by any new session instead of being served a stale
+  * mass. Callers key by `"<probe>#<dir>"` so distinct probes over the
+  * same dir don't collide.
   */
 private[graft] object ProbeCache {
   private val cache =

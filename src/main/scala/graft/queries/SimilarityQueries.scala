@@ -112,33 +112,49 @@ object SimilarityQueries {
     (LshBitsMin to LshBitsMax)
       .find(b => (1L << b) * LshTargetBucket >= n).getOrElse(LshBitsMax)
 
-  // one count() per (session, dir) per JVM — the probe is parquet-metadata
-  // cheap, but Verify fans 10 similarity queries over the same dir
-  // concurrently. WEAK session keys (ADVICE r5): a stopped session is not
-  // pinned by the cache and collects normally, while a dir regenerated
-  // with different row counts is re-probed by any new session instead of
-  // being served a stale corpus size. (The DataFrame-valued fixture
-  // caches can't get this treatment — their values reference the session
-  // regardless — and stay documented as bench-harness caches.)
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, Long]]
-  private def cachedCount(s: SparkSession, dir: String, table: String): Long = {
-    val perSession = countCache.synchronized {
-      var m = countCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, Long]
-        countCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(s"$dir#$table", Tables(s, dir, table).count())
-  }
+  // one count() per (session, dir) per JVM, memoized in [[ProbeCache]]
+  // (weak session keys) — the probe is parquet-metadata cheap, but Verify
+  // fans 10 similarity queries over the same dir concurrently. (The
+  // DataFrame-valued fixture caches can't get this treatment — their
+  // values reference the session regardless — and stay documented as
+  // bench-harness caches.)
+  private def cachedCount(s: SparkSession, dir: String, table: String): Long =
+    ProbeCache.cached(s, s"${table}Rows#$dir")(Tables(s, dir, table).count())
   private def corpusCount(s: SparkSession, dir: String): Long =
     cachedCount(s, dir, "embeddings")
   private def docCount(s: SparkSession, dir: String): Long =
     cachedCount(s, dir, "documents")
   private[graft] def lshBits(s: SparkSession, dir: String): Int =
     lshBitsFor(corpusCount(s, dir))
+
+  /** The embedding corpus with its `bits`-wide hyperplane-LSH `bucket` and
+    * its norm `nrm` — the frame every LSH-bucketed ANN and semantic-dedup
+    * key probes (the table's own columns ride along for callers that
+    * filter on them). */
+  private def lshEmbeddings(s: SparkSession, dir: String, bits: Int): DataFrame = {
+    import s.implicits._
+    spread(Tables(s, dir, "embeddings")).select($"*",
+      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
+      Vectors.fnorm($"embedding").as("nrm"))
+  }
+
+  /** Multi-probe ring of a `bits`-wide bucket string, one row per probe:
+    * the home bucket, then every bucket at hamming distance 1 (bit i
+    * flipped, i ascending), then — at `radius` 2 — every bucket at
+    * distance 2 (bits i < j flipped). 1 + bits (+ C(bits, 2)) distinct
+    * buckets, so no probed neighbor can pair twice with one query. */
+  private[graft] def probeRing(bucket: org.apache.spark.sql.Column, bits: Int,
+      radius: Int): org.apache.spark.sql.Column = {
+    require(radius == 1 || radius == 2, s"probe ring radius must be 1 or 2, got $radius")
+    def toggled(b: org.apache.spark.sql.Column, i: Int) = concat(
+      substring(b, 1, i),
+      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
+      substring(b, i + 2, bits))
+    val ring1 = (0 until bits).map(toggled(bucket, _))
+    val ring2 = if (radius == 1) Nil
+      else for { i <- 0 until bits; j <- i + 1 until bits } yield toggled(toggled(bucket, i), j)
+    explode(array(bucket +: ring1 ++: ring2: _*))
+  }
 
   // Brute-force envelope (VERDICT r5 #1): the all-pairs/full-scan baselines
   // below are the exact oracles behind the recall gates, NOT the scale
@@ -219,19 +235,10 @@ object SimilarityQueries {
   private val DefaultMaxExactPairsPerDoc = 1024L
   private[graft] def maxExactPairsPerDoc(s: SparkSession): Long =
     envelope(s, "graft.maxExactPairsPerDoc", DefaultMaxExactPairsPerDoc)
-  private val pairWorkCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, (Long, Long)]]
-  /** (docs, Σ per-shingle-bucket candidate pairs) for the exact index. */
+  /** (docs, Σ per-shingle-bucket candidate pairs) for the exact index —
+    * two memo keys, one lazy pass (the [[minhashBandStats]] pattern). */
   private[graft] def exactIndexStats(s: SparkSession, dir: String): (Long, Long) = {
-    val perSession = pairWorkCache.synchronized {
-      var m = pairWorkCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-        pairWorkCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
+    lazy val computed: (Long, Long) = {
       val shd = shingled(s, dir)
       val docs = shd.count()
       val pairWork = shd.select(explode(col("sh")).as("shingle"))
@@ -239,7 +246,9 @@ object SimilarityQueries {
         .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0.0)).cast("long"))
         .head().getLong(0)
       (docs, pairWork)
-    })
+    }
+    (ProbeCache.cached(s, s"exactIndexDocs#$dir")(computed._1),
+      ProbeCache.cached(s, s"exactIndexPairWork#$dir")(computed._2))
   }
   private def fenceExactIndex(name: String, s: SparkSession, dir: String): Unit = {
     val budget = maxExactPairsPerDoc(s)
@@ -274,28 +283,14 @@ object SimilarityQueries {
   private val DefaultMaxSimhashPairsPerDoc = 512L
   private[graft] def maxSimhashPairsPerDoc(s: SparkSession): Long =
     envelope(s, "graft.maxSimhashPairsPerDoc", DefaultMaxSimhashPairsPerDoc)
-  private val simhashWorkCache =
-    new java.util.WeakHashMap[SparkSession, scala.collection.concurrent.TrieMap[String, (Long, Long)]]
   /** (docs, Σ per-band-bucket candidate pairs) for the simhash band join. */
-  private[graft] def simhashIndexStats(s: SparkSession, dir: String): (Long, Long) = {
-    val perSession = simhashWorkCache.synchronized {
-      var m = simhashWorkCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, (Long, Long)]
-        simhashWorkCache.put(s, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate(dir, {
-      val banded = simhashBanded(s, dir)
-      val docs = docCount(s, dir)
-      val pairWork = banded
+  private[graft] def simhashIndexStats(s: SparkSession, dir: String): (Long, Long) =
+    (docCount(s, dir), ProbeCache.cached(s, s"simhashPairWork#$dir") {
+      simhashBanded(s, dir)
         .groupBy(col("band_id"), col("band_val")).agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c") * (col("c") - 1) / 2), lit(0.0)).cast("long"))
         .head().getLong(0)
-      (docs, pairWork)
     })
-  }
   private def fenceSimhash(name: String, s: SparkSession, dir: String): Unit = {
     val budget = maxSimhashPairsPerDoc(s)
     val (docs, pairWork) = simhashIndexStats(s, dir)
@@ -369,9 +364,11 @@ object SimilarityQueries {
       .select($"doc_id", Text.shingleSet($"text", ShingleN).as("sh"))
   }
 
-  /** Exact n-gram Jaccard dedup via inverted shingle index: a pair with
-    * jaccard ≥ t shares ≥ 1 shingle, so the shingle self-join finds every
-    * qualifying pair without the n² compare.
+  /** Qualifying Jaccard pairs (doc_a < doc_b, J ≥ t) — shared by the pair
+    * query and the component clustering. Exact n-gram Jaccard dedup via
+    * inverted shingle index: a pair with jaccard ≥ t shares ≥ 1 shingle,
+    * so the shingle self-join finds every qualifying pair without the n²
+    * compare.
     *
     * Two pruning/plan refinements (result-identical):
     *  - sizes ride along in the index, so size-incompatible pairs
@@ -379,8 +376,6 @@ object SimilarityQueries {
     *    aggregate shuffle, and the final jaccard needs no size lookup joins;
     *  - group keys include both sizes (functionally dependent on the ids) —
     *    the old plan re-joined `shd` twice just to fetch them. */
-  /** Qualifying Jaccard pairs (doc_a < doc_b, J ≥ t) — shared by the pair
-    * query and the component clustering. */
   private def ngramJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // fences dedup_ngram_jaccard AND its consumers (dedup_components,
@@ -462,33 +457,37 @@ object SimilarityQueries {
       .orderBy($"doc_id", $"dup_id")
   }
 
-  /** Near-dup pairs → duplicate GROUPS: connected components of the
-    * Jaccard pair graph ([[graft.operators.Components]]), one row per
-    * clustered doc with its canonical (min-id) component and group size.
-    * This is the step that lets a pipeline keep one doc per group. */
-  private val dedupComponents: Q = (s, dir) => {
-    import s.implicits._
-    val pairs = ngramJaccardPairs(s, dir)
-      .select($"doc_a".as("src"), $"doc_b".as("dst"))
-    graft.operators.Components.connectedComponents(pairs)
+  /** (doc_id, component_id) — connected components
+    * ([[graft.operators.Components]]) of a (doc_a, doc_b) pair graph, each
+    * clustered doc labeled with its canonical (min-id) component. */
+  private def components(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    graft.operators.Components
+      .connectedComponents(pairs.select($"doc_a".as("src"), $"doc_b".as("dst")))
       .select($"id".as("doc_id"), $"component".as("component_id"))
+  }
+
+  /** Near-dup pairs → duplicate GROUPS: one row per clustered doc with its
+    * component and group size — the grouping every `dedup_components*` key
+    * emits over its own pair graph. This is the step that lets a pipeline
+    * keep one doc per group. */
+  private def duplicateGroups(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    components(pairs)
       .withColumn("n_members",
         count(lit(1)).over(Window.partitionBy($"component_id")))
       .orderBy($"doc_id")
   }
 
-
   /** Keeper SELECTION — the decision a dedup pipeline actually ships:
-    * per duplicate group, keep the RICHEST document (most tokens,
-    * deterministic doc_id tiebreak), not the arbitrary min-id member.
-    * Composed entirely from proven pieces: the exact-Jaccard pair graph,
-    * connected components, and the token counter; one rank-1 window over
-    * groups. Output per group: size + the surviving doc. */
-  private val dedupKeepBest: Q = (s, dir) => {
+    * per duplicate group of `pairs`, keep the RICHEST document (most
+    * tokens, deterministic doc_id tiebreak), not the arbitrary min-id
+    * member. Composed entirely from proven pieces: the pair graph,
+    * connected components, and the token counter; the keeper is ONE hash
+    * aggregate per group. Output per group: size + the surviving doc. */
+  private def keepBest(s: SparkSession, dir: String, pairs: DataFrame): DataFrame = {
     import s.implicits._
-    val pairs = ngramJaccardPairs(s, dir).select($"doc_a".as("src"), $"doc_b".as("dst"))
-    val comp = graft.operators.Components.connectedComponents(pairs)
-      .select($"id".as("doc_id"), $"component".as("component_id"))
+    val comp = components(pairs)
     val tc = spread(Tables(s, dir, "documents"))
       .select($"doc_id", Text.tokenCount($"text").as("n_tokens"))
     // keeper argmax as ONE hash aggregate (r18, guide §2.3): max over
@@ -502,6 +501,12 @@ object SimilarityQueries {
           .as("keep_doc_id"))
       .orderBy($"component_id")
   }
+
+  /** Duplicate groups of the exact-Jaccard pair graph. */
+  private val dedupComponents: Q = (s, dir) => duplicateGroups(ngramJaccardPairs(s, dir))
+
+  /** Keeper selection over the exact-Jaccard pair graph. */
+  private val dedupKeepBest: Q = (s, dir) => keepBest(s, dir, ngramJaccardPairs(s, dir))
 
   // ---- minhash-banded family: shared hashed-shingle pipeline ----------
   // (VERDICT r15 → r16 #1.) PERF.md round 16 measured the band-bucket
@@ -530,15 +535,36 @@ object SimilarityQueries {
       .localCheckpoint()
   }
 
-  /** Candidate pairs → exact-Jaccard-verified pairs over the hashed
-    * shingle table (the oracle's jaccardVerifySql shape). */
-  private def jaccardVerify(cand: DataFrame, hsh: DataFrame): DataFrame = {
-    import hsh.sparkSession.implicits._
+  /** The band-key explode: one row per (doc, band key) of a hashed
+    * shingle set `hs`. */
+  private def minhashBandRows(hs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    explode(graft.functions.HashExpr.minhashBandKeys(hs, Perms, Bands))
+
+  /** (doc_a, doc_b), doc_a < doc_b, of the (doc_id, keys…) `rows` that
+    * agree on every key. Band buckets ARE clusters by construction (that's
+    * what LSH is for), so pair generation must stream: a self-join emits
+    * pairs lazily and AQE splits hot buckets. A per-bucket collect_list +
+    * combinations array would materialize k²/2 pairs of a k-doc cluster in
+    * one task. */
+  private def sharedKeyPairs(rows: DataFrame, keys: String*): DataFrame =
+    rows.as("a").hint("shuffle_hash")
+      .join(rows.as("b"),
+        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+
+  /** Candidate pairs → exact-Jaccard-verified pairs (the oracle's
+    * jaccardVerifySql shape). `cand`'s two id columns key the (doc_id, hs)
+    * hashed-shingle tables `a` and `b` in that order; output is
+    * (idA, idB, jaccard). */
+  private def jaccardVerify(cand: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    import cand.sparkSession.implicits._
+    val Array(ida, idb) = cand.columns
     cand
-      .join(hsh.select($"doc_id".as("doc_a"), $"hs".as("hsa")), Seq("doc_a"))
-      .join(hsh.select($"doc_id".as("doc_b"), $"hs".as("hsb")), Seq("doc_b"))
+      .join(a.toDF(ida, "hsa"), Seq(ida))
+      .join(b.toDF(idb, "hsb"), Seq(idb))
       .withColumn("inter", size(array_intersect($"hsa", $"hsb")))
-      .select($"doc_a", $"doc_b",
+      .select(col(ida), col(idb),
         ($"inter" / (size($"hsa") + size($"hsb") - $"inter")).as("jaccard"))
       .filter($"jaccard" >= JaccardT)
   }
@@ -627,20 +653,9 @@ object SimilarityQueries {
       probe: String): DataFrame = {
     import s.implicits._
     val hsh = hashedShingles(s, dir)
-    val bands = hsh.select($"doc_id",
-      explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band"))
-    // Band buckets ARE clusters by construction (that's what LSH is for),
-    // so pair generation must stream: a self-join emits pairs lazily and
-    // AQE splits hot buckets. A per-bucket collect_list + combinations
-    // array would materialize k²/2 pairs of a k-doc cluster in one task.
-    val cand = probePairs(
-      bands.as("a").hint("shuffle_hash")
-        .join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")),
-      probe)
-      .distinct()
-    jaccardVerify(cand, hsh)
+    val bands = hsh.select($"doc_id", minhashBandRows($"hs").as("band"))
+    val cand = probePairs(sharedKeyPairs(bands, "band"), probe).distinct()
+    jaccardVerify(cand, hsh, hsh)
   }
 
   /** Hot-band-capped twin of [[minhashVerifiedPairs]] — the governed path
@@ -674,27 +689,19 @@ object SimilarityQueries {
     if (minhashBandStats(s, dir)._2 <= BandDfCap)
       return minhashBandedPairsUnfenced(s, dir, "dedup_minhash_lsh_capped")
     val hsh = hashedShingles(s, dir)
-    val bands = hsh.select($"doc_id",
-      explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band"))
+    val bands = hsh.select($"doc_id", minhashBandRows($"hs").as("band"))
     val bc = bands.groupBy($"band").agg(count(lit(1)).as("c"))
     val banded = bands.join(bc, Seq("band"))
     val cold = banded.filter($"c" <= BandDfCap).select($"doc_id", $"band")
-    val coldPairs = cold.as("a").hint("shuffle_hash")
-      .join(cold.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val coldPairs = sharedKeyPairs(cold, "band")
     val sigs = hsh.select($"doc_id",
       concat_ws("_", graft.functions.HashExpr.minhashSig($"hs", Perms)).as("sigkey"))
     val hot = banded.filter($"c" > BandDfCap).select($"doc_id", $"band")
       .join(sigs, Seq("doc_id"))
-    val hotPairs = hot.as("a").hint("shuffle_hash")
-      .join(hot.as("b"),
-        col("a.band") === col("b.band") && col("a.sigkey") === col("b.sigkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val hotPairs = sharedKeyPairs(hot, "band", "sigkey")
     val cand = probePairs(coldPairs.unionByName(hotPairs), "dedup_minhash_lsh_capped")
       .distinct()
-    jaccardVerify(cand, hsh)
+    jaccardVerify(cand, hsh, hsh)
   }
 
   /** MinHash + LSH banding: 32 md5-permutations, 8 bands × 4 rows; band
@@ -734,16 +741,8 @@ object SimilarityQueries {
   /** Duplicate grouping over the CAPPED pair graph — the grouping
     * consumer's governed twin (dedup_components_lsh refuses past the band
     * fence naming this). Same components algorithm, same output schema. */
-  private val dedupComponentsLshCapped: Q = (s, dir) => {
-    import s.implicits._
-    val pairs = minhashVerifiedPairsCapped(s, dir)
-      .select($"doc_a".as("src"), $"doc_b".as("dst"))
-    graft.operators.Components.connectedComponents(pairs)
-      .select($"id".as("doc_id"), $"component".as("component_id"))
-      .withColumn("n_members",
-        count(lit(1)).over(Window.partitionBy($"component_id")))
-      .orderBy($"doc_id")
-  }
+  private val dedupComponentsLshCapped: Q = (s, dir) =>
+    duplicateGroups(minhashVerifiedPairsCapped(s, dir))
 
   /** MinHash ESTIMATION-ACCURACY rung — the dedup family's analog of
     * [[annRecallAtK]]: over every banded candidate pair, the sketch's
@@ -769,13 +768,8 @@ object SimilarityQueries {
     // join per pair side instead of separate sig/shingle joins
     val feat = hsh.select($"doc_id",
       graft.functions.HashExpr.minhashSig($"hs", Perms).as("sig"), $"hs")
-    val bands = hsh.select($"doc_id",
-      explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band"))
-    val cand = bands.as("a").hint("shuffle_hash")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val bands = hsh.select($"doc_id", minhashBandRows($"hs").as("band"))
+    val cand = sharedKeyPairs(bands, "band").distinct()
     cand
       .join(feat.select($"doc_id".as("doc_a"), $"sig".as("siga"), $"hs".as("sha")),
         Seq("doc_a"))
@@ -811,27 +805,39 @@ object SimilarityQueries {
     import s.implicits._
     val split = 3L * docCount(s, dir) / 4L
     val hsh = hashedShingles(s, dir)
-    val bands = hsh.select($"doc_id",
-      explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band"))
-    val incoming = bands.filter($"doc_id" >= split)
-      .select($"doc_id".as("new_id"), $"band")
-    val index = bands.filter($"doc_id" < split)
-      .select($"doc_id".as("dup_of"), $"band")
-    // band buckets are clusters by construction — stream pairs through a
-    // self-join (AQE splits hot buckets), same shape as the batch path
-    val cand = incoming.hint("shuffle_hash").join(index, Seq("band"))
-      .select($"new_id", $"dup_of").distinct()
-    val matches = cand
-      .join(hsh.select($"doc_id".as("new_id"), $"hs".as("sha")), Seq("new_id"))
-      .join(hsh.select($"doc_id".as("dup_of"), $"hs".as("shb")), Seq("dup_of"))
-      .withColumn("inter", size(array_intersect($"sha", $"shb")))
-      .filter(($"inter" / (size($"sha") + size($"shb") - $"inter")) >= JaccardT)
-      .groupBy($"new_id")
-      .agg(min($"dup_of").as("dup_of"), count(lit(1)).as("n_matches"))
-    hsh.filter($"doc_id" >= split).select($"doc_id".as("new_id"))
-      .join(matches, Seq("new_id"), "left")
+    val index = hsh.filter($"doc_id" < split)
+    minhashNewcomers(hsh.filter($"doc_id" >= split), index,
+      index.select($"doc_id", minhashBandRows($"hs").as("band")))
+  }
+
+  /** Per-newcomer verdict over verified (new_id, dup_of) matches: min
+    * matched existing id (NULL = genuinely new content) + match count, one
+    * row per id of `newIds` — the contract every incremental dedup key
+    * emits. */
+  private def newcomerVerdict(newIds: DataFrame, matches: DataFrame): DataFrame = {
+    import newIds.sparkSession.implicits._
+    newIds
+      .join(matches.groupBy($"new_id")
+        .agg(min($"dup_of").as("dup_of"), count(lit(1)).as("n_matches")),
+        Seq("new_id"), "left")
       .select($"new_id", $"dup_of", coalesce($"n_matches", lit(0L)).as("n_matches"))
       .orderBy($"new_id")
+  }
+
+  /** The one-sided MinHash probe both incremental text keys share: the
+    * newcomers' (doc_id, hs) band keys join the index's (doc_id, band)
+    * rows, candidates verify by exact Jaccard against the index's
+    * (doc_id, hs), and the verdict is [[newcomerVerdict]]'s. */
+  private def minhashNewcomers(newHs: DataFrame, indexHs: DataFrame,
+      indexBands: DataFrame): DataFrame = {
+    import newHs.sparkSession.implicits._
+    val incoming = newHs.select($"doc_id".as("new_id"), minhashBandRows($"hs").as("band"))
+    // band buckets are clusters by construction — stream pairs through a
+    // self-join (AQE splits hot buckets), same shape as the batch path
+    val cand = incoming.hint("shuffle_hash").join(indexBands.toDF("dup_of", "band"), Seq("band"))
+      .select($"new_id", $"dup_of").distinct()
+    newcomerVerdict(newHs.select($"doc_id".as("new_id")),
+      jaccardVerify(cand, newHs, indexHs))
   }
 
   // ---- appended-batch protocol twins (VERDICT r15 #4) ------------------
@@ -853,37 +859,19 @@ object SimilarityQueries {
         Text.shingleHashes(Text.shingleSet($"text", ShingleN))).as("hs"))
     val landedHs = BatchState.persist(s, "mh_hs", oldHs)
     BatchState.persist(s, "mh_bands",
-      landedHs.select($"doc_id",
-        explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band")))
+      landedHs.select($"doc_id", minhashBandRows($"hs").as("band")))
   }
 
   /** Batch-2: the appended docs probe the LANDED band index; verdict per
     * newcomer, identical contract to [[dedupMinhashIncremental]]. */
   private[graft] def minhashBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
     import s.implicits._
-    val oldHs = s.read.parquet(s"${BatchState.root}/mh_hs")
-      .select($"doc_id".as("dup_of"), $"hs".as("shb"))
-    val oldBands = s.read.parquet(s"${BatchState.root}/mh_bands")
-      .select($"doc_id".as("dup_of"), $"band")
     val newHs = spread(Tables(s, dir, "documents")).filter($"doc_id" >= split)
       .select($"doc_id", array_distinct(
         Text.shingleHashes(Text.shingleSet($"text", ShingleN))).as("hs"))
       .localCheckpoint()
-    val newBands = newHs.select($"doc_id".as("new_id"),
-      explode(graft.functions.HashExpr.minhashBandKeys($"hs", Perms, Bands)).as("band"))
-    val cand = newBands.hint("shuffle_hash").join(oldBands, Seq("band"))
-      .select($"new_id", $"dup_of").distinct()
-    val matches = cand
-      .join(newHs.select($"doc_id".as("new_id"), $"hs".as("sha")), Seq("new_id"))
-      .join(oldHs, Seq("dup_of"))
-      .withColumn("inter", size(array_intersect($"sha", $"shb")))
-      .filter(($"inter" / (size($"sha") + size($"shb") - $"inter")) >= JaccardT)
-      .groupBy($"new_id")
-      .agg(min($"dup_of").as("dup_of"), count(lit(1)).as("n_matches"))
-    newHs.select($"doc_id".as("new_id"))
-      .join(matches, Seq("new_id"), "left")
-      .select($"new_id", $"dup_of", coalesce($"n_matches", lit(0L)).as("n_matches"))
-      .orderBy($"new_id")
+    minhashNewcomers(newHs, s.read.parquet(s"${BatchState.root}/mh_hs"),
+      s.read.parquet(s"${BatchState.root}/mh_bands"))
   }
 
   private val dedupMinhashIncrementalBatch: Q = (s, dir) => {
@@ -910,29 +898,10 @@ object SimilarityQueries {
     * the index side read from persisted state. */
   private[graft] def semanticBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
     import s.implicits._
-    val bits = lshBitsFor(split)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
     val existing = s.read.parquet(s"${BatchState.root}/sem_index")
       .select($"dup_of", $"embedding".as("eb"), $"bucket",
         Vectors.fnorm($"embedding").as("nb"))
-    val incoming = spread(Tables(s, dir, "embeddings")).filter($"vec_id" >= split)
-      .select($"vec_id", $"embedding",
-        Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-        Vectors.fnorm($"embedding").as("na"))
-      .select($"vec_id".as("new_id"), $"embedding".as("ea"), $"na",
-        explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*)).as("bucket"))
-    val matches = incoming.hint("shuffle_hash").join(existing, Seq("bucket"))
-      .filter(Vectors.cosinePrenormed(Vectors.fdot($"ea", $"eb"), $"na", $"nb") >= SemanticT)
-      .groupBy($"new_id")
-      .agg(min($"dup_of").as("dup_of"), count(lit(1)).as("n_matches"))
-    spread(Tables(s, dir, "embeddings")).filter($"vec_id" >= split)
-      .select($"vec_id".as("new_id"))
-      .join(matches, Seq("new_id"), "left")
-      .select($"new_id", $"dup_of", coalesce($"n_matches", lit(0L)).as("n_matches"))
-      .orderBy($"new_id")
+    semanticNewcomers(s, dir, split, lshBitsFor(split), existing)
   }
 
   private val dedupSemanticIncrementalBatch: Q = (s, dir) => {
@@ -986,24 +955,7 @@ object SimilarityQueries {
     * graph swapped from the exact inverted index to the minhash-banded
     * generator, completing the scale-path family: every stage (banding,
     * verify, components, token-count ranking) is corpus-size-bounded. */
-  private val dedupKeepBestLsh: Q = (s, dir) => {
-    import s.implicits._
-    val pairs = minhashVerifiedPairs(s, dir).select($"doc_a".as("src"), $"doc_b".as("dst"))
-    val comp = graft.operators.Components.connectedComponents(pairs)
-      .select($"id".as("doc_id"), $"component".as("component_id"))
-    val tc = spread(Tables(s, dir, "documents"))
-      .select($"doc_id", Text.tokenCount($"text").as("n_tokens"))
-    // keeper argmax as ONE hash aggregate (r18, guide §2.3): max over
-    // struct(n_tokens, -doc_id) picks most tokens / lowest doc_id on ties —
-    // the exact (n_tokens desc, doc_id asc) order the old rank-1 window
-    // sorted for, now collapsing map-side with no per-group sort
-    comp.join(tc, Seq("doc_id"))
-      .groupBy($"component_id")
-      .agg(count(lit(1)).as("n_members"),
-        (-max(struct($"n_tokens".as("t"), (-$"doc_id").as("nd")))("nd"))
-          .as("keep_doc_id"))
-      .orderBy($"component_id")
-  }
+  private val dedupKeepBestLsh: Q = (s, dir) => keepBest(s, dir, minhashVerifiedPairs(s, dir))
 
   /** Duplicate GROUPS at text scale: connected components over the
     * MINHASH-BANDED pair graph instead of the exact inverted index.
@@ -1013,16 +965,7 @@ object SimilarityQueries {
     * band buckets are corpus-size-free, so this path scales like
     * dedup_minhash_lsh (3.5× for 10×). Oracle-exact: the banding is
     * md5-replayed, so DuckDB derives the identical pair graph. */
-  private val dedupComponentsLsh: Q = (s, dir) => {
-    import s.implicits._
-    val pairs = minhashVerifiedPairs(s, dir)
-      .select($"doc_a".as("src"), $"doc_b".as("dst"))
-    graft.operators.Components.connectedComponents(pairs)
-      .select($"id".as("doc_id"), $"component".as("component_id"))
-      .withColumn("n_members",
-        count(lit(1)).over(Window.partitionBy($"component_id")))
-      .orderBy($"doc_id")
-  }
+  private val dedupComponentsLsh: Q = (s, dir) => duplicateGroups(minhashVerifiedPairs(s, dir))
 
   /** (doc_id, simhash, band_id, band_val) — the 4×15-bit banding shared
     * by the pair join and the saturation-fence probe. */
@@ -1083,7 +1026,7 @@ object SimilarityQueries {
     val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"),
       Vectors.fnorm($"embedding").as("nb"))
     a.join(b, $"vec_a" < $"vec_b")
-      .filter(Vectors.cosinePrenormed(Vectors.fdot($"ea", $"eb"), $"na", $"nb") >= CosineT)
+      .filter(pairCos >= CosineT)
       .select($"vec_a", $"vec_b")
       .orderBy($"vec_a", $"vec_b")
   }
@@ -1094,16 +1037,7 @@ object SimilarityQueries {
   private val annTopK: Q = (s, dir) => {
     import s.implicits._
     fenceBruteForce("ann_cosine_topk", s, dir)
-    val emb = spread(Tables(s, dir, "embeddings"))
-    val q = emb.filter($"vec_id" < 10)
-      .select($"vec_id".as("query_id"), $"embedding".as("qe"),
-        Vectors.fnorm($"embedding").as("qn"))
-    val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"),
-      Vectors.fnorm($"embedding").as("nn"))
-    topKRanked(broadcast(q).join(n, $"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"), "cos", AnnK)
+    topKRanked(fullScanScored(s, dir, $"vec_id" < 10), "cos", AnnK)
       .orderBy($"query_id", $"rank")
   }
 
@@ -1112,17 +1046,12 @@ object SimilarityQueries {
     * neighbors are ranked only within the query's bucket. */
   private val annLshBucket: Q = (s, dir) => {
     import s.implicits._
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, lshBits(s, dir), LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
+    val emb = lshEmbeddings(s, dir, lshBits(s, dir))
     val q = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"bucket", $"nrm".as("qn"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"), $"bucket", $"nrm".as("nn"))
-    topKRanked(broadcast(q).join(n, Seq("bucket"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"), "cos", 3)
+    topKRanked(cosineScored(broadcast(q).join(n, Seq("bucket"))
+      .filter($"query_id" =!= $"neighbor_id")), "cos", 3)
       .orderBy($"query_id", $"rank")
   }
 
@@ -1136,26 +1065,16 @@ object SimilarityQueries {
   private val annLshMultiprobe: Q = (s, dir) => {
     import s.implicits._
     val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
+    val emb = lshEmbeddings(s, dir, bits)
     // each neighbor lives in exactly ONE bucket and the probe set is
     // distinct buckets, so no (query, neighbor) pair can duplicate
     val q = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"),
-        explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*))
-          .as("bucket"))
+        probeRing($"bucket", bits, 1).as("bucket"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"),
       $"bucket", $"nrm".as("nn"))
-    topKRanked(broadcast(q).join(n, Seq("bucket"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"), "cos", 3)
+    topKRanked(cosineScored(broadcast(q).join(n, Seq("bucket"))
+      .filter($"query_id" =!= $"neighbor_id")), "cos", 3)
       .orderBy($"query_id", $"rank")
   }
 
@@ -1184,17 +1103,12 @@ object SimilarityQueries {
     import s.implicits._
     fenceBruteForce("ann_mips_recall", s, dir) // truth side full-scans per query
     val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
     val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id",
       scaledEmb($"embedding", $"vec_id").as("sv"),
       Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"))
     val q0 = emb.filter($"vec_id" < 50)
     val q = q0.select($"vec_id".as("query_id"), $"sv".as("qe"),
-      explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*))
-        .as("bucket"))
+      probeRing($"bucket", bits, 1).as("bucket"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"sv".as("ne"), $"bucket")
     val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
       .filter($"query_id" =!= $"neighbor_id")
@@ -1235,10 +1149,6 @@ object SimilarityQueries {
     import s.implicits._
     fenceBruteForce("ann_mips_aug_recall", s, dir) // truth side full-scans per query
     val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
     val withSelf = spread(Tables(s, dir, "embeddings"))
       .select($"vec_id", scaledEmb($"embedding", $"vec_id").as("sv"))
       .withColumn("selfdot", Vectors.dot($"sv", $"sv"))
@@ -1255,7 +1165,7 @@ object SimilarityQueries {
     val q = base.filter($"vec_id" < 50)
       .withColumn("qb", bucketOf(qAug))
       .select($"vec_id".as("query_id"), $"sv".as("qe"),
-        explode(array($"qb" +: (0 until bits).map(flip($"qb", _)): _*)).as("bucket"))
+        probeRing($"qb", bits, 1).as("bucket"))
     val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
       .filter($"query_id" =!= $"neighbor_id")
       .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
@@ -1286,29 +1196,17 @@ object SimilarityQueries {
   private val annFiltered: Q = (s, dir) => {
     import s.implicits._
     val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      $"label",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
+    val emb = lshEmbeddings(s, dir, bits)
     val q = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"),
-        $"label".as("ql"),
-        explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*))
-          .as("bucket"))
+        $"label".as("ql"), probeRing($"bucket", bits, 1).as("bucket"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"),
       $"bucket", $"nrm".as("nn"), $"label".as("nl"))
-    topKRanked(broadcast(q).join(n, Seq("bucket"))
+    topKRanked(cosineScored(broadcast(q).join(n, Seq("bucket"))
       // equi-predicate on both sides: Catalyst folds it into the hash
       // join keys, so label filtering happens AT the join, not after
       .filter($"ql" === $"nl")
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"), "cos", 3)
+      .filter($"query_id" =!= $"neighbor_id")), "cos", 3)
       .orderBy($"query_id", $"rank")
   }
 
@@ -1322,26 +1220,14 @@ object SimilarityQueries {
     import s.implicits._
     fenceBruteForce("ann_mp2_recall", s, dir) // exact-truth side is a full scan
     val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
-    val ring2 = for { i <- 0 until bits; j <- i + 1 until bits }
-      yield flip(flip($"bucket", i), j)
+    val emb = lshEmbeddings(s, dir, bits)
     val q = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"),
-        explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)) ++: ring2: _*))
-          .as("bucket"))
+        probeRing($"bucket", bits, 2).as("bucket"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"),
       $"bucket", $"nrm".as("nn"))
-    val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"))
+    val approx = top3ByCos(cosineScored(broadcast(q).join(n, Seq("bucket"))
+      .filter($"query_id" =!= $"neighbor_id")))
     hitsAt3(approx, exactTruthTop3(s, dir, col("vec_id") < 50))
   }
 
@@ -1358,6 +1244,13 @@ object SimilarityQueries {
     * reproduces the window's (cos desc, neighbor_id asc) order
     * bit-for-bit, so the emitted truth set is identical. */
   private def exactTruthTop3(s: SparkSession, dir: String,
+      pred: org.apache.spark.sql.Column): DataFrame =
+    top3ByCos(fullScanScored(s, dir, pred)).withColumn("hit", lit(1))
+
+  /** (query_id, cos, neighbor_id) of every query matching `pred` against
+    * every other corpus vector — the O(queries · n) full scan behind the
+    * exact baselines (callers fence it). */
+  private def fullScanScored(s: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
     val emb = spread(Tables(s, dir, "embeddings"))
@@ -1365,14 +1258,7 @@ object SimilarityQueries {
     val q = emb.filter(pred)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"), $"nrm".as("nn"))
-    broadcast(q).join(n, $"query_id" =!= $"neighbor_id")
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id")
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"cos", $"neighbor_id", 3).as("__top"))
-      .select($"query_id", explode(col("__top")("id")).as("neighbor_id"),
-        lit(1).as("hit"))
+    cosineScored(broadcast(q).join(n, $"query_id" =!= $"neighbor_id"))
   }
 
   /** Run two INDEPENDENT eager-pipeline builders on concurrent driver
@@ -1390,20 +1276,37 @@ object SimilarityQueries {
     (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
   }
 
+  /** Cosine of a candidate pair carrying the vectors `ea`/`eb` and their
+    * precomputed norms `na`/`nb` — the score of the pairwise near-dup keys. */
+  private def pairCos: org.apache.spark.sql.Column =
+    Vectors.cosinePrenormed(Vectors.fdot(col("ea"), col("eb")), col("na"), col("nb"))
+
+  /** (query_id, cos, neighbor_id) of a candidate frame carrying the query
+    * vector `qe` and the neighbor vector `ne` with their precomputed norms
+    * `qn`/`nn` — the cosine scoring every float ANN rung ranks by. */
+  private def cosineScored(cand: DataFrame): DataFrame =
+    cand.select(col("query_id"),
+      Vectors.cosinePrenormed(Vectors.fdot(col("qe"), col("ne")), col("qn"), col("nn")).as("cos"),
+      col("neighbor_id"))
+
+  /** The `k` best `id`s per `by` by (`score` desc, `id` asc), one
+    * (by, id) row each — the bounded top-k aggregate in place of a rank-≤k
+    * window (r18, guide §2.3; ordering contract in [[exactTruthTop3]]'s
+    * doc). Shared by the recall rungs' top-3 and the IVF cell picks. */
+  private def topK(scored: DataFrame, by: String, score: String, id: String,
+      k: Int): DataFrame =
+    scored.groupBy(col(by))
+      .agg(graft.functions.TopKAgg.byScore(col(score), col(id), k).as("__top"))
+      .select(col(by), explode(col("__top")("id")).as(id))
+
   /** rank-≤3 cutoff by (cos desc, neighbor_id asc) over a scored
-    * (query_id, cos, neighbor_id) frame, as the bounded top-k aggregate —
-    * shared by the recall rungs (r18, guide §2.3; ordering contract in
-    * [[exactTruthTop3]]'s doc). */
-  private def top3ByCos(scored: DataFrame): DataFrame = {
-    import scored.sparkSession.implicits._
-    scored.groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"cos", $"neighbor_id", 3).as("__top"))
-      .select($"query_id", explode(col("__top")("id")).as("neighbor_id"))
-  }
+    * (query_id, cos, neighbor_id) frame. */
+  private def top3ByCos(scored: DataFrame): DataFrame =
+    topK(scored, "query_id", "cos", "neighbor_id", 3)
 
   /** rank-≤k rows by (`score` desc, neighbor_id asc) emitted as
-    * (query_id, rank, neighbor_id) — [[top3ByCos]]'s window-with-rank
-    * twin (rank i = array position i−1 of the bounded top-k state). */
+    * (query_id, rank, neighbor_id) — [[topK]]'s window-with-rank twin
+    * (rank i = array position i−1 of the bounded top-k state). */
   private def topKRanked(scored: DataFrame, score: String, k: Int): DataFrame = {
     import scored.sparkSession.implicits._
     scored.groupBy($"query_id")
@@ -1412,13 +1315,16 @@ object SimilarityQueries {
       .select($"query_id", ($"__r" + 1).as("rank"), $"__t.id".as("neighbor_id"))
   }
 
-  /** hits@3 of an approx (query_id, neighbor_id) set against a truth set. */
-  private def hitsAt3(approx: DataFrame, truth: DataFrame): DataFrame = {
+  /** hits@3 of an approx (`by`…, neighbor_id) set against a truth
+    * (query_id, neighbor_id, hit) set: one exact-integer row per `by`
+    * group, ordered by it. */
+  private def hitsAt3(approx: DataFrame, truth: DataFrame,
+      by: Seq[String] = Seq("query_id")): DataFrame = {
     import approx.sparkSession.implicits._
     approx.join(truth, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
+      .groupBy(by.map(col): _*)
       .agg(coalesce(sum($"hit"), lit(0)).cast("int").as("hits_at_3"))
-      .orderBy($"query_id")
+      .orderBy(by.map(col): _*)
   }
 
   private val LshTables = 4
@@ -1448,14 +1354,11 @@ object SimilarityQueries {
       .filter($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"neighbor_id").distinct()
     val vecs = emb.select($"vec_id", $"embedding", $"nrm")
-    val approx = top3ByCos(cand
+    val approx = top3ByCos(cosineScored(cand
       .join(vecs.select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn")),
         Seq("query_id"))
       .join(vecs.select($"vec_id".as("neighbor_id"), $"embedding".as("ne"), $"nrm".as("nn")),
-        Seq("neighbor_id"))
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id"))
+        Seq("neighbor_id"))))
     hitsAt3(approx, exactTruthTop3(s, dir, col("vec_id") < 50))
   }
 
@@ -1488,14 +1391,11 @@ object SimilarityQueries {
     // rows collapse map-side instead of shuffling+sorting per vector
     def nearestCents(df: DataFrame, idCol: String, vecCol: String,
         nCol: String, keep: Int): DataFrame =
-      df.join(broadcast(cents), col(idCol) =!= lit(-1))
+      topK(df.join(broadcast(cents), col(idCol) =!= lit(-1))
         .select(col(idCol),
           Vectors.cosinePrenormed(Vectors.fdot(col(vecCol), $"ce"), col(nCol), $"cn")
             .as("ccos"),
-          $"cent_id")
-        .groupBy(col(idCol))
-        .agg(graft.functions.TopKAgg.byScore($"ccos", $"cent_id", keep).as("__top"))
-        .select(col(idCol), explode(col("__top")("id")).as("cent_id"))
+          $"cent_id"), idCol, "ccos", "cent_id", keep)
     val assigned = nearestCents(emb, "vec_id", "embedding", "nrm", 1)
     val q = emb.filter($"vec_id" >= IvfQLo && $"vec_id" < IvfQHi)
       .select($"vec_id".as("query_id"), $"embedding".as("qe"), $"nrm".as("qn"))
@@ -1508,14 +1408,7 @@ object SimilarityQueries {
         Seq("neighbor_id"))
       .join(q.select($"query_id", $"qe", $"qn"), Seq("query_id"))
       .filter($"query_id" =!= $"neighbor_id")
-    cand
-      .select($"query_id",
-        Vectors.cosinePrenormed(Vectors.fdot($"qe", $"ne"), $"qn", $"nn").as("cos"),
-        $"neighbor_id")
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"cos", $"neighbor_id", 3).as("__top"))
-      .select($"query_id", posexplode(col("__top")).as(Seq("__r", "__t")))
-      .select($"query_id", ($"__r" + 1).as("rank"), $"__t.id".as("neighbor_id"))
+    topKRanked(cosineScored(cand), "cos", 3)
       .orderBy($"query_id", $"rank")
   }
 
@@ -1531,28 +1424,31 @@ object SimilarityQueries {
       cents: DataFrame, queriesPred: org.apache.spark.sql.Column): DataFrame = {
     import s.implicits._
     import graft.operators.KMeans
-    val assigned = KMeans.assign(q, cents)
     val queries = q.filter(queriesPred)
       .select($"id".as("query_id"), $"qv".as("qq"))
-    // probe pick and final rank are bounded top-k aggregates, not windows
-    // (r18, guide §2.3 — same order contract as exactTruthTop3): the
-    // candidate rows collapse map-side instead of shuffling+sorting per
-    // query
-    val probes = queries.crossJoin(broadcast(cents))
-      .select($"query_id", KMeans.icos($"qq", $"cvec").as("pcos"), $"cent_id")
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"pcos", $"cent_id", IvfProbe).as("__top"))
-      .select($"query_id", explode(col("__top")("id")).as("cent_id"))
-    probes
-      .join(assigned.select($"id".as("neighbor_id"), $"cent_id"), Seq("cent_id"))
+    // final rank is a bounded top-k aggregate, not a window (r18, guide
+    // §2.3 — same order contract as exactTruthTop3)
+    topKRanked(ivfCandidates(q, cents, queries)
       .join(q.select($"id".as("neighbor_id"), $"qv".as("nq")), Seq("neighbor_id"))
       .join(queries, Seq("query_id"))
       .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", KMeans.icos($"qq", $"nq").as("cos"), $"neighbor_id")
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"cos", $"neighbor_id", 3).as("__top"))
-      .select($"query_id", posexplode(col("__top")).as(Seq("__r", "__t")))
-      .select($"query_id", ($"__r" + 1).as("rank"), $"__t.id".as("neighbor_id"))
+      .select($"query_id", KMeans.icos($"qq", $"nq").as("cos"), $"neighbor_id"), "cos", 3)
+  }
+
+  /** (cent_id, query_id, neighbor_id): each of `queries`' (query_id, qq)
+    * probes its [[IvfProbe]] nearest cells of the trained codebook `cents`
+    * (integer cosine, bounded top-k pick — the candidate rows collapse
+    * map-side instead of shuffling+sorting per query), and every vector of
+    * the quantized corpus `q` assigned to a probed cell is a candidate.
+    * The coarse stage of [[trainedProbeTop3]] and [[annIvfPqRecall]]. */
+  private def ivfCandidates(q: DataFrame, cents: DataFrame, queries: DataFrame): DataFrame = {
+    import q.sparkSession.implicits._
+    import graft.operators.KMeans
+    val assigned = KMeans.assign(q, cents)
+    val probes = topK(queries.crossJoin(broadcast(cents))
+      .select($"query_id", KMeans.icos($"qq", $"cvec").as("pcos"), $"cent_id"),
+      "query_id", "pcos", "cent_id", IvfProbe)
+    probes.join(assigned.select($"id".as("neighbor_id"), $"cent_id"), Seq("cent_id"))
   }
 
   /** IVF with TRAINED centroids — [[graft.operators.KMeans]] (2 Lloyd
@@ -1612,12 +1508,9 @@ object SimilarityQueries {
         .unionByName(
           trainedProbeTop3(s, q, fresh, pred).withColumn("method", lit("fresh")))
         .select($"method", $"query_id", $"neighbor_id")
-    val truth = exactTruthTop3(s, dir,
-      col("vec_id") >= split && col("vec_id") < split + DriftQ)
-    approx.join(truth, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"method", $"query_id")
-      .agg(coalesce(sum($"hit"), lit(0)).cast("int").as("hits_at_3"))
-      .orderBy($"method", $"query_id")
+    hitsAt3(approx,
+      exactTruthTop3(s, dir, col("vec_id") >= split && col("vec_id") < split + DriftQ),
+      Seq("method", "query_id"))
   }
 
   /** INCREMENTAL IVF index maintenance — the mode a 100 TB index actually
@@ -1678,14 +1571,17 @@ object SimilarityQueries {
       .orderBy($"vec_id", $"j")
   }
 
-  /** Int8 symmetric quantization — the embedding STORAGE path at 100 TB:
-    * per-vector scale = max |component|, q_i = round(v_i·127/scale), 4×
-    * smaller at rest, dequantize on read. This key measures what the
-    * compression costs: top-3 neighbors ranked over dequantized vectors
-    * vs exact float truth, per query, as oracle-checked integers — the
-    * same exact-integer recall contract as [[annRecallAtK]]. All
-    * arithmetic (round-half-up, fold order, division tree) is mirrored
-    * token-for-token by the DuckDB replay. */
+  /** (query_id, neighbor_id, cos) of the first 10 vectors of `t` against
+    * every other row, by the plain cosine of the vector expression `vec` —
+    * the full scan both sides of the q8 and matryoshka rungs rank. */
+  private def first10Cosine(t: DataFrame, vec: org.apache.spark.sql.Column): DataFrame =
+    broadcast(t.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("query_id"), vec.as("qv")))
+      .join(t.select(col("vec_id").as("neighbor_id"), vec.as("nv")),
+        col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        Vectors.cosine(col("qv"), col("nv")).as("cos"))
+
   /** Matryoshka (truncated-dimension) recall rung — the storage/compute
     * half-step between full vectors and PQ codes (Kusupati et al.,
     * "Matryoshka Representation Learning", NeurIPS 2022): score with only
@@ -1698,35 +1594,29 @@ object SimilarityQueries {
     * Same fenced brute-force measurement class as the other rungs. */
   private val annMatryoshkaRecall: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.Column
     fenceBruteForce("ann_matryoshka_recall", s, dir)
-    def top3(scored: DataFrame): DataFrame = top3ByCos(scored)
     val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("fe"))
-    def scored(dim: Option[Int]): DataFrame = {
-      def v(c: Column): Column = dim.map(d => slice(c, 1, d)).getOrElse(c)
-      broadcast(emb.filter($"vec_id" < 10)
-          .select($"vec_id".as("query_id"), v($"fe").as("qv")))
-        .join(emb.select($"vec_id".as("neighbor_id"), v($"fe").as("nv")),
-          $"query_id" =!= $"neighbor_id")
-        .select($"query_id", $"neighbor_id", Vectors.cosine($"qv", $"nv").as("cos"))
-    }
-    val truth = top3(scored(None)).withColumn("hit", lit(1))
+    val truth = top3ByCos(first10Cosine(emb, $"fe")).withColumn("hit", lit(1))
     def hits(d: Int, name: String): DataFrame =
-      top3(scored(Some(d)))
-        .join(truth, Seq("query_id", "neighbor_id"), "left")
-        .groupBy($"query_id")
-        .agg(coalesce(sum($"hit"), lit(0)).cast("int").as(name))
+      hitsAt3(top3ByCos(first10Cosine(emb, slice($"fe", 1, d))), truth)
+        .withColumnRenamed("hits_at_3", name)
     hits(16, "hits16_at_3")
       .join(hits(32, "hits32_at_3"), Seq("query_id"))
       .orderBy($"query_id")
   }
 
+  /** Int8 symmetric quantization — the embedding STORAGE path at 100 TB:
+    * per-vector scale = max |component|, q_i = round(v_i·127/scale), 4×
+    * smaller at rest, dequantize on read. This key measures what the
+    * compression costs: top-3 neighbors ranked over dequantized vectors
+    * vs exact float truth, per query, as oracle-checked integers — the
+    * same exact-integer recall contract as [[annRecallAtK]]. All
+    * arithmetic (round-half-up, fold order, division tree) is mirrored
+    * token-for-token by the DuckDB replay. */
   private val annQ8Recall: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.Column
     fenceBruteForce("ann_q8_recall", s, dir) // both sides scan the corpus per query
-    def top3(scored: DataFrame): DataFrame = top3ByCos(scored)
     val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id",
       transform($"embedding", x => x.cast("double")).as("fe"))
     // a REAL array<tinyint> roundtrip — the stored form is bytes, not a
@@ -1734,19 +1624,8 @@ object SimilarityQueries {
     val deq = emb.select($"vec_id", $"fe", Vectors.q8Scale($"fe").as("scale"))
       .select($"vec_id",
         Vectors.q8Dequantize(Vectors.q8Quantize($"fe", $"scale"), $"scale").as("qe"))
-    def scored(t: DataFrame, vec: String): DataFrame =
-      broadcast(t.filter($"vec_id" < 10)
-          .select($"vec_id".as("query_id"), col(vec).as("qv")))
-        .join(t.select($"vec_id".as("neighbor_id"), col(vec).as("nv")),
-          $"query_id" =!= $"neighbor_id")
-        .select($"query_id", $"neighbor_id",
-          Vectors.cosine($"qv", $"nv").as("cos"))
-    val truth = top3(scored(emb, "fe")).withColumn("hit", lit(1))
-    top3(scored(deq, "qe"))
-      .join(truth, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(coalesce(sum($"hit"), lit(0)).cast("int").as("hits_at_3"))
-      .orderBy($"query_id")
+    hitsAt3(top3ByCos(first10Cosine(deq, $"qe")),
+      top3ByCos(first10Cosine(emb, $"fe")).withColumn("hit", lit(1)))
   }
 
   private val PqSub = 8 // subspaces (EmbDim / PqSubDim)
@@ -1795,21 +1674,12 @@ object SimilarityQueries {
         (lit(j * PqK) + element_at(codes, j + 1).cast("int") + 1))
     }
 
+  /** hits@3 of the ADC-`score`d (query_id, neighbor_id) candidates of the
+    * two PQ rungs against the float-exact truth of queries id < 10. */
   private def pqHitsAt3(s: SparkSession, dir: String,
-      scored: DataFrame): DataFrame = {
-    import s.implicits._
-    // bounded top-k aggregate, not a window (r18, guide §2.3; order
-    // contract in exactTruthTop3's doc)
-    scored
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"score", $"neighbor_id", 3).as("__top"))
-      .select($"query_id", explode(col("__top")("id")).as("neighbor_id"))
-      .join(exactTruthTop3(s, dir, col("vec_id") < 10),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(coalesce(sum($"hit"), lit(0)).cast("int").as("hits_at_3"))
-      .orderBy($"query_id")
-  }
+      scored: DataFrame): DataFrame =
+    hitsAt3(topK(scored, "query_id", "score", "neighbor_id", 3),
+      exactTruthTop3(s, dir, col("vec_id") < 10))
 
   /** PRODUCT QUANTIZATION recall rung — the fourth member of the
     * compressed-storage family (q8 scalar quantization, JL projection,
@@ -1868,21 +1738,34 @@ object SimilarityQueries {
       KMeans.fit(emb, "vec_id", "embedding", IvfCentroids, IvfTrainIters),
       pqParts(s, q))
     val (codesArr, lutArr) = pq
-    val assigned = KMeans.assign(q, coarse)
     val queries = q.filter($"id" < 10).select($"id".as("query_id"), $"qv".as("qq"))
-    // probe pick via the bounded top-k aggregate (r18, guide §2.3)
-    val probes = queries.crossJoin(broadcast(coarse))
-      .select($"query_id", KMeans.icos($"qq", $"cvec").as("pcos"), $"cent_id")
-      .groupBy($"query_id")
-      .agg(graft.functions.TopKAgg.byScore($"pcos", $"cent_id", IvfProbe).as("__top"))
-      .select($"query_id", explode(col("__top")("id")).as("cent_id"))
-    val scored = probes
-      .join(assigned.select($"id".as("neighbor_id"), $"cent_id"), Seq("cent_id"))
+    val scored = ivfCandidates(q, coarse, queries)
       .join(codesArr.select($"id".as("neighbor_id"), $"codes"), Seq("neighbor_id"))
       .join(broadcast(lutArr), Seq("query_id"))
       .filter($"query_id" =!= $"neighbor_id")
       .withColumn("score", adcScore($"codes", $"lut"))
     pqHitsAt3(s, dir, scored)
+  }
+
+  /** Multi-probe LSH candidate pairs with their cosine score — the pair
+    * generator [[dedupSemantic]] and [[dedupThresholdSweep]] share: each
+    * unordered pair is found EXACTLY once (x's probe ring contains y's
+    * home bucket iff the buckets are equal or 1 bit apart, and
+    * `vec_a < vec_b` fixes the orientation), so downstream counts need no
+    * dedup. */
+  private def semanticScoredPairs(s: SparkSession, dir: String,
+      probeKey: String): DataFrame = {
+    import s.implicits._
+    val bits = lshBits(s, dir)
+    val emb = lshEmbeddings(s, dir, bits)
+    val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"), $"nrm".as("na"),
+      probeRing($"bucket", bits, 1).as("bucket"))
+    val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"), $"bucket", $"nrm".as("nb"))
+    probePairs(
+        a.hint("shuffle_hash").join(b, Seq("bucket")).filter($"vec_a" < $"vec_b"),
+        probeKey)
+      .withColumn("cos", pairCos)
+      .select($"vec_a", $"vec_b", $"cos")
   }
 
   /** SEMANTIC dedup end to end — the composition a 100 TB training
@@ -1899,33 +1782,6 @@ object SimilarityQueries {
     * (bits+1)·bucket per row — still linear in corpus size.
     * Every stage is the already-proven scale path; this key proves they
     * COMPOSE, oracle-replayed including the recursive-CTE components. */
-  /** Multi-probe LSH candidate pairs with their cosine score — the pair
-    * generator [[dedupSemantic]] and [[dedupThresholdSweep]] share: each
-    * unordered pair is found EXACTLY once (x's probe ring contains y's
-    * home bucket iff the buckets are equal or 1 bit apart, and
-    * `vec_a < vec_b` fixes the orientation), so downstream counts need no
-    * dedup. */
-  private def semanticScoredPairs(s: SparkSession, dir: String,
-      probeKey: String): DataFrame = {
-    import s.implicits._
-    val bits = lshBits(s, dir)
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
-    val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"), $"nrm".as("na"),
-      explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*)).as("bucket"))
-    val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"), $"bucket", $"nrm".as("nb"))
-    probePairs(
-        a.hint("shuffle_hash").join(b, Seq("bucket")).filter($"vec_a" < $"vec_b"),
-        probeKey)
-      .withColumn("cos", Vectors.cosinePrenormed(Vectors.fdot($"ea", $"eb"), $"na", $"nb"))
-      .select($"vec_a", $"vec_b", $"cos")
-  }
-
   private val dedupSemantic: Q = (s, dir) => {
     import s.implicits._
     val pairs = semanticScoredPairs(s, dir, "dedup_semantic")
@@ -2044,26 +1900,26 @@ object SimilarityQueries {
     import s.implicits._
     val bits = lshBits(s, dir)
     val split = 3L * corpusCount(s, dir) / 4L
-    def flip(b: org.apache.spark.sql.Column, i: Int) = concat(
-      substring(b, 1, i),
-      when(substring(b, i + 1, 1) === "0", "1").otherwise("0"),
-      substring(b, i + 2, bits))
-    val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id", $"embedding",
-      Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"),
-      Vectors.fnorm($"embedding").as("nrm"))
-    val incoming = emb.filter($"vec_id" >= split)
-      .select($"vec_id".as("new_id"), $"embedding".as("ea"), $"nrm".as("na"),
-        explode(array($"bucket" +: (0 until bits).map(flip($"bucket", _)): _*)).as("bucket"))
-    val existing = emb.filter($"vec_id" < split)
+    val existing = lshEmbeddings(s, dir, bits).filter($"vec_id" < split)
       .select($"vec_id".as("dup_of"), $"embedding".as("eb"), $"bucket", $"nrm".as("nb"))
-    val matches = incoming.hint("shuffle_hash").join(existing, Seq("bucket"))
-      .filter(Vectors.cosinePrenormed(Vectors.fdot($"ea", $"eb"), $"na", $"nb") >= SemanticT)
-      .groupBy($"new_id")
-      .agg(min($"dup_of").as("dup_of"), count(lit(1)).as("n_matches"))
-    emb.filter($"vec_id" >= split).select($"vec_id".as("new_id"))
-      .join(matches, Seq("new_id"), "left")
-      .select($"new_id", $"dup_of", coalesce($"n_matches", lit(0L)).as("n_matches"))
-      .orderBy($"new_id")
+    semanticNewcomers(s, dir, split, bits, existing)
+  }
+
+  /** The one-sided multi-probe both incremental embedding keys share: the
+    * newcomers (vec_id ≥ `split`, bucketed at `bits`) probe home +
+    * hamming-1 ring against the (dup_of, eb, bucket, nb) `index`, matches
+    * verify by cosine ≥ [[SemanticT]], and the verdict is
+    * [[newcomerVerdict]]'s. */
+  private def semanticNewcomers(s: SparkSession, dir: String, split: Long, bits: Int,
+      index: DataFrame): DataFrame = {
+    import s.implicits._
+    val newcomers = lshEmbeddings(s, dir, bits).filter($"vec_id" >= split)
+    val incoming = newcomers
+      .select($"vec_id".as("new_id"), $"embedding".as("ea"), $"nrm".as("na"),
+        probeRing($"bucket", bits, 1).as("bucket"))
+    val matches = incoming.hint("shuffle_hash").join(index, Seq("bucket"))
+      .filter(pairCos >= SemanticT)
+    newcomerVerdict(newcomers.select($"vec_id".as("new_id")), matches)
   }
 
   /** Recall@3 of the two approximate ANN paths against brute-force ground
@@ -2084,12 +1940,10 @@ object SimilarityQueries {
       // integer vectors; approximation error is exactly what's measured)
       .unionByName(annIvfTrained(s, dir).withColumn("method", lit("ivf_trained")))
       .select($"method", $"query_id", $"neighbor_id")
-    val truth = exactTruthTop3(s, dir,
-      col("vec_id") < 50 || (col("vec_id") >= IvfQLo && col("vec_id") < IvfQHi))
-    approx.join(truth, Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"method", $"query_id")
-      .agg(coalesce(sum($"hit"), lit(0)).cast("int").as("hits_at_3"))
-      .orderBy($"method", $"query_id")
+    hitsAt3(approx,
+      exactTruthTop3(s, dir,
+        col("vec_id") < 50 || (col("vec_id") >= IvfQLo && col("vec_id") < IvfQHi)),
+      Seq("method", "query_id"))
   }
 
   // ---------------------------------------------------------------------

@@ -26,6 +26,21 @@ class SimilarityScaleSpec extends SparkSpec {
     assert(ns.map(SimilarityQueries.lshBitsFor) == ns.map(SimilarityQueries.lshBitsFor).sorted)
   }
 
+  test("probe ring: home first, then every bucket within the radius, each once") {
+    def hamming(a: String, b: String): Int = a.zip(b).count { case (x, y) => x != y }
+    for (bits <- Seq(2, 5, 8); radius <- Seq(1, 2)) {
+      val home = (0 until bits).map(i => if (i % 3 == 0) '1' else '0').mkString
+      val ring = spark.range(1)
+        .select(SimilarityQueries.probeRing(lit(home), bits, radius))
+        .collect().map(_.getString(0)).toSeq
+      val expected = 1 + bits + (if (radius == 2) bits * (bits - 1) / 2 else 0)
+      val tag = s"bits=$bits radius=$radius ring=$ring"
+      assert(ring.head == home, tag)
+      assert(ring.size == expected && ring.distinct.size == expected, tag)
+      assert(ring.forall(b => b.length == bits && hamming(b, home) <= radius), tag)
+    }
+  }
+
   /** (n, derived bits, Σ per-bucket k·(k−1)/2) for one sf dir. */
   private def candidatePairs(dir: String): (Long, Int, Long) = {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
