@@ -257,7 +257,7 @@ object EcomFixture {
         fenceLanding(spark, dir,
           if (streamLeaves) StreamedLandingFactor else FullLandingFactor,
           if (streamLeaves) "martsStreamed" else "marts")
-        val out = java.nio.file.Files.createTempDirectory("graft_ecom_").toString
+        val out = graft.TempDirs.create("graft_ecom_").toString
         val models = Ecom.models(now, today)
         val effective =
           if (!streamLeaves) models

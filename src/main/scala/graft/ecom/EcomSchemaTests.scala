@@ -199,20 +199,6 @@ object EcomSchemaTests {
       case Rel(t, col, p, pc, _) => Quality.relationship(tables(t), col, tables(p), pc)
     }
 
-  // qa spill dirs are JVM-temp per frame() call; reclaim them on exit so
-  // repeated audits never accumulate disk (same leak class the round-3
-  // components spills had)
-  private val spillDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      spillDirs.forEach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(d)
-      }))
-  }
-
   /** One row per declared test: (test_name, severity, failures). Every
     * referenced table with a COMPUTED plan is spilled to parquet once —
     * the 150-way union then analyzes as flat scans instead of re-deriving
@@ -236,11 +222,9 @@ object EcomSchemaTests {
     *   is one join over flat scans). */
   def frame(spark: SparkSession, tables: Map[String, DataFrame],
       stream: Set[String] = Set.empty): DataFrame = {
-    lazy val tmp: String = {
-      val t = java.nio.file.Files.createTempDirectory("graft_qa_").toString
-      spillDirs.add(new java.io.File(t))
-      t
-    }
+    // JVM-temp per call, reclaimed at exit so repeated audits never
+    // accumulate disk
+    lazy val tmp: String = graft.TempDirs.create("graft_qa_").toString
     val flat = checks.flatMap(_.tables).distinct.map { n =>
       val df = tables(n)
       if (stream(n) || df.queryExecution.analyzed.children.isEmpty) n -> df

@@ -41,7 +41,7 @@ object Components {
     * `scratchDir` always wins. */
   private def defaultScratch(spark: org.apache.spark.sql.SparkSession): String =
     if (spark.sparkContext.isLocal)
-      java.nio.file.Files.createTempDirectory("graft_cc_").toString
+      graft.TempDirs.create("graft_cc_").toString
     else {
       val wh = spark.conf.get("spark.sql.warehouse.dir")
       s"$wh/.graft_cc_scratch/${java.util.UUID.randomUUID()}"
@@ -49,9 +49,9 @@ object Components {
 
   /** @param edges DataFrame with two id columns (undirected edges)
     * @param scratchDir where edge/generation parquet spills live. Defaults
-    *        to a JVM temp dir on local mode and to a unique directory under
-    *        `spark.sql.warehouse.dir` on a cluster (executors must be able
-    *        to read what the rounds write). Intermediate spills are always
+    *        to a JVM temp dir on local mode (deleted at JVM exit) and to
+    *        a unique directory under `spark.sql.warehouse.dir` on a
+    *        cluster (executors must be able to read what the rounds write). Intermediate spills are always
     *        removed before returning — on success AND on the
     *        non-convergence throw — leaving only `<scratch>/components`
     *        (the returned DataFrame's backing files); pass an explicit

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
+
+import graft.sources.ParquetFormat
 
 /** Keyed delete-then-insert upsert — the reference's signature stateful op
   * (ingest_latest_synthetic_data.py:505-589 local, :610-703 MotherDuck).
@@ -24,58 +26,22 @@ object Upsert {
     target.join(updates, keys, "left_anti")
       .unionByName(updates, allowMissingColumns = true)
 
-  /** Merge into a parquet path via backup-then-swap.
-    *
-    * NOT atomic for concurrent readers: between rename(target→bak) and
-    * rename(tmp→target) the target path briefly does not exist, so a reader
-    * racing the swap can observe path-not-found and must retry. (True
-    * read-atomicity needs a versioned-directory + pointer-file scheme, or a
-    * table format with a transaction log — Delta/Iceberg's MERGE is the
-    * drop-in at that point.) What IS guaranteed is crash-safety:
-    *
-    * Crash-safety contract: at every point either `target` or
-    * `target.__bak_upsert` holds a complete copy of the pre-merge data, and
-    * the backup is deleted only after the new target is verified in place.
-    * A leftover `.__bak_upsert` with no target means a crash happened
-    * between the two renames — the next call restores it before merging.
-    * Each rename's boolean result is checked (HDFS-style FileSystems report
-    * failure by returning false, not by throwing). */
+  /** Merge into a parquet path through [[ParquetFormat]]'s crash-safe
+    * swap, staged at `path.__tmp_upsert` with the backup at
+    * `path.__bak_upsert`. A leftover backup with no target means a crash
+    * happened between the two renames — the next call restores it before
+    * merging. Not atomic for concurrent readers (see [[ParquetFormat]]). */
   def intoParquet(path: String, updates: DataFrame, keys: Seq[String]): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = updates.sparkSession
     val target = new Path(path)
-    // Resolve the FS from the target's own URI — FileSystem.get(conf) would
-    // return the *default* FS, which is wrong for s3a:// or cross-scheme paths.
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(path + ".__tmp_upsert")
     val bak = new Path(path + ".__bak_upsert")
-
-    // Recover from a previous failed run: stale tmp is garbage; a stale bak
-    // is the only surviving copy iff target is missing — restore it.
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(bak)) {
-      if (!fs.exists(target)) {
-        require(fs.rename(bak, target), s"failed to restore backup $bak to $target")
-      } else fs.delete(bak, true)
-    }
-
-    val hadTarget = fs.exists(target)
+    ParquetFormat.recover(spark, target, tmp, bak)
     val merged =
-      if (hadTarget) merge(spark.read.parquet(path), updates, keys)
+      if (target.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(target))
+        merge(spark.read.parquet(path), updates, keys)
       else updates
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-
-    if (hadTarget) {
-      require(fs.rename(target, bak), s"failed to move $target aside to $bak; aborting — data untouched")
-    }
-    if (!fs.rename(tmp, target)) {
-      // Roll the backup straight back so the reader-visible path survives.
-      if (hadTarget && !fs.rename(bak, target)) {
-        throw new IllegalStateException(
-          s"swap failed AND rollback failed: data preserved at $bak, target $target missing")
-      }
-      throw new IllegalStateException(s"failed to rename $tmp to $target; previous data restored")
-    }
-    if (hadTarget && fs.exists(target)) fs.delete(bak, true)
+    ParquetFormat.swap(merged, target, tmp, bak)
   }
 }

@@ -2,8 +2,10 @@ package graft.plans
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.ParquetFormat
 
 /** The layered-transform runner — the reference's dbt DAG re-expressed as
   * plain function composition (SURVEY §2.1 S10, §3 entry point 1).
@@ -91,14 +93,6 @@ object ModelGraph {
   /** Watermark-aggregate alias — named so no real model column collides. */
   private val WmAlias = "__graft_wm"
 
-  /** Incremental bootstrap probe (parquet binding). Only genuine absence
-    * returns false; a transient FS/permission error (or an OOM) must NOT
-    * be silently read as "table missing" and trigger a full Overwrite
-    * where an append was intended — anything but AnalysisException/
-    * FileNotFoundException propagates. */
-  private[graft] def tableExists(spark: SparkSession, path: String): Boolean =
-    graft.sources.ParquetFormat.exists(spark, path)
-
   /** Materialize the graph under `base` honoring each model's
     * materialization — the `dbt run` analog.
     *
@@ -109,29 +103,22 @@ object ModelGraph {
     * bounds concurrent jobs per level; results are identical to a
     * sequential run — same-level models share no edges by construction.
     *
-    * Storage is pluggable through the [[graft.sources.TableFormat]] seam
-    * (VERDICT r10 #5): the default [[graft.sources.ParquetFormat]] keeps
-    * the historical plain-parquet layout; pass
-    * [[graft.sources.VersionedParquetFormat]] for reader-atomic snapshot
-    * publishes, or `IcebergFormat()` in a deployment that ships
-    * iceberg-spark-runtime. The DAG/watermark/merge logic is identical
-    * across bindings — only `read/append/replace` dispatch differs. */
+    * Every landed model is a plain parquet directory `baseDir/<name>`
+    * ([[graft.sources.ParquetFormat]]); an [[IncrementalMerge]] publishes
+    * its self-reading replace through that format's crash-safe swap. */
   def run(spark: SparkSession, models: Seq[Model],
       sources: Map[String, DataFrame], baseDir: String,
-      parallelism: Int = 4,
-      format: graft.sources.TableFormat = graft.sources.ParquetFormat)
-      : Map[String, DataFrame] = {
+      parallelism: Int = 4): Map[String, DataFrame] = {
     val acc = mutable.Map.empty[String, DataFrame] ++ sources
-    val fmt = format
 
     def materialize(m: Model, deps: Map[String, DataFrame]): DataFrame = {
-      val path = fmt.ident(baseDir, m.name)
+      val path = s"$baseDir/${m.name}"
       val built = m.build(deps)
       m.materialization match {
         case View => built
         case Table =>
-          fmt.overwrite(built, path)
-          fmt.read(spark, path)
+          ParquetFormat.overwrite(built, path)
+          ParquetFormat.read(spark, path)
         case Incremental(wm) =>
           // A NULL watermark is unsupportable under high-watermark APPEND:
           // the row can never be compared against MAX(wm), so it would
@@ -142,26 +129,25 @@ object ModelGraph {
           val guarded = built.filter(assert_true(col(wm).isNotNull,
             lit(s"Incremental($wm): NULL watermark row — high-watermark append " +
               "cannot track it; filter NULLs upstream or use IncrementalMerge")).isNull)
-          if (!fmt.exists(spark, path)) { // first run bootstraps the full build (SURVEY §7.4 #5)
-            fmt.overwrite(guarded, path)
+          if (!ParquetFormat.exists(spark, path)) { // first run bootstraps the full build (SURVEY §7.4 #5)
+            ParquetFormat.overwrite(guarded, path)
           } else {
             // reserved alias: a model watermarking on a column literally
             // named like the aggregate alias must not self-collide
-            val watermark = fmt.read(spark, path).agg(max(col(wm)).as(WmAlias))
-            fmt.append(guarded.crossJoin(broadcast(watermark))
+            val watermark = ParquetFormat.read(spark, path).agg(max(col(wm)).as(WmAlias))
+            ParquetFormat.append(guarded.crossJoin(broadcast(watermark))
               .filter(col(wm) > col(WmAlias)).drop(WmAlias), path)
           }
-          fmt.read(spark, path)
+          ParquetFormat.read(spark, path)
         case IncrementalMerge(wm) =>
           // crash recovery FIRST: a merge that died mid-replace must be
           // repaired rather than letting the existence probe trigger a
-          // fresh full rebuild (ParquetFormat restores an orphaned backup;
-          // snapshot formats have nothing to repair).
-          fmt.recover(spark, path)
-          if (!fmt.exists(spark, path)) {
-            fmt.overwrite(built, path)
+          // fresh full rebuild (recover restores an orphaned backup).
+          ParquetFormat.recover(spark, path)
+          if (!ParquetFormat.exists(spark, path)) {
+            ParquetFormat.overwrite(built, path)
           } else {
-            val existing = fmt.read(spark, path)
+            val existing = ParquetFormat.read(spark, path)
             val watermark = existing.agg(max(col(wm)).as(WmAlias))
             val keep = existing.crossJoin(broadcast(watermark))
               .filter(col(wm) < col(WmAlias)).drop(WmAlias)
@@ -175,12 +161,11 @@ object ModelGraph {
             val fresh = built.crossJoin(broadcast(watermark))
               .filter(col(wm) >= col(WmAlias) || col(WmAlias).isNull ||
                 col(wm).isNull).drop(WmAlias)
-            // the merged frame reads from `path`; each format's replace()
-            // handles the self-read safely (ParquetFormat stages to a
-            // hidden sibling + swap, snapshot formats just publish v+1)
-            fmt.replace(keep.unionByName(fresh), path)
+            // the merged frame reads from `path`: replace stages it in a
+            // hidden sibling and swaps it in, never overwriting the scan
+            ParquetFormat.replace(keep.unionByName(fresh), path)
           }
-          fmt.read(spark, path)
+          ParquetFormat.read(spark, path)
       }
     }
 

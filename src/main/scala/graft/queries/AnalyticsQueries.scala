@@ -918,7 +918,7 @@ object AnalyticsQueries {
 
   /** Event-time session windows (30-min inactivity gap) as a batch
     * aggregate — the batch twin of streaming sessionization
-    * (graft.streaming.Streams.sessionize). Spark merges events whose
+    * (graft.streaming.Streams.sessionizeCents). Spark merges events whose
     * timestamp is strictly inside the previous event's [ts, ts+gap). */
   private val stSessionWindow: Q = (s, dir) => {
     import s.implicits._

@@ -615,11 +615,9 @@ object RelationalQueries {
     * as a crash backstop). */
   private def drainToTable(s: SparkSession, df: DataFrame, prefix: String,
       mode: String): DataFrame = {
-    val ckpt = java.nio.file.Files.createTempDirectory(prefix + "_ckpt")
-    deleteRecursivelyOnExit(ckpt)
+    val ckpt = graft.TempDirs.create(prefix + "_ckpt")
     if (mode == "append") {
-      val out = java.nio.file.Files.createTempDirectory(prefix + "_out")
-      deleteRecursivelyOnExit(out)
+      val out = graft.TempDirs.create(prefix + "_out")
       df.writeStream.format("parquet")
         .option("path", out.toString)
         .option("checkpointLocation", ckpt.toString)
@@ -631,8 +629,8 @@ object RelationalQueries {
       // _spark_metadata log, and schema inference would throw
       val result = s.read.schema(df.schema).parquet(out.toString)
         .localCheckpoint(true)
-      deleteRecursivelyNow(out)
-      deleteRecursivelyNow(ckpt)
+      graft.TempDirs.deleteNow(out)
+      graft.TempDirs.deleteNow(ckpt)
       result
     } else {
       val sink = prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -653,8 +651,7 @@ object RelationalQueries {
     * the out-of-order and ingest-dedup streaming keys drain with
     * `maxFilesPerTrigger=1`. The dir is deleted at JVM exit. */
   private def plantBatchFiles(prefix: String, batches: Seq[DataFrame]): java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    deleteRecursivelyOnExit(root)
+    val root = graft.TempDirs.create(prefix)
     val src = root.resolve("src")
     java.nio.file.Files.createDirectory(src)
     val t0 = System.currentTimeMillis()
@@ -673,36 +670,6 @@ object RelationalQueries {
         s"setLastModified failed for $dst — planted batch order would be lost")
     }
     src
-  }
-
-  /** Register a temp directory for recursive deletion at JVM shutdown
-    * (File.deleteOnExit only handles empty dirs). One hook, shared list. */
-  private val exitDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  private lazy val exitHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitDirs.forEach { root =>
-        try {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        } catch { case _: Exception => () }
-      }))
-  private def deleteRecursivelyOnExit(p: java.nio.file.Path): Unit = {
-    exitHookInstalled
-    exitDirs.add(p)
-  }
-
-  /** Eager counterpart: reclaim a temp dir as soon as its contents are
-    * materialized elsewhere (and drop it from the exit-hook list). */
-  private def deleteRecursivelyNow(root: java.nio.file.Path): Unit = {
-    exitDirs.remove(root)
-    try {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      Files.walk(root).sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-    } catch { case _: Exception => () }
   }
 
   /** STREAMING parity — the one st_* key that runs the ACTUAL streaming
@@ -1019,8 +986,7 @@ object RelationalQueries {
   private val stStreamUpsert: Q = (s0, dir) => {
     val s = streamSession(s0, streamWidth(s0, dir, "events"))
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("st_upsert")
-    deleteRecursivelyOnExit(root)
+    val root = graft.TempDirs.create("st_upsert")
     val target = s"$root/state"
     val ev = eventsStream(s, dir).select($"user_id", $"event_type", $"ts",
       $"event_id", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))

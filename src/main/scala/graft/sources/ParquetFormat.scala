@@ -1,0 +1,110 @@
+package graft.sources
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+
+/** Plain parquet directories: the storage of every table
+  * [[graft.plans.ModelGraph.run]] lands (one directory per model, the
+  * reference's one DuckDB table per model), and the one crash-safe swap
+  * that [[replace]] and [[graft.operators.Upsert.intoParquet]] publish
+  * through.
+  *
+  * The swap stages the new generation in a sibling directory, moves the
+  * target aside to a backup, publishes the staged copy by rename and
+  * deletes the backup last. Crash-safety contract: at every point either
+  * the target or the backup holds a complete copy of the previous
+  * generation, and [[recover]] restores a backup orphaned between the two
+  * renames. A publish rename that fails rolls the backup straight back.
+  * Each rename's boolean result is checked (HDFS-style FileSystems report
+  * failure by returning false, not by throwing).
+  *
+  * NOT atomic for concurrent readers: between the two renames the target
+  * path does not exist, so a reader racing the swap can observe
+  * path-not-found and must retry ([[graft.operators.VersionedTable]] is
+  * the reader-atomic layout).
+  */
+object ParquetFormat {
+
+  // Resolve the FS from the target's own URI — FileSystem.get(conf) would
+  // return the *default* FS, which is wrong for s3a:// or cross-scheme paths.
+  private def fsOf(spark: SparkSession, target: Path): FileSystem =
+    target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Genuine absence only — transient errors must propagate, not read as
+    * "missing" (a misread here turns an append into a full overwrite).
+    * A missing directory is absent without a Spark read (which would log
+    * a FileNotFoundException stack trace per cold incremental model); an
+    * existing one must read, so corrupt data throws. */
+  def exists(spark: SparkSession, path: String): Boolean = {
+    val target = new Path(path)
+    if (!fsOf(spark, target).exists(target)) false
+    else try { spark.read.parquet(path).limit(1).count() >= 0 }
+    catch {
+      case _: org.apache.spark.sql.AnalysisException |
+           _: java.io.FileNotFoundException => false
+    }
+  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
+  def overwrite(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(path)
+  def append(df: DataFrame, path: String): Unit =
+    df.write.mode(SaveMode.Append).parquet(path)
+
+  /** [[replace]]'s staging and backup dirs: dot-prefixed siblings, so
+    * partition discovery over the parent skips them. */
+  private def replaceSiblings(path: String): (Path, Path, Path) = {
+    val target = new Path(path)
+    (target, new Path(target.getParent, s".${target.getName}.__replace_tmp"),
+      new Path(target.getParent, s".${target.getName}.__replace_bak"))
+  }
+
+  /** Replace the table's contents with `df`, where `df`'s plan may SCAN
+    * the table's current generation — the self-reading merge shape. The
+    * new generation never overwrites what the plan still scans: it lands
+    * in a hidden sibling first and swaps in via rename. */
+  def replace(df: DataFrame, path: String): Unit = {
+    val (target, tmp, bak) = replaceSiblings(path)
+    swap(df, target, tmp, bak)
+  }
+
+  /** Repair an interrupted [[replace]] — called before the next operation
+    * on the table. */
+  def recover(spark: SparkSession, path: String): Unit = {
+    val (target, tmp, bak) = replaceSiblings(path)
+    recover(spark, target, tmp, bak)
+  }
+
+  /** Crash recovery for [[swap]]: a stale staging dir is garbage; a stale
+    * backup is the only surviving copy iff the target is missing (a crash
+    * between the two renames) — restore it — and superseded otherwise. */
+  private[graft] def recover(spark: SparkSession, target: Path, tmp: Path,
+      bak: Path): Unit = {
+    val fs = fsOf(spark, target)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (fs.exists(bak)) {
+      if (!fs.exists(target))
+        require(fs.rename(bak, target), s"failed to restore backup $bak to $target")
+      else fs.delete(bak, true)
+    }
+  }
+
+  /** Write `df` to `tmp`, then publish it as `target`: an existing target
+    * moves aside to `bak` first and is deleted only once the new
+    * generation is in place; a failed publish restores it. */
+  private[graft] def swap(df: DataFrame, target: Path, tmp: Path, bak: Path): Unit = {
+    val fs = fsOf(df.sparkSession, target)
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val hadTarget = fs.exists(target)
+    if (hadTarget)
+      require(fs.rename(target, bak),
+        s"failed to move $target aside to $bak; aborting — data untouched")
+    if (!fs.rename(tmp, target)) {
+      if (hadTarget && !fs.rename(bak, target))
+        throw new IllegalStateException(
+          s"swap failed AND rollback failed: data preserved at $bak, target $target missing")
+      throw new IllegalStateException(s"failed to rename $tmp to $target; previous data restored")
+    }
+    if (hadTarget) fs.delete(bak, true)
+  }
+}

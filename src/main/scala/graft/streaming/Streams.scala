@@ -48,131 +48,36 @@ object Streams {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
-  final case class Event(ts: java.sql.Timestamp, user_id: Long,
-      event_type: String, value: Double)
-  final case class SessionState(start: Long, end: Long, n: Long, total: Double)
-  final case class Session(user_id: Long, session_start: java.sql.Timestamp,
-      session_end: java.sql.Timestamp, n_events: Long, total_value: Double)
-
-  /** Stateful sessionization: events for one user belong to one session
-    * until `gapMs` of inactivity; emits a [[Session]] row when the state
-    * times out. The canonical mapGroupsWithState shape — state is one
-    * small case class per key, scales with live keys, not history. */
-  /** @param latenessMs how far behind max event time an event may arrive
-    *   and still be processed (the watermark delay). Independent of gapMs:
-    *   a late event beyond one gap still legitimately opens a NEW session,
-    *   so tightening lateness to the gap would silently drop its session.
-    *   Must be at least gapMs, or in-flight sessions could time out before
-    *   the events that extend them are admitted. */
-  def sessionize(events: Dataset[Event], gapMs: Long,
-      latenessMs: Long = 60 * 60 * 1000L): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val watermarkMs = math.max(gapMs, latenessMs)
-    events
-      .withWatermark("ts", s"$watermarkMs milliseconds")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(Session(userId, new java.sql.Timestamp(s.start),
-              new java.sql.Timestamp(s.end), s.n, s.total))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[Session]
-            def emit(s: SessionState): Unit =
-              closed ::= Session(userId, new java.sql.Timestamp(s.start),
-                new java.sql.Timestamp(s.end), s.n, s.total)
-            var cur = state.getOption
-            // Admitted stragglers more than a gap BEFORE the open session
-            // chain into their own batch-local "early" session: two such
-            // stragglers within gapMs of each other are ONE session in the
-            // oracle's globally-sorted replay, so emitting each as a
-            // singleton would diverge. early.end < cur.start - gap always
-            // holds by construction; a later event can BRIDGE the two.
-            var early: Option[SessionState] = None
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                // within gap of the open session's SPAN — including an
-                // admitted straggler earlier than its start, which must
-                // widen the session, not ride a vacuously-true `t - end`
-                case Some(s) if t - s.end <= gapMs && t >= s.start - gapMs =>
-                  early match {
-                    // this event is within a gap of BOTH the early chain
-                    // and the main session: in the sorted replay the three
-                    // are consecutive within-gap links — merge them all
-                    case Some(a) if t - a.end <= gapMs =>
-                      cur = Some(SessionState(a.start, math.max(s.end, t),
-                        s.n + a.n + 1, s.total + a.total + e.value))
-                    case Some(a) =>
-                      emit(a)
-                      cur = Some(SessionState(math.min(s.start, t),
-                        math.max(s.end, t), s.n + 1, s.total + e.value))
-                    case None =>
-                      cur = Some(SessionState(math.min(s.start, t),
-                        math.max(s.end, t), s.n + 1, s.total + e.value))
-                  }
-                  early = None
-                // more than a gap AFTER the session: close it, open next
-                // (the early chain, strictly before it, closes too)
-                case Some(s) if t > s.end =>
-                  early.foreach(emit); early = None
-                  emit(s)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                // more than a gap BEFORE the session (cross-batch
-                // straggler): chain it into the early session so a sibling
-                // straggler within gapMs widens it instead of splitting
-                case Some(_) =>
-                  early match {
-                    case Some(a) if t - a.end <= gapMs =>
-                      early = Some(SessionState(a.start, t, a.n + 1,
-                        a.total + e.value))
-                    case other =>
-                      other.foreach(emit)
-                      early = Some(SessionState(t, t, 1, e.value))
-                  }
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            // an early chain still open at batch end can no longer merge:
-            // in-batch events are sorted ascending and future batches sit
-            // at/after the watermark, which is ahead of the chain
-            early.foreach(emit)
-            cur.foreach { s =>
-              state.update(s)
-              // EventTimeTimeout requires a timestamp strictly beyond the
-              // current watermark — a session whose end sits at/behind the
-              // horizon (late stragglers) would otherwise crash the query.
-              val floor = state.getCurrentWatermarkMs() + 1
-              state.setTimeoutTimestamp(math.max(floor, s.end + gapMs))
-            }
-            closed.reverseIterator
-          }
-      }
-  }
-
   final case class EventC(ts: java.sql.Timestamp, user_id: Long, cents: Long)
   final case class SessionStateC(start: Long, end: Long, n: Long, cents: Long)
   final case class SessionC(user_id: Long, session_start_ms: Long,
       session_end_ms: Long, n_events: Long, total_cents: Long)
 
-  /** [[sessionize]] with ORDER-FREE arithmetic, for hash-graded outputs:
-    * money is carried as integer cents and timestamps as epoch
-    * milliseconds (`Timestamp.getTime` — the same ms floor the engine's
-    * event-time bookkeeping uses), so the emitted rows are bit-identical
-    * under any partition order or within-millisecond event tie order (a
-    * double sum would depend on fold order; long sums commute).
+  /** Stateful sessionization: events for one user belong to one session
+    * until `gapMs` of inactivity; emits a [[SessionC]] row when the
+    * session closes. The canonical mapGroupsWithState shape — state is one
+    * small case class per key, scales with live keys, not history.
+    *
+    * Arithmetic is ORDER-FREE, for hash-graded outputs: money is carried
+    * as integer cents and timestamps as epoch milliseconds
+    * (`Timestamp.getTime` — the same ms floor the engine's event-time
+    * bookkeeping uses), so the emitted rows are bit-identical under any
+    * partition order or within-millisecond event tie order (a double sum
+    * would depend on fold order; long sums commute).
     *
     * Emission semantics under an AvailableNow drain (what the oracle must
     * replay): a session CLOSED by a later event emits in that batch; a
     * TRAILING session (each user's last) emits only if its event-time
     * timeout (session_end + gap) falls behind the final watermark
     * (max event time − max(gap, lateness)) when the closing no-data
-    * micro-batch runs. StreamsSpec pins the boundary strictness. */
+    * micro-batch runs. StreamsSpec pins the boundary strictness.
+    *
+    * @param latenessMs how far behind max event time an event may arrive
+    *   and still be processed (the watermark delay). Independent of gapMs:
+    *   a late event beyond one gap still legitimately opens a NEW session,
+    *   so tightening lateness to the gap would silently drop its session.
+    *   Must be at least gapMs, or in-flight sessions could time out before
+    *   the events that extend them are admitted. */
   def sessionizeCents(events: Dataset[EventC], gapMs: Long,
       latenessMs: Long = 60 * 60 * 1000L): Dataset[SessionC] = {
     import events.sparkSession.implicits._
@@ -195,16 +100,24 @@ object Streams {
             def emit(s: SessionStateC): Unit =
               closed ::= SessionC(userId, s.start, s.end, s.n, s.cents)
             var cur = state.getOption
-            // same straggler-chain discipline as [[sessionize]]: before-gap
-            // stragglers accumulate into a batch-local early session that
-            // sibling stragglers widen and a bridging event can merge into
-            // the main session — never emitted as premature singletons
+            // Admitted stragglers more than a gap BEFORE the open session
+            // chain into their own batch-local "early" session: two such
+            // stragglers within gapMs of each other are ONE session in the
+            // oracle's globally-sorted replay, so emitting each as a
+            // singleton would diverge. early.end < cur.start - gap always
+            // holds by construction; a later event can BRIDGE the two.
             var early: Option[SessionStateC] = None
             sorted.foreach { e =>
               val t = e.ts.getTime
               cur match {
+                // within gap of the open session's SPAN — including an
+                // admitted straggler earlier than its start, which must
+                // widen the session, not ride a vacuously-true `t - end`
                 case Some(s) if t - s.end <= gapMs && t >= s.start - gapMs =>
                   early match {
+                    // this event is within a gap of BOTH the early chain
+                    // and the main session: in the sorted replay the three
+                    // are consecutive within-gap links — merge them all
                     case Some(a) if t - a.end <= gapMs =>
                       cur = Some(SessionStateC(a.start, math.max(s.end, t),
                         s.n + a.n + 1, s.cents + a.cents + e.cents))
@@ -217,10 +130,15 @@ object Streams {
                         math.max(s.end, t), s.n + 1, s.cents + e.cents))
                   }
                   early = None
+                // more than a gap AFTER the session: close it, open next
+                // (the early chain, strictly before it, closes too)
                 case Some(s) if t > s.end =>
                   early.foreach(emit); early = None
                   emit(s)
                   cur = Some(SessionStateC(t, t, 1, e.cents))
+                // more than a gap BEFORE the session (cross-batch
+                // straggler): chain it into the early session so a sibling
+                // straggler within gapMs widens it instead of splitting
                 case Some(_) =>
                   early match {
                     case Some(a) if t - a.end <= gapMs =>
@@ -234,9 +152,15 @@ object Streams {
                   cur = Some(SessionStateC(t, t, 1, e.cents))
               }
             }
+            // an early chain still open at batch end can no longer merge:
+            // in-batch events are sorted ascending and future batches sit
+            // at/after the watermark, which is ahead of the chain
             early.foreach(emit)
             cur.foreach { s =>
               state.update(s)
+              // EventTimeTimeout requires a timestamp strictly beyond the
+              // current watermark — a session whose end sits at/behind the
+              // horizon (late stragglers) would otherwise crash the query.
               val floor = state.getCurrentWatermarkMs() + 1
               state.setTimeoutTimestamp(math.max(floor, s.end + gapMs))
             }
@@ -412,7 +336,7 @@ object Streams {
     * view_id) — with O(purchases) output and O(n log n) work at ANY
     * density.
     *
-    * Mechanics mirror [[sessionize]] (the proven custom-state drain):
+    * Mechanics mirror [[sessionizeCents]] (the proven custom-state drain):
     * rows are keyed by (user, hour bucket) with views REPLICATED into
     * their own and the next bucket — a purchase's qualifying views
     * (v_ts ∈ (p_ts − 1 h, p_ts]) all land in the purchase's own bucket,
@@ -488,7 +412,7 @@ object Streams {
               else { pT += micros(ts); pI += id }
             }
             state.update(AttrState(vT.result(), vI.result(), pT.result(), pI.result()))
-            // same floor discipline as sessionize: EventTimeTimeout must
+            // same floor discipline as sessionizeCents: EventTimeTimeout must
             // sit strictly beyond the current watermark
             val floor = state.getCurrentWatermarkMs() + 1
             state.setTimeoutTimestamp(math.max(floor, bucketMs + ivMs))

@@ -2,175 +2,17 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Layout, VersionedTable}
+import graft.operators.VersionedTable
 
-/** Layout operators must deliver their scale claims on the real plan and
-  * filesystem: pruning asserted on the scan's numFiles metric, compaction
-  * on the actual file census, versioning on reader-visible state. */
+/** Versioned snapshot tables must deliver their claims on reader-visible
+  * state: atomic publish, time travel, vacuum, and old-or-new (never
+  * partial) under a crashing or committing writer. */
 class LayoutSpec extends SparkSpec {
 
   private def tmpDir(prefix: String) =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
-  test("writePartitioned + date filter prunes partitions at planning time") {
-    val dir = tmpDir("layout_part") + "/events"
-    val events = Tables(spark, sfDir, "events")
-      .withColumn("event_date", to_date(col("ts")))
-    Layout.writePartitioned(events, dir, Seq("event_date"))
-
-    val all = spark.read.parquet(dir)
-    val nDates = all.select("event_date").distinct().count()
-    assert(nDates > 1, "need multiple partitions for a pruning test")
-
-    val oneDay = all.filter(col("event_date") === all.agg(max("event_date")).head.getDate(0))
-    oneDay.count() // execute so scan metrics populate
-    val scan = oneDay.queryExecution.executedPlan.collectLeaves()
-      .collectFirst { case f: FileSourceScanExec => f }.get
-    assert(scan.metadata("PartitionFilters").contains("event_date"),
-      "filter on the partition column must become a PartitionFilter")
-    val filesRead = scan.metrics("numFiles").value
-    val filesTotal = all.inputFiles.length
-    assert(filesRead < filesTotal,
-      s"pruned scan read $filesRead of $filesTotal files — no pruning happened")
-  }
-
-  test("compact merges small files and preserves content, without shuffling") {
-    val dir = tmpDir("layout_compact") + "/t"
-    val df = Tables(spark, sfDir, "lineitem").repartition(24)
-    df.write.parquet(dir)
-    val before = spark.read.parquet(dir)
-    val (sumBefore, cntBefore) =
-      (before.agg(sum("l_quantity")).head.get(0), before.count())
-
-    val plan = spark.read.parquet(dir).coalesce(1).queryExecution.executedPlan
-    assert(!plan.toString.contains("Exchange"), "compaction plan must not shuffle")
-
-    val (nBefore, nAfter) = Layout.compact(spark, dir, targetBytes = 1L << 30)
-    assert(nBefore === 24 && nAfter === 1, s"expected 24 -> 1, got $nBefore -> $nAfter")
-    val after = spark.read.parquet(dir)
-    assert(after.count() === cntBefore)
-    assert(after.agg(sum("l_quantity")).head.get(0) === sumBefore)
-    // Idempotent: already-compact directory is left untouched.
-    assert(Layout.compact(spark, dir, targetBytes = 1L << 30) === ((1, 1)))
-  }
-
-  test("compactPartitioned compacts each partition dir independently") {
-    val dir = tmpDir("layout_cp") + "/events"
-    val events = Tables(spark, sfDir, "events")
-      .withColumn("bucket", (col("event_id") % 3).cast("string"))
-      .repartition(8)
-    events.write.partitionBy("bucket").parquet(dir)
-    val results = Layout.compactPartitioned(spark, dir, targetBytes = 1L << 30)
-    assert(results.keySet === Set("bucket=0", "bucket=1", "bucket=2"))
-    assert(results.values.forall { case (b, a) => b > 1 && a === 1 })
-    assert(spark.read.parquet(dir).count() === events.count())
-  }
-
-  test("compact recovers from a crash between the two swap renames") {
-    val dir = tmpDir("layout_crash") + "/t"
-    val df = Tables(spark, sfDir, "region").repartition(4)
-    df.write.parquet(dir)
-    val cnt = spark.read.parquet(dir).count()
-    // Simulate the worst crash point: target moved aside, new data never
-    // renamed in — only the backup survives.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val bak = new org.apache.hadoop.fs.Path(target.getParent,
-      s".${target.getName}.__compact_bak")
-    fs.rename(target, bak)
-    assert(!fs.exists(target))
-    // Next compact must first restore the backup, then proceed normally.
-    Layout.compact(spark, dir, targetBytes = 1L << 30)
-    assert(spark.read.parquet(dir).count() === cnt)
-    assert(!fs.exists(bak))
-  }
-
-  test("rank-based z-order stays clustered under heavy value skew") {
-    import spark.implicits._
-    val base = tmpDir("layout_zrank")
-    // 95% of keys in [0, 1000], 5% outliers at ~1e9: linear min/max
-    // normalization collapses the bulk into bucket 0 and the curve loses
-    // the x dimension; quantile buckets don't care about magnitude.
-    val df = spark.range(0, 20000).select(
-      when($"id" % 20 === 0, $"id" * 50000L + 1000000000L)
-        .otherwise($"id" % 1000L).as("x"),
-      ($"id" % 4096L).as("y"))
-
-    Layout.writeZOrdered(df, s"$base/linear", "x", "y")
-    Layout.writeZOrderedByRank(df, s"$base/rank", "x", "y")
-
-    // files whose min/max straddle the predicate = files a data-skipping
-    // reader must open for WHERE x BETWEEN 100 AND 200 (a range inside one
-    // side of the curve's root split — ranges straddling the median hit
-    // every quadrant on ANY space-filling curve)
-    def filesOverlapping(path: String): Long =
-      spark.read.parquet(path)
-        .groupBy(input_file_name())
-        .agg(min("x").as("lo"), max("x").as("hi"))
-        .filter(col("lo") <= 200L && col("hi") >= 100L)
-        .count()
-
-    val linear = filesOverlapping(s"$base/linear")
-    val rank = filesOverlapping(s"$base/rank")
-    assert(linear >= 6, s"skew premise broken: linear layout pruned to $linear files")
-    // file boundaries don't align exactly with curve quadrants, so the
-    // honest bound is "meaningfully fewer", not a fixed fraction
-    assert(rank <= 5 && rank < linear,
-      s"rank z-order should prune skewed mid-range scans: rank=$rank linear=$linear")
-    // same rows either way
-    assert(spark.read.parquet(s"$base/rank").count() == 20000)
-  }
-
-  test("morton2 interleaves bits exactly") {
-    def ref(x: Long, y: Long): Long =
-      (0 until 32).foldLeft(0L) { (acc, i) =>
-        acc | ((x >> i & 1L) << (2 * i)) | ((y >> i & 1L) << (2 * i + 1))
-      }
-    val cases = Seq((0L, 0L), (1L, 0L), (0L, 1L), (5L, 3L),
-      (0xFFFFFFFFL, 0L), (123456789L, 987654321L))
-    val got = spark.createDataFrame(cases).toDF("x", "y")
-      .select(col("x"), col("y"), Layout.morton2(col("x"), col("y")).as("z"))
-      .collect()
-    got.foreach(r => assert(r.getLong(2) === ref(r.getLong(0), r.getLong(1)),
-      s"morton2(${r.getLong(0)}, ${r.getLong(1)})"))
-  }
-
-  test("z-ordered layout keeps BOTH filter columns tight per file") {
-    val base = tmpDir("layout_z")
-    val df = Tables(spark, sfDir, "orders").select("o_orderkey", "o_custkey")
-
-    def fileSpans(path: String): Seq[(Long, Long)] =
-      spark.read.parquet(path)
-        .groupBy(input_file_name())
-        .agg((max("o_orderkey") - min("o_orderkey")).as("sk"),
-          (max("o_custkey") - min("o_custkey")).as("sc"))
-        .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-
-    // Baseline: single-column sort — orderkey tight, custkey at full span.
-    df.repartitionByRange(8, col("o_orderkey")).sortWithinPartitions("o_orderkey")
-      .write.parquet(s"$base/by_orderkey")
-    Layout.writeZOrdered(df, s"$base/zorder", "o_orderkey", "o_custkey")
-
-    val (gk, gc) = (
-      df.agg(max("o_orderkey") - min("o_orderkey")).head.getLong(0),
-      df.agg(max("o_custkey") - min("o_custkey")).head.getLong(0))
-    def avg(xs: Seq[Long]) = xs.sum.toDouble / xs.length
-    val single = fileSpans(s"$base/by_orderkey")
-    val z = fileSpans(s"$base/zorder")
-
-    // Single-column layout leaves the second dimension unclustered...
-    assert(avg(single.map(_._2)) > 0.8 * gc,
-      "baseline unexpectedly clustered custkey — test premise broken")
-    // ...while the Z-curve keeps BOTH dimensions well under global span.
-    assert(avg(z.map(_._1)) < 0.6 * gk,
-      s"z-order orderkey span ${avg(z.map(_._1))} vs global $gk")
-    assert(avg(z.map(_._2)) < 0.6 * gc,
-      s"z-order custkey span ${avg(z.map(_._2))} vs global $gc")
-  }
 
   test("versioned table: atomic publish, time travel, vacuum") {
     val root = tmpDir("vtab") + "/t"

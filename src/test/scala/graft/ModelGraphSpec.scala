@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.plans.ModelGraph
 import graft.plans.ModelGraph.{Incremental, Model, Table, View}
+import graft.sources.ParquetFormat
 
 class ModelGraphSpec extends SparkSpec {
 
@@ -95,14 +96,14 @@ class ModelGraphSpec extends SparkSpec {
   test("incremental probe: absence bootstraps, corrupt data rethrows") {
     val dir = Files.createTempDirectory("mgprobe").toString
     // genuine absence → false → bootstrap is the right call
-    assert(!ModelGraph.tableExists(spark, s"$dir/missing"))
+    assert(!ParquetFormat.exists(spark, s"$dir/missing"))
     // a path that EXISTS but fails to read is NOT absence: silently
     // treating it as missing would Overwrite (destroy) data an append
     // was intended for — the error must propagate to the caller
     new java.io.File(s"$dir/tbl").mkdirs()
     Files.write(java.nio.file.Paths.get(s"$dir/tbl/part-0.parquet"),
       "definitely not parquet".getBytes)
-    intercept[Exception](ModelGraph.tableExists(spark, s"$dir/tbl"))
+    intercept[Exception](ParquetFormat.exists(spark, s"$dir/tbl"))
   }
 
   test("levels group independent models; parallel run matches sequential") {
@@ -125,5 +126,31 @@ class ModelGraphSpec extends SparkSpec {
       Files.createTempDirectory("mgseq").toString, parallelism = 1)
     assert(par("j").collect().map(_.toString).sorted.toSeq ==
       seqv("j").collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("an IncrementalMerge that crashed between the swap renames resumes as a merge") {
+    import spark.implicits._
+    import graft.plans.ModelGraph.IncrementalMerge
+    val graph = Seq(
+      Model("base", Seq("src"), d => d("src").filter(col("v") > 0), Table),
+      Model("daily", Seq("base"),
+        d => d("base").select(col("day"), col("v")), Incremental("day")),
+      Model("monthly", Seq("base"),
+        d => d("base").groupBy(col("day")).agg(sum(col("v")).as("total")),
+        IncrementalMerge("day")))
+    val dir = Files.createTempDirectory("mgcrash").toString
+    ModelGraph.run(spark, graph,
+      Map("src" -> Seq(1 -> 10, 1 -> 5, 2 -> 7).toDF("day", "v")), dir)
+    // the replace died after moving the store aside, before publishing
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val bak = new org.apache.hadoop.fs.Path(s"$dir/.monthly.__replace_bak")
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/monthly"), bak))
+    // the next batch no longer carries day 1: only the restored store has
+    // it, so a rebuild in place of the merge would lose it
+    val out = ModelGraph.run(spark, graph,
+      Map("src" -> Seq(2 -> 7, 2 -> 1, 3 -> 4).toDF("day", "v")), dir)
+    assert(out("monthly").as[(Int, Long)].collect().toSet ===
+      Set(1 -> 15L, 2 -> 8L, 3 -> 4L))
+    assert(!fs.exists(bak), "the restored backup must not be left behind")
   }
 }

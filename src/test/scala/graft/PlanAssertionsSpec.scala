@@ -212,8 +212,8 @@ class PlanAssertionsSpec extends SparkSpec {
     // 100 TB table is scanned to serve a one-status query.
     import org.apache.spark.sql.functions.{col, expr}
     val dir = java.nio.file.Files.createTempDirectory("dpp").toString
-    graft.operators.Layout.writePartitioned(
-      Tables(spark, sfDir, "orders"), s"$dir/orders", Seq("o_orderstatus"))
+    Tables(spark, sfDir, "orders").write.partitionBy("o_orderstatus")
+      .parquet(s"$dir/orders")
     val fact = spark.read.parquet(s"$dir/orders")
     val dim = Tables(spark, sfDir, "nation")
       .select(col("n_name"),

@@ -6,15 +6,19 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, concat, count, expr, lit, max, min, pmod, when}
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.Streams
-import graft.streaming.Streams.Event
+import graft.streaming.Streams.EventC
 
 object StreamsSpec {
+  /** The event-table shape the stream tests feed to MemoryStream. */
+  final case class Event(ts: Timestamp, user_id: Long,
+      event_type: String, value: Double)
   /** Event shape with an id, for the attribution join. */
   final case class AttrEvent(ts: Timestamp, user_id: Long,
       event_type: String, event_id: Long)
 }
 
 class StreamsSpec extends SparkSpec {
+  import StreamsSpec.Event
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -42,34 +46,36 @@ class StreamsSpec extends SparkSpec {
   test("sessionize closes a session after the inactivity gap") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = Streams.sessionize(in.toDS(), gapMs = 30 * 60 * 1000).writeStream
+    val in = MemoryStream[EventC]
+    val q = Streams.sessionizeCents(in.toDS(), gapMs = 30 * 60 * 1000L).writeStream
       .format("memory").queryName("sessions").outputMode(OutputMode.Append).start()
     // session 1: two events 10 min apart; then 2h silence ends it
     in.addData(
-      Event(ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-      Event(ts("2024-01-01 10:10:00"), 7, "click", 2.0))
+      EventC(ts("2024-01-01 10:00:00"), 7, 100),
+      EventC(ts("2024-01-01 10:10:00"), 7, 200))
     q.processAllAvailable()
-    in.addData(Event(ts("2024-01-01 12:00:00"), 7, "view", 5.0))
+    in.addData(EventC(ts("2024-01-01 12:00:00"), 7, 500))
     q.processAllAvailable()
     // push the event-time watermark far enough to time out session 2 as well
-    in.addData(Event(ts("2024-01-02 00:00:00"), 8, "view", 0.0))
+    in.addData(EventC(ts("2024-01-02 00:00:00"), 8, 0))
     q.processAllAvailable()
-    in.addData(Event(ts("2024-01-03 00:00:00"), 8, "view", 0.0))
+    in.addData(EventC(ts("2024-01-03 00:00:00"), 8, 0))
     q.processAllAvailable()
     val got = spark.table("sessions")
-      .select("user_id", "session_start", "n_events", "total_value")
-      .as[(Long, Timestamp, Long, Double)].collect().toSet
+      .select("user_id", "session_start_ms", "session_end_ms", "n_events", "total_cents")
+      .as[(Long, Long, Long, Long, Long)].collect().toSet
     q.stop()
-    assert(got.contains((7L, ts("2024-01-01 10:00:00"), 2L, 3.0)))
-    assert(got.contains((7L, ts("2024-01-01 12:00:00"), 1L, 5.0)))
+    def ms(s: String) = ts(s).getTime
+    assert(got.contains(
+      (7L, ms("2024-01-01 10:00:00"), ms("2024-01-01 10:10:00"), 2L, 300L)))
+    assert(got.contains(
+      (7L, ms("2024-01-01 12:00:00"), ms("2024-01-01 12:00:00"), 1L, 500L)))
   }
 
   test("sessionizeCents cross-batch stragglers: before-gap event is its own " +
       "session, within-gap event widens the span (never a vacuous merge)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Streams.EventC
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventC]
     val q = Streams.sessionizeCents(in.toDS(), gapMs = 30 * 60 * 1000L,
       latenessMs = 60 * 60 * 1000L).writeStream
@@ -107,7 +113,6 @@ class StreamsSpec extends SparkSpec {
       "a bridging straggler merges the chain into the open session") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Streams.EventC
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventC]
     val q = Streams.sessionizeCents(in.toDS(), gapMs = 30 * 60 * 1000L,
       latenessMs = 60 * 60 * 1000L).writeStream
@@ -148,7 +153,6 @@ class StreamsSpec extends SparkSpec {
   test("sessionizeCents AvailableNow drain: emission boundary is STRICT " +
       "(timeout == final watermark does not fire)") {
     import spark.implicits._
-    import graft.streaming.Streams.EventC
     // gap 30 min, lateness 60 min; max event 20:00 → final watermark 19:00.
     // Trailing-session timeouts: 18:30 → 19:00 (== watermark, must NOT
     // emit), 18:29:59 → 18:59:59 (< watermark, must emit), 18:30:01 →

@@ -3,13 +3,11 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.plans.ModelGraph
 import graft.plans.ModelGraph.{Incremental, IncrementalMerge, Model, Table}
-import graft.sources.{IcebergFormat, ParquetFormat, TableFormat, VersionedParquetFormat}
+import graft.sources.ParquetFormat
 
-/** The open-table-format seam (VERDICT r10 #5): the same DAG must
-  * materialize identically through every binding, the parquet replace
-  * must survive its crash windows, and the Iceberg binding must be
-  * self-arming — loud about its missing jar here, runnable end-to-end
-  * wherever the jar ships. */
+/** ModelGraph's parquet storage: the incremental DAG lands the expected
+  * tables across two batches, and the self-reading replace survives its
+  * crash windows. */
 class TableFormatSpec extends SparkSpec {
 
   private def tmp(prefix: String) =
@@ -28,33 +26,15 @@ class TableFormatSpec extends SparkSpec {
     days.toDF("day", "v")
   }
 
-  /** Run the 2-batch incremental scenario through `fmt`; return the final
-    * monthly table content. */
-  private def scenario(fmt: TableFormat, base: String): Set[(Int, Long)] = {
+  test("ModelGraph materializes the two-batch incremental scenario on parquet") {
+    val base = tmp("fmt_pq")
     ModelGraph.run(spark, models,
-      Map("src" -> srcBatch(Seq(1 -> 10, 1 -> 5, 2 -> 7))), base, format = fmt)
+      Map("src" -> srcBatch(Seq(1 -> 10, 1 -> 5, 2 -> 7))), base)
     // second batch: day 2 accretes (boundary re-derive), day 3 is new
     val out = ModelGraph.run(spark, models,
-      Map("src" -> srcBatch(Seq(1 -> 10, 1 -> 5, 2 -> 7, 2 -> 1, 3 -> 4))),
-      base, format = fmt)
-    out("monthly").collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-  }
-
-  test("ModelGraph materializes identically through parquet and versioned bindings") {
-    val expected = Set(1 -> 15L, 2 -> 8L, 3 -> 4L)
-    assert(scenario(ParquetFormat, tmp("fmt_pq")) === expected)
-    val vroot = tmp("fmt_ver")
-    assert(scenario(VersionedParquetFormat, vroot) === expected)
-    // and the versioned binding left real snapshots behind: the monthly
-    // table has one version per run (bootstrap + merge), time-travelable
-    val versions = graft.operators.VersionedTable
-      .listVersions(spark, s"$vroot/monthly")
-    assert(versions.size >= 2,
-      s"merge through the versioned binding must publish a new snapshot: $versions")
-    val prev = graft.operators.VersionedTable
-      .readVersion(spark, s"$vroot/monthly", versions.init.last)
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-    assert(prev === Set(1 -> 15L, 2 -> 7L), s"pre-merge snapshot mutated: $prev")
+      Map("src" -> srcBatch(Seq(1 -> 10, 1 -> 5, 2 -> 7, 2 -> 1, 3 -> 4))), base)
+    assert(out("monthly").collect().map(r => (r.getInt(0), r.getLong(1))).toSet ===
+      Set(1 -> 15L, 2 -> 8L, 3 -> 4L))
   }
 
   test("ParquetFormat.replace: recover repairs every crash window") {
@@ -85,24 +65,5 @@ class TableFormatSpec extends SparkSpec {
     val doubled = spark.read.parquet(path).withColumn("s", concat(col("s"), lit("!")))
     ParquetFormat.replace(doubled, path)
     assert(spark.read.parquet(path).collect().map(_.getString(1)).toSeq == Seq("new!"))
-  }
-
-  test("IcebergFormat is self-arming: absent jar fails loudly, present jar runs") {
-    if (!IcebergFormat.available) {
-      val e = intercept[IllegalStateException](IcebergFormat())
-      assert(e.getMessage.contains("iceberg-spark-runtime") &&
-        e.getMessage.contains(IcebergFormat.RequiredClass),
-        s"the failure must name the missing jar and class: $e")
-      assume(false,
-        "iceberg-spark-runtime is not on the offline classpath — the " +
-          "Iceberg binding is exercised in deployment")
-    } else {
-      // any environment shipping the jar proves the binding end to end
-      spark.conf.set("spark.sql.catalog.graft_ice", IcebergFormat.RequiredClass)
-      spark.conf.set("spark.sql.catalog.graft_ice.type", "hadoop")
-      spark.conf.set("spark.sql.catalog.graft_ice.warehouse", tmp("ice_wh"))
-      val expected = Set(1 -> 15L, 2 -> 8L, 3 -> 4L)
-      assert(scenario(IcebergFormat(), "graft_ice.db") === expected)
-    }
   }
 }

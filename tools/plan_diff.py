@@ -19,7 +19,9 @@ stays the same:
   - identity hashes of array literals (`[D@1b2c3d`, the hyperplane weights)
     and the uuids naming `observe` metrics;
   - call sites of checkpointed RDDs (`at localCheckpoint at KMeans.scala:204`);
-  - per-process temp dirs (`graft_cc_<digits>`, `graft_incr_p<pid>`);
+  - per-process temp dirs (`graft_cc_<digits>`, `graft_incr_p<pid>`,
+    `graft_e2e_p<pid>`, any `/<prefix><random digits>` a JVM
+    `Files.createTempDirectory` names, such as `/st_upsert<digits>`);
   - the operator ordinals `(12)`, which only number the nodes, so one
     inserted node shows as one inserted line instead of renumbering the rest.
 
@@ -40,7 +42,8 @@ MASKS = [
     (re.compile(r"\[D@[0-9a-f]+"), "[D@N"),
     (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"), "<uuid>"),
     (re.compile(r" at \S+ at \S+\.scala:\d+"), " at <callsite>"),
-    (re.compile(r"graft_incr_p\d+"), "graft_incr_pN"),
+    (re.compile(r"\b(graft_[a-z0-9]+_p)\d+"), r"\1N"),
+    (re.compile(r"(/[A-Za-z_]+?)\d{9,}\b"), r"\1N"),
     (re.compile(r"graft_([A-Za-z]+)_\d+"), r"graft_\1_N"),
     (re.compile(r"^\(\d+\) ", re.M), "(N) "),
     (re.compile(r" \(\d+\)$", re.M), " (N)"),
