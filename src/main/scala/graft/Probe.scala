@@ -23,7 +23,7 @@ import graft.operators.Sync
   *    pass (tasks, input / shuffle / spill bytes, cpu and GC seconds, call
   *    site). The UI is disabled, so the listener stands in for its Stages
   *    tab and attributes a key's wall time to operators.
-  *  - `plan`: writes `<outDir>/<key>_<tag>.txt`, the formatted plan (the
+  *  - `plan`: writes `<outDir>/<key>_<tag>.txt`, the full formatted plan (the
   *    layout of the before/after evidence under `plans/`). Building the
   *    DataFrame still runs the key's eager jobs, so the plan is the one the
   *    bench executes.
@@ -180,18 +180,27 @@ object Probe {
     }
   }
 
-  /** Writes each key's formatted plan; returns the files written. */
+  /** Writes each key's formatted plan in full; returns the files written.
+    * The session's plan-string cut ([[GraftSession]]) is lifted while the
+    * plan is formatted: it falls where the raw expression-id digits put it,
+    * so two runs of one plan would cut it at different places. The dump is
+    * a diagnostic outside every timed region. */
   def plan(spark: SparkSession, sfDir: String, keys: Seq[String],
       outDir: String, tag: String): Seq[Path] = {
     Files.createDirectories(Paths.get(outDir))
     keys.map { k =>
-      val text = query(spark, sfDir, k).queryExecution.explainString(FormattedMode)
+      val qe = query(spark, sfDir, k).queryExecution
+      val cut = spark.conf.get(MaxPlanString)
+      spark.conf.unset(MaxPlanString) // Spark's default: no practical cut
+      val text = try qe.explainString(FormattedMode) finally spark.conf.set(MaxPlanString, cut)
       val file = Files.writeString(Paths.get(outDir, s"${k}_$tag.txt"), text)
       println(s"[plan] wrote $file (${text.length} chars)")
       settle(spark)
       file
     }
   }
+
+  private val MaxPlanString = "spark.sql.maxPlanStringLength"
 
   private def operators(plan: LogicalPlan): Map[String, Int] =
     plan.collect { case n => n.nodeName }.groupBy(identity).view.mapValues(_.size).toMap

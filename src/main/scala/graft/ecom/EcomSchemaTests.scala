@@ -3,8 +3,6 @@ package graft.ecom
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Quality
-
 /** The reference's COMPLETE declared test matrix — every `unique`,
   * `not_null`, and `relationships` test (including `severity: warn`) from
   * the three schema.ymls:
@@ -14,12 +12,12 @@ import graft.operators.Quality
   *  - dbt/dbt_duckdb/models/ecom_intermediate/schema.yml:17-239
   *  - dbt/dbt_duckdb/models/ecom_marts/schema.yml:24-237
   *
-  * transcribed one-to-one as data ([[checks]]). The matrix runs through
-  * [[graft.operators.Quality]] (each check = one aggregation or anti-join,
-  * store_failures parity via the failing-rows writer) and surfaces as the
-  * oracle-checked query `qa_schema_tests`: one (test_name, severity,
-  * failures) row per declared test, so the DuckDB compare certifies the
-  * reference's entire declared correctness story end to end.
+  * transcribed one-to-one as data ([[checks]]). Each check counts what the
+  * matching [[graft.operators.Quality]] check counts (one aggregation or
+  * anti-join); the matrix surfaces as the oracle-checked query
+  * `qa_schema_tests`: one (test_name, severity, failures) row per declared
+  * test, so the DuckDB compare certifies the reference's entire declared
+  * correctness story end to end.
   */
 object EcomSchemaTests {
 
@@ -192,13 +190,6 @@ object EcomSchemaTests {
   val checks: Seq[Check] =
     sourceTier ++ stagingTier ++ intermediateTier ++ martsTier
 
-  private def failing(tables: Map[String, DataFrame], c: Check): DataFrame =
-    c match {
-      case Unique(t, col, _) => Quality.unique(tables(t), Seq(col))
-      case NotNull(t, col, _) => Quality.notNull(tables(t), col)
-      case Rel(t, col, p, pc, _) => Quality.relationship(tables(t), col, tables(p), pc)
-    }
-
   /** One row per declared test: (test_name, severity, failures). Every
     * referenced table with a COMPUTED plan is spilled to parquet once —
     * the 150-way union then analyzes as flat scans instead of re-deriving
@@ -251,8 +242,8 @@ object EcomSchemaTests {
     //    map-only aggregate;
     //  - results explode back into one (test_name, severity, failures)
     //    row per declared test — identical output, ~40 branches not 150.
-    // The check SEMANTICS stay defined by Quality.* (storeFailures runs
-    // the unfused versions; both are oracle-replayed).
+    // The check SEMANTICS stay those of the unfused Quality.* checks; the
+    // fused counts are oracle-replayed.
     import org.apache.spark.sql.Column
     def cnt(pred: Column): Column = coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
     def toRows(agg: DataFrame, cols: Seq[(Check, String)]): DataFrame =
@@ -310,14 +301,6 @@ object EcomSchemaTests {
     }
     branches.reduce(_ unionByName _).orderBy("test_name")
   }
-
-  /** dbt `store_failures` parity: run the whole matrix through
-    * [[Quality.run]], persisting each failing-row set under
-    * `failuresPath/<test_name>` for audit — the counts are the same ones
-    * [[frame]] emits. */
-  def storeFailures(tables: Map[String, DataFrame],
-      failuresPath: String): Seq[Quality.CheckResult] =
-    Quality.run(checks.map(c => c.name -> failing(tables, c)), Some(failuresPath))
 
   // ------------------------------------------------------------- oracle --
 

@@ -41,10 +41,6 @@ object Ingest {
     df.select(out.toIndexedSeq: _*)
   }
 
-  /** NULL-coalescing defaults — fillna parity (ingest_latest:404-414). */
-  def fillDefaults(df: DataFrame, defaults: Map[String, Any]): DataFrame =
-    df.na.fill(defaults)
-
   /** Full normalize: uppercase names → lineage → coercions
     * (transform_data parity). */
   def normalize(df: DataFrame, dataSource: String, batchId: String,

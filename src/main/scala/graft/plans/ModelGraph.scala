@@ -1,9 +1,13 @@
 package graft.plans
 
+import java.util.concurrent.{ExecutorCompletionService, Executors, TimeUnit}
+
 import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sources.ParquetFormat
 
@@ -80,7 +84,8 @@ object ModelGraph {
   }
 
   /** Dependency levels: level(m) = 1 + max over deps — models in the same
-    * level are independent by construction. */
+    * level are independent by construction. [[run]] does not schedule by
+    * level; the benchmark's tracer groups model writes by it. */
   def levels(models: Seq[Model], sources: Set[String]): Seq[Seq[Model]] = {
     val lvl = mutable.Map.empty[String, Int] ++ sources.map(_ -> 0)
     val ordered = topoOrder(models, sources)
@@ -96,29 +101,47 @@ object ModelGraph {
   /** Materialize the graph under `base` honoring each model's
     * materialization — the `dbt run` analog.
     *
-    * Models execute LEVEL-PARALLEL (like `dbt run --threads`): each
-    * dependency level's Table/Incremental writes run as concurrent Spark
-    * jobs, so the scheduler overlaps their stages across the cluster
-    * instead of draining it between sequential small writes. `parallelism`
-    * bounds concurrent jobs per level; results are identical to a
-    * sequential run — same-level models share no edges by construction.
+    * Models run DEPENDENCY-DRIVEN (like `dbt run --threads`): each model
+    * starts as soon as its own `deps` have materialized and one of
+    * `parallelism` threads is free (a pool created per call, so its threads
+    * inherit the caller's Spark local properties); among ready models, the
+    * one heading the longest chain of models below it goes first.
+    * Concurrent writes overlap their stages across the cluster, and no
+    * model waits for an unrelated slower one. Results are identical to a
+    * sequential run: a model sees only its declared deps, and those are
+    * final when it starts.
     *
     * Every landed model is a plain parquet directory `baseDir/<name>`
-    * ([[graft.sources.ParquetFormat]]); an [[IncrementalMerge]] publishes
-    * its self-reading replace through that format's crash-safe swap. */
+    * ([[graft.sources.ParquetFormat]]), re-read with the schema just
+    * written, so no job re-infers it; an [[IncrementalMerge]] publishes
+    * its self-reading replace through that format's crash-safe swap.
+    *
+    * Cache contract: a [[View]] that two or more models read is persisted
+    * for the run, so its plan runs once instead of once per reader, and is
+    * released (blocking unpersist) before `run` returns or throws.
+    *
+    * Failure contract: when a model throws, no model starts after it (its
+    * dependents never run), models already running finish, the cached
+    * views are released, and only then does `run` throw an exception that
+    * names the failed model and carries its cause (a second concurrent
+    * failure rides along as suppressed). No Spark job of the run is active
+    * once `run` has returned or thrown. */
   def run(spark: SparkSession, models: Seq[Model],
       sources: Map[String, DataFrame], baseDir: String,
       parallelism: Int = 4): Map[String, DataFrame] = {
-    val acc = mutable.Map.empty[String, DataFrame] ++ sources
+    val order = topoOrder(models, sources.keySet)
 
     def materialize(m: Model, deps: Map[String, DataFrame]): DataFrame = {
       val path = s"$baseDir/${m.name}"
       val built = m.build(deps)
+      // the re-read takes the schema just written: no job re-infers it
+      def landed(written: DataFrame): DataFrame =
+        ParquetFormat.read(spark, path, written.schema)
       m.materialization match {
         case View => built
         case Table =>
           ParquetFormat.overwrite(built, path)
-          ParquetFormat.read(spark, path)
+          landed(built)
         case Incremental(wm) =>
           // A NULL watermark is unsupportable under high-watermark APPEND:
           // the row can never be compared against MAX(wm), so it would
@@ -138,7 +161,7 @@ object ModelGraph {
             ParquetFormat.append(guarded.crossJoin(broadcast(watermark))
               .filter(col(wm) > col(WmAlias)).drop(WmAlias), path)
           }
-          ParquetFormat.read(spark, path)
+          landed(guarded)
         case IncrementalMerge(wm) =>
           // crash recovery FIRST: a merge that died mid-replace must be
           // repaired rather than letting the existence probe trigger a
@@ -146,6 +169,7 @@ object ModelGraph {
           ParquetFormat.recover(spark, path)
           if (!ParquetFormat.exists(spark, path)) {
             ParquetFormat.overwrite(built, path)
+            landed(built)
           } else {
             val existing = ParquetFormat.read(spark, path)
             val watermark = existing.agg(max(col(wm)).as(WmAlias))
@@ -163,25 +187,66 @@ object ModelGraph {
                 col(wm).isNull).drop(WmAlias)
             // the merged frame reads from `path`: replace stages it in a
             // hidden sibling and swaps it in, never overwriting the scan
-            ParquetFormat.replace(keep.unionByName(fresh), path)
+            val merged = keep.unionByName(fresh)
+            ParquetFormat.replace(merged, path)
+            landed(merged)
           }
-          ParquetFormat.read(spark, path)
       }
     }
 
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try {
-      levels(models, sources.keySet).foreach { level =>
-        val snapshot = acc.toMap
-        val built = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(level.map(m =>
-            scala.concurrent.Future(m.name -> materialize(m, snapshot)))),
-          scala.concurrent.duration.Duration.Inf)
-        acc ++= built
+    val readers = order.map(m => m.name -> order.filter(_.deps.contains(m.name))).toMap
+    // views two or more models read: persisted for the run, computed once
+    val shared = order.filter(m => m.materialization == View && readers(m.name).size > 1)
+      .map(_.name).toSet
+    // longest chain of models below each one: of the ready models, the one
+    // heading the longest chain takes the next free thread
+    val below = mutable.Map.empty[String, Int]
+    order.reverseIterator.foreach { m =>
+      below(m.name) = readers(m.name).map(r => below(r.name) + 1).foldLeft(0)(math.max)
+    }
+    val threads = math.max(1, parallelism)
+    val done = mutable.Map.empty[String, DataFrame] ++ sources
+    val cached = mutable.ArrayBuffer.empty[DataFrame]
+    val pool = Executors.newFixedThreadPool(threads)
+    val finished = new ExecutorCompletionService[(Model, Try[DataFrame])](pool)
+    var waiting = order // not started yet, in topological order
+    var running = 0
+    var failure: Option[Throwable] = None
+
+    def startReady(): Unit = {
+      val ready = waiting.filter(_.deps.forall(done.contains)).sortBy(m => -below(m.name))
+      ready.take(threads - running).foreach { m =>
+        waiting = waiting.filterNot(_ eq m)
+        val deps = m.deps.map(d => d -> done(d)).toMap
+        finished.submit(() => m -> Try(materialize(m, deps)))
+        running += 1
       }
-    } finally pool.shutdown()
-    acc.toMap -- sources.keys
+    }
+
+    try {
+      startReady()
+      while (running > 0) {
+        val (m, result) = finished.take().get()
+        running -= 1
+        result match {
+          case Success(df) =>
+            // a frame the caller already cached stays the caller's to release
+            if (shared(m.name) && df.storageLevel == StorageLevel.NONE) cached += df.persist()
+            done(m.name) = df
+            if (failure.isEmpty) startReady()
+          case Failure(e) => failure match {
+            case None => failure = Some(
+              new RuntimeException(s"ModelGraph.run: model ${m.name} failed: $e", e))
+            case Some(first) => first.addSuppressed(e)
+          }
+        }
+      }
+      failure.foreach(throw _)
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      cached.foreach(_.unpersist(blocking = true))
+    }
+    done.toMap -- sources.keys
   }
 }

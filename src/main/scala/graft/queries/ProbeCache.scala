@@ -32,15 +32,9 @@ private[graft] object ProbeCache {
     perSession.getOrElseUpdate(key, probe)
   }
 
-  /** Test seam: number of live per-session maps (cache occupancy).
-    * NOTE: weak keys mean GC legitimately shrinks this between calls —
-    * never assert monotonicity on it (the r16 red gate). */
-  private[graft] def sessionsCached: Int = cache.synchronized(cache.size)
-
-  /** Test seam: the memoized value for (session, key), if present. Unlike
-    * [[sessionsCached]] this is GC-stable for any session the caller
-    * strongly references — the entry can only be collected when the
-    * session itself is unreachable. */
+  /** Test seam: the memoized value for (session, key), if present. It is
+    * GC-stable for any session the caller strongly references — the entry
+    * can only be collected when the session itself is unreachable. */
   private[graft] def peek(s: SparkSession, key: String): Option[Long] =
     cache.synchronized(Option(cache.get(s))).flatMap(_.get(key))
 }

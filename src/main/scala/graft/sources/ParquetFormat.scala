@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Plain parquet directories: the storage of every table
   * [[graft.plans.ModelGraph.run]] lands (one directory per model, the
@@ -46,6 +47,10 @@ object ParquetFormat {
   }
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+  /** Read back a table just written from a frame of `schema`: the caller
+    * states what the footers hold, so no Spark job re-infers it. */
+  def read(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path)
   def overwrite(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(path)
   def append(df: DataFrame, path: String): Unit =

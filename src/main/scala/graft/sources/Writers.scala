@@ -15,10 +15,6 @@ object Writers {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
-  /** Canonical columnar sink. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** S6: JDBC sink — roundtrip-proven against embedded Derby
     * (SourcesSpec); live endpoints are a deployment concern (SURVEY §7.5).
     * Batched, optionally repartitioned to bound connection count. */

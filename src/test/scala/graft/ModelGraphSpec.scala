@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
 
 import org.apache.spark.sql.functions._
+import graft.ecom.{Ecom, EcomFixture}
 import graft.plans.ModelGraph
 import graft.plans.ModelGraph.{Incremental, Model, Table, View}
 import graft.sources.ParquetFormat
@@ -152,5 +155,80 @@ class ModelGraphSpec extends SparkSpec {
     assert(out("monthly").as[(Int, Long)].collect().toSet ===
       Set(1 -> 15L, 2 -> 8L, 3 -> 4L))
     assert(!fs.exists(bak), "the restored backup must not be left behind")
+  }
+
+  /** No query plan of the session is cached (the `persist` registry). */
+  private def noCachedPlans: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("a model starts when its own deps land, not at its level's barrier") {
+    // `slow` (level 1) can finish only after `downstream` (level 2) has
+    // started: a level barrier waits out the whole 30 s latch
+    val latch = new CountDownLatch(1)
+    val released = new AtomicBoolean(false)
+    val graph = Seq(
+      Model("slow", Seq("src"), d => {
+        released.set(latch.await(30, TimeUnit.SECONDS)); d("src")
+      }, Table),
+      Model("fast", Seq("src"), d => d("src"), Table),
+      Model("downstream", Seq("fast"), d => { latch.countDown(); d("fast") }, Table))
+    val out = ModelGraph.run(spark, graph, Map("src" -> spark.range(5).toDF("v")),
+      Files.createTempDirectory("mgready").toString)
+    assert(released.get, "slow waited out its latch: downstream never started before it")
+    assert(out("downstream").count() == 5)
+  }
+
+  test("a view two models read runs once per run and is released after") {
+    import spark.implicits._
+    val computed = spark.sparkContext.longAccumulator("shared_view_rows")
+    val tick = udf { (v: Long) => computed.add(1); v }.asNondeterministic()
+    val graph = Seq(
+      Model("shared", Seq("src"), d => d("src").select(tick($"v").as("v"))),
+      Model("left", Seq("shared"), d => d("shared").filter($"v" > 1), Table),
+      Model("right", Seq("shared"), d => d("shared").agg(sum($"v").as("total")), Table))
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val out = ModelGraph.run(spark, graph, Map("src" -> spark.range(0, 10, 1, 3).toDF("v")),
+      Files.createTempDirectory("mgshared").toString)
+    assert(computed.value == 10, s"the shared view computed ${computed.value} rows, not 10")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(rddsBefore),
+      "the run left a persisted RDD behind")
+    assert(noCachedPlans, "the run left a cached plan behind")
+    assert(out("left").count() == 8)
+    assert(out("right").as[Long].head() == 45L)
+  }
+
+  test("a failing model stops its dependents, lets running siblings land, " +
+      "releases the cache and names itself") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("mgfail").toString
+    val dependentStarted = new AtomicBoolean(false)
+    val graph = Seq(
+      Model("stg", Seq("src"), d => d("src").select(($"v" * 2).as("v"))), // shared view
+      Model("sibling", Seq("stg"), d => { Thread.sleep(3000); d("stg") }, Table),
+      Model("exploding", Seq("stg"), _ => throw new IllegalStateException("boom"), Table),
+      Model("after_exploding", Seq("exploding"),
+        d => { dependentStarted.set(true); d("exploding") }, Table))
+    val e = intercept[RuntimeException] {
+      ModelGraph.run(spark, graph, Map("src" -> spark.range(10).toDF("v")), dir)
+    }
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a job of the run is still active after run threw")
+    assert(Files.exists(Paths.get(s"$dir/sibling/_SUCCESS")),
+      "the running sibling was abandoned mid-write")
+    assert(e.getMessage.contains("exploding"), e.getMessage)
+    assert(!dependentStarted.get, "a dependent of the failed model started")
+    assert(noCachedPlans, "the shared view stayed cached")
+  }
+
+  test("each landed model's frame has the schema its parquet directory reads with") {
+    val dir = Files.createTempDirectory("mgschema").toString
+    val models = Ecom.models(EcomFixture.now, EcomFixture.today)
+    val out = ModelGraph.run(spark, models, EcomFixture.raw(spark, sfDir), dir)
+    val landed = models.filter(_.materialization != View).map(_.name)
+    assert(landed.size == 24)
+    landed.foreach { m =>
+      assert(out(m).schema == spark.read.parquet(s"$dir/$m").schema, m)
+    }
   }
 }

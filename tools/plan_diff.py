@@ -25,8 +25,13 @@ stays the same:
   - the operator ordinals `(12)`, which only number the nodes, so one
     inserted node shows as one inserted line instead of renumbering the rest.
 
+A dump that ends in Spark's truncation marker (`... N more characters`, cut
+at `spark.sql.maxPlanStringLength` where the raw id digits put the limit) is
+reported as truncated, not compared: two cuts of one plan fall at different
+places. `Probe plan` writes full plans; an older dump may carry the marker.
+
 Prints a unified diff per differing key, then one summary line. Exits 1 if
-any paired key differs, 2 if no key pairs up, else 0.
+any paired key differs or is truncated, 2 if no key pairs up, else 0.
 """
 import collections
 import difflib
@@ -48,6 +53,9 @@ MASKS = [
     (re.compile(r"^\(\d+\) ", re.M), "(N) "),
     (re.compile(r" \(\d+\)$", re.M), " (N)"),
 ]
+
+
+TRUNCATED = re.compile(r"(\.\.\. \d+ more characters|Truncated plan of \d+ characters)\s*$")
 
 
 def mask(text):
@@ -79,10 +87,14 @@ def main(argv):
     b, tag_b = side(tagged(argv[2]), "after")
     keys = sorted(a.keys() & b.keys())
     unpaired = sorted(a.keys() ^ b.keys())
-    differ = []
+    differ, truncated = [], []
     for k in keys:
-        la = mask(a[k].read_text()).splitlines(keepends=True)
-        lb = mask(b[k].read_text()).splitlines(keepends=True)
+        ta, tb = a[k].read_text(), b[k].read_text()
+        if TRUNCATED.search(ta) or TRUNCATED.search(tb):
+            truncated.append(k)
+            continue
+        la = mask(ta).splitlines(keepends=True)
+        lb = mask(tb).splitlines(keepends=True)
         if la != lb:
             differ.append(k)
             sys.stdout.writelines(difflib.unified_diff(
@@ -90,9 +102,11 @@ def main(argv):
             print()
     if unpaired:
         print(f"unpaired (dumped on one side only): {', '.join(unpaired)}")
-    print(f"plan_diff: {len(keys)} keys paired, {len(keys) - len(differ)} identical, "
-          f"{len(differ)} differ" + (f" ({', '.join(differ)})" if differ else ""))
-    return 2 if not keys else 1 if differ else 0
+    same = len(keys) - len(differ) - len(truncated)
+    print(f"plan_diff: {len(keys)} keys paired, {same} identical, "
+          f"{len(differ)} differ" + (f" ({', '.join(differ)})" if differ else "") +
+          (f", {len(truncated)} truncated ({', '.join(truncated)})" if truncated else ""))
+    return 2 if not keys else 1 if differ or truncated else 0
 
 
 if __name__ == "__main__":

@@ -1,8 +1,16 @@
 #!/usr/bin/env bash
 # Run a graft main class without sbt (sbt holds a global lock; data gen and
 # bench runs can overlap compiles this way). Mirrors build.sbt javaOptions.
+# Runs the classes `sbt compile` left in the checkout this script sits in,
+# against $SPARK_HOME/jars, else the jar directory build.sbt names.
 set -euo pipefail
 MAIN="$1"; shift
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+if [[ -n "${SPARK_HOME:-}" && -d "$SPARK_HOME/jars" ]]; then
+  JARS="$SPARK_HOME/jars"
+else
+  JARS="$(sed -n 's/^unmanagedBase *:= *file("\([^"]*\)").*/\1/p' "$ROOT/build.sbt")"
+fi
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
@@ -21,5 +29,5 @@ exec java \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
   -XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=64 \
   ${GRAFT_JAVA_OPTS:-} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$JARS/*" \
   "$MAIN" "$@"
