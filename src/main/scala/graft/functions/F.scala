@@ -40,4 +40,8 @@ object F {
     * exact decimal to the identical nearest double. Use this (not an inline
     * cast) so the rule lives in one place. */
   def moneySum(c: Column): Column = sum(money(c)).cast("double")
+
+  /** An events row's `value` as integer cents, rounded half up — the
+    * order-free exact money form the event keys sum and compare. */
+  def valueCents: Column = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
 }

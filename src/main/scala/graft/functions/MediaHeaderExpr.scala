@@ -8,6 +8,46 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** Byte-level building blocks of the media container parsers: fixed-width
+  * integer readers and the RIFF chunk walk (WAV and AVI are both RIFF).
+  * Pure static functions, so [[MediaHeader.decode]] stays callable from
+  * generated code. */
+object MediaBytes {
+
+  def le16(b: Array[Byte], i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+  def le32(b: Array[Byte], i: Int): Int = le16(b, i) | (le16(b, i + 2) << 16)
+  def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
+  def be32(b: Array[Byte], i: Int): Int = (be16(b, i) << 16) | be16(b, i + 2)
+
+  /** Whether the four bytes at `i` spell the four-character code `fcc`. */
+  def fourCC(b: Array[Byte], i: Int, fcc: String): Boolean =
+    b(i) == fcc(0).toByte && b(i + 1) == fcc(1).toByte &&
+      b(i + 2) == fcc(2).toByte && b(i + 3) == fcc(3).toByte
+
+  /** A RIFF container whose form type is `form` ("WAVE", "AVI "). */
+  def isRiff(b: Array[Byte], form: String): Boolean =
+    b.length >= 12 && fourCC(b, 0, "RIFF") && fourCC(b, 8, form)
+
+  /** Walk the RIFF chunks of `b[from, to)` at one nesting level, calling
+    * `visit(at, size)` with each chunk header's offset and its payload
+    * size. Only the 8-byte header is known to be in bounds when a chunk's
+    * declared size overruns `to`: such a chunk is visited with size -1 and
+    * ends the walk. The size is validated BEFORE advancing: a crafted size
+    * near Int.MaxValue passes a sign check but overflows `at + 8 + size`
+    * to negative, and on a 100 TB ingest path one bad file must not kill
+    * the task. Chunks are word-aligned, so an odd size is followed by one
+    * pad byte. */
+  def riffChunks(b: Array[Byte], from: Int, to: Int)(visit: (Int, Int) => Unit): Unit = {
+    var i = from
+    while (i + 8 <= to) {
+      val size = le32(b, i + 4)
+      if (size < 0 || size > to - i - 8) { visit(i, -1); return }
+      visit(i, size)
+      i += 8 + size + (size & 1)
+    }
+  }
+}
+
 /** Pure-JVM media container-header decoding — PNG / JPEG / GIF / WAV
   * magic-byte parsing (all public formats: PNG RFC 2083 §3.1/IHDR,
   * JPEG ISO 10918 SOFn markers, GIF89a logical screen descriptor,
@@ -17,6 +57,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * extracts before any pixel/sample work.
   */
 object MediaHeader {
+  import MediaBytes._
 
   val schema: StructType = StructType(Seq(
     StructField("format", StringType),
@@ -25,17 +66,6 @@ object MediaHeader {
     StructField("sample_rate", IntegerType),
     StructField("channels", IntegerType),
     StructField("bits_per_sample", IntegerType)))
-
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
 
   private def row(format: String, width: Integer = null, height: Integer = null,
       rate: Integer = null, channels: Integer = null,
@@ -75,28 +105,18 @@ object MediaHeader {
     if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' && b(3) == '8' &&
         (b(4) == '7' || b(4) == '9') && b(5) == 'a')
       return row("gif", le16(b, 6), le16(b, 8))
-    // WAV: RIFF/WAVE container; scan chunks for "fmt " — channels at +2,
-    // sample rate at +4, bits at +14 of its payload (all LE).
-    if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E') {
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        if (b(i) == 'f' && b(i + 1) == 'm' && b(i + 2) == 't' && b(i + 3) == ' ') {
-          if (i + 8 + 16 <= b.length)
-            return row("wav", rate = le32(b, i + 12), channels = le16(b, i + 10),
-              bits = le16(b, i + 22))
-          return row("wav")
-        }
-        // Validate BEFORE advancing: a crafted size near Int.MaxValue passes
-        // a sign check but overflows `i + 8 + size` to negative, and the next
-        // iteration indexes out of bounds — on a 100 TB ingest path one bad
-        // file must not kill the task. Any chunk whose payload can't fit in
-        // the remaining buffer is corrupt/truncated → stop scanning.
-        if (size < 0 || size > b.length - i - 8) return row("wav")
-        i += 8 + size + (size & 1) // RIFF chunks are word-aligned
+    // WAV: RIFF/WAVE container; the first "fmt " chunk carries channels
+    // at +2, sample rate at +4 and bits at +14 of its payload (all LE).
+    if (isRiff(b, "WAVE")) {
+      var hdr: InternalRow = null
+      riffChunks(b, 12, b.length) { (at, _) =>
+        if (hdr == null && fourCC(b, at, "fmt "))
+          hdr = if (at + 8 + 16 <= b.length)
+            row("wav", rate = le32(b, at + 12), channels = le16(b, at + 10),
+              bits = le16(b, at + 22))
+          else row("wav")
       }
-      return row("wav")
+      return if (hdr == null) row("wav") else hdr
     }
     Unknown
   }

@@ -1,80 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import java.awt.image.BufferedImage
+import java.nio.{ByteBuffer, ByteOrder}
 
-/** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, plus decode / feature-extract / resize /
-  * frame-sample operators.
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+
+import graft.functions.MediaBytes._
+
+/** Media operators over `binary` payloads: image, audio and video rows
+  * ([[MediaRow]]) decoded for real, with no native codec library.
   *
-  * Decoding is REAL across all three modalities: [[decode]] parses
-  * PNG/JPEG/GIF/WAV container headers in pure JVM byte arithmetic
-  * ([[graft.functions.MediaHeader]]); [[pixelStats]] decodes pixels via
-  * ImageIO; [[audioStats]] decodes PCM16 and G.711 µ-law samples;
-  * [[sampleFrames]]/[[frameStats]] demux AVI containers and decode
-  * uncompressed BI_RGB frames. The mapPartitions seam
-  * ([[decodeViaPartitions]]) is where a JNI decoder for compressed
-  * codecs (H.264, MP3, …) plugs in without changing any plan shape.
-  *
-  * Scale design: media rows are large (MBs); [[repartitionForMedia]] sizes
-  * partitions by byte budget, not row count, so executors never hold more
-  * than ~`targetBytes` of payload per task. Feature extraction is
-  * per-row/narrow — no shuffle.
+  * Images decode through the JVM's ImageIO ([[pixelStats]],
+  * [[averageHash]], [[resizeImages]]); audio is PCM16 and G.711 µ-law
+  * sample arithmetic over the RIFF/WAVE `data` chunk ([[audioStats]],
+  * [[resampleAudio]]); video is AVI demux plus uncompressed BI_RGB frame
+  * decode ([[sampleFrames]], [[frameStats]], [[frameDeltas]]). The
+  * container header alone is the codegen'd
+  * [[graft.functions.MediaHeader]] expression. Every decoder runs per row
+  * inside `mapPartitions` (a codec needs heap buffers and reader state
+  * that per-row codegen cannot host), so payload bytes never shuffle, and
+  * an undecodable payload drops instead of failing the task. Each
+  * `synthetic*` builder plants a payload whose decoded statistics have a
+  * closed form, so the codec-less DuckDB oracle can grade the decode.
   */
 object Multimodal {
-
-  /** Canonical schema for a media table at rest. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType), // image | audio | video
-    StructField("content", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("duration_ms", LongType))))))
-
-  /** Byte-budget repartition: media payloads are heavy, so partition count
-    * derives from total bytes, not rows. */
-  def repartitionForMedia(df: DataFrame, targetBytesPerPartition: Long = 128L << 20): DataFrame = {
-    // coalesce: sum over zero rows is NULL — an empty media frame sizes to 0
-    val totalBytes = df.agg(coalesce(sum(length(col("content"))), lit(0L)))
-      .head().getLong(0)
-    val parts = math.max(1, (totalBytes / targetBytesPerPartition).toInt)
-    df.repartition(parts, col("media_id"))
-  }
-
-  /** REAL header decode: PNG/JPEG/GIF/WAV magic bytes → format,
-    * dimensions, sample rate ([[graft.functions.MediaHeader]]) plus
-    * payload stats — all codegen'd, no serialization boundary. */
-  def decode(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    struct(
-      length(content).as("n_bytes"),
-      crc32(content).as("checksum"),
-      graft.functions.MediaHeader.mediaHeader(content).as("header"))
-
-  /** Image feature extraction over the media table: declared metadata
-    * alongside the header fields ACTUALLY parsed from the payload — the
-    * ingest-time cross-check a real pipeline runs (declared w×h vs
-    * container w×h). */
-  def imageFeatures(media: DataFrame): DataFrame =
-    media.filter(col("kind") === "image")
-      .select(col("media_id"), col("meta.width").as("width"),
-        col("meta.height").as("height"), decode(col("content")).as("f"))
-      .select(col("media_id"), col("width"), col("height"),
-        col("f.n_bytes"), col("f.checksum"),
-        col("f.header.format").as("format"),
-        col("f.header.width").as("decoded_width"),
-        col("f.header.height").as("decoded_height"))
-
-  /** Metadata-only resize: rewrites declared dimensions without touching
-    * payload — the cheap path when downstream only reads metadata (the
-    * payload transform is [[resizeImages]]). Narrow projection. */
-  def resize(media: DataFrame, w: Int, h: Int): DataFrame =
-    media.withColumn("meta",
-      col("meta").withField("width", lit(w)).withField("height", lit(h)))
 
   /** REAL payload resize through the codec seam: ImageIO decode →
     * deterministic floor-sampling resample (dst pixel (x,y) reads src
@@ -85,31 +36,86 @@ object Multimodal {
     * bytes never shuffle. */
   def resizeImages(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
     implicit val enc = Encoders.product[MediaRow]
+    decodedImages(media) { (m, img) =>
+      val out = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      val (sw, sh) = (img.getWidth, img.getHeight)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          out.setRGB(x, y, img.getRGB(x * sw / w, y * sh / h))
+          x += 1
+        }
+        y += 1
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(out, "png", bos)
+      MediaRow(m.media_id, m.kind, bos.toByteArray)
+    }
+  }
+
+  /** Per-partition ImageIO decode: `f` sees each row with its decoded
+    * image; undecodable payloads drop. NonFatal, not just IOException:
+    * ImageIO.read throws runtime exceptions on corrupt-but-recognized
+    * payloads (truncated GIF, broken ICC profile → AIOOBE/CMMException)
+    * and one bad file must not kill the task. The ImageIO cache is off
+    * once per partition: the streams are in memory, no temp files. */
+  private def decodedImages[T: Encoder](media: Dataset[MediaRow])(
+      f: (MediaRow, BufferedImage) => T): Dataset[T] =
     media.mapPartitions { rows =>
       javax.imageio.ImageIO.setUseCache(false)
       rows.flatMap { m =>
         val img =
           try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.content))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) None
-        else {
-          val out = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val (sw, sh) = (img.getWidth, img.getHeight)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              out.setRGB(x, y, img.getRGB(x * sw / w, y * sh / h))
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(out, "png", bos)
-          Some(MediaRow(m.media_id, m.kind, bos.toByteArray))
-        }
+          catch { case NonFatal(_) => null }
+        Option(img).map(f(m, _))
       }
+    }
+
+  /** Integer BT.601 luma: (299r + 587g + 114b) div 1000. */
+  private def luma(r: Int, g: Int, b: Int): Int = (299 * r + 587 * g + 114 * b) / 1000
+
+  /** [[luma]] of a packed 0xRRGGBB pixel (alpha ignored). */
+  private def lumaRgb(rgb: Int): Int =
+    luma((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+
+  /** Luma sum and 4-bucket histogram (bucket = luma >> 6) over `n` pixels. */
+  private def lumaFold(n: Int)(lumaAt: Int => Int): (Long, Array[Long]) = {
+    var sum = 0L
+    val hist = new Array[Long](4)
+    var i = 0
+    while (i < n) {
+      val l = lumaAt(i)
+      sum += l
+      hist(l >> 6) += 1
+      i += 1
+    }
+    (sum, hist)
+  }
+
+  /** Luma raster (row-major, top row first) of one uncompressed 24-bit
+    * DIB frame at `b[off, off + len)`: rows stored bottom-up in BGR order,
+    * each padded to a 4-byte stride. None unless the stride × height
+    * layout fills exactly those `len` bytes inside `b`. Long arithmetic:
+    * corrupt dims must not wrap Int and slip past the length check (after
+    * it holds, w·h ≤ len/3 < 2^31). */
+  private def dibLuma(b: Array[Byte], off: Int, len: Int, w: Int, h: Int): Option[Array[Int]] = {
+    val stride = ((3L * w + 3) / 4) * 4
+    if (w < 0 || h < 0 || stride * h != len || off < 0 || off.toLong + len > b.length) None
+    else {
+      val lum = new Array[Int](w * h)
+      var y = 0
+      while (y < h) {
+        val row = off + (h - 1 - y) * stride.toInt // bottom-up storage
+        var x = 0
+        while (x < w) {
+          val p = row + 3 * x
+          lum(y * w + x) = luma(b(p + 2) & 0xff, b(p + 1) & 0xff, b(p) & 0xff)
+          x += 1
+        }
+        y += 1
+      }
+      Some(lum)
     }
   }
 
@@ -158,46 +164,24 @@ object Multimodal {
     implicit val enc = Encoders.product[FrameDeltaRow]
     media.mapPartitions(_.flatMap { m =>
       aviDemux(m.content).toSeq.flatMap { avi =>
-        // Long arithmetic: corrupt strf dims must not wrap Int and slip
-        // past the length guard (after it holds, w·h ≤ len/3 < 2^31)
-        val stride = ((3L * avi.width + 3) / 4) * 4
         var prev: Array[Int] = null
         avi.frames.zipWithIndex.flatMap { case ((off, len), idx) =>
-          if (avi.height <= 0 || stride * avi.height != len ||
-              off < 0 || off.toLong + len > m.content.length) {
-            prev = null; None
-          } else {
-            val strideI = stride.toInt // fits: stride * height == len (Int)
-            val lum = new Array[Int](avi.width * avi.height)
-            var y = 0
-            while (y < avi.height) {
-              val row = off + (avi.height - 1 - y) * strideI
-              var x = 0
-              while (x < avi.width) {
-                val b = m.content(row + 3 * x) & 0xff
-                val g = m.content(row + 3 * x + 1) & 0xff
-                val r = m.content(row + 3 * x + 2) & 0xff
-                lum(y * avi.width + x) = (299 * r + 587 * g + 114 * b) / 1000
-                x += 1
-              }
-              y += 1
+          val lum = dibLuma(m.content, off, len, avi.width, avi.height).orNull
+          val res = if (lum != null && prev != null) {
+            var ds = 0L
+            var ch = 0L
+            var i = 0
+            while (i < lum.length) {
+              val d = math.abs(lum(i) - prev(i))
+              ds += d
+              if (d != 0) ch += 1
+              i += 1
             }
-            val res = if (prev != null) {
-              var ds = 0L
-              var ch = 0L
-              var i = 0
-              while (i < lum.length) {
-                val d = math.abs(lum(i) - prev(i))
-                ds += d
-                if (d != 0) ch += 1
-                i += 1
-              }
-              Some(FrameDeltaRow(m.media_id, idx, avi.width, avi.height,
-                lum.length.toLong, ds, ch))
-            } else None
-            prev = lum
-            res
-          }
+            Some(FrameDeltaRow(m.media_id, idx, avi.width, avi.height,
+              lum.length.toLong, ds, ch))
+          } else None
+          prev = lum
+          res
         }
       }
     })
@@ -216,29 +200,11 @@ object Multimodal {
   def frameStats(frames: Dataset[FrameRow]): Dataset[FrameStatsRow] = {
     implicit val enc = Encoders.product[FrameStatsRow]
     frames.mapPartitions(_.flatMap { f =>
-      val stride = ((3 * f.width + 3) / 4) * 4
-      if (f.frame_bytes.length != stride * f.height) None
-      else {
-        var sum = 0L
-        val hist = new Array[Long](4)
-        var y = 0
-        while (y < f.height) {
-          val row = (f.height - 1 - y) * stride // bottom-up storage
-          var x = 0
-          while (x < f.width) {
-            val b = f.frame_bytes(row + 3 * x) & 0xff
-            val g = f.frame_bytes(row + 3 * x + 1) & 0xff
-            val r = f.frame_bytes(row + 3 * x + 2) & 0xff
-            val lum = (299 * r + 587 * g + 114 * b) / 1000
-            sum += lum
-            hist(lum >> 6) += 1
-            x += 1
-          }
-          y += 1
-        }
-        Some(FrameStatsRow(f.media_id, f.frame_ms, f.frame_idx, f.width,
+      dibLuma(f.frame_bytes, 0, f.frame_bytes.length, f.width, f.height).map { lum =>
+        val (sum, hist) = lumaFold(lum.length)(lum(_))
+        FrameStatsRow(f.media_id, f.frame_ms, f.frame_idx, f.width,
           f.height, f.frame_bytes.length, f.width.toLong * f.height, sum,
-          hist(0), hist(1), hist(2), hist(3)))
+          hist(0), hist(1), hist(2), hist(3))
       }
     })
   }
@@ -246,17 +212,12 @@ object Multimodal {
   private final case class AviInfo(usPerFrame: Int, nFrames: Int,
       width: Int, height: Int, frames: IndexedSeq[(Int, Int)])
 
-  /** RIFF/AVI chunk walk in pure byte arithmetic — bounds-checked like
-    * the WAV scanner (corrupt sizes stop the walk, not the task). Returns
-    * None unless the container is AVI with one uncompressed 24-bit BI_RGB
-    * 'vids' stream and at least one movi frame chunk. */
-  private def aviDemux(b: Array[Byte]): Option[AviInfo] = {
-    def le16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-    def fcc(i: Int, s: String) =
-      b(i) == s(0).toByte && b(i + 1) == s(1).toByte &&
-        b(i + 2) == s(2).toByte && b(i + 3) == s(3).toByte
-    if (b.length < 12 || !fcc(0, "RIFF") || !fcc(8, "AVI ")) None
+  /** AVI demux over the shared RIFF chunk walk (corrupt sizes stop the
+    * walk, not the task). Returns None unless the container is AVI with
+    * one uncompressed 24-bit BI_RGB 'vids' stream and at least one movi
+    * frame chunk. */
+  private def aviDemux(b: Array[Byte]): Option[AviInfo] =
+    if (!isRiff(b, "AVI ")) None
     else {
       var usPerFrame = 0
       var nFrames = 0
@@ -270,29 +231,21 @@ object Multimodal {
       // strl) the WAVEFORMATEX is not misread as a BITMAPINFOHEADER
       var lastStrh = ""
       val frames = IndexedSeq.newBuilder[(Int, Int)]
-      // walk [from, to) one nesting level; recurse into LIST chunks —
-      // depth is bounded by the fixed hdrl/strl/movi tree, not the data
-      def walk(from: Int, to: Int): Unit = {
-        var i = from
-        while (i + 8 <= to) {
-          val size = le32(i + 4)
-          if (size < 0 || size > to - i - 8) { i = to } // corrupt → stop
-          else {
-            if (fcc(i, "LIST") && size >= 4) walk(i + 12, i + 8 + size)
-            else if (fcc(i, "avih") && size >= 24) {
-              usPerFrame = le32(i + 8); nFrames = le32(i + 24)
-            } else if (fcc(i, "strh") && size >= 4) {
-              lastStrh = new String(b, i + 8, 4, java.nio.charset.StandardCharsets.US_ASCII)
-              if (lastStrh == "vids") vids = true
-            } else if (fcc(i, "strf") && size >= 20 && width == 0 &&
-                lastStrh == "vids") {
-              width = le32(i + 12); height = le32(i + 16)
-              bitCount = le16(i + 22); compression = le32(i + 24)
-            } else if ((fcc(i, "00db") || fcc(i, "00dc")) && size > 0) {
-              frames += ((i + 8, size))
-            }
-            i += 8 + size + (size & 1)
-          }
+      // one nesting level per call; recurse into LIST chunks — depth is
+      // bounded by the fixed hdrl/strl/movi tree, not the data
+      def walk(from: Int, to: Int): Unit = riffChunks(b, from, to) { (i, size) =>
+        if (fourCC(b, i, "LIST") && size >= 4) walk(i + 12, i + 8 + size)
+        else if (fourCC(b, i, "avih") && size >= 24) {
+          usPerFrame = le32(b, i + 8); nFrames = le32(b, i + 24)
+        } else if (fourCC(b, i, "strh") && size >= 4) {
+          lastStrh = new String(b, i + 8, 4, java.nio.charset.StandardCharsets.US_ASCII)
+          if (lastStrh == "vids") vids = true
+        } else if (fourCC(b, i, "strf") && size >= 20 && width == 0 &&
+            lastStrh == "vids") {
+          width = le32(b, i + 12); height = le32(b, i + 16)
+          bitCount = le16(b, i + 22); compression = le32(b, i + 24)
+        } else if ((fourCC(b, i, "00db") || fourCC(b, i, "00dc")) && size > 0) {
+          frames += ((i + 8, size))
         }
       }
       walk(12, b.length)
@@ -302,7 +255,6 @@ object Multimodal {
         Some(AviInfo(usPerFrame, math.min(nFrames, fs.length), width, height, fs))
       else None
     }
-  }
 
   /** Deterministic planted AVI — the video twin of [[syntheticPng]] /
     * [[syntheticWav]]: `nFrames` uncompressed 24-bit BI_RGB frames of the
@@ -319,8 +271,7 @@ object Multimodal {
     val hdrlSize = 4 + (8 + 56) + (8 + strlSize)
     val moviSize = 4 + nFrames * (8 + frameSize)
     val riffSize = 4 + (8 + hdrlSize) + (8 + moviSize)
-    val bb = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val bb = ByteBuffer.allocate(8 + riffSize).order(ByteOrder.LITTLE_ENDIAN)
     def fcc(s: String) = bb.put(s.getBytes("ASCII"))
     fcc("RIFF"); bb.putInt(riffSize); fcc("AVI ")
     fcc("LIST"); bb.putInt(hdrlSize); fcc("hdrl")
@@ -374,7 +325,6 @@ object Multimodal {
   }
 
   final case class MediaRow(media_id: Long, kind: String, content: Array[Byte])
-  final case class DecodedRow(media_id: Long, n_bytes: Int, format: String)
   final case class PixelStatsRow(media_id: Long, width: Int, height: Int,
       n_pixels: Long, luma_sum: Long,
       hist_0: Long, hist_1: Long, hist_2: Long, hist_3: Long)
@@ -387,8 +337,7 @@ object Multimodal {
     * Encoded with the JVM's built-in ImageIO PNG writer — lossless 8-bit,
     * so the decode side reads back exact planted values. */
   def syntheticPng(w: Int, h: Int, r: Int, g: Int, b: Int): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     val toneA = (r << 16) | (g << 8) | b
     val toneB = ((255 - r) << 16) | ((255 - g) << 8) | (255 - b)
     val split = w / 2
@@ -422,19 +371,28 @@ object Multimodal {
   final case class AudioStatsRow(media_id: Long, n_samples: Long,
       peak_abs: Long, sum_abs: Long, sum_sq: Long)
 
+  /** A mono WAV of `nSamples` samples: the canonical 44-byte RIFF header
+    * (one 16-byte fmt chunk with fmt `codec`, then the data chunk), with
+    * the buffer positioned at the first sample for the caller to fill. */
+  private def wavBuffer(codec: Int, rate: Int, bits: Int, nSamples: Int): ByteBuffer = {
+    val blockAlign = bits / 8
+    val dataLen = nSamples * blockAlign
+    val bb = ByteBuffer.allocate(44 + dataLen).order(ByteOrder.LITTLE_ENDIAN)
+    def fcc(s: String) = bb.put(s.getBytes("ASCII"))
+    fcc("RIFF"); bb.putInt(36 + dataLen); fcc("WAVE")
+    fcc("fmt "); bb.putInt(16).putShort(codec.toShort).putShort(1)
+      .putInt(rate).putInt(rate * blockAlign).putShort(blockAlign.toShort)
+      .putShort(bits.toShort)
+    fcc("data"); bb.putInt(dataLen)
+  }
+
   /** Deterministic planted WAV — a square wave of amplitude A(id) over
     * L(id) 16-bit mono PCM samples (+A, −A alternating), wrapped in a
     * canonical 44-byte RIFF header. Closed forms: n_samples = L,
     * peak = A, Σ|s| = L·A, Σs² = L·A² — all exact integers an engine
     * without an audio path (the DuckDB oracle) can recompute. */
   def syntheticWav(rate: Int, amplitude: Int, nSamples: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(44 + nSamples * 2)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("ASCII")).putInt(36 + nSamples * 2)
-      .put("WAVE".getBytes("ASCII"))
-    bb.put("fmt ".getBytes("ASCII")).putInt(16).putShort(1).putShort(1)
-    bb.putInt(rate).putInt(rate * 2).putShort(2).putShort(16)
-    bb.put("data".getBytes("ASCII")).putInt(nSamples * 2)
+    val bb = wavBuffer(codec = 1, rate, bits = 16, nSamples)
     var k = 0
     while (k < nSamples) {
       bb.putShort((if (k % 2 == 0) amplitude else -amplitude).toShort)
@@ -469,23 +427,15 @@ object Multimodal {
     implicit val enc = Encoders.product[MediaRow]
     media.mapPartitions(_.flatMap { m =>
       val b = m.content
-      def le16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
       wavChunks(b).flatMap { w =>
         if (w.codec != 1 || w.bits != 16 || w.rate <= 0) None
         else {
           val n = w.dataLen / 2
           val nOut = (n + factor - 1) / factor
-          val out = java.nio.ByteBuffer.allocate(44 + nOut * 2)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val newRate = math.max(w.rate / factor, 1)
-          out.put("RIFF".getBytes("ASCII")).putInt(36 + nOut * 2)
-            .put("WAVE".getBytes("ASCII"))
-          out.put("fmt ".getBytes("ASCII")).putInt(16).putShort(1).putShort(1)
-          out.putInt(newRate).putInt(newRate * 2).putShort(2).putShort(16)
-          out.put("data".getBytes("ASCII")).putInt(nOut * 2)
+          val out = wavBuffer(codec = 1, math.max(w.rate / factor, 1), bits = 16, nOut)
           var k = 0
           while (k < n) {
-            if (k % factor == 0) out.putShort(le16(w.dataAt + 2 * k).toShort)
+            if (k % factor == 0) out.putShort(le16(b, w.dataAt + 2 * k).toShort)
             k += 1
           }
           Some(MediaRow(m.media_id, "audio", out.array()))
@@ -504,6 +454,40 @@ object Multimodal {
     if ((u & 0x80) != 0) 0x84 - t else t - 0x84
   }
 
+  /** Parsed WAV container: (codec, bits, rate, dataAt, dataLen). */
+  private final case class WavInfo(codec: Int, bits: Int, rate: Int,
+      dataAt: Int, dataLen: Int)
+
+  /** RIFF/WAVE parse over the shared chunk walk (used by [[audioStats]]
+    * and [[resampleAudio]]): fmt and data in either order, like
+    * MediaHeader's WAV branch. FIRST fmt wins, tracked by its own latch:
+    * a malformed multi-fmt container must read the same fmt here as
+    * MediaHeader, or the decode surfaces disagree on the codec. Needs a
+    * data chunk; fmt fields read only when the fmt chunk declares
+    * ≥ 16 bytes. */
+  private def wavChunks(b: Array[Byte]): Option[WavInfo] =
+    if (!isRiff(b, "WAVE")) None
+    else {
+      var fmtSeen = false
+      var codec = 0
+      var sampleBits = 0
+      var rate = 0
+      var dataAt = -1
+      var dataLen = 0
+      riffChunks(b, 12, b.length) { (i, size) =>
+        if (size >= 0 && !fmtSeen && fourCC(b, i, "fmt ")) {
+          fmtSeen = true
+          if (size >= 16) {
+            codec = le16(b, i + 8); sampleBits = le16(b, i + 22); rate = le32(b, i + 12)
+          }
+        } else if (size >= 0 && dataAt < 0 && fourCC(b, i, "data")) {
+          dataAt = i + 8; dataLen = size
+        }
+      }
+      if (!fmtSeen || dataAt < 0) None
+      else Some(WavInfo(codec, sampleBits, rate, dataAt, dataLen))
+    }
+
   /** REAL sample-level audio decode — PCM and G.711 µ-law need no codec
     * library, only byte arithmetic: walk the RIFF chunks to the `data`
     * payload and fold the samples into exact integer stats (count,
@@ -514,58 +498,10 @@ object Multimodal {
     * contract as [[pixelStats]]: undecodable or unsupported-codec
     * payloads drop; a sample-order or sign bug shifts exact integers and
     * fails the oracle hash. */
-  /** Parsed WAV container: (codec, bits, rate, dataAt, dataLen). */
-  private final case class WavInfo(codec: Int, bits: Int, rate: Int,
-      dataAt: Int, dataLen: Int)
-
-  /** Shared RIFF/WAVE chunk walk (used by [[audioStats]] and
-    * [[resampleAudio]]): bounds-checked like MediaHeader's scanner
-    * (corrupt sizes stop the walk, not the task); walks ALL chunks (fmt
-    * and data in either order — MediaHeader's scanner accepts both
-    * layouts, so this one must too). FIRST fmt wins, tracked by its own
-    * latch (ADVICE r6): a malformed multi-fmt container must read the
-    * same fmt here as MediaHeader's first-fmt-returns scanner, or the
-    * decode surfaces disagree on the codec. */
-  private def wavChunks(b: Array[Byte]): Option[WavInfo] = {
-    def le16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def le32(i: Int) = le16(i) | (le16(i + 2) << 16)
-    if (b.length < 12 || b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
-      b(8) != 'W' || b(9) != 'A' || b(10) != 'V' || b(11) != 'E') None
-    else {
-      var i = 12
-      var fmtSeen = false
-      var codec = 0
-      var sampleBits = 0
-      var rate = 0
-      var dataAt = -1
-      var dataLen = 0
-      while (i + 8 <= b.length) {
-        val size = le32(i + 4)
-        if (size < 0 || size > b.length - i - 8) { i = b.length } // corrupt → stop
-        else {
-          if (b(i) == 'f' && b(i + 1) == 'm' && b(i + 2) == 't' && b(i + 3) == ' ' &&
-            !fmtSeen) {
-            fmtSeen = true
-            if (size >= 16) {
-              codec = le16(i + 8); sampleBits = le16(i + 22); rate = le32(i + 12)
-            }
-          } else if (b(i) == 'd' && b(i + 1) == 'a' && b(i + 2) == 't' &&
-            b(i + 3) == 'a' && dataAt < 0) {
-            dataAt = i + 8; dataLen = size
-          }
-          i += 8 + size + (size & 1)
-        }
-      }
-      if (!fmtSeen || dataAt < 0) None
-      else Some(WavInfo(codec, sampleBits, rate, dataAt, dataLen))
-    }
-  }
-
   def audioStats(media: Dataset[MediaRow]): Dataset[AudioStatsRow] = {
     implicit val enc = Encoders.product[AudioStatsRow]
     media.mapPartitions(_.flatMap { m =>
       val b = m.content
-      def le16(i: Int) = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
       wavChunks(b).flatMap { w =>
         val (codec, sampleBits, dataAt, dataLen) = (w.codec, w.bits, w.dataAt, w.dataLen)
         val pcm16 = codec == 1 && sampleBits == 16
@@ -579,7 +515,7 @@ object Multimodal {
           var sumSq = 0L
           while (k < n) {
             val s: Long =
-              if (pcm16) le16(dataAt + 2 * k).toShort.toLong
+              if (pcm16) le16(b, dataAt + 2 * k).toShort.toLong
               else ulawToLinear(b(dataAt + k) & 0xff).toLong
             val a = math.abs(s)
             if (a > peak) peak = a
@@ -599,13 +535,7 @@ object Multimodal {
     * peak = max(|v1|,|v2|), Σ|s| = ⌈L/2⌉|v1| + ⌊L/2⌋|v2|, Σs² likewise —
     * exact integers the oracle recomputes from the decode formula alone. */
   def syntheticUlawWav(rate: Int, u1: Int, u2: Int, nSamples: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(44 + nSamples)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("ASCII")).putInt(36 + nSamples)
-      .put("WAVE".getBytes("ASCII"))
-    bb.put("fmt ".getBytes("ASCII")).putInt(16).putShort(7).putShort(1)
-    bb.putInt(rate).putInt(rate).putShort(1).putShort(8)
-    bb.put("data".getBytes("ASCII")).putInt(nSamples)
+    val bb = wavBuffer(codec = 7, rate, bits = 8, nSamples)
     var k = 0
     while (k < nSamples) {
       bb.put(((if (k % 2 == 0) u1 else u2) & 0xff).toByte)
@@ -643,45 +573,34 @@ object Multimodal {
     * contract as [[pixelStats]]. */
   def averageHash(media: Dataset[MediaRow], grid: Int = 8): Dataset[PhashRow] = {
     implicit val enc = Encoders.product[PhashRow]
-    media.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { m =>
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.content))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) None
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          val cells = grid * grid
-          val lum = new Array[Long](cells)
-          var total = 0L
-          var i = 0
-          while (i < grid) {
-            val y = i * h / grid
-            var j = 0
-            while (j < grid) {
-              val rgb = img.getRGB(j * w / grid, y)
-              val l = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-                114 * (rgb & 0xff)) / 1000L
-              lum(i * grid + j) = l
-              total += l
-              j += 1
-            }
-            i += 1
-          }
-          val sb = new java.lang.StringBuilder(cells)
-          var nSet = 0L
-          var k = 0
-          while (k < cells) {
-            val bit = lum(k) * cells > total
-            sb.append(if (bit) '1' else '0')
-            if (bit) nSet += 1
-            k += 1
-          }
-          Some(PhashRow(m.media_id, sb.toString, nSet))
+    decodedImages(media) { (m, img) =>
+      val w = img.getWidth
+      val h = img.getHeight
+      val cells = grid * grid
+      val lum = new Array[Long](cells)
+      var total = 0L
+      var i = 0
+      while (i < grid) {
+        val y = i * h / grid
+        var j = 0
+        while (j < grid) {
+          val l = lumaRgb(img.getRGB(j * w / grid, y)).toLong
+          lum(i * grid + j) = l
+          total += l
+          j += 1
         }
+        i += 1
       }
+      val sb = new java.lang.StringBuilder(cells)
+      var nSet = 0L
+      var k = 0
+      while (k < cells) {
+        val bit = lum(k) * cells > total
+        sb.append(if (bit) '1' else '0')
+        if (bit) nSet += 1
+        k += 1
+      }
+      PhashRow(m.media_id, sb.toString, nSet)
     }
   }
 
@@ -697,57 +616,11 @@ object Multimodal {
     * exactly what the seam exists for. */
   def pixelStats(media: Dataset[MediaRow]): Dataset[PixelStatsRow] = {
     implicit val enc = Encoders.product[PixelStatsRow]
-    media.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { m =>
-        // NonFatal, not just IOException: ImageIO.read throws runtime
-        // exceptions on corrupt-but-recognized payloads (truncated GIF,
-        // broken ICC profile → AIOOBE/CMMException) and one bad file must
-        // not kill the task — same contract as the header scanner.
-        val img =
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(m.content))
-          catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) None
-        else {
-          val w = img.getWidth
-          val h = img.getHeight
-          var sum = 0L
-          val hist = new Array[Long](4)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              val rgb = img.getRGB(x, y)
-              val lum = (299 * ((rgb >> 16) & 0xff) + 587 * ((rgb >> 8) & 0xff) +
-                114 * (rgb & 0xff)) / 1000
-              sum += lum
-              hist(lum >> 6) += 1
-              x += 1
-            }
-            y += 1
-          }
-          Some(PixelStatsRow(m.media_id, w, h, w.toLong * h, sum,
-            hist(0), hist(1), hist(2), hist(3)))
-        }
-      }
-    }
-  }
-
-  /** The imperative per-partition seam — where a JNI/native decoder that
-    * needs batch reuse (shared codec context per partition) would plug in.
-    * Demonstrates the mapPartitions batch shape with an explicit Encoder
-    * (header parse runs for real); kept off the hot path for everything
-    * expressible as Columns. */
-  def decodeViaPartitions(media: Dataset[MediaRow]): Dataset[DecodedRow] = {
-    implicit val enc = Encoders.product[DecodedRow]
-    media.mapPartitions { rows =>
-      // per-partition init happens once here — a JNI codec context would
-      // be created and reused across this batch
-      rows.map { r =>
-        val h = graft.functions.MediaHeader.decode(r.content)
-        DecodedRow(r.media_id, r.content.length,
-          if (h.isNullAt(0)) null else h.getUTF8String(0).toString)
-      }
+    decodedImages(media) { (m, img) =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      val (sum, hist) = lumaFold(w * h)(i => lumaRgb(img.getRGB(i % w, i / w)))
+      PixelStatsRow(m.media_id, w, h, w.toLong * h, sum,
+        hist(0), hist(1), hist(2), hist(3))
     }
   }
 }

@@ -234,7 +234,7 @@ object ExtendedQueries {
     import s.implicits._
     val ev = Tables(s, dir, "events")
       .select($"ts".cast("date").as("d"),
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        F.valueCents.as("cents"))
     val daily = ev.groupBy($"d")
       .agg(count(lit(1)).as("n_events"), sum($"cents").as("total_cents"))
     val spine = ev.agg(min($"d").as("lo"), max($"d").as("hi"))

@@ -71,17 +71,22 @@ object RelationalQueries {
 
 
 
-  /** Session clone for streaming drains with a BOUNDED state width.
-    * Stateful streaming operators instantiate one state store per
+  /** Session clone for a streaming drain of `table` with a BOUNDED state
+    * width. Stateful streaming operators instantiate one state store per
     * shuffle partition (a stream-stream join holds four), and that
     * per-store fixed cost dominates a small drain: the interval join
     * measured 7.0 s at the session default of 32 partitions vs 2.6 s at
     * 8, identical output. Statefulness width is a deployment knob pinned
     * by the first checkpoint — size it to stream volume, not core
-    * count; the clone scopes the setting to this query alone. The
-    * default covers the tiny planted-batch sources; table-backed drains
-    * pass [[streamWidth]]'s volume-derived value (VERDICT r14 #3). */
-  private def streamSession(s: SparkSession, parts: Int = 8): SparkSession = {
+    * count; the clone scopes the setting to this query alone. The width
+    * derives from the table's on-disk bytes
+    * ([[graft.streaming.Streams.stateWidthFor]]), with the same
+    * deliberate-override contract as the dedup fences:
+    * `graft.streamStateWidth` (session conf or -D) pins an explicit
+    * width for ladder measurement or deployment tuning. */
+  private def streamSession(s: SparkSession, dir: String, table: String): SparkSession = {
+    val parts = SimilarityQueries.envelope(s, "graft.streamStateWidth",
+      graft.streaming.Streams.stateWidthFor(sourceBytes(dir, table)).toLong).toInt
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s2
@@ -96,15 +101,6 @@ object RelationalQueries {
       else f.length()
     size(new java.io.File(s"$dir/$table.parquet"))
   }
-
-  /** Volume-derived state width for a table-backed drain
-    * ([[graft.streaming.Streams.stateWidthFor]]), with the same
-    * deliberate-override contract as the dedup fences:
-    * `graft.streamStateWidth` (session conf or -D) pins an explicit
-    * width for ladder measurement or deployment tuning. */
-  private def streamWidth(s: SparkSession, dir: String, table: String): Int =
-    SimilarityQueries.envelope(s, "graft.streamStateWidth",
-      graft.streaming.Streams.stateWidthFor(sourceBytes(dir, table)).toLong).toInt
 
   /** Streaming file source for a table that is either ONE parquet file
     * (driver testdata) or a DIRECTORY of part files (generated scale
@@ -587,11 +583,15 @@ object RelationalQueries {
   /** The events table as a TIMESTAMP-typed stream: legacy nanos-as-long
     * converts to micros, and NTZ parquet reads cast to the instant-bearing
     * type watermarks require (UTC session: same instant). */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    val raw = streamTable(s, dir, "events", rawSchema)
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
+    timestampedEvents(streamTable(s, dir, "events",
+      s.read.parquet(s"$dir/events.parquet").schema))
+
+  /** `ts` of an events frame (batch or stream) as TIMESTAMP: legacy
+    * nanos-as-long converts to micros, NTZ reads cast to the instant type. */
+  private def timestampedEvents(raw: DataFrame): DataFrame = {
     val withTs =
-      if (rawSchema("ts").dataType == org.apache.spark.sql.types.LongType)
+      if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       else raw
     withTs.withColumn("ts", col("ts").cast("timestamp"))
@@ -686,7 +686,7 @@ object RelationalQueries {
     * by design: distinct aggregation is unsupported in streaming — the
     * scale path for it is the HLL sketch family (a_hll_merge). */
   private val stStreamParity: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val agg = eventsStream(s, dir)
       .groupBy(window($"ts", "1 day").as("w"))
@@ -708,7 +708,7 @@ object RelationalQueries {
     * first-seen row) makes the keeper deterministic under any partition
     * order, so the hash gate can grade it. */
   private val stStreamDedup: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "documents"))
+    val s = streamSession(s0, dir, "documents")
     import s.implicits._
     val rawSchema = s.read.parquet(s"$dir/documents.parquet").schema
     val agg = streamTable(s, dir, "documents", rawSchema)
@@ -734,11 +734,11 @@ object RelationalQueries {
     * same rule. Money rides as integer cents and times as epoch ms, so
     * every emitted cell is order-free exact (see sessionizeCents). */
   private val stStreamSession: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val events = eventsStream(s, dir)
       .select($"ts", $"user_id",
-        expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+        F.valueCents.as("cents"))
       .as[graft.streaming.Streams.EventC]
     val sess = graft.streaming.Streams.sessionizeCents(events,
       gapMs = 30 * 60 * 1000L, latenessMs = 60 * 60 * 1000L)
@@ -770,16 +770,11 @@ object RelationalQueries {
     * the final watermark (M − lateness) is unchanged because eligible
     * users' newest events stay in file 1. */
   private val stStreamSessionOoo: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val ev0 =
-      (if (raw.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else raw).withColumn("ts", col("ts").cast("timestamp"))
-    val withMs = ev0.select($"ts", $"user_id",
-      expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"),
-      expr("unix_millis(ts)").as("tms"))
+    val withMs = timestampedEvents(s.read.parquet(s"$dir/events.parquet"))
+      .select($"ts", $"user_id", F.valueCents.as("cents"),
+        expr("unix_millis(ts)").as("tms"))
     val m = withMs.agg(max($"tms")).head().getLong(0)
     val (guardLo, guardHi, midHi) =
       (m - 85 * 60000L, m - 55 * 60000L, m - 25 * 60000L)
@@ -823,7 +818,7 @@ object RelationalQueries {
     * per-batch broadcast enrichment loses/duplicates nothing across the
     * drain. Money rides as integer cents (order-free sum). */
   private val stStreamEnrich: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val dim = s.read.parquet(s"$dir/customer.parquet")
       .select($"c_custkey".as("user_id"), $"c_mktsegment")
@@ -831,7 +826,7 @@ object RelationalQueries {
       .enrichWithDim(eventsStream(s, dir), dim, Seq("user_id"))
       .groupBy($"c_mktsegment")
       .agg(count(lit(1)).as("n_events"),
-        sum(expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")).as("total_cents"))
+        sum(F.valueCents).as("total_cents"))
     // explicit null position: Spark default is NULLS FIRST asc, DuckDB's
     // is NULLS LAST — pin both so an unmatched user at any SF can't flip
     // the order-sensitive compare
@@ -850,7 +845,7 @@ object RelationalQueries {
     * which the DuckDB replay hash-certifies. */
   private val stStreamJoin: Q = (s0, dir) => {
     fenceStreamJoin("st_stream_join", s0, dir)
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val joined = graft.streaming.Streams
       .purchaseAttribution(eventsStream(s, dir))
@@ -929,7 +924,7 @@ object RelationalQueries {
     * of the exact join's output (the argmax member of the purchase's pair
     * set) — spec-pinned alongside the boundary replay. */
   private val stStreamJoinLast: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     // explicit literals, not defaults: the DuckDB replay for this key
     // hardcodes the 1 h window and the 7 200 000 ms watermark delay — a
@@ -960,7 +955,7 @@ object RelationalQueries {
     * property that bounds the join's memory at 100 TB. */
   private val stStreamLeftJoin: Q = (s0, dir) => {
     fenceStreamJoin("st_stream_left_join", s0, dir)
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val joined = graft.streaming.Streams
       .purchaseAttributionLeft(eventsStream(s, dir))
@@ -984,12 +979,12 @@ object RelationalQueries {
     * continuous query — the last S7/§2.10 surface that had only a spec,
     * now hash-graded. */
   private val stStreamUpsert: Q = (s0, dir) => {
-    val s = streamSession(s0, streamWidth(s0, dir, "events"))
+    val s = streamSession(s0, dir, "events")
     import s.implicits._
     val root = graft.TempDirs.create("st_upsert")
     val target = s"$root/state"
     val ev = eventsStream(s, dir).select($"user_id", $"event_type", $"ts",
-      $"event_id", expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents"))
+      $"event_id", F.valueCents.as("cents"))
     graft.streaming.Streams.upsertSink(ev, target, s"$root/ckpt",
       Seq("user_id", "event_type"), Seq("ts", "event_id"))
     s.read.parquet(target)

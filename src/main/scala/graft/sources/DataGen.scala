@@ -25,11 +25,15 @@ object DataGen {
     spark.range(0, n, 1, p).toDF("id")
   }
 
-  private val M = 1L << 40
+  /** Resolution of the uniform draws: 40 bits. */
+  private[sources] val M = 1L << 40
 
-  /** U[0,1) from (seed, id) — pure, 40-bit resolution. */
-  def uniform01(id: Column, seed: Long): Column =
-    pmod(xxhash64(lit(seed), id), lit(M)).cast("double") / M.toDouble
+  /** U[0,1) from the hash of `cols` — pure, 40-bit resolution. */
+  def hash01(cols: Column*): Column =
+    pmod(xxhash64(cols: _*), lit(M)).cast("double") / M.toDouble
+
+  /** U[0,1) from (seed, id). */
+  def uniform01(id: Column, seed: Long): Column = hash01(lit(seed), id)
 
   /** U(lo, hi). */
   def uniform(id: Column, lo: Double, hi: Double, seed: Long): Column =
@@ -86,8 +90,7 @@ object DataGen {
   /** U[0,1) keyed by (seed, id, k) — the k-th draw of row `id`, for
     * variable-count child generation where each child needs its own
     * independent uniform. */
-  def uniform01K(id: Column, k: Column, seed: Long): Column =
-    pmod(xxhash64(lit(seed), id, k), lit(M)).cast("double") / M.toDouble
+  def uniform01K(id: Column, k: Column, seed: Long): Column = hash01(lit(seed), id, k)
 
   /** Poisson with a PER-ROW lambda — the reference's demographically
     * correlated order volume (`np.random.poisson(5 * income_factor)`,

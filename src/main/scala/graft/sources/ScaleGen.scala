@@ -32,9 +32,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGen {
 
-  private val M = 1L << 40
-  private def u01(cols: Column*): Column =
-    pmod(xxhash64(cols: _*), lit(M)).cast("double") / M.toDouble
+  import DataGen.{M, hash01, ids}
+
   private def pick(n: Long, cols: Column*): Column = pmod(xxhash64(cols: _*), lit(n))
 
   /** Zipf(1)-ish foreign-key pick over [0, n) — the `skew` mode's draw
@@ -47,7 +46,7 @@ object ScaleGen {
     * n = 10⁶) and the frequency-vs-rank curve is a straight −1 slope —
     * the canonical popularity law for customers, parts, and users.
     *
-    * EFFECTIVE DOMAIN IS [0, n-2], not [0, n) (ADVICE r12): u01 < 1
+    * EFFECTIVE DOMAIN IS [0, n-2], not [0, n) (ADVICE r12): hash01 < 1
     * makes ⌊n^u⌋ ≤ n-1, so rank n (key n-1) has probability 0 — the
     * least-popular id of each skewed dimension never appears as a
     * foreign key. That is harmless here (the uniform modes cover the
@@ -57,15 +56,12 @@ object ScaleGen {
     * overflow guard for the u→1 double edge. */
   private def zipfPick(n: Long, cols: Column*): Column =
     least(lit(n), greatest(lit(1L),
-      floor(pow(lit(n.toDouble), u01(cols: _*))).cast("long"))) - 1
+      floor(pow(lit(n.toDouble), hash01(cols: _*))).cast("long"))) - 1
 
   /** Per-(id, i) standard normal via Box–Muller on two keyed uniforms. */
   private def normal2(id: Column, i: Column, seed: Long): Column =
-    sqrt(lit(-2.0) * log(u01(lit(seed), id, i) + lit(1.0 / M))) *
-      cos(lit(2.0 * math.Pi) * u01(lit(seed + 1000003), id, i))
-
-  private def ids(spark: SparkSession, n: Long): DataFrame =
-    spark.range(0, n, 1, spark.sparkContext.defaultParallelism).toDF("id")
+    sqrt(lit(-2.0) * log(hash01(lit(seed), id, i) + lit(1.0 / M))) *
+      cos(lit(2.0 * math.Pi) * hash01(lit(seed + 1000003), id, i))
 
   // ------------------------------------------------------------ star ----
 
@@ -84,13 +80,13 @@ object ScaleGen {
     ids(spark, n).select(col("id").as("s_suppkey"),
       concat(lit("Supplier#"), lpad(col("id").cast("string"), 9, "0")).as("s_name"),
       pick(25, lit(seed), col("id")).cast("int").as("s_nationkey"),
-      round(lit(-999.99) + u01(lit(seed + 1), col("id")) * 10999.98, 2).as("s_acctbal"))
+      round(lit(-999.99) + hash01(lit(seed + 1), col("id")) * 10999.98, 2).as("s_acctbal"))
 
   def customer(spark: SparkSession, n: Long, seed: Long): DataFrame =
     ids(spark, n).select(col("id").as("c_custkey"),
       concat(lit("Customer#"), lpad(col("id").cast("string"), 9, "0")).as("c_name"),
       pick(25, lit(seed), col("id")).cast("int").as("c_nationkey"),
-      round(lit(-999.99) + u01(lit(seed + 1), col("id")) * 10999.98, 2).as("c_acctbal"),
+      round(lit(-999.99) + hash01(lit(seed + 1), col("id")) * 10999.98, 2).as("c_acctbal"),
       DataGen.categorical(col("id"),
         Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"),
         Seq(1, 1, 1, 1, 1), seed + 2).as("c_mktsegment"))
@@ -108,7 +104,7 @@ object ScaleGen {
       concat(lit("Brand#"), pick(25, lit(seed + 2), id)).as("p_brand"),
       oneOf(PartTypes, seed + 3).as("p_type"),
       (pick(50, lit(seed + 4), id) + 1).cast("int").as("p_size"),
-      round(lit(900.0) + u01(lit(seed + 5), id) * 99.9, 2).as("p_retailprice"))
+      round(lit(900.0) + hash01(lit(seed + 5), id) * 99.9, 2).as("p_retailprice"))
   }
 
   private val OrdersStartEpoch = java.sql.Timestamp.valueOf("1995-01-01 00:00:00").getTime / 1000
@@ -123,7 +119,7 @@ object ScaleGen {
     ids(spark, n).select(id.as("o_orderkey"),
       custPick.as("o_custkey"),
       DataGen.categorical(id, Seq("O", "P", "F"), Seq(1, 1, 1), seed + 1).as("o_orderstatus"),
-      round(lit(1000.0) + u01(lit(seed + 2), id) * 499000.0, 2).as("o_totalprice"),
+      round(lit(1000.0) + hash01(lit(seed + 2), id) * 499000.0, 2).as("o_totalprice"),
       timestamp_seconds(lit(OrdersStartEpoch) +
         pick(OrdersDays, lit(seed + 3), id) * 86400L).as("o_orderdate"),
       DataGen.categorical(id, Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
@@ -145,7 +141,7 @@ object ScaleGen {
     val ok = col("l_orderkey")
     val ln = col("l_linenumber")
     val suppPick =
-      if (hubSupp) when(u01(lit(seed + 7919), ok, ln) < 0.5, lit(0L))
+      if (hubSupp) when(hash01(lit(seed + 7919), ok, ln) < 0.5, lit(0L))
         .otherwise(pick(nSuppliers, lit(seed + 2), ok, ln))
       else pick(nSuppliers, lit(seed + 2), ok, ln)
     val partPick =
@@ -162,7 +158,7 @@ object ScaleGen {
         ln,
         (pick(50, lit(seed + 3), ok, ln) + 1).cast("double").as("l_quantity"),
         round((pick(50, lit(seed + 3), ok, ln) + 1).cast("double") *
-          (lit(900.0) + u01(lit(seed + 4), ok, ln) * 1200.0), 2).as("l_extendedprice"),
+          (lit(900.0) + hash01(lit(seed + 4), ok, ln) * 1200.0), 2).as("l_extendedprice"),
         (pick(11, lit(seed + 5), ok, ln).cast("double") / 100).as("l_discount"),
         (pick(9, lit(seed + 6), ok, ln).cast("double") / 100).as("l_tax"),
         element_at(array(lit("N"), lit("A"), lit("R")),
@@ -183,11 +179,11 @@ object ScaleGen {
       else pick(nUsers, lit(seed + 1), id)
     ids(spark, n).select(id.as("event_id"),
       timestamp_seconds((lit(EventsStartEpoch).cast("double") +
-        u01(lit(seed), id) * (30L * 86400)).cast("double")).as("ts"),
+        hash01(lit(seed), id) * (30L * 86400)).cast("double")).as("ts"),
       userPick.as("user_id"),
       DataGen.categorical(id, Seq("click", "view", "purchase", "signup", "error"),
         Seq(1, 1, 1, 1, 1), seed + 2).as("event_type"),
-      round(lit(-50.0) * log(u01(lit(seed + 3), id) + lit(1.0 / M)), 2).as("value"),
+      round(lit(-50.0) * log(hash01(lit(seed + 3), id) + lit(1.0 / M)), 2).as("value"),
       concat(lit("{\"k\": "), pick(100, lit(seed + 4), id), lit("}")).as("props"))
   }
 
@@ -222,7 +218,7 @@ object ScaleGen {
     * which is exactly the regime the saturation fences certify. */
   private def zipfWordAt(docId: Column, k: Column, seed: Long, vocab: Long): Column =
     concat(lit("w"), greatest(lit(1L),
-      floor(pow(lit(vocab.toDouble), u01(lit(seed), docId, k))).cast("long")))
+      floor(pow(lit(vocab.toDouble), hash01(lit(seed), docId, k))).cast("long")))
 
   /** Heaps-law vocabulary size for an n-doc corpus (≈ tokens^0.7 scaled
     * down to doc grain; floor 64 keeps tiny test corpora non-degenerate). */
@@ -240,7 +236,7 @@ object ScaleGen {
   private def documentsWith(spark: SparkSession, n: Long, seed: Long,
       word: (Column, Column, Long) => Column): DataFrame = {
     val id = col("id")
-    val roll = u01(lit(seed + 2), id)
+    val roll = hash01(lit(seed + 2), id)
     // a mutated/exact copy points at a strictly-earlier base doc, so the
     // graph is acyclic and one expression derives any doc's words
     val base = when(id > 0, pick(Long.MaxValue, lit(seed + 3), id) % id).otherwise(lit(0L))
@@ -249,7 +245,7 @@ object ScaleGen {
     val srcId = when(isMut || isExact, base).otherwise(id)
     val words = transform(
       sequence(lit(1), docLen(srcId, seed)),
-      k => when(isMut && u01(lit(seed + 4), id, k) > MutationKeep,
+      k => when(isMut && hash01(lit(seed + 4), id, k) > MutationKeep,
         word(id, k, seed + 5)) // replacement word, keyed to THIS doc
         .otherwise(word(srcId, k, seed)))
     val text = concat_ws(" ", words)
@@ -279,7 +275,7 @@ object ScaleGen {
 
   def embeddings(spark: SparkSession, n: Long, seed: Long): DataFrame = {
     val id = col("id")
-    val roll = u01(lit(seed), id)
+    val roll = hash01(lit(seed), id)
     val base = when(id > 0, pick(Long.MaxValue, lit(seed + 1), id) % id).otherwise(lit(0L))
     val isDup = roll < EmbNearDupRate && id > 0
     val srcId = when(isDup, base).otherwise(id)

@@ -10,8 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * §2.9); these transforms generalize it: the same event-table schema run
   * through `readStream` gives watermarked tumbling aggregates and stateful
   * sessionization, and `Trigger.AvailableNow` turns any of them back into
-  * an incremental batch job. Transform logic is shared with the batch
-  * queries (st_tumbling_window) — one definition, two execution modes.
+  * an incremental batch job. The query keys do not reuse
+  * [[tumblingCounts]]: `st_tumbling_window` (batch) and `st_stream_parity`
+  * (streaming) each spell their own daily window aggregate, and
+  * `tumblingCounts` is exercised by `StreamsSpec` alone.
   */
 object Streams {
 

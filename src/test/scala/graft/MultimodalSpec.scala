@@ -2,7 +2,6 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.functions.MediaHeader
 import graft.operators.Multimodal
@@ -40,17 +39,6 @@ class MultimodalSpec extends SparkSpec {
   private def gifBytes(w: Int, h: Int): Array[Byte] =
     "GIF89a".getBytes("ASCII") ++
       Array(w & 0xff, (w >> 8) & 0xff, h & 0xff, (h >> 8) & 0xff).map(_.toByte)
-
-  private def mediaDf = {
-    val rows = Seq(
-      Row(1L, "image", pngBytes(640, 480, 31), Row("image/png", 640, 480, null, null)),
-      Row(2L, "image", pngBytes(800, 600, 95), Row("image/png", 800, 600, null, null)),
-      Row(3L, "video", Array.fill[Byte](256)(3), Row("video/mp4", 1920, 1080, null, 100L)),
-      Row(4L, "audio", wavBytes(44100, 1, 20), Row("audio/wav", null, null, 44100, 5000L)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.map(r => r: Row)),
-      Multimodal.mediaSchema)
-  }
 
   test("MediaHeader parses real PNG/JPEG/GIF/WAV headers (and rejects noise)") {
     def parse(b: Array[Byte]): (String, Integer, Integer, Integer, Integer, Integer) = {
@@ -91,18 +79,6 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("imageFeatures decodes the container header alongside declared meta") {
-    val f = Multimodal.imageFeatures(mediaDf).orderBy("media_id").collect()
-    assert(f.length == 2)
-    assert(f(0).getAs[Int]("width") == 640 && f(0).getAs[Int]("n_bytes") == 64)
-    assert(f(0).getAs[String]("format") == "png")
-    assert(f(0).getAs[Int]("decoded_width") == 640) // parsed == declared
-    assert(f(1).getAs[Int]("decoded_height") == 600)
-    // deterministic: same bytes → same features on re-run
-    val again = Multimodal.imageFeatures(mediaDf).orderBy("media_id").collect()
-    assert(f.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
-  }
-
   test("resizeImages really resamples payload: closed-form match, noise dropped") {
     import spark.implicits._
     // id=5 → src 7×5, tones (185,39,159)/complement, split 3; resized to
@@ -116,13 +92,6 @@ class MultimodalSpec extends SparkSpec {
     val lb = (299 * 70 + 587 * 216 + 114 * 96) / 1000
     assert(out.head.width == 8 && out.head.height == 6)
     assert(out.head.luma_sum == 6L * (4 * la + 4 * lb))
-  }
-
-  test("resize rewrites metadata without touching payload") {
-    val out = Multimodal.resize(mediaDf, 100, 100).filter(col("media_id") === 1).head()
-    val meta = out.getStruct(out.fieldIndex("meta"))
-    assert(meta.getAs[Int]("width") == 100 && meta.getAs[Int]("height") == 100)
-    assert(out.getAs[Array[Byte]]("content").length == 64)
   }
 
   test("sampleFrames demuxes REAL frames from a planted AVI") {
@@ -210,17 +179,32 @@ class MultimodalSpec extends SparkSpec {
     Multimodal.audioStats(Multimodal.resampleAudio(ds, 2)).count()
     Multimodal.pixelStats(ds).count()
     Multimodal.resizeImages(ds, 4, 4).count()
-    Multimodal.decodeViaPartitions(ds).count()
+    rows.foreach(r => MediaHeader.decode(r.content))
   }
 
-  test("decodeViaPartitions maps batches with an explicit Encoder") {
+  test("every WAV the engine writes reads back with its rate, channels and bits") {
     import spark.implicits._
-    val ds = Seq(
-      MediaRow(1L, "image", pngBytes(8, 8, 0)),
-      MediaRow(2L, "blob", Array[Byte](1, 2, 3))).toDS()
-    val out = Multimodal.decodeViaPartitions(ds).collect().sortBy(_.media_id)
-    assert(out(0).format == "png" && out(0).n_bytes == 33)
-    assert(out(1).format == null && out(1).n_bytes == 3)
+    def header(b: Array[Byte]): (String, Int, Int, Int) = {
+      val r = MediaHeader.decode(b)
+      (r.getUTF8String(0).toString, r.getInt(3), r.getInt(4), r.getInt(5))
+    }
+    val pcm = Multimodal.syntheticWav(44100, 700, 21)
+    val ulaw = Multimodal.syntheticUlawWav(8000, 40, 200, 13)
+    val resampled = Seq(2, 3).map { factor =>
+      factor -> Multimodal.resampleAudio(Seq(MediaRow(1L, "audio", pcm)).toDS(), factor)
+        .collect().head.content
+    }.toMap
+    // (payload, rate, channels, bits, samples)
+    val written = Seq(
+      (pcm, 44100, 1, 16, 21L),
+      (ulaw, 8000, 1, 8, 13L),
+      (resampled(2), 22050, 1, 16, 11L),
+      (resampled(3), 14700, 1, 16, 7L))
+    for (((b, rate, channels, bits, n), i) <- written.zipWithIndex) {
+      assert(header(b) == (("wav", rate, channels, bits)), s"payload $i header")
+      val st = Multimodal.audioStats(Seq(MediaRow(i.toLong, "audio", b)).toDS()).collect()
+      assert(st.map(_.n_samples).toSeq == Seq(n), s"payload $i samples")
+    }
   }
 
   test("pixelStats really decodes pixels: closed-form match, noise dropped") {
@@ -339,17 +323,6 @@ class MultimodalSpec extends SparkSpec {
     // bits_per_sample 16 but format stays 'wav' with its first fmt)
     val hdr = MediaHeader.decode(twoFmt)
     assert(hdr.getUTF8String(0).toString == "wav")
-  }
-
-  test("repartitionForMedia sizes partitions by byte budget") {
-    val df = Multimodal.repartitionForMedia(mediaDf, targetBytesPerPartition = 200)
-    assert(df.rdd.getNumPartitions == 2) // 512 bytes total / 200 → 2
-  }
-
-  test("repartitionForMedia handles an empty frame (sum over zero rows is null)") {
-    val empty = mediaDf.filter(col("media_id") < 0)
-    val df = Multimodal.repartitionForMedia(empty, targetBytesPerPartition = 200)
-    assert(df.rdd.getNumPartitions == 1 && df.count() == 0)
   }
 
   test("averageHash: scale-invariant for proportional upscales, corrupt dropped") {

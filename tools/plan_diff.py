@@ -18,6 +18,9 @@ stays the same:
   - `[plan_id=...]` and `RDD[...]` ids;
   - identity hashes of array literals (`[D@1b2c3d`, the hyperplane weights)
     and the uuids naming `observe` metrics;
+  - the JVM's lambda classes in typed operators' arguments
+    (`Multimodal$$$Lambda$3689/0x00007fc59cffcb58@18f493d7`): numbered in
+    creation order, placed at a per-process address, with an identity hash;
   - call sites of checkpointed RDDs (`at localCheckpoint at KMeans.scala:204`);
   - per-process temp dirs (`graft_cc_<digits>`, `graft_incr_p<pid>`,
     `graft_e2e_p<pid>`, any `/<prefix><random digits>` a JVM
@@ -45,6 +48,7 @@ MASKS = [
     (re.compile(r"\[plan_id=\d+\]"), "[plan_id=N]"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\[D@[0-9a-f]+"), "[D@N"),
+    (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda$N"),
     (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"), "<uuid>"),
     (re.compile(r" at \S+ at \S+\.scala:\d+"), " at <callsite>"),
     (re.compile(r"\b(graft_[a-z0-9]+_p)\d+"), r"\1N"),
