@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -16,13 +17,15 @@ import graft.operators.Sync
 /** The measurement CLI: one session, one key selector, one listener, five
   * modes over the named query keys.
   *
-  *  - `stages`: an untimed warm-up pass, then one timed [[Bench.exec]]
-  *    pass, printing the wall seconds, the classes Janino compiled during
-  *    it and their compile seconds (a warm pass should compile next to
-  *    nothing, see [[GraftSession]]), then one line per stage of the timed
-  *    pass (tasks, input / shuffle / spill bytes, cpu and GC seconds, call
-  *    site). The UI is disabled, so the listener stands in for its Stages
-  *    tab and attributes a key's wall time to operators.
+  *  - `stages`: an untimed warm-up pass, then one timed pass, printing
+  *    its wall seconds split into the build (`SparkEntry.queries(k)`, where
+  *    the eager checkpoint, spill and training jobs run) and the exec
+  *    ([[Bench.exec]]) phase with the Spark jobs each started, the classes
+  *    Janino compiled during it and their compile seconds (a warm pass
+  *    should compile next to nothing, see [[GraftSession]]), then one line
+  *    per stage of the timed pass (tasks, input / shuffle / spill bytes,
+  *    cpu and GC seconds, call site). The UI is disabled, so the listener
+  *    stands in for its Stages tab and attributes a key's wall time to operators.
   *  - `plan`: writes `<outDir>/<key>_<tag>.txt`, the full formatted plan (the
   *    layout of the before/after evidence under `plans/`). Building the
   *    DataFrame still runs the key's eager jobs, so the plan is the one the
@@ -70,20 +73,28 @@ object Probe {
   final case class Stage(id: Int, name: String, wall: Double, tasks: Int, input: Long,
       shufRead: Long, shufWrite: Long, spill: Long, cpu: Double, gc: Double, run: Double)
 
-  /** One key's `stages` record: the timed pass's seconds, the classes
-    * compiled during it and their compile seconds, and its stages. */
-  final case class Timed(key: String, sec: Double, compiled: Long, compileSec: Double,
-      stages: Vector[Stage])
+  /** One phase of a timed pass: its seconds and the Spark jobs it started. */
+  final case class Phase(sec: Double, jobs: Int)
+
+  /** One key's `stages` record: the timed pass's seconds, its build and
+    * exec phases, the classes compiled during it and their compile
+    * seconds, and its stages. */
+  final case class Timed(key: String, sec: Double, build: Phase, exec: Phase,
+      compiled: Long, compileSec: Double, stages: Vector[Stage])
 
   /** Spill and peak task execution memory over one key's tasks. */
   final case class Memory(memSpill: Long, diskSpill: Long, peakExec: Long)
 
-  /** The listener `stages` and `pressure` read: completed stages and
-    * task-level memory counters since the last [[reset]]. */
+  /** The listener `stages` and `pressure` read: job start times, completed
+    * stages and task-level memory counters since the last [[reset]]. */
   final class Recorder extends SparkListener {
+    private val jobStarts = mutable.ArrayBuffer.empty[Long]
     private val done = mutable.ArrayBuffer.empty[Stage]
     private var memory = Memory(0, 0, 0)
     private var events = 0L
+
+    override def onJobStart(j: SparkListenerJobStart): Unit =
+      synchronized { jobStarts += j.time; events += 1 }
 
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
@@ -105,7 +116,11 @@ object Probe {
       events += 1
     }
 
-    def reset(): Unit = synchronized { done.clear(); memory = Memory(0, 0, 0) }
+    def reset(): Unit = synchronized { jobStarts.clear(); done.clear(); memory = Memory(0, 0, 0) }
+    /** Jobs submitted in [from, until), epoch ms (the clock Spark stamps
+      * its events with). */
+    def jobsIn(from: Long, until: Long): Int =
+      synchronized(jobStarts.count(t => t >= from && t < until))
     def stages: Vector[Stage] = synchronized(done.toVector)
     def mem: Memory = synchronized(memory)
 
@@ -162,14 +177,20 @@ object Probe {
       rec.drain()
       rec.reset()
       val (n0, ns0) = compiles()
-      val (_, sec) = timed(Bench.exec(query(spark, sfDir, k)))
+      val t0 = System.currentTimeMillis()
+      val (df, buildSec) = timed(query(spark, sfDir, k))
+      val t1 = System.currentTimeMillis()
+      val (_, execSec) = timed(Bench.exec(df))
+      val t2 = System.currentTimeMillis()
       val (n1, ns1) = compiles()
       rec.drain()
       val snap = rec.stages
+      val (build, exec) = (Phase(buildSec, rec.jobsIn(t0, t1)), Phase(execSec, rec.jobsIn(t1, t2 + 1)))
       settle(spark)
-      val t = Timed(k, sec, n1 - n0, (ns1 - ns0) / 1e9, snap)
-      println(f"== $k: $sec%.2f s, ${snap.size} stages, ${t.compiled} classes compiled "
-        + f"in ${t.compileSec}%.2f s "
+      val t = Timed(k, buildSec + execSec, build, exec, n1 - n0, (ns1 - ns0) / 1e9, snap)
+      println(f"== $k: ${t.sec}%.2f s (build ${build.sec}%.2f s, ${build.jobs} jobs; "
+        + f"exec ${exec.sec}%.2f s, ${exec.jobs} jobs), ${snap.size} stages, "
+        + f"${t.compiled} classes compiled in ${t.compileSec}%.2f s "
         + f"(Σ stage wall ${snap.map(_.wall).sum}%.2f s — overlap makes this > key wall)")
       println("   wall  tasks  input_MB  shuf_r_MB  shuf_w_MB  spill_MB   cpu_s    gc_s   run_s  stage")
       snap.sortBy(-_.wall).take(40).foreach { s =>

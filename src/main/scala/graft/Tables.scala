@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Loader for the driver-provided parquet tables (TESTDATA.md).
-  *
-  * Each table is a single parquet file; `spark.read.parquet` gives a scan
-  * with full predicate-pushdown / column-pruning support, so queries built
-  * on these only read the columns and row groups they touch.
+/** Loader for the corpus tables: `<dir>/<name>.parquet`, a single parquet
+  * file in the driver-provided corpora (TESTDATA.md) and a multi-part
+  * directory in [[graft.sources.ScaleGen]]'s. The schema comes from the
+  * table's first footer, read on the driver by
+  * [[graft.sources.ParquetFormat.read]] — no inference job per table. The
+  * scan keeps full predicate-pushdown / column-pruning support, so queries
+  * built on these only read the columns and row groups they touch.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -14,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.ParquetFormat.read(spark, s"$dir/$name.parquet")
     // TIMESTAMP(NANOS) columns arrive as long (see GraftSession nanosAsLong);
     // integer-divide to micros — same truncation DuckDB applies on its
     // nanos→micros casts, so derived values stay oracle-comparable. Cast to

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetFormat
+
 /** Connected components over an edge list — the dedup-clustering step that
   * turns near-duplicate PAIRS (MinHash/SimHash/Jaccard output) into
   * duplicate GROUPS, so a pipeline can keep one canonical document per
@@ -27,10 +29,14 @@ import org.apache.spark.sql.functions._
   *    executor work;
   *  - zero cached blocks are ever held (asserted in ComponentsSpec) — the
   *    operator leaves only its final parquet labeling behind;
-  *  - the convergence probe is FUSED into each round's spill job: an
+  *  - the convergence probe is FUSED into each round's spill: an
   *    `observe()` metric counts changed labels while the parquet write
-  *    runs, so each round is exactly ONE Spark job — no second read-back
-  *    pass over the freshly written generation.
+  *    runs, so each round is ONE SQL execution — no second read-back pass
+  *    over the freshly written generation. (Under AQE that execution's
+  *    query stages still run as separate Spark jobs, 5 per round in a
+  *    traced `dedup_components`.) A spill reads back with the schema it
+  *    was written with, and the converged generation is published as
+  *    `components` by a rename, so neither costs a job.
   */
 object Components {
 
@@ -75,15 +81,13 @@ object Components {
     val scratch = scratchDir.getOrElse(defaultScratch(spark))
     def spill(df: DataFrame, name: String): DataFrame = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$scratch/$name")
-      spark.read.parquet(s"$scratch/$name")
+      ParquetFormat.read(spark, s"$scratch/$name", df.schema)
     }
-    // Path-based delete (not java.net.URI): scratch dirs with spaces or
+    // Path-based (not java.net.URI): scratch dirs with spaces or
     // URI-reserved characters are valid filesystem paths, and the Path's
     // own getFileSystem resolves the same way the writer above did.
-    def drop(name: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(s"$scratch/$name")
-      p.getFileSystem(hadoopConf).delete(p, true)
-    }
+    def path(name: String) = new org.apache.hadoop.fs.Path(s"$scratch/$name")
+    def drop(name: String): Unit = path(name).getFileSystem(hadoopConf).delete(path(name), true)
 
     // The (possibly expensive) edge plan — LSH bucket joins, cosine
     // verification — executes exactly ONCE, into the edge spill; the
@@ -152,7 +156,16 @@ object Components {
         throw new IllegalStateException(
           s"connectedComponents did not converge within $maxIterations iterations; " +
             "graph diameter exceeds the cap — raise maxIterations")
-      spill(labels.select("id", "component"), "components")
+      // The converged generation IS the result: publish its files by one
+      // rename instead of re-spilling them. A rename onto an existing
+      // directory would nest the generation inside it, so an earlier
+      // call's `components` goes first.
+      drop("components")
+      val last = path(s"gen_${i - 1}")
+      require(last.getFileSystem(hadoopConf).rename(last, path("components")),
+        s"failed to publish $last as ${path("components")}")
+      ParquetFormat.read(spark, path("components").toString, labels.schema)
+        .select("id", "component")
     } finally {
       // Success or throw, the intermediate spills never outlive the call:
       // only <scratch>/components (the returned frame's files) remains.

@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
   * nests all i−1 prior round plans — the geometric lineage that hung the
   * driver in the round-4 dedup_semantic incident (PERF.md). The states are
   * small (centroids, node masses, a frontier, the BPE vocabulary), so the
-  * cut is one job per round, and it cannot change a value.
+  * cut is one SQL execution per round (under AQE its query stages run as
+  * separate Spark jobs), and it cannot change a value.
   *
   * [[Components]] keeps its own loop: it is bounded by convergence, not by
   * a round count, and its parquet spill carries the fused convergence probe

@@ -123,11 +123,18 @@ object KMeans {
     * Init is "the k rows with id ∈ [0, k)" per group. An id space that is
     * sparse or offset there would SILENTLY under-seed the codebook and
     * every assignment downstream would look like "no neighbors", so every
-    * group must seed exactly k centroids (one small aggregate, one job). */
-  private def lloyd(q: DataFrame, keys: Seq[String], k: Int, iterations: Int,
+    * group must seed exactly k centroids (one small aggregate, one job).
+    *
+    * The quantized corpus `q` is loop-invariant, so it is materialized
+    * once (one `localCheckpoint`) and the seed check and every round read
+    * that, instead of each re-scanning (and re-shuffling) the source —
+    * MLlib's KMeans persists its input for the same reason. It cannot move
+    * a value: the rows are the same and the sums exact. */
+  private def lloyd(input: DataFrame, keys: Seq[String], k: Int, iterations: Int,
       caller: String): DataFrame = {
     require(k >= 1 && iterations >= 0)
     val kc = keys.map(col)
+    val q = input.localCheckpoint()
     val init = q.filter(col("id") < k)
       .select(kc :+ col("id").as("cent_id") :+ col("qv").as("cvec") :+
         lit(1L).as("n_members"): _*)

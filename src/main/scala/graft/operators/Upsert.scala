@@ -40,7 +40,7 @@ object Upsert {
     ParquetFormat.recover(spark, target, tmp, bak)
     val merged =
       if (target.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(target))
-        merge(spark.read.parquet(path), updates, keys)
+        merge(ParquetFormat.read(spark, path), updates, keys)
       else updates
     ParquetFormat.swap(merged, target, tmp, bak)
   }

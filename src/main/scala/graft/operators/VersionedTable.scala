@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
+import graft.sources.ParquetFormat
+
 /** Versioned-directory table — snapshot isolation for concurrent readers.
   *
   * [[Upsert.intoParquet]]'s in-place swap has a documented reader-visible
@@ -38,12 +40,12 @@ object VersionedTable {
 
   /** Read the newest committed version (throws if none exists). */
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/v=${currentVersion(spark, root).getOrElse(
+    ParquetFormat.read(spark, s"$root/v=${currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(s"no committed version under $root"))}")
 
   /** Read a pinned version — time travel over retained snapshots. */
   def readVersion(spark: SparkSession, root: String, version: Long): DataFrame =
-    spark.read.parquet(s"$root/v=$version")
+    ParquetFormat.read(spark, s"$root/v=$version")
 
   def currentVersion(spark: SparkSession, root: String): Option[Long] =
     committed(pathFs(spark, root), root).maxOption

@@ -2,6 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetFormat
+
 /** Appended-batch state plumbing (VERDICT r15 #4): the incremental keys
   * claim O(new)/index-size-free maintenance but were graded as single-shot
   * splits of one corpus — both sides derived in one job, so nothing proved
@@ -31,7 +33,7 @@ private[graft] object BatchState {
   def persist(s: SparkSession, name: String, df: DataFrame): DataFrame = {
     val path = s"$root/$name"
     df.write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    ParquetFormat.read(s, path)
   }
 
   /** DuckDB reader for `name`'s landed state. */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.F
 import graft.operators.SaltedJoin
+import graft.sources.ParquetFormat
 
 /** Round-2 operator pack: the families a full analytics engine needs beyond
   * the reference's own surface — as-of joins, skew-salted joins, CUBE /
@@ -344,7 +345,7 @@ object ExtendedQueries {
     val o = scd2Versions(s, dir)
     val cut = o.agg(date_sub(max($"valid_from"), 180).as("cut"))
     val w = Window.partitionBy($"o_custkey").orderBy($"valid_from".asc, $"o_orderkey".asc)
-    val standing = s.read.parquet(s"${BatchState.root}/scd2_standing")
+    val standing = ParquetFormat.read(s, s"${BatchState.root}/scd2_standing")
     val incoming = o.join(broadcast(cut), $"valid_from" >= $"cut").drop("cut")
       .withColumn("valid_to", lead($"valid_from", 1).over(w))
     val firstNew = incoming.groupBy($"o_custkey")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -129,6 +129,25 @@ object GraphQueries {
   private[graft] def rankBroadcastGate(s: SparkSession, nodes: Long): Boolean =
     nodes <= SimilarityQueries.envelope(s, "graft.maxRankBroadcastNodes", 1L << 22)
 
+  /** Node count, degree sum and maximum degree of a degree table. */
+  private[graft] final case class DegreeStats(nodes: Long, edges: Long, maxDeg: Long)
+
+  /** The checkpointed (a, deg) out-degree table of an edge list, with its
+    * [[DegreeStats]] observed while the checkpoint runs (the fused-probe
+    * pattern of [[graft.operators.Components]]) instead of by a separate
+    * aggregate job over the table. An empty edge list reads as all zeros. */
+  private[graft] def degrees(e: DataFrame): (DataFrame, DegreeStats) = {
+    val obs = Observation()
+    val deg = e.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+      .observe(obs, count(lit(1)).as("nodes"),
+        coalesce(sum(col("deg")), lit(0L)).as("edges"),
+        coalesce(max(col("deg")), lit(0L)).as("max_deg"))
+      .localCheckpoint()
+    val m = obs.get
+    (deg, DegreeStats(m("nodes").asInstanceOf[Long], m("edges").asInstanceOf[Long],
+      m("max_deg").asInstanceOf[Long]))
+  }
+
   /** One-time inputs for the rank loops: the symmetric edge list with the
     * SOURCE's out-degree attached at edge grain, plus the node-grain
     * degree table, both checkpointed. With `deg` riding every edge, a
@@ -141,13 +160,12 @@ object GraphQueries {
     * share floor((mass·85)/(100·deg)) is byte-identical to the old
     * per-node-then-ship form — same integers, and the DuckDB oracle
     * already computes it per edge. Also returns the [[rankBroadcastGate]]
-    * verdict for this graph's node count (one count over the checkpointed
-    * degree table) so every round's mass join applies the same gate. */
+    * verdict for this graph's node count ([[degrees]]' observed count) so
+    * every round's mass join applies the same gate. */
   private def edgesWithDeg(s: SparkSession, dir: String): (DataFrame, DataFrame, Boolean) = {
-    import s.implicits._
     val e = edges(s, dir)
-    val deg = e.groupBy($"a").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val bcast = rankBroadcastGate(s, deg.count())
+    val (deg, stats) = degrees(e)
+    val bcast = rankBroadcastGate(s, stats.nodes)
     val ewd = e.join(if (bcast) broadcast(deg) else deg, "a").localCheckpoint()
     (ewd, deg.withColumnRenamed("a", "node"), bcast)
   }
@@ -263,9 +281,7 @@ object GraphQueries {
     // round shape because SaltedJoin replicates the node-grain share into
     // salt shards — that shape IS the operator under demonstration).
     val e = edges(s, dir)
-    val deg = e.groupBy($"a").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val st = deg.agg(sum($"deg").as("m"), max($"deg").as("maxd")).head()
-    val (m, maxd) = (st.getLong(0), st.getLong(1))
+    val (deg, DegreeStats(_, m, maxd)) = degrees(e)
     val parts = s.conf.get("spark.sql.shuffle.partitions").toLong
     val threshold = graft.operators.SaltedJoin.capacityThreshold(m, parts)
     val useSalt = maxd > threshold

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.{F, Text}
 import graft.operators.{DedupLatest, Upsert}
+import graft.sources.ParquetFormat
 
 /** Relational operator pack — one query per operator family in SURVEY.md §2,
   * re-expressed over the driver's TPC-H-ish tables. Each query has a DuckDB
@@ -585,7 +586,7 @@ object RelationalQueries {
     * type watermarks require (UTC session: same instant). */
   private def eventsStream(s: SparkSession, dir: String): DataFrame =
     timestampedEvents(streamTable(s, dir, "events",
-      s.read.parquet(s"$dir/events.parquet").schema))
+      ParquetFormat.read(s, s"$dir/events.parquet").schema))
 
   /** `ts` of an events frame (batch or stream) as TIMESTAMP: legacy
     * nanos-as-long converts to micros, NTZ reads cast to the instant type. */
@@ -710,7 +711,7 @@ object RelationalQueries {
   private val stStreamDedup: Q = (s0, dir) => {
     val s = streamSession(s0, dir, "documents")
     import s.implicits._
-    val rawSchema = s.read.parquet(s"$dir/documents.parquet").schema
+    val rawSchema = ParquetFormat.read(s, s"$dir/documents.parquet").schema
     val agg = streamTable(s, dir, "documents", rawSchema)
       .select(Text.fingerprint($"text").as("fingerprint"), $"doc_id")
       .groupBy($"fingerprint")
@@ -772,7 +773,7 @@ object RelationalQueries {
   private val stStreamSessionOoo: Q = (s0, dir) => {
     val s = streamSession(s0, dir, "events")
     import s.implicits._
-    val withMs = timestampedEvents(s.read.parquet(s"$dir/events.parquet"))
+    val withMs = timestampedEvents(ParquetFormat.read(s, s"$dir/events.parquet"))
       .select($"ts", $"user_id", F.valueCents.as("cents"),
         expr("unix_millis(ts)").as("tms"))
     val m = withMs.agg(max($"tms")).head().getLong(0)
@@ -820,7 +821,7 @@ object RelationalQueries {
   private val stStreamEnrich: Q = (s0, dir) => {
     val s = streamSession(s0, dir, "events")
     import s.implicits._
-    val dim = s.read.parquet(s"$dir/customer.parquet")
+    val dim = ParquetFormat.read(s, s"$dir/customer.parquet")
       .select($"c_custkey".as("user_id"), $"c_mktsegment")
     val agg = graft.streaming.Streams
       .enrichWithDim(eventsStream(s, dir), dim, Seq("user_id"))
@@ -987,7 +988,7 @@ object RelationalQueries {
       $"event_id", F.valueCents.as("cents"))
     graft.streaming.Streams.upsertSink(ev, target, s"$root/ckpt",
       Seq("user_id", "event_type"), Seq("ts", "event_id"))
-    s.read.parquet(target)
+    ParquetFormat.read(s, target)
       .select($"user_id", $"event_type", $"event_id", $"cents")
       .orderBy($"user_id", $"event_type")
   }

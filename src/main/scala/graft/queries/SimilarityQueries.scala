@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
 import graft.functions.{HashSketch, Text, Vectors}
+import graft.sources.ParquetFormat
 
 /** Near-duplicate detection + similarity search — the training-data-pipeline
   * operators: n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine
@@ -870,8 +871,8 @@ object SimilarityQueries {
       .select($"doc_id", array_distinct(
         Text.shingleHashes(Text.shingleSet($"text", ShingleN))).as("hs"))
       .localCheckpoint()
-    minhashNewcomers(newHs, s.read.parquet(s"${BatchState.root}/mh_hs"),
-      s.read.parquet(s"${BatchState.root}/mh_bands"))
+    minhashNewcomers(newHs, ParquetFormat.read(s, s"${BatchState.root}/mh_hs"),
+      ParquetFormat.read(s, s"${BatchState.root}/mh_bands"))
   }
 
   private val dedupMinhashIncrementalBatch: Q = (s, dir) => {
@@ -898,7 +899,7 @@ object SimilarityQueries {
     * the index side read from persisted state. */
   private[graft] def semanticBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
     import s.implicits._
-    val existing = s.read.parquet(s"${BatchState.root}/sem_index")
+    val existing = ParquetFormat.read(s, s"${BatchState.root}/sem_index")
       .select($"dup_of", $"embedding".as("eb"), $"bucket",
         Vectors.fnorm($"embedding").as("nb"))
     semanticNewcomers(s, dir, split, lshBitsFor(split), existing)
@@ -932,8 +933,8 @@ object SimilarityQueries {
   private[graft] def ivfBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
     import s.implicits._
     import graft.operators.KMeans
-    val cents = s.read.parquet(s"${BatchState.root}/ivf_cents")
-    val occ = s.read.parquet(s"${BatchState.root}/ivf_occ")
+    val cents = ParquetFormat.read(s, s"${BatchState.root}/ivf_cents")
+    val occ = ParquetFormat.read(s, s"${BatchState.root}/ivf_occ")
     val qNew = spread(Tables(s, dir, "embeddings")).filter($"vec_id" >= split)
       .select($"vec_id".as("id"), KMeans.quantize($"embedding").as("qv"))
     val inc = KMeans.assign(qNew, cents).groupBy($"cent_id")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
 import graft.functions.{Text, Vectors}
+import graft.sources.ParquetFormat
 
 /** Text-analysis pack over the `documents` table — the training-data-pipeline
   * operators (token counting, fingerprinting, exact dedup, language ID,
@@ -352,7 +353,7 @@ object TextQueries {
     * newcomer-vs-index verdict as [[dedupParagraphIncremental]]. */
   private[graft] def paragraphBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
     import s.implicits._
-    val index = s.read.parquet(s"${BatchState.root}/para_index")
+    val index = ParquetFormat.read(s, s"${BatchState.root}/para_index")
     val incoming = Tables(s, dir, "documents").filter($"doc_id" >= split)
       .select($"doc_id", posexplode(paraArray))
       .withColumnRenamed("col", "part")

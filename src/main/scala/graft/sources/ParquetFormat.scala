@@ -1,14 +1,21 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{GraftFooterBridge, ParquetFooterReader}
 import org.apache.spark.sql.types.StructType
 
 /** Plain parquet directories: the storage of every table
   * [[graft.plans.ModelGraph.run]] lands (one directory per model, the
-  * reference's one DuckDB table per model), and the one crash-safe swap
-  * that [[replace]] and [[graft.operators.Upsert.intoParquet]] publish
-  * through.
+  * reference's one DuckDB table per model), the engine's one parquet read
+  * path ([[read]], which infers no schema with a Spark job), and the one
+  * crash-safe swap that [[replace]] and
+  * [[graft.operators.Upsert.intoParquet]] publish through.
   *
   * The swap stages the new generation in a sibling directory, moves the
   * target aside to a backup, publishes the staged copy by rename and
@@ -39,14 +46,54 @@ object ParquetFormat {
   def exists(spark: SparkSession, path: String): Boolean = {
     val target = new Path(path)
     if (!fsOf(spark, target).exists(target)) false
-    else try { spark.read.parquet(path).limit(1).count() >= 0 }
+    else try { read(spark, path).limit(1).count() >= 0 }
     catch {
       case _: org.apache.spark.sql.AnalysisException |
            _: java.io.FileNotFoundException => false
     }
   }
+
+  /** Read a parquet file or directory with the schema Spark's inference
+    * would give it, derived on the driver: `spark.read.parquet` infers it
+    * in a one-task Spark job even when it reads a single footer. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    footerSchema(spark, path).fold(spark.read.parquet(path))(read(spark, path, _))
+
+  /** The footer `ParquetUtils.inferSchema` reads with `mergeSchema` off —
+    * the first `_common_metadata`, else `_metadata`, else the first data
+    * file by path — converted by Spark's own `ParquetFileFormat.readSchema`.
+    * None leaves the read to Spark, so callers see its behaviour and its
+    * exceptions: schema merging on, no data file (a missing or empty
+    * path), a subdirectory Spark would list (partition discovery), or a
+    * footer that does not read. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    import ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE => Common, PARQUET_METADATA_FILE => Meta}
+    def listed(name: String): Boolean = // InMemoryFileIndex's name filter
+      name.startsWith(Common) || name.startsWith(Meta) ||
+        !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_"))
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) None
+    else try {
+      val target = new Path(path)
+      val fs = fsOf(spark, target)
+      val root = fs.getFileStatus(target)
+      val leaves =
+        if (root.isFile) Seq(root)
+        else fs.listStatus(target).toSeq.filter(st => listed(st.getPath.getName))
+      val files = leaves.filter(_.isFile).sortBy(_.getPath.toString)
+      def named(n: String) = files.find(_.getPath.getName == n)
+      val data = files.filterNot(f => Set(Common, Meta)(f.getPath.getName))
+      if (data.isEmpty || leaves.exists(_.isDirectory)) None
+      else {
+        val pick = named(Common).orElse(named(Meta)).getOrElse(data.head)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val footer = new Footer(pick.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(pick, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        GraftFooterBridge.readSchema(Seq(footer), spark)
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
   /** Read back a table just written from a frame of `schema`: the caller
     * states what the footers hold, so no Spark job re-infers it. */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame =

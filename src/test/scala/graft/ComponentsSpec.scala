@@ -55,6 +55,24 @@ class ComponentsSpec extends SparkSpec {
     assert(left.isEmpty, s"failed run left spills behind: $left")
   }
 
+  test("a second call into the same scratch dir replaces the labeling") {
+    import spark.implicits._
+    // the result is published by renaming the converged generation onto
+    // `components`; renaming onto an existing directory would nest it
+    // there, and the first call's labeling would survive as the result
+    val scratch = java.nio.file.Files.createTempDirectory("cc_reuse").toString
+    def run(edges: Seq[(Long, Long)]): Map[Long, Long] =
+      Components.connectedComponents(edges.toDF("src", "dst"),
+        scratchDir = Some(scratch)).as[(Long, Long)].collect().toMap
+    assert(run(Seq((1L, 2L), (2L, 3L))) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(run(Seq((5L, 6L), (7L, 8L), (8L, 9L))) ==
+      Map(5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L, 9L -> 7L))
+    val left = new java.io.File(scratch).listFiles().map(_.getName).toSet
+    assert(left == Set("components"), s"stale spills left behind: $left")
+    val nested = new java.io.File(s"$scratch/components").listFiles().filter(_.isDirectory)
+    assert(nested.isEmpty, s"components holds directories: ${nested.map(_.getName).toSeq}")
+  }
+
   test("operator releases every cached block before returning (ADVICE r3)") {
     import spark.implicits._
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -104,6 +104,17 @@ class GraphQueriesSpec extends SparkSpec {
     assert(gatedOut == plain, "shuffle-join rounds diverged from broadcast rounds")
   }
 
+  test("the degree checkpoint's observed stats equal aggregates over the table") {
+    // the rank-broadcast gate and the salting trigger read these instead
+    // of running a count / aggregate job over the checkpointed table
+    val (deg, st) = GraphQueries.degrees(GraphQueries.edges(spark, sfDir))
+    assert(st.nodes == deg.count())
+    val agg = deg.agg(sum(col("deg")), max(col("deg"))).head()
+    assert(st.edges == agg.getLong(0) && st.maxDeg == agg.getLong(1))
+    val (_, none) = GraphQueries.degrees(GraphQueries.edges(spark, sfDir).limit(0))
+    assert(none == GraphQueries.DegreeStats(0L, 0L, 0L))
+  }
+
   test("graph_triangles equals a brute-force count on the collected edge set") {
     val got = GraphQueries.queries("graph_triangles")(spark, sfDir)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_triangles")).toMap

@@ -33,6 +33,11 @@ class ProbeSpec extends SparkSpec {
     val Seq(t) = Probe.stages(spark, sfDir, Seq(key))
     assert(t.key == key && t.sec > 0)
     assert(t.stages.nonEmpty)
+    // the pass splits into the key's build and its exec, each with the
+    // jobs it started; this key builds lazily and executes in jobs
+    assert(t.sec == t.build.sec + t.exec.sec)
+    assert(t.build.jobs == 0, s"j10_star_revenue's build ran ${t.build.jobs} jobs")
+    assert(t.exec.jobs > 0 && t.exec.sec > 0)
     // the warm-up pass compiled the key's classes; the timed pass reuses them
     assert(t.compiled <= 2, s"timed pass compiled ${t.compiled} classes")
     assert(t.compileSec == 0 || t.compiled > 0)
