@@ -45,7 +45,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         colOf(children.head), intArg(children, 1), intArg(children, 2))))
     register(ext, "float_dot", "_FUNC_(a, b) - dot product of two float arrays",
       Exactly(2),
-      children => graft.functions.FloatDotProduct(children.head, children(1)))
+      children => graft.functions.DotProduct(children.head, children(1)))
     register(ext, "graft_token_count", "_FUNC_(text) - whitespace token count",
       Exactly(1),
       children => exprOf(Text.tokenCount(colOf(children.head))))

@@ -39,6 +39,17 @@ object Tables {
     } else df
   }
 
+  /** On-disk bytes of `<dir>/<name>.parquet`, one file or a directory of
+    * part files (counted recursively); 0 when the table is absent. A
+    * local-filesystem stat: a cluster deployment would size the same probe
+    * with FileSystem.getContentSummary on the warehouse FS. */
+  def bytes(dir: String, name: String): Long = {
+    def size(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
+      else f.length()
+    size(new java.io.File(s"$dir/$name.parquet"))
+  }
+
   /** Register every table as a temp view so `spark.sql` text matches the
     * DuckDB oracle SQL verbatim where we choose to share it. */
   def registerAll(spark: SparkSession, dir: String): Unit =

@@ -186,21 +186,10 @@ object EcomFixture {
     .empty[(SparkSession, String, Boolean), Map[String, DataFrame]]
 
   /** Raw parquet bytes of the 6 tables [[raw]] derives from — the input
-    * side of the landing fence. Local-filesystem stat only (this fixture
-    * is the test/bench harness; a cluster deployment would size the same
-    * probe with FileSystem.getContentSummary on the warehouse FS). */
-  private[graft] def inputBytes(dir: String): Long = {
-    import java.nio.file.{Files => F, Paths}
-    Seq("customer", "orders", "lineitem", "part", "nation", "events").map { t =>
-      val p = Paths.get(dir, t + ".parquet")
-      if (!F.exists(p)) 0L
-      else if (F.isDirectory(p)) {
-        val s = F.list(p)
-        try s.mapToLong(f => if (F.isRegularFile(f)) F.size(f) else 0L).sum
-        finally s.close()
-      } else F.size(p)
-    }.sum
-  }
+    * side of the landing fence. */
+  private[graft] def inputBytes(dir: String): Long =
+    Seq("customer", "orders", "lineitem", "part", "nation", "events")
+      .map(Tables.bytes(dir, _)).sum
 
   /** Measured landing/input byte ratios behind the fence factors (PERF
     * r17, skew corpora): the FULL medallion landing is 3.5x its raw

@@ -44,4 +44,10 @@ object F {
   /** An events row's `value` as integer cents, rounded half up — the
     * order-free exact money form the event keys sum and compare. */
   def valueCents: Column = expr("CAST(floor(value * 100 + 0.5) AS BIGINT)")
+
+  /** A money column as integer cents, `CAST(round(c * 100) AS BIGINT)`,
+    * the form the keys' oracles spell. Kept apart from [[valueCents]]:
+    * `floor(x * 100 + 0.5)` rounds the sum in double arithmetic first, so
+    * the two can differ by a cent, and each key's oracle fixes its form. */
+  def cents(c: Column): Column = round(c * 100).cast("bigint")
 }

@@ -107,11 +107,14 @@ object MediaHeader {
       return row("gif", le16(b, 6), le16(b, 8))
     // WAV: RIFF/WAVE container; the first "fmt " chunk carries channels
     // at +2, sample rate at +4 and bits at +14 of its payload (all LE).
+    // Fields are read only when that chunk's declared size is in bounds
+    // and covers them (>= 16) — the rule Multimodal's WAV parse applies,
+    // so the two surfaces agree on which containers have a format.
     if (isRiff(b, "WAVE")) {
       var hdr: InternalRow = null
-      riffChunks(b, 12, b.length) { (at, _) =>
+      riffChunks(b, 12, b.length) { (at, size) =>
         if (hdr == null && fourCC(b, at, "fmt "))
-          hdr = if (at + 8 + 16 <= b.length)
+          hdr = if (size >= 16)
             row("wav", rate = le32(b, at + 12), channels = le16(b, at + 10),
               bits = le16(b, at + 22))
           else row("wav")

@@ -6,72 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Fused dot product over two `array<float>` columns as a native Catalyst
-  * expression with whole-stage codegen.
+/** Fused dot product of two `array<float>`, `array<bigint>` or
+  * `array<double>` columns as a native Catalyst expression with
+  * whole-stage codegen. The element type is read from the left child
+  * (any other element type is cast to double); the right child is cast
+  * to match.
   *
-  * The composable form — `aggregate(zip_with(cast, cast, *), 0.0, +)` —
-  * allocates a casted copy of each vector plus a zipped array per row pair;
-  * in an ANN cross/bucket join that's three array allocations per candidate
-  * pair. This expression reads both `ArrayData` buffers in one loop with no
-  * allocation, while computing the IDENTICAL float→double widening and
-  * left-to-right summation (so results stay bit-equal to the HOF form and
-  * the DuckDB oracle).
-  *
-  * Null array elements are treated as 0 contribution (embeddings never
-  * contain them); a null array yields null via BinaryExpression semantics.
-  */
-case class FloatDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[ArrayType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "float_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i))
-        s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): FloatDotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[FloatDotProduct]]'s twin over two `array<bigint>` columns (r17) — the
-  * KMeans-quantized vector family's dot product. The composable form
-  * (`aggregate(zip_with(cast, cast, *), 0.0, +)`) is a HigherOrderFunction
-  * chain that falls back to interpreted evaluation (CodegenFallback) and
-  * allocates per row pair; in the k-means assign / ADC / pair-verify paths
-  * that is the per-candidate hot loop. Identical long→double widening and
-  * left-to-right summation, so every double is bit-equal to the HOF form
-  * and the DuckDB oracle's list-comprehension fold.
+  * The composable form — `aggregate(zip_with(cast, cast, *), 0.0, +)` — is
+  * a HigherOrderFunction chain that falls back to interpreted evaluation
+  * (CodegenFallback) and allocates a casted copy of each vector plus a
+  * zipped array per row pair; in an ANN cross/bucket join, the k-means
+  * assign/ADC score and every full-scan truth side, that is the
+  * per-candidate hot loop. This expression reads both `ArrayData` buffers
+  * in one loop with no allocation, with the IDENTICAL widening to double
+  * and left-to-right summation, so every result is bit-equal to the HOF
+  * form and the DuckDB oracle's list-comprehension fold.
   *
   * NULL/ragged-input caveat (bit-equality's precondition, not its scope):
   * the HOF form returns NULL when the arrays' lengths differ (`zip_with`
@@ -80,14 +29,35 @@ case class FloatDotProduct(left: Expression, right: Expression)
   * partial sum. On this repo's data the cases are unreachable (vectors are
   * fixed-dimension with non-null elements; the oracle hash compare
   * certifies it), but a caller feeding ragged or null-holed arrays would
-  * mask an upstream bug that the HOF form surfaced as NULL. */
-case class LongDotProduct(left: Expression, right: Expression)
+  * mask an upstream bug that the HOF form surfaced as NULL. A null array
+  * yields null via BinaryExpression semantics.
+  */
+case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
+  // an unresolved child has no type yet; the analyzer copies this
+  // expression when it resolves the children, so the copy reads it afresh
+  @transient private lazy val elementType: DataType =
+    if (!left.resolved) DoubleType
+    else left.dataType match {
+      case ArrayType(t @ (FloatType | LongType), _) => t
+      case _ => DoubleType
+    }
+
   override def inputTypes: Seq[ArrayType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
+    Seq(ArrayType(elementType), ArrayType(elementType))
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "long_dot"
+  override def prettyName: String = elementType match {
+    case FloatType => "float_dot"
+    case LongType => "long_dot"
+    case _ => "double_dot"
+  }
+
+  @transient private lazy val at: (ArrayData, Int) => Double = elementType match {
+    case FloatType => (v, i) => v.getFloat(i).toDouble
+    case LongType => (v, i) => v.getLong(i).toDouble
+    case _ => (v, i) => v.getDouble(i)
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -97,13 +67,18 @@ case class LongDotProduct(left: Expression, right: Expression)
     var i = 0
     while (i < n) {
       if (!x.isNullAt(i) && !y.isNullAt(i))
-        s += x.getLong(i).toDouble * y.getLong(i).toDouble
+        s += at(x, i) * at(y, i)
       i += 1
     }
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val (widen, get) = elementType match {
+      case FloatType => ("(double) ", "getFloat")
+      case LongType => ("(double) ", "getLong")
+      case _ => ("", "getDouble")
+    }
     nullSafeCodeGen(ctx, ev, (x, y) => {
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
@@ -113,82 +88,22 @@ case class LongDotProduct(left: Expression, right: Expression)
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += (double) $x.getLong($i) * (double) $y.getLong($i);
+         |    $s += $widen$x.$get($i) * $widen$y.$get($i);
          |  }
          |}
          |${ev.value} = $s;
          |""".stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongDotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[FloatDotProduct]] over two `array<double>` columns (r17) — the codegen
-  * body behind [[Vectors.dot]]'s general form. Same left-to-right
-  * summation; a no-op cast upstream normalizes float inputs, preserving
-  * the old `cast → zip_with → aggregate` widening exactly.
-  * Same NULL/ragged-input caveat as [[LongDotProduct]]: length mismatch
-  * truncates and NULL elements are skipped (partial sum) where the HOF
-  * form returned NULL — unreachable on fixed-dim, non-null vectors. */
-case class DoubleDotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[ArrayType] =
-    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "double_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i))
-        s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $s += $x.getDouble($i) * $y.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
-    })
-
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DoubleDotProduct =
+      newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
 }
 
 object VecExpr {
-  /** Column face of [[FloatDotProduct]]. */
-  def fdot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(FloatDotProduct(
-      org.apache.spark.sql.GraftExprBridge.expression(a), org.apache.spark.sql.GraftExprBridge.expression(b)))
-
-  /** Column face of [[LongDotProduct]]. */
-  def ldot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(LongDotProduct(
-      org.apache.spark.sql.GraftExprBridge.expression(a), org.apache.spark.sql.GraftExprBridge.expression(b)))
-
-  /** Column face of [[DoubleDotProduct]]. */
-  def ddot(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(DoubleDotProduct(
+  /** Column face of [[DotProduct]]. */
+  def dot(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftExprBridge.column(DotProduct(
       org.apache.spark.sql.GraftExprBridge.expression(a), org.apache.spark.sql.GraftExprBridge.expression(b)))
 }

@@ -15,24 +15,19 @@ object Vectors {
 
   private def d(c: Column): Column = c.cast("array<double>")
 
-  def dot(a: Column, b: Column): Column =
-    // codegen'd since r17 (VecExpr.ddot): the HOF chain
-    // aggregate(zip_with(...)) is CodegenFallback — interpreted per
-    // candidate pair in every full-scan truth side. The double-typed
-    // cast is a no-op for array<double> inputs and reproduces the old
-    // element widening for array<float>; summation order is unchanged,
-    // so every emitted double is bit-identical.
-    VecExpr.ddot(d(a), d(b))
+  /** The general dot ([[DotProduct]] over `array<double>`): the cast is a
+    * no-op for array<double> inputs and widens array<float> elements
+    * exactly as the old `cast → zip_with → aggregate` form did. */
+  def dot(a: Column, b: Column): Column = VecExpr.dot(d(a), d(b))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Fused float-array dot product — custom codegen'd Catalyst expression
-    * ([[FloatDotProduct]]): no intermediate arrays, bit-identical result to
-    * [[dot]] (same widening + summation order). The hot-path form for
-    * pairwise similarity joins. */
-  def fdot(a: Column, b: Column): Column = VecExpr.fdot(a, b)
+  /** Float-array dot product without the double cast ([[DotProduct]]
+    * over `array<float>`): bit-identical result to [[dot]] (same widening
+    * + summation order). The hot-path form for pairwise similarity joins. */
+  def fdot(a: Column, b: Column): Column = VecExpr.dot(a, b)
 
   def fnorm(a: Column): Column = sqrt(fdot(a, a))
 

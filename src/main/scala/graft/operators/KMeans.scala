@@ -36,15 +36,11 @@ object KMeans {
   def quantize(vec: Column): Column =
     transform(vec, x => round(x.cast("double") * Scale).cast("bigint"))
 
-  /** Sequential-fold double dot product of two array<bigint> columns —
-    * the SAME left-to-right order as the oracle's list comprehension, so
-    * both engines produce bit-identical doubles. A native codegen
-    * expression since r17 ([[graft.functions.VecExpr.ldot]]): the old
-    * `aggregate(zip_with(...))` form is a CodegenFallback chain evaluated
-    * interpreted per candidate row — the assign/score hot loop of every
-    * k-means-backed key. Same widening, same summation order, bit-equal
-    * doubles. */
-  def idot(a: Column, b: Column): Column = graft.functions.VecExpr.ldot(a, b)
+  /** Sequential-fold double dot product of two array<bigint> columns
+    * ([[graft.functions.DotProduct]]) — the SAME left-to-right order as
+    * the oracle's list comprehension, so both engines produce
+    * bit-identical doubles. */
+  def idot(a: Column, b: Column): Column = graft.functions.VecExpr.dot(a, b)
 
   private def inorm(a: Column): Column = sqrt(idot(a, a))
 

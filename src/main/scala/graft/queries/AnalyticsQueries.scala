@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -60,7 +61,6 @@ object AnalyticsQueries {
     * shows as a straggling task. */
   private val qaKeySkew: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val b = Tables(s, dir, "lineitem")
       .select(pmod(graft.functions.Vectors.hash60(
         concat(lit("skew_"), $"l_suppkey".cast("string"))), lit(32)).as("bucket"))
@@ -95,6 +95,17 @@ object AnalyticsQueries {
         && col("x.l_partkey") < col("y.l_partkey"))
       .select(col("x.l_partkey").as("part_a"), col("y.l_partkey").as("part_b"))
 
+  /** The top-20 of `pairs` (part_a, part_b, support) by support, full
+    * deterministic tiebreak, each part's own order count from `single`
+    * (l_partkey, n_orders) riding along as orders_a / orders_b. */
+  private def top20WithSupports(pairs: DataFrame, single: DataFrame): DataFrame =
+    pairs
+      .join(single.select(col("l_partkey").as("part_a"), col("n_orders").as("orders_a")), "part_a")
+      .join(single.select(col("l_partkey").as("part_b"), col("n_orders").as("orders_b")), "part_b")
+      .orderBy(col("support").desc, col("part_a"), col("part_b"))
+      .limit(20)
+      .select(col("part_a"), col("part_b"), col("support"), col("orders_a"), col("orders_b"))
+
   /** Market-basket co-occurrence — the top-20 part pairs bought together
     * in one order, with each part's own support riding along (the inputs
     * to confidence/lift, kept as EXACT counts; the consumer divides).
@@ -111,12 +122,7 @@ object AnalyticsQueries {
     val pairs = orderPairs(li)
       .groupBy($"part_a", $"part_b").agg(count(lit(1)).as("support"))
     val single = li.groupBy($"l_partkey").agg(count(lit(1)).as("n_orders"))
-    pairs
-      .join(single.select($"l_partkey".as("part_a"), $"n_orders".as("orders_a")), "part_a")
-      .join(single.select($"l_partkey".as("part_b"), $"n_orders".as("orders_b")), "part_b")
-      .orderBy($"support".desc, $"part_a", $"part_b")
-      .limit(20)
-      .select($"part_a", $"part_b", $"support", $"orders_a", $"orders_b")
+    top20WithSupports(pairs, single)
   }
 
   /** Misra–Gries capacity for [[anBasketPairsTopk]]. The sketch state is
@@ -243,15 +249,10 @@ object AnalyticsQueries {
         .localCheckpoint()) // eager; part-catalog grain
     if (shared.isEmpty)
       li.unpersist() // every li consumer is materialized above
-    val result = recount
+    val result = top20WithSupports(recount
       .crossJoin(broadcast(summary.select($"n_pairs")))
       .filter($"support" * lit((k + 1).toLong) > $"n_pairs")
-      .drop("n_pairs")
-      .join(single.select($"l_partkey".as("part_a"), $"n_orders".as("orders_a")), "part_a")
-      .join(single.select($"l_partkey".as("part_b"), $"n_orders".as("orders_b")), "part_b")
-      .orderBy($"support".desc, $"part_a", $"part_b")
-      .limit(20)
-      .select($"part_a", $"part_b", $"support", $"orders_a", $"orders_b")
+      .drop("n_pairs"), single)
     (result, nPairs, law)
   }
 
@@ -379,7 +380,6 @@ object AnalyticsQueries {
     * 2-row aggregate — same oracle, same hash. */
   private val anAttribution: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val W = 7L * 86400000000L
     val ev = Tables(s, dir, "events")
       .select($"user_id", $"event_id", $"event_type",
@@ -430,9 +430,7 @@ object AnalyticsQueries {
     * an_pareto's. */
   private val anStickiness: Q = (s, dir) => {
     import s.implicits._
-    val ud = Tables(s, dir, "events")
-      .select($"user_id", $"ts".cast("date").as("day"))
-      .distinct()
+    val ud = userDays(s, dir)
     val dau = ud.groupBy($"day").agg(count(lit(1)).as("dau"))
       .groupBy(date_trunc("month", $"day").cast("date").as("mo"))
       .agg(sum($"dau").as("sum_dau"), count(lit(1)).as("n_days"))
@@ -446,6 +444,27 @@ object AnalyticsQueries {
       .orderBy($"mo")
   }
 
+  /** Per-customer order summary (o_custkey, `leading`..., cents = lifetime
+    * spend in integer cents): one hash aggregate collapses the fact table
+    * to customer grain, so the ranks and ntiles that follow sort the
+    * customer SUMMARY — 4-5 orders of magnitude smaller than the orders
+    * it summarizes — never the fact table. */
+  private def customerCents(s: SparkSession, dir: String, leading: Column*): DataFrame = {
+    val aggs = leading :+ sum(F.cents(col("o_totalprice"))).as("cents")
+    Tables(s, dir, "orders").groupBy(col("o_custkey")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** The RFM summary: (o_custkey, last_dt, freq, cents). */
+  private def customerRfm(s: SparkSession, dir: String): DataFrame =
+    customerCents(s, dir, max(col("o_orderdate")).as("last_dt"), count(lit(1)).as("freq"))
+
+  /** The distinct (user_id, day) pairs of the events: each user's active
+    * days. */
+  private def userDays(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "events")
+      .select(col("user_id"), col("ts").cast("date").as("day"))
+      .distinct()
+
   /** Gini coefficient of customer spend — [[anPareto]]'s single-number
     * summary, exact: with spend ranked ascending (ties broken by
     * custkey), G = Σᵢ(2i−n−1)·xᵢ / (n·Σx). Both numerator and
@@ -455,10 +474,7 @@ object AnalyticsQueries {
     * counting-histogram escape hatch an_rfm documents. */
   private val anGini: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val per = Tables(s, dir, "orders")
-      .groupBy($"o_custkey")
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
+    val per = customerCents(s, dir)
     val w = Window.orderBy($"cents".asc, $"o_custkey".asc)
     per
       .withColumn("i", row_number().over(w).cast("long"))
@@ -480,9 +496,7 @@ object AnalyticsQueries {
     * users, spec-pinned. */
   private val anNewVsReturning: Q = (s, dir) => {
     import s.implicits._
-    val ud = Tables(s, dir, "events")
-      .select($"user_id", $"ts".cast("date").as("day"))
-      .distinct()
+    val ud = userDays(s, dir)
     val first = ud.groupBy($"user_id").agg(min($"day").as("first_day"))
     ud.join(first, "user_id")
       .groupBy($"day")
@@ -556,17 +570,13 @@ object AnalyticsQueries {
 
   /** Revenue-concentration deciles (the Pareto/ABC curve): customers
     * ranked by lifetime spend, cut into 10 equal-count buckets, each
-    * bucket's share of total revenue as a floor-ppm integer. Same
-    * customer-grain-collapse-then-rank shape as [[anRfm]] (the ntile
-    * sorts the customer SUMMARY, never the fact table; at dimension-scale
-    * the counting-histogram rank replaces it). The running share is
-    * cumulative over ONLY 10 rows. */
+    * bucket's share of total revenue as a floor-ppm integer. The ntile
+    * sorts [[customerCents]] (at dimension scale the counting-histogram
+    * rank replaces it); the running share is cumulative over ONLY 10
+    * rows. */
   private val anPareto: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val per = Tables(s, dir, "orders")
-      .groupBy($"o_custkey")
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
+    val per = customerCents(s, dir)
     val wRank = Window.orderBy($"cents".desc, $"o_custkey")
     val wCum = Window.orderBy($"decile")
     per
@@ -592,11 +602,10 @@ object AnalyticsQueries {
     * calendar arithmetic (months_between on truncated months is whole). */
   private val anCohortLtv: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val cm = Tables(s, dir, "orders")
       .groupBy($"o_custkey",
         date_trunc("month", $"o_orderdate".cast("date")).cast("date").as("mo"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
+      .agg(sum(F.cents($"o_totalprice")).as("cents"))
     val cohort = cm.groupBy($"o_custkey").agg(min($"mo").as("cohort_mo"))
     val wCum = Window.partitionBy($"cohort_mo").orderBy($"month_offset")
     cm.join(cohort, "o_custkey")
@@ -620,7 +629,6 @@ object AnalyticsQueries {
     * mean), never a float average. */
   private val anFunnel: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id")
     val staged = Tables(s, dir, "events")
       .select($"user_id", $"event_type", $"ts".cast("timestamp").as("ts"))
@@ -677,7 +685,6 @@ object AnalyticsQueries {
     * construction, spec-pinned. */
   private val anMarkov: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val wf = Window.partitionBy($"from_type")
     Tables(s, dir, "events")
@@ -702,7 +709,6 @@ object AnalyticsQueries {
     * table, so the "window" costs nothing at any corpus size. */
   private val aMode: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"o_orderstatus")
       .orderBy($"cnt".desc, $"o_orderpriority".asc)
     Tables(s, dir, "orders")
@@ -716,30 +722,27 @@ object AnalyticsQueries {
   }
 
   /** RFM segmentation — recency/frequency/monetary quartiles per customer,
-    * the classic CRM mart. Facts collapse to customer grain first (one hash
-    * aggregate; money as integer cents), then each dimension gets an
+    * the classic CRM mart. Each dimension of [[customerRfm]] gets an
     * ntile(4) with a FULL deterministic order (metric, custkey) so bucket
-    * edges are rerun- and engine-stable. The ntiles sort the CUSTOMER
-    * summary, not the fact table — 4-5 orders of magnitude smaller than the
-    * orders it summarizes; for a fact-scale dimension [[anRfmHist]] is the
-    * shipped counting-histogram path (hash-identical output, no global
-    * range-sort). Output is the 64-cell segment matrix. */
+    * edges are rerun- and engine-stable; for a fact-scale dimension
+    * [[anRfmHist]] is the shipped counting-histogram path (hash-identical
+    * output, no global range-sort). */
   private val anRfm: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val per = Tables(s, dir, "orders")
-      .groupBy($"o_custkey")
-      .agg(max($"o_orderdate").as("last_dt"),
-        count(lit(1)).as("freq"),
-        sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
+    val per = customerRfm(s, dir)
     per
       .withColumn("r_q", ntile(4).over(Window.orderBy($"last_dt".desc, $"o_custkey")))
       .withColumn("f_q", ntile(4).over(Window.orderBy($"freq".desc, $"o_custkey")))
       .withColumn("m_q", ntile(4).over(Window.orderBy($"cents".desc, $"o_custkey")))
-      .groupBy($"r_q", $"f_q", $"m_q")
-      .agg(count(lit(1)).as("n_customers"), sum($"cents").as("sum_cents"))
-      .orderBy($"r_q", $"f_q", $"m_q")
+      .transform(rfmMatrix)
   }
+
+  /** The 64-cell RFM segment matrix: customers and spend per (r_q, f_q,
+    * m_q) quartile triple. */
+  private def rfmMatrix(quartiles: DataFrame): DataFrame =
+    quartiles.groupBy(col("r_q"), col("f_q"), col("m_q"))
+      .agg(count(lit(1)).as("n_customers"), sum(col("cents")).as("sum_cents"))
+      .orderBy(col("r_q"), col("f_q"), col("m_q"))
 
   /** Exact ntile(4) over ascending (v, ck) WITHOUT a global range-sort —
     * the counting-sort rank construction a_median_hist /
@@ -771,7 +774,6 @@ object AnalyticsQueries {
     * n-row chains — same shape, one third the stages. `n` is the row
     * count PER dim (every dim ranks the same population). */
   private def histNtile4(d: DataFrame, n: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Degenerate corpus (< 4 rows per dim): the blocked-rank machinery is
     // pointless and its n%4 bucket formula needs n >= 4 — fall back to the
     // plain ntile window (bit-identical semantics, and at this n the
@@ -825,11 +827,7 @@ object AnalyticsQueries {
     * plan-asserted, same contract as train_curriculum_order. */
   private val anRfmHist: Q = (s, dir) => {
     import s.implicits._
-    val per = Tables(s, dir, "orders")
-      .groupBy($"o_custkey")
-      .agg(max($"o_orderdate").as("last_dt"),
-        count(lit(1)).as("freq"),
-        sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
+    val per = customerRfm(s, dir)
       // eager localCheckpoint, not persist: the customer summary is
       // scanned by count(), the dims explode, AND the final join, but a
       // persist() here would linger in executor memory for the rest of
@@ -852,9 +850,7 @@ object AnalyticsQueries {
         max(when($"dim" === "f", $"q")).as("f_q"),
         max(when($"dim" === "m", $"q")).as("m_q"))
     per.join(wide, "o_custkey")
-      .groupBy($"r_q", $"f_q", $"m_q")
-      .agg(count(lit(1)).as("n_customers"), sum($"cents").as("sum_cents"))
-      .orderBy($"r_q", $"f_q", $"m_q")
+      .transform(rfmMatrix)
   }
 
   /** Volume-anomaly monitor — the row-count gate next to qa_drift_psi
@@ -869,7 +865,6 @@ object AnalyticsQueries {
     * rather than a fabricated verdict. */
   private val qaVolumeAnomaly: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables(s, dir, "events")
       .groupBy($"ts".cast("date").as("day"))
       .agg(count(lit(1)).as("n_events"))
@@ -999,10 +994,9 @@ object AnalyticsQueries {
     * 400 to read dollars). */
   private val pPercentileHist: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val hist = Tables(s, dir, "orders")
       .select($"o_orderstatus",
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("v"))
+        F.cents($"o_totalprice").as("v"))
       .groupBy($"o_orderstatus", $"v")
       .agg(count(lit(1)).as("c"))
     val hb = hist.withColumn("blk", expr(s"v div ${1L << 20}"))
@@ -1118,25 +1112,12 @@ object AnalyticsQueries {
     * shape a native HLL aggregate executes, at any scale. */
   private val aHllExact: Q = (s, dir) => {
     import s.implicits._
-    val m = 1024
-    Tables(s, dir, "orders")
-      .select(graft.functions.Vectors.hash60(
-        concat(lit("hll_"), $"o_custkey".cast("string"))).as("hv"))
-      .select(pmod($"hv", lit(m.toLong)).as("bucket"), expr(s"hv div $m").as("rem"))
-      .groupBy($"bucket")
-      .agg(max(when($"rem" === 0, 50)
-        .otherwise(least(lit(51) - length(bin($"rem")), lit(50)))).as("rho"))
-      .agg(count(lit(1)).as("m_used"),
-        sum(expr("shiftleft(cast(1 as bigint), cast(50 - rho as int))")).as("reg_sum"))
+    val m = HllM
+    hllFold(hllRegisters(s, dir))
       .select($"m_used", $"reg_sum",
         round(lit(AlphaM2) / (((lit(m.toLong) - $"m_used").cast("double") * Pow250
           + $"reg_sum".cast("double")) / Pow250), 4).as("est_raw"),
-        // guarded: all m buckets occupied -> ln(m/0) = Infinity, which
-        // DuckDB renders engine-dependently (ADVICE r3); linear counting
-        // doesn't apply there anyway, so emit NULL on both engines
-        when($"m_used" < m,
-          round(lit(m.toDouble) * log(lit(m.toDouble) / (lit(m.toLong) - $"m_used")
-            .cast("double")), 4)).as("est_linear"))
+        hllLinear)
       .withColumn("estimate",
         when($"est_raw" <= 2.5 * m && $"m_used" < m, $"est_linear")
           .otherwise($"est_raw"))
@@ -1153,26 +1134,43 @@ object AnalyticsQueries {
     * max — no raw keys ever cross the network. */
   private val aHllMerge: Q = (s, dir) => {
     import s.implicits._
-    val m = 1024
-    val regs = Tables(s, dir, "orders")
-      .select($"o_orderstatus", graft.functions.Vectors.hash60(
-        concat(lit("hll_"), $"o_custkey".cast("string"))).as("hv"))
-      .select($"o_orderstatus",
-        pmod($"hv", lit(m.toLong)).as("bucket"), expr(s"hv div $m").as("rem"))
-      .groupBy($"o_orderstatus", $"bucket")
-      .agg(max(when($"rem" === 0, 50)
-        .otherwise(least(lit(51) - length(bin($"rem")), lit(50)))).as("rho"))
-    val merged = regs.groupBy($"bucket").agg(max($"rho").as("rho"))
-      .agg(count(lit(1)).as("m_used"),
-        sum(expr("shiftleft(cast(1 as bigint), cast(50 - rho as int))")).as("reg_sum"))
+    val regs = hllRegisters(s, dir, $"o_orderstatus")
+    val merged = hllFold(regs.groupBy($"bucket").agg(max($"rho").as("rho")))
     val nGroups = regs.select($"o_orderstatus").distinct()
       .agg(count(lit(1)).as("n_groups"))
     merged.crossJoin(broadcast(nGroups))
-      .select($"n_groups", $"m_used", $"reg_sum",
-        when($"m_used" < m, // see aHllExact: saturated registers -> NULL
-          round(lit(m.toDouble) * log(lit(m.toDouble) / (lit(m.toLong) - $"m_used")
-            .cast("double")), 4)).as("est_linear"))
+      .select($"n_groups", $"m_used", $"reg_sum", hllLinear)
   }
+
+  /** HLL register count m: the low 10 hash bits pick the bucket. */
+  private val HllM = 1024
+
+  /** HLL registers of the orders' customer keys per (`by`..., bucket):
+    * `rho` is the max of 51 − the bit length of the 50 hash bits above
+    * the bucket (50 when they are all zero). */
+  private def hllRegisters(s: SparkSession, dir: String, by: Column*): DataFrame =
+    Tables(s, dir, "orders")
+      .select(by :+ graft.functions.Vectors.hash60(
+        concat(lit("hll_"), col("o_custkey").cast("string"))).as("hv"): _*)
+      .select(by :+ pmod(col("hv"), lit(HllM.toLong)).as("bucket") :+
+        expr(s"hv div $HllM").as("rem"): _*)
+      .groupBy(by :+ col("bucket"): _*)
+      .agg(max(when(col("rem") === 0, 50)
+        .otherwise(least(lit(51) - length(bin(col("rem"))), lit(50)))).as("rho"))
+
+  /** Fold one register per bucket into (m_used, reg_sum), the register
+    * sum as exact 2^(50-rho) integers. */
+  private def hllFold(regs: DataFrame): DataFrame =
+    regs.agg(count(lit(1)).as("m_used"),
+      sum(expr("shiftleft(cast(1 as bigint), cast(50 - rho as int))")).as("reg_sum"))
+
+  /** Small-range linear counting m·ln(m / (m − m_used)), NULL when every
+    * register is occupied: ln(m/0) = Infinity renders engine-dependently
+    * in DuckDB, and linear counting does not apply there anyway. */
+  private def hllLinear: Column =
+    when(col("m_used") < HllM,
+      round(lit(HllM.toDouble) * log(lit(HllM.toDouble) / (lit(HllM.toLong) - col("m_used"))
+        .cast("double")), 4)).as("est_linear")
 
   /** 0.7213/(1+1.079/m)·m² for m=1024 (Flajolet et al.'s alpha), computed
     * once and inlined as the SAME double literal into the oracle SQL. */

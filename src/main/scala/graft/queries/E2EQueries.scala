@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.F
 import graft.operators.Ingest
 import graft.sources.{DataGen, ParquetFormat, Sources}
 
@@ -310,7 +311,7 @@ object E2EQueries {
       $"c_custkey", $"c_name", $"c_nationkey", $"c_mktsegment")
     val ordRepr = concat_ws("|",
       $"o_orderkey", $"o_custkey", $"o_orderstatus",
-      expr("CAST(round(o_totalprice * 100) AS BIGINT)"),
+      F.cents($"o_totalprice"),
       $"o_orderdate".cast("date"), $"o_orderpriority")
     fp("customer", custRepr).unionByName(fp("orders", ordRepr))
       .orderBy($"table_name")

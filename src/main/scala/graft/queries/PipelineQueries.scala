@@ -125,8 +125,8 @@ object PipelineQueries {
     // fuse, so per-op IEEE equality is forced on any engine. The n²-
     // scale cents statistics stay below 10³⁸ through ~sf 10⁵ (≈100 TB;
     // the largest, sy·sxx ≈ 6·10³⁷ in cents³, is the documented bound).
-    val xc = expr("CAST(round(l_quantity * 100) AS BIGINT)").cast("decimal(19,0)")
-    val yc = expr("CAST(round(l_extendedprice * 100) AS BIGINT)").cast("decimal(19,0)")
+    val xc = F.cents($"l_quantity").cast("decimal(19,0)")
+    val yc = F.cents($"l_extendedprice").cast("decimal(19,0)")
     Tables(s, dir, "lineitem")
       .groupBy($"l_returnflag")
       .agg(
@@ -207,7 +207,7 @@ object PipelineQueries {
     import s.implicits._
     val li = Tables(s, dir, "lineitem").select($"l_returnflag",
       $"l_quantity".cast("long").as("q"),
-      expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("pc"))
+      F.cents($"l_extendedprice").as("pc"))
     val longf = li.select($"l_returnflag", explode(array(
         struct(lit("price_cents").as("metric"), $"pc".as("v")),
         struct(lit("qty").as("metric"), $"q".as("v")))).as("mv"))
@@ -407,7 +407,7 @@ object PipelineQueries {
     import s.implicits._
     val orders = Tables(s, dir, "orders")
       .select($"o_orderkey".as("k"), $"o_orderstatus".as("status"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_cents"))
+        F.cents($"o_totalprice").as("price_cents"))
     val snapshot = orders.filter($"k" % 4 =!= 0)
     val base = orders.filter($"k" % 3 === 0)
     val chg1 = base.select($"k", lit(1L).as("seq"),
@@ -449,7 +449,7 @@ object PipelineQueries {
     import s.implicits._
     val B = 8
     val li = Tables(s, dir, "lineitem")
-      .select(expr("CAST(round(l_extendedprice * 100) AS BIGINT) div 1000").as("v"))
+      .select(call_function("div", F.cents($"l_extendedprice"), lit(1000)).as("v"))
     val hist = li.groupBy($"v").agg(count(lit(1)).as("c"))
     val wCum = Window.orderBy($"v")
     val total = li.agg(count(lit(1)).as("n"))

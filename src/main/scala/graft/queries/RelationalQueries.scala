@@ -87,20 +87,10 @@ object RelationalQueries {
     * width for ladder measurement or deployment tuning. */
   private def streamSession(s: SparkSession, dir: String, table: String): SparkSession = {
     val parts = SimilarityQueries.envelope(s, "graft.streamStateWidth",
-      graft.streaming.Streams.stateWidthFor(sourceBytes(dir, table)).toLong).toInt
+      graft.streaming.Streams.stateWidthFor(Tables.bytes(dir, table)).toLong).toInt
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s2
-  }
-
-  /** On-disk bytes of a streamed table — single file (driver testdata)
-    * or a directory of part files (generated scale dirs). */
-  private def sourceBytes(dir: String, table: String): Long = {
-    def size(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(size).sum).getOrElse(0L)
-      else f.length()
-    size(new java.io.File(s"$dir/$table.parquet"))
   }
 
   /** Streaming file source for a table that is either ONE parquet file

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -205,7 +205,7 @@ object TextQueries {
     * is lambda-bound so it evaluates once per row — inlined into the
     * per-paragraph lambda it would re-tokenize per paragraph (the same
     * per-element re-evaluation trap measured at ~50× in text_winnowing). */
-  private def paraArray: org.apache.spark.sql.Column =
+  private def paraArray: Column =
     element_at(transform(array(Text.tokens(Text.normalized(col("text")))), tk =>
       transform(sequence(lit(0), ((size(tk) + ParaW - 1) / ParaW).cast("int") - 1),
         g => array_join(slice(tk, g * ParaW + 1, lit(ParaW)), " "))), 1)
@@ -221,24 +221,31 @@ object TextQueries {
     * what makes the reassembled text hash-gradable. Plan: one shuffle on
     * the paragraph md5 (the window), one shuffle back on doc_id for
     * reassembly — both linear; at 100 TB this is exactly the sharded
-    * paragraph-hash dedup CCNet runs, with the reassembly order pinned by
-    * sorting the collected (pos, text) structs instead of trusting
-    * collect_list's arrival order. */
+    * paragraph-hash dedup CCNet runs. */
   private val dedupParagraph: Q = (s, dir) => {
     import s.implicits._
-    val paras = Tables(s, dir, "documents")
-      .select($"doc_id", posexplode(paraArray))
-      .withColumnRenamed("col", "part")
     val w = Window.partitionBy(md5($"part")).orderBy($"doc_id", $"pos")
-    paras.withColumn("rn", row_number().over(w))
+    paragraphs(Tables(s, dir, "documents"))
+      .withColumn("rn", row_number().over(w))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_parts"),
         sum(when($"rn" === 1, 1L).otherwise(0L)).as("n_kept"),
-        array_join(transform(
-          array_sort(collect_list(when($"rn" === 1, struct($"pos", $"part")))),
-          x => x.getField("part")), " ").as("cleaned_text"))
+        reassembled($"rn" === 1).as("cleaned_text"))
       .orderBy($"doc_id")
   }
+
+  /** One row per paragraph of `docs`: (doc_id, pos, part). */
+  private def paragraphs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), posexplode(paraArray))
+      .withColumnRenamed("col", "part")
+
+  /** A document's paragraphs that pass `keep`, rejoined in position order
+    * — sorting the collected (pos, part) structs pins the order instead of
+    * trusting collect_list's arrival order. */
+  private def reassembled(keep: Column): Column =
+    array_join(transform(
+      array_sort(collect_list(when(keep, struct(col("pos"), col("part"))))),
+      x => x.getField("part")), " ")
 
   /** Winnowing k-gram size / window width. */
   private val WinK = 3
@@ -259,7 +266,6 @@ object TextQueries {
     * an exact BIGINT so the whole selection replays in DuckDB. */
   private val textWinnowing: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.Column
     val emptyLongs = expr("CAST(array() AS ARRAY<BIGINT>)")
     // LAMBDA-BIND each intermediate array exactly once: wrap it in a
     // 1-element array and compute downstream inside the lambda, where it
@@ -322,20 +328,26 @@ object TextQueries {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
     val split = 3L * docs.count() / 4L
-    val paras = docs.select($"doc_id", posexplode(paraArray))
-      .withColumnRenamed("col", "part")
-      .withColumn("h", md5($"part"))
+    val paras = hashedParagraphs(docs)
     val index = paras.filter($"doc_id" < split).select($"h").distinct()
-    val incoming = paras.filter($"doc_id" >= split)
-    val flagged = incoming.join(index.withColumn("known", lit(1)), Seq("h"), "left")
-    flagged.groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_parts"),
-        sum(when($"known" === 1, 1L).otherwise(0L)).as("n_known"),
-        array_join(transform(
-          array_sort(collect_list(when($"known".isNull, struct($"pos", $"part")))),
-          x => x.getField("part")), " ").as("novel_text"))
-      .orderBy($"doc_id")
+    novelParagraphs(paras.filter($"doc_id" >= split), index)
   }
+
+  /** [[paragraphs]] with each paragraph's md5 `h`, the index key. */
+  private def hashedParagraphs(docs: DataFrame): DataFrame =
+    paragraphs(docs).withColumn("h", md5(col("part")))
+
+  /** The newcomer-vs-index verdict: per incoming document, its paragraph
+    * count, how many of them the paragraph-hash `index` (column `h`)
+    * holds, and its reassembled novel remainder. The one-shot key derives
+    * `index` in-plan; the batch twin reads the landed `para_index`. */
+  private def novelParagraphs(incoming: DataFrame, index: DataFrame): DataFrame =
+    incoming.join(index.withColumn("known", lit(1)), Seq("h"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_parts"),
+        sum(when(col("known") === 1, 1L).otherwise(0L)).as("n_known"),
+        reassembled(col("known").isNull).as("novel_text"))
+      .orderBy(col("doc_id"))
 
   /** Batch-1 of the appended-batch twin (VERDICT r15 #4): the distinct
     * paragraph-hash index of docs < `split`, PERSISTED ([[BatchState]]) —
@@ -349,24 +361,11 @@ object TextQueries {
         .distinct())
   }
 
-  /** Batch-2: appended docs probe the LANDED paragraph index; same
-    * newcomer-vs-index verdict as [[dedupParagraphIncremental]]. */
-  private[graft] def paragraphBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame = {
-    import s.implicits._
-    val index = ParquetFormat.read(s, s"${BatchState.root}/para_index")
-    val incoming = Tables(s, dir, "documents").filter($"doc_id" >= split)
-      .select($"doc_id", posexplode(paraArray))
-      .withColumnRenamed("col", "part")
-      .withColumn("h", md5($"part"))
-    incoming.join(index.withColumn("known", lit(1)), Seq("h"), "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_parts"),
-        sum(when($"known" === 1, 1L).otherwise(0L)).as("n_known"),
-        array_join(transform(
-          array_sort(collect_list(when($"known".isNull, struct($"pos", $"part")))),
-          x => x.getField("part")), " ").as("novel_text"))
-      .orderBy($"doc_id")
-  }
+  /** Batch-2: appended docs probe the LANDED paragraph index. */
+  private[graft] def paragraphBatchProbe(s: SparkSession, dir: String, split: Long): DataFrame =
+    novelParagraphs(
+      hashedParagraphs(Tables(s, dir, "documents").filter(col("doc_id") >= split)),
+      ParquetFormat.read(s, s"${BatchState.root}/para_index"))
 
   private val dedupParagraphIncrementalBatch: Q = (s, dir) => {
     val split = 3L * Tables(s, dir, "documents").count() / 4L
@@ -403,7 +402,7 @@ object TextQueries {
     // parquet split); counts are order-free
     val toks = SimilarityQueries.spread(Tables(s, dir, "documents"))
       .select(explode(Text.tokens(Text.normalized($"text"))).as("tok"))
-    def bucket(i: Int, tok: org.apache.spark.sql.Column) =
+    def bucket(i: Int, tok: Column) =
       pmod(Vectors.hash60(concat(lit(s"cms${i}_"), tok)), lit(CmsW.toLong))
     val sketch = toks
       .select(explode(array((0 until CmsD).map(i =>

@@ -1,9 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.F
 
 /** Time-series analytics over the events stream — the monitoring family
   * next to qa_volume_anomaly (count spikes) and qa_drift_psi (distribution
@@ -31,15 +33,23 @@ object TimeSeriesQueries {
     "ts_session_stats" -> tsSessionStats
   )
 
-  /** Session depth/duration profile — the engagement histogram next to
-    * [[tsPeakConcurrency]]'s load profile, built from the SAME 30-min-gap
-    * sessions: sessions bucketed by event depth (capped at 10+), each
-    * bucket carrying count, exact summed duration-µs and the max. Output
-    * is ≤10 rows at any corpus size; the work is the one user-keyed
-    * window pass the gap sessionization always costs. */
-  private val tsSessionStats: Q = (s, dir) => {
+  /** Per-type daily value series (event_type, day, x = Σ cents): the
+    * heavy input collapses to (type, day) grain in ONE hash aggregate, so
+    * the forecast, autocorrelation, CUSUM and streak windows all run over
+    * a table bounded by types × days, not by the corpus. */
+  private def dailyCents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
+    Tables(s, dir, "events")
+      .groupBy($"event_type", $"ts".cast("date").as("day"))
+      .agg(sum(F.cents($"value")).as("x"))
+  }
+
+  /** Gap-based sessions, per event: (user_id, tus, prev, news, sid) with
+    * `sid` the user's running session number — a new session starts when
+    * more than [[GapUs]] (30 min) passes since the user's previous event.
+    * One user-keyed window pass; callers aggregate by (user_id, sid). */
+  private def sessions(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     val wUser = Window.partitionBy($"user_id").orderBy($"tus")
     Tables(s, dir, "events")
       .select($"user_id", expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tus"))
@@ -47,6 +57,16 @@ object TimeSeriesQueries {
       .withColumn("news",
         ($"prev".isNull || $"tus" - $"prev" > GapUs).cast("long"))
       .withColumn("sid", sum($"news").over(wUser))
+  }
+
+  /** Session depth/duration profile — the engagement histogram next to
+    * [[tsPeakConcurrency]]'s load profile, built from the SAME 30-min-gap
+    * sessions: sessions bucketed by event depth (capped at 10+), each
+    * bucket carrying count, exact summed duration-µs and the max. Output
+    * is ≤10 rows at any corpus size. */
+  private val tsSessionStats: Q = (s, dir) => {
+    import s.implicits._
+    sessions(s, dir)
       .groupBy($"user_id", $"sid")
       .agg(count(lit(1)).as("depth"), (max($"tus") - min($"tus")).as("dur_us"))
       .groupBy(least($"depth", lit(10L)).as("depth_bucket"))
@@ -59,15 +79,12 @@ object TimeSeriesQueries {
   /** Seasonal-naive forecast backtest — the baseline every demand model
     * must beat: predict day d with day d−7, score on exact integer cents
     * (n evaluated, Σ|err|, Σerr for bias; the consumer divides for
-    * MAE). The lag runs on the tiny per-type daily table; days without a
-    * lag-7 observation are excluded, not zero-filled. */
+    * MAE). Days without a lag-7 observation are excluded, not
+    * zero-filled. */
   private val tsForecastNaive: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"event_type").orderBy($"day")
-    Tables(s, dir, "events")
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
+    dailyCents(s, dir)
       .withColumn("pred_day", lag($"day", 7).over(w))
       .withColumn("pred", lag($"x", 7).over(w))
       // a 7-rows-back observation is only the seasonal twin if it is
@@ -92,12 +109,9 @@ object TimeSeriesQueries {
     * against var_num. */
   private val tsAcfLag7: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"event_type").orderBy($"day")
     val wAll = Window.partitionBy($"event_type")
-    Tables(s, dir, "events")
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
+    dailyCents(s, dir)
       .withColumn("xl", lag($"x", 7).over(w))
       .withColumn("pl", lag($"day", 7).over(w))
       .withColumn("n", count(lit(1)).over(wAll))
@@ -135,7 +149,6 @@ object TimeSeriesQueries {
     * partitioning (count over the same key), so nothing reshuffles. */
   private val tsEwma: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val wAll = Window.partitionBy($"user_id")
     val scaled: Column = (0 until Horizon)
@@ -144,7 +157,7 @@ object TimeSeriesQueries {
       .reduce(_ + _)
     Tables(s, dir, "events")
       .select($"user_id", $"event_id", $"ts",
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+        F.cents($"value").as("cents"))
       .withColumn("ewma_x", scaled)
       .withColumn("rn", row_number().over(w))
       .withColumn("n_events", count(lit(1)).over(wAll))
@@ -156,21 +169,16 @@ object TimeSeriesQueries {
   /** Offline CUSUM changepoint per event type over the daily value
     * series: the day k maximizing |n·Σᵢ≤ₖxᵢ − k·Σx| (the scaled cumulative
     * deviation from the global mean — exact integers, ties broken
-    * earliest). The heavy input collapses to (type, day) grain in ONE
-    * hash aggregate; the cumsum window and the argmax rank then touch
-    * only the tiny daily table, so the per-type ordered pass costs
-    * nothing at any corpus size — the a_mode two-level shape applied to
-    * a sequential statistic. */
+    * earliest). The cumsum window and the argmax rank run over
+    * [[dailyCents]] — the a_mode two-level shape applied to a sequential
+    * statistic. */
   private val tsCusum: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val wSeq = Window.partitionBy($"event_type").orderBy($"day")
     val wAll = Window.partitionBy($"event_type")
     val wPick = Window.partitionBy($"event_type")
       .orderBy(abs($"cusum").desc, $"day".asc)
-    Tables(s, dir, "events")
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
+    dailyCents(s, dir)
       .withColumn("k", row_number().over(wSeq).cast("long"))
       .withColumn("prefix", sum($"x").over(wSeq))
       .withColumn("n_days", count(lit(1)).over(wAll))
@@ -187,24 +195,18 @@ object TimeSeriesQueries {
     * previous day) per event type — the gaps-and-islands pattern: a run is
     * the group where row_number-over-sequence minus row_number-over-down
     * is constant, so runs fall out of two window ranks with NO self-join
-    * or recursive walk. Everything past the first hash aggregate runs on
-    * the tiny (type, day) table. Ties on length break to the earliest
-    * ending run. */
+    * or recursive walk. Ties on length break to the earliest ending run. */
   private val tsStreaks: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
     val wSeq = Window.partitionBy($"event_type").orderBy($"day")
-    val daily = Tables(s, dir, "events")
-      .groupBy($"event_type", $"ts".cast("date").as("day"))
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
+    val daily = dailyCents(s, dir)
       .withColumn("down", $"x" < lag($"x", 1).over(wSeq))
       .filter($"down")
-    val wDown = Window.partitionBy($"event_type").orderBy($"day")
     val wPick = Window.partitionBy($"event_type")
       .orderBy($"len".desc, $"end_day".asc)
     daily
       .withColumn("grp", datediff($"day", lit("1970-01-01").cast("date"))
-        - row_number().over(wDown))
+        - row_number().over(wSeq))
       .groupBy($"event_type", $"grp")
       .agg(count(lit(1)).as("len"), max($"day").as("end_day"))
       .withColumn("pick", row_number().over(wPick))
@@ -213,15 +215,15 @@ object TimeSeriesQueries {
       .orderBy($"event_type")
   }
 
-  /** Session gap for the concurrency sweep: 30 minutes, in microseconds. */
+  /** Session gap: 30 minutes, in microseconds. */
   private val GapUs = 30L * 60 * 1000000
 
   /** Peak concurrent SESSIONS per day — the interval-sweep staple
-    * (capacity planning, licensing, load-profile audits). Sessions are
-    * gap-based per user (a new session when > 30 min passes); each emits
-    * +1 at its start and −1 one µs after its end; concurrency is the
-    * running sum of per-instant net deltas, and the day's peak is the max
-    * running level, counting the carry-in level at day start.
+    * (capacity planning, licensing, load-profile audits). Each of the
+    * [[sessions]] emits +1 at its start and −1 one µs after its end;
+    * concurrency is the running sum of per-instant net deltas, and the
+    * day's peak is the max running level, counting the carry-in level at
+    * day start.
     *
     * The running sum is the TWO-LEVEL distributed prefix sum
     * (a_median_hist / train_curriculum_order discipline): the heavy
@@ -230,14 +232,7 @@ object TimeSeriesQueries {
     * global sort of the delta stream at any corpus size. */
   private val tsPeakConcurrency: Q = (s, dir) => {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val wUser = Window.partitionBy($"user_id").orderBy($"tus")
-    val sess = Tables(s, dir, "events")
-      .select($"user_id", expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tus"))
-      .withColumn("prev", lag($"tus", 1).over(wUser))
-      .withColumn("news",
-        ($"prev".isNull || $"tus" - $"prev" > GapUs).cast("long"))
-      .withColumn("sid", sum($"news").over(wUser))
+    val sess = sessions(s, dir)
       .groupBy($"user_id", $"sid")
       .agg(min($"tus").as("s"), max($"tus").as("e"))
     val deltas = sess.select($"s".as("tus"), lit(1L).as("d"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -67,9 +67,7 @@ object TrainingQueries {
   private val textRepetition: Q = (s, dir) => {
     import s.implicits._
     val t = Text.tokens(Text.normalized($"text"))
-    val bigrams = zip_with(
-      slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-      (a, b) => concat_ws(" ", a, b))
+    val bigrams = tokenBigrams(t)
     // spread (r18): `Probe stages` measured two single-task CPU stages
     // (0.96 s + 0.61 s at sf0.1) — pure per-row projection over the one
     // parquet split, re-run by the output sort's sampling pass
@@ -89,6 +87,11 @@ object TrainingQueries {
         $"dup_bigram_ratio" > 0.2 || $"dup_word_ratio" > 0.72)
       .orderBy($"doc_id")
   }
+
+  /** The adjacent token pairs of token array `t`, each space-joined. */
+  private def tokenBigrams(t: Column): Column =
+    zip_with(slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
+      (a, b) => concat_ws(" ", a, b))
 
   // ---------------------------------------------------- sequence packing
   /** Concat-and-chunk sequence packing: per source shard, documents are
@@ -205,20 +208,9 @@ object TrainingQueries {
     * space is healthy, and FENCED (see [[fenceDecontam]]) where it
     * saturates. */
   private val textChunkDecontaminate: Q = (s, dir) => {
-    import s.implicits._
     fenceDecontam("text_chunk_decontaminate", s, dir,
       massScaleNum = ChunkW.toLong * ChunkW, massScaleDen = ChunkStride.toLong * ChunkStride)
-    val chsh = chunked(s, dir).filter($"doc_id" % 50 =!= 0)
-      .select($"doc_id", $"chunk_idx",
-        explode(Text.shingleSet($"chunk_text", ShingleN)).as("shingle"))
-    val bench = Tables(s, dir, "documents").filter($"doc_id" % 50 === 0)
-      .select($"doc_id".as("bench_id"),
-        explode(Text.shingleSet($"text", ShingleN)).as("shingle"))
-    chsh.join(broadcast(bench), "shingle")
-      .groupBy($"doc_id", $"chunk_idx", $"bench_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= 3)
-      .orderBy($"doc_id", $"chunk_idx", $"bench_id")
+    benchOverlap(s, dir, chunkShingles(s, dir), Seq("doc_id", "chunk_idx"), "n_shared")
   }
 
   /** CHUNK-level decontamination at scale — [[textChunkDecontaminate]]
@@ -226,27 +218,55 @@ object TrainingQueries {
     * [[RareDf]]). Rarity is the signal: a shingle held by thousands of
     * training chunks is vocabulary-saturation boilerplate, not benchmark
     * leakage, and it is exactly the bucket that makes the exact join
-    * quadratic. The df filter bounds every shingle's join fan-out at
-    * RareDf × its benchmark postings, so the candidate mass is linear in
-    * the benchmark side no matter how saturated the corpus; the df
-    * aggregate reuses the shuffle partitioning of the join key, and AQE
-    * can split any residual hot shingle. */
-  private val textChunkDecontaminateRare: Q = (s, dir) => {
+    * quadratic ([[rareOnly]] bounds it). */
+  private val textChunkDecontaminateRare: Q = (s, dir) =>
+    benchOverlap(s, dir, rareOnly(chunkShingles(s, dir)), Seq("doc_id", "chunk_idx"),
+      "n_shared_rare")
+
+  /** Training-side chunk shingles: (doc_id, chunk_idx, shingle) for every
+    * chunk of a non-benchmark document. */
+  private def chunkShingles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val chsh = chunked(s, dir).filter($"doc_id" % 50 =!= 0)
+    chunked(s, dir).filter($"doc_id" % 50 =!= 0)
       .select($"doc_id", $"chunk_idx",
         explode(Text.shingleSet($"chunk_text", ShingleN)).as("shingle"))
-    val rare = chsh.groupBy($"shingle").agg(count(lit(1)).as("df"))
-      .filter($"df" <= RareDf).select($"shingle")
-    val bench = Tables(s, dir, "documents").filter($"doc_id" % 50 === 0)
+  }
+
+  /** Benchmark-side shingles: (bench_id, shingle) for every held-out
+    * "benchmark" document (doc_id % 50 = 0 stands in for the eval set). */
+  private def benchShingles(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables(s, dir, "documents").filter($"doc_id" % 50 === 0)
       .select($"doc_id".as("bench_id"),
         explode(Text.shingleSet($"text", ShingleN)).as("shingle"))
-    chsh.join(rare, "shingle")
-      .join(broadcast(bench), "shingle")
-      .groupBy($"doc_id", $"chunk_idx", $"bench_id")
-      .agg(count(lit(1)).as("n_shared_rare"))
-      .filter($"n_shared_rare" >= 3)
-      .orderBy($"doc_id", $"chunk_idx", $"bench_id")
+  }
+
+  /** `corpus` postings (`keys` + shingle) restricted to RARE shingles:
+    * those with at most [[RareDf]] postings in `corpus`. The df filter
+    * bounds every shingle's join fan-out at RareDf × its benchmark
+    * postings, so the candidate mass is linear in the benchmark side no
+    * matter how saturated the corpus; the df aggregate reuses the
+    * shuffle partitioning of the join key, and AQE can split any
+    * residual hot shingle. */
+  private def rareOnly(corpus: DataFrame): DataFrame =
+    corpus.join(corpus.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      .filter(col("df") <= RareDf).select(col("shingle")), "shingle")
+
+  /** The decontamination verdict: the `corpus` postings (`keys` +
+    * shingle) that share ≥ 3 distinct shingles with one benchmark
+    * document, counted as `shared` per (keys, bench_id). The benchmark
+    * side is tiny by construction (eval sets are, even when the corpus is
+    * 100 TB), so it broadcasts and the corpus side streams through
+    * map-side without a shuffle; the only shuffle is the pair aggregate,
+    * sized by matches, not by corpus. */
+  private def benchOverlap(s: SparkSession, dir: String, corpus: DataFrame,
+      keys: Seq[String], shared: String): DataFrame = {
+    val byPair = (keys :+ "bench_id").map(col)
+    corpus.join(broadcast(benchShingles(s, dir)), "shingle")
+      .groupBy(byPair: _*)
+      .agg(count(lit(1)).as(shared))
+      .filter(col(shared) >= 3)
+      .orderBy(byPair: _*)
   }
 
   // ------------------------------------------------ rarity-weighted terms
@@ -277,45 +297,27 @@ object TrainingQueries {
 
   // ------------------------------------------------------ decontamination
   /** Benchmark decontamination: find corpus documents sharing ≥ 3 word
-    * 3-gram shingles with any held-out "benchmark" doc (here doc_id % 50
-    * = 0 stands in for the eval set). Inverted-index join on the shingle —
-    * the benchmark side is tiny by construction (eval sets are, even when
-    * the corpus is 100 TB), so it broadcasts and the corpus side streams
-    * through map-side without a shuffle; the only shuffle is the pair
-    * aggregate, sized by matches, not by corpus. */
+    * 3-gram shingles with any held-out "benchmark" doc — an
+    * inverted-index join on the shingle ([[benchOverlap]]). */
   private val textDecontaminate: Q = (s, dir) => {
-    import s.implicits._
     fenceDecontam("text_decontaminate", s, dir)
-    val shd = Tables(s, dir, "documents")
+    benchOverlap(s, dir, docShingles(s, dir), Seq("doc_id"), "n_shared")
+  }
+
+  /** Training-side document shingles: (doc_id, shingle) for every
+    * non-benchmark document. */
+  private def docShingles(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables(s, dir, "documents").filter($"doc_id" % 50 =!= 0)
       .select($"doc_id", explode(Text.shingleSet($"text", ShingleN)).as("shingle"))
-    val bench = shd.filter($"doc_id" % 50 === 0)
-      .select($"shingle", $"doc_id".as("bench_id"))
-    shd.filter($"doc_id" % 50 =!= 0)
-      .join(broadcast(bench), "shingle")
-      .groupBy($"doc_id", $"bench_id").agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= 3)
-      .orderBy($"doc_id", $"bench_id")
   }
 
   /** DOC-level decontamination at scale — [[textDecontaminate]] restricted
     * to RARE shingles (training-side document frequency ≤ [[RareDf]]); see
-    * [[textChunkDecontaminateRare]] for why rarity both IS the
-    * contamination signal and bounds the join mass linearly. */
-  private val textDecontaminateRare: Q = (s, dir) => {
-    import s.implicits._
-    val shd = Tables(s, dir, "documents")
-      .select($"doc_id", explode(Text.shingleSet($"text", ShingleN)).as("shingle"))
-    val corpus = shd.filter($"doc_id" % 50 =!= 0)
-    val rare = corpus.groupBy($"shingle").agg(count(lit(1)).as("df"))
-      .filter($"df" <= RareDf).select($"shingle")
-    val bench = shd.filter($"doc_id" % 50 === 0)
-      .select($"shingle", $"doc_id".as("bench_id"))
-    corpus.join(rare, "shingle")
-      .join(broadcast(bench), "shingle")
-      .groupBy($"doc_id", $"bench_id").agg(count(lit(1)).as("n_shared_rare"))
-      .filter($"n_shared_rare" >= 3)
-      .orderBy($"doc_id", $"bench_id")
-  }
+    * [[textChunkDecontaminateRare]] for why rarity IS the contamination
+    * signal. */
+  private val textDecontaminateRare: Q = (s, dir) =>
+    benchOverlap(s, dir, rareOnly(docShingles(s, dir)), Seq("doc_id"), "n_shared_rare")
 
   // --------------------------------------------------- stratified sample
   /** Deterministic stratified sampling: per-language keep rates applied
@@ -476,10 +478,7 @@ object TrainingQueries {
     import s.implicits._
     val toks = Tables(s, dir, "documents")
       .select($"doc_id", Text.tokens(Text.normalized($"text")).as("t"))
-    val bigrams = toks.select($"doc_id",
-      explode(zip_with(slice($"t", lit(1), size($"t") - 1),
-        slice($"t", lit(2), size($"t") - 1),
-        (a, b) => concat_ws(" ", a, b))).as("bg"))
+    val bigrams = toks.select($"doc_id", explode(tokenBigrams($"t")).as("bg"))
     val lmBi = bigrams.filter($"doc_id" % 50 === 0)
       .groupBy($"bg").agg(count(lit(1)).as("c12"))
     val lmUni = toks.filter($"doc_id" % 50 === 0)
@@ -539,26 +538,35 @@ object TrainingQueries {
   // ------------------------------------------------- BPE merge candidates
   private val BpeTopK = 20
 
-  /** First-round BPE merge scoring — the pair-frequency count a tokenizer
-    * trainer runs before its first merge: adjacent character pairs inside
-    * each word, weighted by the word's corpus frequency, ranked by total
-    * count. The corpus-sized work is the word-count aggregate (one hash
-    * shuffle on the token — the same shape as [[textVocab]]); everything
-    * after runs over the VOCABULARY (bounded by the token domain, not the
-    * corpus), so the pair aggregate and the single-partition top-k window
-    * stay small at any input size — the canonical "aggregate early, then
-    * compute on the summary" scale pattern. */
-  private val textBpeMerges: Q = (s, dir) => {
+  /** The BPE vocabulary every merge key starts from: each corpus word of
+    * ≥ 2 characters with its corpus count `wc`. This aggregate is the
+    * keys' only corpus-sized work (one hash shuffle on the token, the
+    * shape of [[textVocab]]); everything after runs over the vocabulary,
+    * bounded by the token domain rather than the corpus. */
+  private def bpeWords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val words = Tables(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(explode(Text.tokens(Text.normalized($"text"))).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("wc"))
       .filter(length($"word") >= 2)
-    val pairs = words
-      .select($"word", $"wc",
-        explode(expr(
-          "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
-          .as("pair"))
+  }
+
+  /** Each adjacent character pair of each vocabulary word: (word, wc, pair). */
+  private def charPairs(words: DataFrame): DataFrame =
+    words.select(col("word"), col("wc"), explode(expr(
+      "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))")).as("pair"))
+
+  /** First-round BPE merge scoring — the pair-frequency count a tokenizer
+    * trainer runs before its first merge: adjacent character pairs inside
+    * each word, weighted by the word's corpus frequency, ranked by total
+    * count. Past [[bpeWords]] the pair aggregate and the single-partition
+    * top-k window run over the vocabulary, so they stay small at any
+    * input size — the canonical "aggregate early, then compute on the
+    * summary" scale pattern. */
+  private val textBpeMerges: Q = (s, dir) => {
+    import s.implicits._
+    val words = bpeWords(s, dir)
+    val pairs = charPairs(words)
       .groupBy($"pair")
       .agg(sum($"wc").as("pair_count"), countDistinct($"word").as("n_words"))
     val w = Window.orderBy($"pair_count".desc, $"pair")
@@ -598,10 +606,7 @@ object TrainingQueries {
   private def bpeTrainLoop(s: SparkSession, dir: String)
       : (Seq[DataFrame], DataFrame) = {
     import s.implicits._
-    val words = Tables(s, dir, "documents")
-      .select(explode(Text.tokens(Text.normalized($"text"))).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("wc"))
-      .filter(length($"word") >= 2)
+    val words = bpeWords(s, dir)
     val seg0 = words.select($"word", $"wc",
         concat(lit("|"), regexp_replace($"word", "(.)", "$1|")).as("seg"))
       .localCheckpoint()
@@ -821,20 +826,12 @@ object TrainingQueries {
     * the JVM and DuckDB) and the unit count before/after the merge. Real
     * BPE iterates merge→recount; one full round is the honest distributed
     * slice, and its plan IS the iteration's: corpus-sized work is the one
-    * word-count aggregate, the winner is a broadcast 1-row relation, and
-    * application maps over the VOCABULARY (token-domain-bounded, not
-    * corpus-bounded). */
+    * word-count aggregate ([[bpeWords]]), the winner is a broadcast 1-row
+    * relation, and application maps over the vocabulary. */
   private val textBpeApply: Q = (s, dir) => {
     import s.implicits._
-    val words = Tables(s, dir, "documents")
-      .select(explode(Text.tokens(Text.normalized($"text"))).as("word"))
-      .groupBy($"word").agg(count(lit(1)).as("wc"))
-      .filter(length($"word") >= 2)
-    val pairs = words
-      .select($"word", $"wc", explode(expr(
-        "transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))"))
-        .as("pair"))
-      .groupBy($"pair").agg(sum($"wc").as("pair_count"))
+    val words = bpeWords(s, dir)
+    val pairs = charPairs(words).groupBy($"pair").agg(sum($"wc").as("pair_count"))
     val top = pairs.orderBy($"pair_count".desc, $"pair").limit(1)
       .select($"pair", $"pair_count")
     words.crossJoin(broadcast(top))

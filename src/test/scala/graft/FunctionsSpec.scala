@@ -90,17 +90,32 @@ class FunctionsSpec extends SparkSpec {
 
   test("fdot (codegen expression) is bit-identical to the HOF dot") {
     import spark.implicits._
-    val vecs = (0 until 50).map(i =>
-      (Seq.tabulate(64)(j => ((i * 31 + j * 7) % 100 / 37.0f) - 1.0f),
-       Seq.tabulate(64)(j => ((i * 13 + j * 3) % 100 / 41.0f) - 1.0f)))
-    val df = vecs.toDF("a", "b")
-    val rows = df.select(
-      Vectors.dot($"a", $"b").as("hof"),
-      Vectors.fdot($"a", $"b").as("fused")).collect()
-    rows.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))
+    import org.apache.spark.sql.{Column, DataFrame}
+    // the composable form the codegen expression replaces
+    def hof(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, v) => acc + v)
+    def bitIdentical(df: DataFrame, fused: Column, prettyName: String): Unit = {
+      val out = df.select(hof($"a", $"b").as("hof"), fused.as("fused"))
+      assert(out.queryExecution.analyzed.toString.contains(prettyName))
+      out.collect().foreach { r =>
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
+          java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      }
     }
+    val floats = (0 until 50).map(i =>
+      (Seq.tabulate(64)(j => ((i * 31 + j * 7) % 100 / 37.0f) - 1.0f),
+       Seq.tabulate(64)(j => ((i * 13 + j * 3) % 100 / 41.0f) - 1.0f))).toDF("a", "b")
+    bitIdentical(floats, Vectors.fdot($"a", $"b"), "float_dot")
+    bitIdentical(floats, Vectors.dot($"a", $"b"), "double_dot")
+    // products past 2^53 round, so a different summation order shows
+    val rnd = new scala.util.Random(7)
+    val longs = (0 until 50).map(_ =>
+      (Seq.fill(64)(rnd.nextLong() >> 22), Seq.fill(64)(rnd.nextLong() >> 22))).toDF("a", "b")
+    bitIdentical(longs, graft.operators.KMeans.idot($"a", $"b"), "long_dot")
+    val doubles = (0 until 50).map(_ =>
+      (Seq.fill(64)(rnd.nextGaussian() * 1e3), Seq.fill(64)(rnd.nextGaussian()))).toDF("a", "b")
+    bitIdentical(doubles, Vectors.dot($"a", $"b"), "double_dot")
   }
 
   test("hyperplaneBucket is deterministic") {

@@ -68,6 +68,22 @@ class MultimodalSpec extends SparkSpec {
       val r = MediaHeader.decode(wavWithChunk(size))
       assert(r.getUTF8String(0).toString == "wav") // recognized container, no fmt found
     }
+    // A first fmt chunk declaring fewer than 16 bytes, or a size past the
+    // buffer, yields no fields even when 16 plausible bytes follow its
+    // header — the rule the WAV sample decoders apply.
+    def wavWithFmt(size: Int): Array[Byte] = {
+      val bb = ByteBuffer.allocate(44).order(ByteOrder.LITTLE_ENDIAN)
+      bb.put("RIFF".getBytes("ASCII")).putInt(36).put("WAVE".getBytes("ASCII"))
+      bb.put("fmt ".getBytes("ASCII")).putInt(size)
+      bb.putShort(1).putShort(2).putInt(22050).putInt(88200).putShort(4).putShort(16)
+      bb.put("data".getBytes("ASCII")).putInt(0).array()
+    }
+    assert(MediaHeader.decode(wavWithFmt(16)).getInt(3) == 22050) // well-formed
+    for (size <- Seq(8, 0x1000)) {
+      val r = MediaHeader.decode(wavWithFmt(size))
+      assert(r.getUTF8String(0).toString == "wav")
+      assert(r.isNullAt(3) && r.isNullAt(4) && r.isNullAt(5), s"fmt size $size")
+    }
     // Deterministic fuzz: arbitrary bytes after a RIFF/WAVE prelude never throw.
     val rnd = new scala.util.Random(42)
     for (_ <- 1 to 200) {
