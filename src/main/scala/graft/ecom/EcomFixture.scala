@@ -5,7 +5,7 @@ import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.plans.ModelGraph
 
 /** Reference-shaped raw ecom tables derived DETERMINISTICALLY from the
@@ -201,29 +201,20 @@ object EcomFixture {
   private val FullLandingFactor = 4L
   private val StreamedLandingFactor = 2L
 
-  /** Default `graft.maxEcomLandingBytes`: 32 GiB — 5.4x headroom over the
-    * largest landing any graded corpus needs (skew10 full = 5.9 GiB),
-    * refusing the skew100 FULL landing (est 17.2 GiB x 4 = 69 GiB, which
-    * ENOSPC'd a 60 GiB-free box mid-run before this fence existed) while
-    * admitting the leaf-streamed twin there (est 17.2 x 2 = 34 GiB... see
-    * martsStreamed for the exact arithmetic). */
-  private val DefaultMaxLandingBytes = 32L << 30
-
+  /** Refuse a landing whose estimated disk (input bytes x `factor`) is
+    * over [[graft.Fence.EcomLandingBytes]]. */
   private def fenceLanding(spark: SparkSession, dir: String,
       factor: Long, what: String): Unit = {
-    val budget = graft.queries.SimilarityQueries.envelope(
-      spark, "graft.maxEcomLandingBytes", DefaultMaxLandingBytes)
     val in = inputBytes(dir)
-    require(in * factor <= budget,
-      s"$what: the medallion landing is O(input) disk — estimated " +
-        s"${in * factor} bytes (input $in x measured factor $factor) over " +
-        s"the graft.maxEcomLandingBytes budget $budget. This is a real " +
-        "materialization, not a spill: refusing beats ENOSPC mid-DAG " +
-        "(measured: the skew100 full landing is ~59 GiB). Either point " +
-        "the landing at a volume sized for O(input) marts and raise the " +
-        "budget, or use qa_schema_tests_stream — it lands only the shared " +
-        "interior models and streams the leaf fct_* marts through their " +
-        "fused checks (<= 2 rebuild scans each, zero mart landing).")
+    Fence.check(spark, Fence.EcomLandingBytes, what, in, num = factor)(
+      s"the medallion landing is O(input) disk — estimated ${in * factor} " +
+        s"bytes (input $in x measured factor $factor)",
+      "This is a real materialization, not a spill: refusing beats ENOSPC " +
+        "mid-DAG (measured: the skew100 full landing is ~59 GiB). Use " +
+        "qa_schema_tests_stream — it lands only the shared interior models " +
+        "and streams the leaf fct_* marts through their fused checks (<= 2 " +
+        "rebuild scans each, zero mart landing)",
+      "the full landing on a volume sized for O(input) marts")
   }
 
   /** All model outputs (staging → marts), materialized via ModelGraph.run. */

@@ -44,6 +44,30 @@ object HashSketch {
     Array.tabulate(perms)(p => 1L + hash60(s"a$p") % (MinHashPrime - 1)),
     Array.tabulate(perms)(p => hash60(s"b$p") % MinHashPrime))
 
+  /** The per-permutation minima of a MinHash signature: one pass over the
+    * non-null shingle hashes `hs`, permutation p mapping h through
+    * (a_p · (h mod P) + b_p) mod P. */
+  def minhashMins(hs: ArrayData, as: Array[Long], bs: Array[Long]): Array[Long] = {
+    val P = MinHashPrime
+    val perms = as.length
+    val mins = Array.fill(perms)(Long.MaxValue)
+    val n = hs.numElements()
+    var i = 0
+    while (i < n) {
+      if (!hs.isNullAt(i)) {
+        val base = hs.getLong(i) % P
+        var p = 0
+        while (p < perms) {
+          val v = (as(p) * base + bs(p)) % P
+          if (v < mins(p)) mins(p) = v
+          p += 1
+        }
+      }
+      i += 1
+    }
+    mins
+  }
+
   /** Deterministic hyperplane for LSH: component i = h60("<seed>_<i>")
     * mapped to [-1, 1]. */
   def plane(dim: Int, seed: Int): Array[Double] =
@@ -128,7 +152,6 @@ case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
   require(perms % bands == 0, "perms must divide into bands")
   private val rowsPerBand = perms / bands
   @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
-  private val P = HashSketch.MinHashPrime
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "minhash_band_keys"
@@ -143,22 +166,7 @@ case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
     })
 
   override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    val mins = Array.fill(perms)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!hs.isNullAt(i)) {
-        val base = hs.getLong(i) % P
-        var p = 0
-        while (p < perms) {
-          val v = (as(p) * base + bs(p)) % P
-          if (v < mins(p)) mins(p) = v
-          p += 1
-        }
-      }
-      i += 1
-    }
+    val mins = HashSketch.minhashMins(input.asInstanceOf[ArrayData], as, bs)
     val out = new Array[AnyRef](bands)
     var b = 0
     while (b < bands) {
@@ -181,14 +189,13 @@ case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
 }
 
 /** Full MinHash signature (the per-permutation minima as `array<long>`)
-  * from an `array<long>` of shingle hashes — the same universal-hash
-  * family and one-pass min loop as [[MinHashBandKeysExpr]], without the
+  * from an `array<long>` of shingle hashes — the same
+  * [[HashSketch.minhashMins]] as [[MinHashBandKeysExpr]], without the
   * band formatting. Used where the signature itself is the output (the
   * estimation-accuracy rung compares signature positions pairwise). */
 case class MinHashSigExpr(child: Expression, perms: Int)
     extends UnaryExpression {
   @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
-  private val P = HashSketch.MinHashPrime
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
@@ -202,25 +209,8 @@ case class MinHashSigExpr(child: Expression, perms: Int)
       s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($x);"
     })
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    val mins = Array.fill(perms)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!hs.isNullAt(i)) {
-        val base = hs.getLong(i) % P
-        var p = 0
-        while (p < perms) {
-          val v = (as(p) * base + bs(p)) % P
-          if (v < mins(p)) mins(p) = v
-          p += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(HashSketch.minhashMins(input.asInstanceOf[ArrayData], as, bs))
 
   override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
     copy(child = c)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.functions.F
 
 /** Advanced-analytics operators beyond the reference's surface: multi-level
@@ -948,28 +948,27 @@ object AnalyticsQueries {
     * (measured 109 s at skew10's 15 M orders vs 5.7 s at skew1 — the
     * decade is in the map merge, not the math). The probe is one linear
     * approx_count_distinct pass over exactly what the aggregate would
-    * buffer; the shared `graft.maxMedianStateRows` budget (2²¹) passes the
-    * driver sf0.1 gate and skew1 and refuses the skew10-density corpora,
-    * naming the bounded-state twin [[pPercentileHist]]. The probe is
+    * buffer; the budget it shares with a_median
+    * ([[graft.Fence.MedianStateRows]]) passes the driver sf0.1 gate and
+    * skew1 and refuses the skew10-density corpora, naming the
+    * bounded-state twin [[pPercentileHist]]. The probe is
     * memoized per session × dir ([[ProbeCache]], VERDICT r15 #5) and its
     * HLL estimate carries ~2% relative error — corpora within that slack
     * of the budget may admit or refuse across regenerations. */
   private val pPercentile: Q = (s, dir) => {
     import s.implicits._
-    val budget = SimilarityQueries.envelope(s, "graft.maxMedianStateRows", 1L << 21)
     val orders = Tables(s, dir, "orders")
     val stateRows = ProbeCache.cached(s, s"pPercentileState#$dir") {
       orders
         .agg(approx_count_distinct(struct($"o_orderstatus", $"o_totalprice")).as("d"))
         .head().getLong(0)
     }
-    require(stateRows <= budget,
-      s"p_percentile: value-buffering percentile() state is ~$stateRows " +
-        s"(group, value) entries (±2% HLL probe error; budget $budget) — " +
-        "data-proportional reducer memory. Use the bounded-state exact twin " +
-        "p_percentile_hist (counting-histogram quartiles, exact integer " +
-        "cells), or raise graft.maxMedianStateRows to run the buffering " +
-        "baseline deliberately.")
+    Fence.check(s, Fence.MedianStateRows, "p_percentile", stateRows)(
+      s"value-buffering percentile() state is ~$stateRows (group, value) " +
+        "entries, ±2% HLL probe error — data-proportional reducer memory",
+      "Use the bounded-state exact twin p_percentile_hist (counting-histogram " +
+        "quartiles, exact integer cells)",
+      "the buffering baseline")
     orders
       .groupBy($"o_orderstatus")
       .agg(

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.operators.Iterate
 
 /** Graph analytics over the order graph — the iterative-computation family
@@ -120,14 +120,9 @@ object GraphQueries {
     * that the planner can no longer avoid. Below the gate the hint is a
     * measured win (the r17 driver verified 2.5–3× on the graph keys);
     * above it the join is left unhinted so the planner/AQE picks a
-    * scale-safe shuffle join. Default budget: 2²² nodes — a (long, long)
-    * row costs ~50 B in a broadcast HashedRelation, so ~200 MB built, the
-    * guide §3.1 "a few hundred MB is usually fine" regime with 2 decades
-    * of headroom under the 8 GB / 512M-row hard cap. Override per session
-    * via `graft.maxRankBroadcastNodes` (same envelope contract as the
-    * brute-force fences). */
+    * scale-safe shuffle join. Budget: [[graft.Fence.RankBroadcastNodes]]. */
   private[graft] def rankBroadcastGate(s: SparkSession, nodes: Long): Boolean =
-    nodes <= SimilarityQueries.envelope(s, "graft.maxRankBroadcastNodes", 1L << 22)
+    Fence.admits(nodes, Fence.RankBroadcastNodes.read(s))
 
   /** Node count, degree sum and maximum degree of a degree table. */
   private[graft] final case class DegreeStats(nodes: Long, edges: Long, maxDeg: Long)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.functions.{F, Text, Vectors}
 
 /** Round-3 operator pack: SQL subquery surface (EXISTS / IN / correlated
@@ -154,22 +154,17 @@ object PipelineQueries {
     *
     * FENCED like the other documented O(n)-state exact baselines
     * (VERDICT r14 #5): `median()` buffers a per-group value→count map,
-    * and the price domain is near-unique (MEASURED: 594 k distinct
-    * (flag, price) entries at sf0.1, 5.3 M at sf1/skew1, 23.6 M at sf10 —
-    * the state IS the corpus), so past the budget the aggregate's reducer
-    * memory grows linearly with data. The probe is one linear
-    * approx_count_distinct pass over exactly what the aggregate would
-    * buffer (both metrics' (group, value) pairs); the default budget 2²¹
-    * passes the driver sf0.1 gate with ~3.5× headroom and refuses the
-    * sf1-density corpora, naming the bounded-state twin. Run the exact
-    * baseline deliberately with `graft.maxMedianStateRows`, same override
-    * contract as the dedup fences. The probe is memoized per session × dir
-    * ([[ProbeCache]], VERDICT r15 #5) and its HLL estimate carries ~2%
+    * and the price domain is near-unique (the state IS the corpus,
+    * measured beside [[graft.Fence.MedianStateRows]]), so past the budget
+    * the aggregate's reducer memory grows linearly with data. The probe is
+    * one linear approx_count_distinct pass over exactly what the aggregate
+    * would buffer (both metrics' (group, value) pairs); past the budget the
+    * key refuses, naming the bounded-state twin. The probe is memoized per
+    * session × dir ([[ProbeCache]], VERDICT r15 #5) and its HLL estimate carries ~2%
     * relative error — corpora within that slack of the budget may admit
     * or refuse across regenerations; the refusal message says so. */
   private val aMedian: Q = (s, dir) => {
     import s.implicits._
-    val budget = SimilarityQueries.envelope(s, "graft.maxMedianStateRows", 1L << 21)
     val li = Tables(s, dir, "lineitem")
     val stateRows = ProbeCache.cached(s, s"aMedianState#$dir") {
       val st = li.agg(
@@ -178,12 +173,12 @@ object PipelineQueries {
         .head()
       st.getLong(0) + st.getLong(1)
     }
-    require(stateRows <= budget,
-      s"a_median: value-buffering median() state is ~$stateRows (group, value) " +
-        s"entries (±2% HLL probe error; budget $budget) — data-proportional " +
-        "reducer memory. Use the bounded-state exact twin a_median_hist " +
-        "(counting-histogram medians, identical values), or raise " +
-        "graft.maxMedianStateRows to run the buffering baseline deliberately.")
+    Fence.check(s, Fence.MedianStateRows, "a_median", stateRows)(
+      s"value-buffering median() state is ~$stateRows (group, value) entries, " +
+        "±2% HLL probe error — data-proportional reducer memory",
+      "Use the bounded-state exact twin a_median_hist (counting-histogram " +
+        "medians, identical values)",
+      "the buffering baseline")
     li.groupBy($"l_returnflag")
       .agg(count(lit(1)).as("n_items"),
         expr("median(l_quantity)").as("med_qty"),

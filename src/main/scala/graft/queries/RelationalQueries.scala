@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.functions.{F, Text}
 import graft.operators.{DedupLatest, Upsert}
 import graft.sources.ParquetFormat
@@ -81,13 +81,10 @@ object RelationalQueries {
     * by the first checkpoint — size it to stream volume, not core
     * count; the clone scopes the setting to this query alone. The width
     * derives from the table's on-disk bytes
-    * ([[graft.streaming.Streams.stateWidthFor]]), with the same
-    * deliberate-override contract as the dedup fences:
-    * `graft.streamStateWidth` (session conf or -D) pins an explicit
-    * width for ladder measurement or deployment tuning. */
+    * ([[graft.streaming.Streams.stateWidthFor]]); every drain checkpoints
+    * to a fresh temp dir, so no stored checkpoint pins an older width. */
   private def streamSession(s: SparkSession, dir: String, table: String): SparkSession = {
-    val parts = SimilarityQueries.envelope(s, "graft.streamStateWidth",
-      graft.streaming.Streams.stateWidthFor(Tables.bytes(dir, table)).toLong).toInt
+    val parts = graft.streaming.Streams.stateWidthFor(Tables.bytes(dir, table))
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s2
@@ -609,13 +606,7 @@ object RelationalQueries {
     val ckpt = graft.TempDirs.create(prefix + "_ckpt")
     if (mode == "append") {
       val out = graft.TempDirs.create(prefix + "_out")
-      df.writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
+      graft.streaming.Streams.runAvailableNow(df, ckpt.toString, out.toString)
       // explicit schema: a drain with zero emitted rows leaves only the
       // _spark_metadata log, and schema inference would throw
       val result = s.read.schema(df.schema).parquet(out.toString)
@@ -848,19 +839,14 @@ object RelationalQueries {
   // Interval-join saturation fence (VERDICT r15 #3 — the skew100 rung's
   // cliff): the exact interval joins emit EVERY (purchase, view) pair in
   // the hour window, and on a fixed-span stream that output is quadratic
-  // in the corpus — per-event candidate mass measured at 1.17 (skew1) →
-  // 7.67 (skew10) → 53.65 (skew100); the skew100 left-join drain emitted
-  // ~2.6 G rows and exhausted a 60 GB disk. Same per-row density
-  // discipline as the dedup/decontamination fences: Σ over (user, hour
-  // bucket) of views×purchases — computed with the join's own two-bucket
-  // explode, so it is exactly the pair work the bucketed state key admits
-  // — divided by the event count is scale-free; it trips on density
-  // saturation, never on legitimate growth. One aggregation pass over the
-  // events table, memoized per session × dir ([[ProbeCache]]). Escape
-  // hatch: the bounded-output twin st_stream_join_last (last-touch
-  // attribution, O(purchases) output at any density), or raise
-  // graft.maxStreamJoinPairsPerEvent to run the pair join deliberately.
-  private val DefaultMaxStreamJoinPairsPerEvent = 16L
+  // in the corpus ([[graft.Fence.StreamJoinPairsPerEvent]] has the
+  // measurements). Same per-row density discipline as the
+  // dedup/decontamination fences: Σ over (user, hour bucket) of
+  // views×purchases — computed with the join's own two-bucket explode, so
+  // it is exactly the pair work the bucketed state key admits — per event
+  // is scale-free; it trips on density saturation, never on legitimate
+  // growth. One aggregation pass over the events table, memoized per
+  // session × dir ([[ProbeCache]]).
   private[graft] def streamJoinPairWork(s: SparkSession, dir: String): Long =
     ProbeCache.cached(s, s"streamJoinPairWork#$dir") {
       import s.implicits._
@@ -878,24 +864,18 @@ object RelationalQueries {
         .agg(coalesce(sum($"nv" * $"np"), lit(0L))).head().getLong(0)
     }
   private def fenceStreamJoin(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = SimilarityQueries.envelope(
-      s, "graft.maxStreamJoinPairsPerEvent", DefaultMaxStreamJoinPairsPerEvent)
     val events = ProbeCache.cached(s, s"eventCount#$dir") {
       Tables(s, dir, "events").count()
     }
     val work = streamJoinPairWork(s, dir)
-    // exact at the boundary (ADVICE r16): compare mass against the scaled
-    // budget — `work / events` truncates, so a density in (budget,
-    // budget+1) would slip under an integer-divided fence
-    val perEvent = if (events == 0) 0.0 else work.toDouble / events
-    require(work <= budget * events,
-      f"$name: interval-join candidate mass is saturated — $work " +
-        s"(user, hour)-bucketed view×purchase pairs for $events events " +
-        f"($perEvent%.2f/event, budget $budget/event). On a fixed-span stream " +
-        "the pair output grows quadratically with density; use the " +
-        "bounded-output twin st_stream_join_last (last-touch attribution, " +
-        "one row per matched purchase at any density), or raise " +
-        "graft.maxStreamJoinPairsPerEvent to emit every pair deliberately.")
+    Fence.check(s, Fence.StreamJoinPairsPerEvent, name, work, per = events,
+        unit = "event")(
+      s"interval-join candidate mass is saturated — $work (user, hour)-bucketed " +
+        s"view×purchase pairs for $events events",
+      "On a fixed-span stream the pair output grows quadratically with " +
+        "density; use the bounded-output twin st_stream_join_last (last-touch " +
+        "attribution, one row per matched purchase at any density)",
+      "the pair join")
   }
 
   /** STREAMING last-touch attribution — the bounded-output twin of

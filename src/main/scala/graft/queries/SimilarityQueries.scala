@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.functions.{HashSketch, Text, Vectors}
 import graft.sources.ParquetFormat
 
@@ -157,85 +157,32 @@ object SimilarityQueries {
     explode(array(bucket +: ring1 ++: ring2: _*))
   }
 
-  // Brute-force envelope (VERDICT r5 #1): the all-pairs/full-scan baselines
-  // below are the exact oracles behind the recall gates, NOT the scale
-  // path — on a 10⁹-row corpus an unfenced O(n²) join launches quietly and
-  // never finishes. Like Components' convergence cap, exceeding the
-  // envelope fails LOUDLY at plan-build time; a deliberate larger run
-  // overrides per session (`spark.conf.set("graft.maxBruteForceRows", n)`)
-  // or JVM-wide (-Dgraft.maxBruteForceRows=<n>). Session conf wins: tests
-  // and concurrent jobs can widen/narrow their own envelope without
-  // mutating global state under every other session's feet (ADVICE r6).
-  private val DefaultMaxBruteForceRows = 1000000L
-  /** Read a numeric envelope override: session conf first, then system
-    * property, then the default. A malformed value names the key instead
-    * of surfacing a bare NumberFormatException from plan-build (ADVICE r6). */
-  private[graft] def envelope(s: SparkSession, key: String, dflt: Long): Long =
-    s.conf.getOption(key).orElse(sys.props.get(key)) match {
-      case None => dflt
-      case Some(v) => v.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$key must be an integer budget, got '$v' — fix the session conf " +
-          "or -D override"))
-    }
-  private[graft] def maxBruteForceRows(s: SparkSession): Long =
-    envelope(s, "graft.maxBruteForceRows", DefaultMaxBruteForceRows)
+  // Brute-force fences (VERDICT r5 #1, budgets in [[graft.Fence]]): the
+  // full-scan baselines are the exact oracles behind the recall gates,
+  // NOT the scale path; per-QUERY scans fence on rows, all-pairs on pairs.
   private def fenceBruteForce(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = maxBruteForceRows(s)
     val n = corpusCount(s, dir)
-    require(n <= budget,
-      s"$name: brute-force baseline fenced at $budget rows " +
-        s"(corpus has $n). Use the bucketed scale paths (ann_lsh_bucket / " +
-        "ann_lsh_multiprobe / ann_ivf / dedup_semantic), or raise " +
-        "graft.maxBruteForceRows to run the exact baseline deliberately.")
+    Fence.check(s, Fence.BruteForceRows, name, n)(
+      s"brute-force baseline is over its row budget — the corpus has $n rows",
+      "Use the bucketed scale paths (ann_lsh_bucket / ann_lsh_multiprobe / " +
+        "ann_ivf / dedup_semantic)",
+      "the exact baseline")
   }
 
-  // All-pairs envelope (the skew10 full-suite catch, r15): the row fence
-  // above is the right guard for the per-QUERY full scans (cost = queries·n,
-  // linear in the corpus), but an ALL-PAIRS baseline costs n²/2 — at the 1M
-  // row budget that is 5·10¹¹ dot products launched quietly. Measured on
-  // this machine: 2·10⁸ pairs ≈ 6 s (skew1, 20 k vectors), 2·10¹⁰ pairs =
-  // 1001 s (skew10, 200 k vectors) — two decades of data, two decades of
-  // wall per decade. The budget is therefore on PAIRS, not rows: the 2³⁰
-  // default admits every GRADED corpus the linear fences admit (sf0.1
-  // gate 2·10⁶ pairs, skew1 2·10⁸ with 5× headroom) and refuses the
-  // measured skew10 quadratic. It is deliberately TIGHTER than the old
-  // 10⁶-row fence for arbitrary corpora (ADVICE r15): 10⁶ rows is
-  // ~5·10¹¹ pairs, so corpora between ~46 k and 10⁶ vectors that the row
-  // fence would have admitted now refuse here — that admission was the
-  // 1001 s bug, not a capability. Same override contract as the other
-  // fences: `graft.maxBruteForcePairs` (session conf or -D) runs the
-  // exact baseline deliberately.
-  private[graft] def maxBruteForcePairs(s: SparkSession): Long =
-    envelope(s, "graft.maxBruteForcePairs", 1L << 30)
   private def fenceAllPairs(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = maxBruteForcePairs(s)
     val n = corpusCount(s, dir)
     val pairs = n * (n - 1) / 2
-    require(pairs <= budget,
-      s"$name: all-pairs baseline fenced at $budget candidate pairs " +
-        s"(corpus has $n vectors = $pairs pairs — O(n²) dot products). Use " +
-        "the bucketed scale paths (dedup_semantic / dedup_semdedup / " +
-        "ann_lsh_bucket), or raise graft.maxBruteForcePairs to run the " +
-        "exact baseline deliberately.")
+    Fence.check(s, Fence.BruteForcePairs, name, pairs)(
+      s"all-pairs baseline is over its candidate-pair budget — the corpus " +
+        s"has $n vectors = $pairs pairs (O(n²) dot products)",
+      "Use the bucketed scale paths (dedup_semantic / dedup_semdedup / " +
+        "ann_lsh_bucket)",
+      "the exact baseline")
   }
 
-  // Exact-index saturation fence (VERDICT r6 #1): the inverted shingle
-  // index is exact but its self-join work is Σ bucket·(bucket−1)/2 — on a
-  // bounded-vocabulary corpus the distinct-shingle space saturates and
-  // that sum goes super-linear (measured at the sf1 decade: 90× join work
-  // for 10× postings, dragging dedup_components to 9.1×). Corpus SIZE is
-  // the wrong probe — a healthy corpus grows its shingle space with n, so
-  // bucket sizes (and pairs PER DOC) stay flat while total pairs grow
-  // linearly. Pairs-per-doc is therefore scale-free: it trips exactly on
-  // saturation, never on legitimate growth. Measured: 28 at sf0.01, 253
-  // at sf0.1, ~2200 at the saturated sf1 decade — the 1024 default passes
-  // every healthy corpus with 4× headroom and refuses the measured
-  // failure mode. The probe is ONE shingle+groupBy aggregation pass
-  // (cached per session × dir, like corpusCount) — linear cost to refuse
-  // a quadratic join.
-  private val DefaultMaxExactPairsPerDoc = 1024L
-  private[graft] def maxExactPairsPerDoc(s: SparkSession): Long =
-    envelope(s, "graft.maxExactPairsPerDoc", DefaultMaxExactPairsPerDoc)
+  // Exact-index saturation fence (VERDICT r6 #1): the self-join work
+  // Σ bucket·(bucket−1)/2 per doc, probed by ONE shingle+groupBy pass
+  // (cached per session × dir) — linear cost to refuse a quadratic join.
   /** (docs, Σ per-shingle-bucket candidate pairs) for the exact index —
     * two memo keys, one lazy pass (the [[minhashBandStats]] pattern). */
   private[graft] def exactIndexStats(s: SparkSession, dir: String): (Long, Long) = {
@@ -252,38 +199,19 @@ object SimilarityQueries {
       ProbeCache.cached(s, s"exactIndexPairWork#$dir")(computed._2))
   }
   private def fenceExactIndex(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = maxExactPairsPerDoc(s)
     val (docs, pairWork) = exactIndexStats(s, dir)
-    // exact at the boundary (ADVICE r16): mass vs scaled budget
-    val perDoc = if (docs == 0) 0.0 else pairWork.toDouble / docs
-    require(pairWork <= budget * docs,
-      f"$name: exact shingle index is saturated — $pairWork candidate pairs " +
-        f"for $docs docs ($perDoc%.2f/doc, budget $budget/doc). A bounded " +
-        "shingle vocabulary makes this join quadratic in postings per " +
+    Fence.check(s, Fence.ExactPairsPerDoc, name, pairWork, per = docs, unit = "doc")(
+      s"exact shingle index is saturated — $pairWork candidate pairs for $docs docs",
+      "A bounded shingle vocabulary makes this join quadratic in postings per " +
         "bucket; use the minhash-banded scale paths (dedup_minhash_lsh / " +
-        "dedup_components_lsh / dedup_keep_best_lsh), or raise " +
-        "graft.maxExactPairsPerDoc to run the exact baseline deliberately.")
+        "dedup_components_lsh / dedup_keep_best_lsh)",
+      "the exact baseline")
   }
 
-  // SimHash saturation fence (VERDICT r9 → r10 #1): the fused pair probes
-  // measured the simhash band join QUADRATIC at the sf1 decade — 97 →
-  // 941 candidate pairs/doc for 10× docs — and the hamming ≤ 3 OUTPUT
-  // itself grew 8×/doc, so no algorithm answers the saturated corpus in
-  // linear time. The cause is corpus saturation, not banding width: the
-  // pigeonhole construction is pinned at 4 bands for radius 3 (more
-  // bands would lose exactness) and 2^15 buckets/band is plenty — it's
-  // the bounded 31-word vocabulary that collapses fingerprint DIVERSITY,
-  // piling documents onto identical band values. Same probe discipline
-  // as [[fenceExactIndex]]: measured candidate density per doc (one
-  // cached aggregation pass — Σ c(c−1)/2 over band buckets, exactly what
-  // the join would emit), trips only on saturation, never on legitimate
-  // growth (a vocabulary-growing corpus keeps band values spread; the
-  // driver sf0.1 measures 97/doc vs the 512 default). Production paths
-  // on a saturated corpus: dedup_minhash_lsh (flat 0.09 pairs/doc at the
-  // same decade) and the banded Jaccard family.
-  private val DefaultMaxSimhashPairsPerDoc = 512L
-  private[graft] def maxSimhashPairsPerDoc(s: SparkSession): Long =
-    envelope(s, "graft.maxSimhashPairsPerDoc", DefaultMaxSimhashPairsPerDoc)
+  // SimHash saturation fence (VERDICT r9 → r10 #1): the hamming ≤ 3
+  // OUTPUT itself is quadratic on a saturated corpus. Same probe
+  // discipline as [[fenceExactIndex]]: Σ c(c−1)/2 over band buckets per
+  // doc, exactly what the join would emit, one cached pass.
   /** (docs, Σ per-band-bucket candidate pairs) for the simhash band join. */
   private[graft] def simhashIndexStats(s: SparkSession, dir: String): (Long, Long) =
     (docCount(s, dir), ProbeCache.cached(s, s"simhashPairWork#$dir") {
@@ -293,18 +221,13 @@ object SimilarityQueries {
         .head().getLong(0)
     })
   private def fenceSimhash(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = maxSimhashPairsPerDoc(s)
     val (docs, pairWork) = simhashIndexStats(s, dir)
-    // exact at the boundary (ADVICE r16): mass vs scaled budget
-    val perDoc = if (docs == 0) 0.0 else pairWork.toDouble / docs
-    require(pairWork <= budget * docs,
-      f"$name: simhash band index is saturated — $pairWork candidate pairs " +
-        f"for $docs docs ($perDoc%.2f/doc, budget $budget/doc). A bounded " +
-        "vocabulary collapses fingerprint diversity, making the 4-band " +
-        "pigeonhole join (and the true hamming<=3 pair set itself) " +
-        "quadratic; use the minhash-banded scale paths (dedup_minhash_lsh " +
-        "/ dedup_components_lsh), or raise graft.maxSimhashPairsPerDoc " +
-        "to run the exact-radius join deliberately.")
+    Fence.check(s, Fence.SimhashPairsPerDoc, name, pairWork, per = docs, unit = "doc")(
+      s"simhash band index is saturated — $pairWork candidate pairs for $docs docs",
+      "A bounded vocabulary collapses fingerprint diversity, making the 4-band " +
+        "pigeonhole join (and the true hamming<=3 pair set itself) quadratic; " +
+        "use the minhash-banded scale paths (dedup_minhash_lsh / dedup_components_lsh)",
+      "the exact-radius join")
   }
 
   def queries: Map[String, Q] = Map(
@@ -570,23 +493,10 @@ object SimilarityQueries {
       .filter($"jaccard" >= JaccardT)
   }
 
-  // Band-join saturation fence (VERDICT r15 #1): the banded stream was the
-  // last exact family without mass governance. On every graded corpus the
-  // mass is flat (see above) and this fence never trips; it exists for the
-  // corpus class the synthetics can't produce — duplicate-saturated crawls
-  // where one band value collects a data-proportional bucket and the
-  // self-join goes quadratic. Same per-doc density discipline as
-  // fenceSimhash/fenceExactIndex: Σ c(c−1)/2 over band buckets per doc is
-  // scale-free — it trips on saturation, never on legitimate growth. The
-  // probe is one banding+aggregation pass, memoized per session × dir
-  // ([[ProbeCache]]); the 64 default clears the measured graded densities
-  // (0.09/doc) by ~700× and refuses a corpus whose hot buckets carry
-  // data-proportional pair work. Escape hatch: the hot-band-capped twin
-  // (dedup_minhash_lsh_capped / dedup_components_lsh_capped), or raise
-  // graft.maxBandPairsPerDoc to run the exact band join deliberately.
-  private val DefaultMaxBandPairsPerDoc = 64L
-  private[graft] def maxBandPairsPerDoc(s: SparkSession): Long =
-    envelope(s, "graft.maxBandPairsPerDoc", DefaultMaxBandPairsPerDoc)
+  // Band-join saturation fence (VERDICT r15 #1): never trips on the graded
+  // corpora; it refuses duplicate-saturated crawls. Same per-doc density
+  // discipline as fenceSimhash/fenceExactIndex, one banding+aggregation
+  // pass memoized per session × dir ([[ProbeCache]]).
   /** (Σ per-band-bucket candidate pairs, max bucket size) for the minhash
     * band join — ONE banding+aggregation pass fills both memo keys. The
     * pair mass feeds [[fenceBandJoin]]; the max bucket is the capped
@@ -615,20 +525,15 @@ object SimilarityQueries {
   private[graft] def minhashBandWork(s: SparkSession, dir: String): Long =
     minhashBandStats(s, dir)._1
   private def fenceBandJoin(name: String, s: SparkSession, dir: String): Unit = {
-    val budget = maxBandPairsPerDoc(s)
     val docs = docCount(s, dir)
     val work = minhashBandWork(s, dir)
-    // exact at the boundary (ADVICE r16, same class as fenceStreamJoin):
-    // mass vs scaled budget, not a truncating integer division
-    val perDoc = if (docs == 0) 0.0 else work.toDouble / docs
-    require(work <= budget * docs,
-      f"$name: minhash band index is saturated — $work candidate pairs for " +
-        f"$docs docs ($perDoc%.2f/doc, budget $budget/doc). Hot band buckets " +
-        "carry data-proportional pair work, making the band self-join " +
-        "quadratic; use the hot-band-capped twins (dedup_minhash_lsh_capped " +
-        "/ dedup_components_lsh_capped — identical output wherever every " +
-        "bucket is under the cap, measured recall where not), or raise " +
-        "graft.maxBandPairsPerDoc to run the exact band join deliberately.")
+    Fence.check(s, Fence.BandPairsPerDoc, name, work, per = docs, unit = "doc")(
+      s"minhash band index is saturated — $work candidate pairs for $docs docs",
+      "Hot band buckets carry data-proportional pair work, making the band " +
+        "self-join quadratic; use the hot-band-capped twins " +
+        "(dedup_minhash_lsh_capped / dedup_components_lsh_capped — identical " +
+        "output wherever every bucket is under the cap, measured recall where not)",
+      "the exact band join")
   }
 
   /** MinHash-banded candidates verified by exact Jaccard — the TEXT pair
@@ -1088,6 +993,29 @@ object SimilarityQueries {
       id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     transform(c.cast("array<double>"), e => e * (lit(1) + pmod(id, lit(7))))
 
+  /** The MIPS rungs' shared grade: the rung's candidates (queries `q`
+    * (query_id, qe, bucket) joined to corpus rows `n` (neighbor_id, ne,
+    * bucket)) ranked by the raw dot to a top-3, left-joined from the
+    * exact truth — the full-scan scaled-dot top-3 of the first 50 vectors
+    * of `emb` (vec_id, sv), the fenced O(n·q) baseline — as hits@3 per
+    * query. */
+  private def mipsHitsAt3(emb: DataFrame, q: DataFrame, n: DataFrame): DataFrame = {
+    import emb.sparkSession.implicits._
+    val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
+      .filter($"query_id" =!= $"neighbor_id")
+      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
+    val truth = top3ByCos(broadcast(emb.filter($"vec_id" < 50)
+        .select($"vec_id".as("query_id"), $"sv".as("qe")))
+      .join(emb.select($"vec_id".as("neighbor_id"), $"sv".as("ne")),
+        $"query_id" =!= $"neighbor_id")
+      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
+    truth.join(approx.withColumn("hit", lit(1)),
+        Seq("query_id", "neighbor_id"), "left")
+      .groupBy($"query_id")
+      .agg(sum(coalesce($"hit", lit(0))).as("hits_at_3"))
+      .orderBy($"query_id")
+  }
+
   /** MIPS recall rung — retrieval by raw INNER PRODUCT (what a retrieval
     * stack maximizes when embeddings are unnormalized: dot = cosine ×
     * norm, so high-norm documents should outrank same-direction low-norm
@@ -1107,22 +1035,10 @@ object SimilarityQueries {
     val emb = spread(Tables(s, dir, "embeddings")).select($"vec_id",
       scaledEmb($"embedding", $"vec_id").as("sv"),
       Vectors.hyperplaneBucket($"embedding", EmbDim, bits, LshSeed).as("bucket"))
-    val q0 = emb.filter($"vec_id" < 50)
-    val q = q0.select($"vec_id".as("query_id"), $"sv".as("qe"),
+    val q = emb.filter($"vec_id" < 50).select($"vec_id".as("query_id"), $"sv".as("qe"),
       probeRing($"bucket", bits, 1).as("bucket"))
     val n = emb.select($"vec_id".as("neighbor_id"), $"sv".as("ne"), $"bucket")
-    val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
-    val truth = top3ByCos(broadcast(q0.select($"vec_id".as("query_id"), $"sv".as("qe")))
-      .join(emb.select($"vec_id".as("neighbor_id"), $"sv".as("ne")),
-        $"query_id" =!= $"neighbor_id")
-      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
-    truth.join(approx.withColumn("hit", lit(1)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0))).as("hits_at_3"))
-      .orderBy($"query_id")
+    mipsHitsAt3(emb.select($"vec_id", $"sv"), q, n)
   }
 
   /** The MIPS FIX — the asymmetric augmented-vector reduction (Shrivastava
@@ -1167,20 +1083,7 @@ object SimilarityQueries {
       .withColumn("qb", bucketOf(qAug))
       .select($"vec_id".as("query_id"), $"sv".as("qe"),
         probeRing($"qb", bits, 1).as("bucket"))
-    val approx = top3ByCos(broadcast(q).join(n, Seq("bucket"))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
-    val emb = base.select($"vec_id", $"sv")
-    val truth = top3ByCos(broadcast(emb.filter($"vec_id" < 50)
-        .select($"vec_id".as("query_id"), $"sv".as("qe")))
-      .join(emb.select($"vec_id".as("neighbor_id"), $"sv".as("ne")),
-        $"query_id" =!= $"neighbor_id")
-      .select($"query_id", Vectors.dot($"qe", $"ne").as("cos"), $"neighbor_id"))
-    truth.join(approx.withColumn("hit", lit(1)),
-        Seq("query_id", "neighbor_id"), "left")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0))).as("hits_at_3"))
-      .orderBy($"query_id")
+    mipsHitsAt3(base.select($"vec_id", $"sv"), q, n)
   }
 
   /** FILTERED vector search — the serving-layer composition a production

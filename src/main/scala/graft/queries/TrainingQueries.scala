@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Fence, Tables}
 import graft.functions.{Text, Vectors}
 
 /** Training-data-pipeline pack over `documents` — the corpus-preparation
@@ -151,15 +151,13 @@ object TrainingQueries {
   // On a healthy corpus the shingle space grows with n, buckets stay
   // flat, and that sum is linear in the benchmark postings; on the
   // bounded-vocabulary skew corpora it saturates and the sum goes
-  // quadratic — measured on THIS key: skew1 1.9 s → skew10 73 s (39×/
-  // decade; the chunk-level key 64×), while every linear key stayed ~10×.
+  // quadratic (measured beside [[graft.Fence.DecontamJoinRows]]).
   // The probe is one signature-grain aggregation over the doc-grain
   // shingle index (linear, cached per session × dir like the dedup
   // probes); the chunk key's true mass is the same sum at chunk grain —
   // a fixed small multiple (ChunkW/ChunkStride window overlap), so both
   // keys share the probe and the budget. Past the budget the exact keys
-  // refuse loudly, naming the bounded rare-shingle twins; run the exact
-  // join deliberately with `graft.maxDecontamJoinRows`.
+  // refuse loudly, naming the bounded rare-shingle twins.
   private[graft] def deconJoinWork(s: SparkSession, dir: String): Long =
     ProbeCache.cached(s, s"deconJoinWork#$dir") {
       import s.implicits._
@@ -177,20 +175,20 @@ object TrainingQueries {
   // ChunkStride chunks and the candidate mass scales by roughly that
   // overlap factor squared (ADVICE r15). `massScaleNum/Den` lets the
   // chunk key compare work·(W/S)² against the SAME shared budget instead
-  // of silently admitting a join a constant factor over it.
+  // of silently admitting a join a constant factor over it, compared
+  // exactly by [[graft.Fence.admits]].
   private def fenceDecontam(name: String, s: SparkSession, dir: String,
       massScaleNum: Long = 1L, massScaleDen: Long = 1L): Unit = {
-    val budget =
-      SimilarityQueries.envelope(s, "graft.maxDecontamJoinRows", 1L << 24)
-    val work = deconJoinWork(s, dir) * massScaleNum / massScaleDen
-    require(work <= budget,
-      s"$name: exact decontamination join is fenced at $budget candidate " +
-        s"rows (this corpus' shingle index yields $work — a saturated " +
-        "shingle space makes the join quadratic in corpus size). Use the " +
-        "bounded rare-shingle twins (text_decontaminate_rare / " +
+    val work = deconJoinWork(s, dir)
+    Fence.check(s, Fence.DecontamJoinRows, name, work,
+        num = massScaleNum, den = massScaleDen)(
+      s"exact decontamination join is over its candidate-row budget — this " +
+        s"corpus' shingle index yields $work × $massScaleNum/$massScaleDen " +
+        "(a saturated shingle space makes the join quadratic in corpus size)",
+      "Use the bounded rare-shingle twins (text_decontaminate_rare / " +
         "text_chunk_decontaminate_rare — common shingles carry no " +
-        "contamination signal), or raise graft.maxDecontamJoinRows to run " +
-        "the exact join deliberately.")
+        "contamination signal)",
+      "the exact join")
   }
   /** Corpus document-frequency cap defining a "rare" (signal-bearing)
     * shingle for the `_rare` twins: a shingle held by more than this many

@@ -63,11 +63,4 @@ class StateWidthSpec extends SparkSpec {
     val rows = queries.PipelineQueries.queries("a_median")(spark, sfDir).collect()
     assert(rows.nonEmpty)
   }
-
-  test("streamStateWidth override pins an explicit width for ladder runs") {
-    val s2 = spark.newSession()
-    s2.conf.set("graft.streamStateWidth", "16")
-    assert(queries.SimilarityQueries.envelope(s2, "graft.streamStateWidth",
-      999L) == 16L)
-  }
 }

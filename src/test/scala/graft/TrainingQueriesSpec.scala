@@ -92,6 +92,32 @@ class TrainingQueriesSpec extends SparkSpec {
     assert(run("text_decontaminate").count() > 0)
   }
 
+  test("decontamination fence is exact at the chunk key's scaled boundary") {
+    // the chunk key compares work·(W/S)² = work·1024/576 with the budget;
+    // a budget of ⌊work·1024/576⌋ sits just under the scaled mass and
+    // must refuse (truncating the scaled mass first admitted it). The
+    // sf corpus' work (486) is a multiple of 9, putting the scaled mass on
+    // an integer, so the fixture is one benchmark doc (doc_id 0) whose
+    // single 3-gram ten training docs share: work = 10·1, scaled 17.78.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("decon_boundary").toString
+    (0L to 10L).map(_ -> "alpha beta gamma").toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val w = TrainingQueries.deconJoinWork(spark, dir)
+    assert(w * 1024 % 576 != 0, s"work $w puts the scaled mass on an integer")
+    val floor = w * 1024 / 576
+    val under = spark.newSession()
+    under.conf.set("graft.maxDecontamJoinRows", floor.toString)
+    val e = intercept[IllegalArgumentException](
+      TrainingQueries.queries("text_chunk_decontaminate")(under, dir))
+    assert(e.getMessage.contains("graft.maxDecontamJoinRows"), e.getMessage)
+    // one more unit covers the scaled mass and builds
+    val over = spark.newSession()
+    over.conf.set("graft.maxDecontamJoinRows", (floor + 1).toString)
+    assert(TrainingQueries.queries("text_chunk_decontaminate")(over, dir)
+      .columns.contains("n_shared"))
+  }
+
   test("sample_stratified: buckets respect per-language rates, deterministic") {
     val df = run("sample_stratified")
     val bad = df.filter(col("bucket") >=
