@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import java.security.MessageDigest
+
+import org.apache.spark.sql.{Column, GraftExprBridge}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,21 +18,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * Each expression here consumes the token/shingle hash array ONCE and
   * computes the whole sketch in one compiled loop.
   *
-  * Every expression implements `doGenCode` (VERDICT r3 "what's wrong" #2),
-  * so the projection around a sketch stays inside ONE WholeStageCodegen
-  * span. The two numeric sketches inline their loops into the generated
-  * Java; the two string-builder sketches dispatch to their compiled Scala
-  * eval through a plan reference object — still codegen (no
-  * CodegenFallback row-at-a-time boundary), one virtual call per row.
-  */
+  * Each expression's per-row algorithm is one static method of this
+  * object, which `nullSafeEval` calls directly and `doGenCode` calls
+  * through [[call]] (the form of [[MediaHeaderExpr]]): the projection stays
+  * in ONE WholeStageCodegen span, primitive results stay unboxed, and the
+  * two evaluation modes cannot drift apart. */
 object HashSketch {
   /** The 60-bit md5 hash used everywhere, computed driver-side (for
     * constants like LSH planes and permutation coefficients). Matches
     * [[Vectors.hash60]] / `CAST(CONCAT('0x', SUBSTR(md5(x),1,15)) AS
     * BIGINT)` exactly. */
-  def hash60(s: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
+  def hash60(s: String): Long = hash60(MessageDigest.getInstance("MD5"), s)
+
+  /** [[hash60]] with a caller-held digest, shared by the elements of a row. */
+  private def hash60(md: MessageDigest, s: String): Long = {
+    md.reset()
+    val d = md.digest(s.getBytes("UTF-8"))
     java.lang.Long.parseLong(d.take(8).map("%02x".format(_)).mkString.take(15), 16)
   }
 
@@ -72,49 +74,23 @@ object HashSketch {
     * mapped to [-1, 1]. */
   def plane(dim: Int, seed: Int): Array[Double] =
     Array.tabulate(dim)(i => (hash60(s"${seed}_$i") % 2000001L).toDouble / 1000000.0 - 1.0)
-}
 
-/** Frequency-weighted SimHash from an `array<long>` of token hashes:
-  * bit j = sign of Σ_tokens (bit j of hash ? +1 : -1). One pass.
-  *
-  * `bits` must not exceed the entropy of the token-hash family (60 for
-  * [[HashSketch.hash60]]) — a wider output would carry constant bits that
-  * halve every band's effective bucket count without adding selectivity. */
-case class SimHashExpr(child: Expression, bits: Int)
-    extends UnaryExpression {
-  require(bits > 0 && bits <= 60, s"simhash width must be in 1..60, got $bits")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash"
+  /** Generated-code call of the kernel `method` below: the child values
+    * `inputs`, then the expression's `constants` — an `Int` inline, any
+    * other constant passed once by reference. */
+  private[functions] def call(ctx: CodegenContext, method: String, constants: Any*)(
+      inputs: String*): String = {
+    val args = inputs ++ constants.map {
+      case i: Int => i.toString
+      case o => ctx.addReferenceObj("kernelConst", o, CodeGenerator.typeName(o.getClass))
+    }
+    s"${getClass.getName.stripSuffix("$")}.$method(${args.mkString(", ")})"
+  }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val w = ctx.freshName("w")
-      val h = ctx.freshName("h")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      s"""
-         |int $n = $x.numElements();
-         |int[] $w = new int[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i)) {
-         |    long $h = $x.getLong($i);
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      $w[$j] += ((($h >> $j) & 1L) == 1L) ? 1 : -1;
-         |    }
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  if ($w[$j] >= 0) $out |= (1L << $j);
-         |}
-         |${ev.value} = $out;
-         |""".stripMargin
-    })
+  // ---- per-row kernels, one per expression --------------------------------
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  /** [[SimHashExpr]]: bit j = sign of Σ over non-null hashes of ±1. */
+  def simhash(hs: ArrayData, bits: Int): Long = {
     val n = hs.numElements()
     val weights = new Array[Int](bits)
     var i = 0
@@ -138,35 +114,11 @@ case class SimHashExpr(child: Expression, bits: Int)
     out
   }
 
-  override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
-}
-
-/** MinHash LSH band keys from an `array<long>` of shingle hashes.
-  *
-  * Universal-hash family instead of per-permutation md5 re-hashing: each
-  * shingle is md5-hashed ONCE upstream; permutation p maps it through
-  * (a_p · (h mod P) + b_p) mod P. One pass computes all `perms` minima,
-  * then emits `bands` keys "b:min_min_min_min". */
-case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
-    extends UnaryExpression {
-  require(perms % bands == 0, "perms must divide into bands")
-  private val rowsPerBand = perms / bands
-  @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "minhash_band_keys"
-
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("minhashExpr", this, classOf[MinHashBandKeysExpr].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($x);"
-    })
-
-  override def nullSafeEval(input: Any): Any = {
-    val mins = HashSketch.minhashMins(input.asInstanceOf[ArrayData], as, bs)
+  /** [[MinHashBandKeysExpr]]: `bands` keys "b:min_..._min" over the minima. */
+  def minhashBandKeys(hs: ArrayData, as: Array[Long], bs: Array[Long],
+      bands: Int): ArrayData = {
+    val mins = minhashMins(hs, as, bs)
+    val rowsPerBand = mins.length / bands
     val out = new Array[AnyRef](bands)
     var b = 0
     while (b < bands) {
@@ -184,64 +136,12 @@ case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
     new GenericArrayData(out)
   }
 
-  override protected def withNewChildInternal(c: Expression): MinHashBandKeysExpr =
-    copy(child = c)
-}
+  /** [[MinHashSigExpr]]: the minima themselves. */
+  def minhashSig(hs: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData =
+    new GenericArrayData(minhashMins(hs, as, bs))
 
-/** Full MinHash signature (the per-permutation minima as `array<long>`)
-  * from an `array<long>` of shingle hashes — the same
-  * [[HashSketch.minhashMins]] as [[MinHashBandKeysExpr]], without the
-  * band formatting. Used where the signature itself is the output (the
-  * estimation-accuracy rung compares signature positions pairwise). */
-case class MinHashSigExpr(child: Expression, perms: Int)
-    extends UnaryExpression {
-  @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("minhashSigExpr", this, classOf[MinHashSigExpr].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($x);"
-    })
-
-  override def nullSafeEval(input: Any): Any =
-    new GenericArrayData(HashSketch.minhashMins(input.asInstanceOf[ArrayData], as, bs))
-
-  override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
-    copy(child = c)
-}
-
-/** Count of positions where two `array<long>` columns hold equal values
-  * (up to the shorter length) — the signature-agreement counter for the
-  * MinHash estimation rung. The composable form (`aggregate(zip_with(
-  * ...))`) runs an interpreted lambda per element and breaks the stage
-  * out of whole-stage codegen; this inlines one compiled loop. */
-case class ArrayEqCountExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "array_eq_count"
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      s"""int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int ${ev.value}_c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)
-         |      && $a.getLong($i) == $b.getLong($i)) ${ev.value}_c++;
-         |}
-         |${ev.value} = ${ev.value}_c;""".stripMargin
-    })
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** [[ArrayEqCountExpr]]: equal non-null positions up to the shorter length. */
+  def arrayEqCount(x: ArrayData, y: ArrayData): Int = {
     val n = math.min(x.numElements(), y.numElements())
     var c = 0
     var i = 0
@@ -252,41 +152,8 @@ case class ArrayEqCountExpr(left: Expression, right: Expression)
     c
   }
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ArrayEqCountExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Distinct word n-gram shingles from an `array<string>` token column, in
-  * one compiled pass.
-  *
-  * The composable form — `transform(sequence(0, size(toks)-n), i =>
-  * array_join(slice(toks, i+1, n), ' '))` — holds the TOKEN subtree inside
-  * the lambda body while iterating a `sequence`, so the upstream
-  * split/regex pipeline re-evaluates once per shingle POSITION per row
-  * (measured: minutes over 5k docs). Here tokens evaluate once; shingles
-  * build off a materialized array with first-occurrence dedup (same order
-  * `array_distinct` yields).
-  *
-  * For token arrays shorter than n: one shingle = the whole joined text
-  * (so every non-empty doc has ≥ 1 shingle). */
-case class ShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression {
-  require(n >= 1, "shingle size must be >= 1")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingle_set"
-
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("shingleExpr", this, classOf[ShingleSetExpr].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($x);"
-    })
-
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
+  /** [[ShingleSetExpr]]: distinct n-gram shingles, first occurrence first. */
+  def shingleSet(toks: ArrayData, n: Int): ArrayData = {
     val m = toks.numElements()
     def tok(i: Int): String =
       if (toks.isNullAt(i)) "" else toks.getUTF8String(i).toString
@@ -313,6 +180,167 @@ case class ShingleSetExpr(child: Expression, n: Int)
     new GenericArrayData(out)
   }
 
+  /** [[ArrayHash60Expr]]: hash60(prefix + element); null stays null. */
+  def arrayHash60(arr: ArrayData, prefix: String): ArrayData = {
+    val n = arr.numElements()
+    val md = MessageDigest.getInstance("MD5")
+    val out = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i)) out(i) = hash60(md, prefix + arr.getUTF8String(i).toString)
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** [[RollingHash60Expr]]: the left fold; boxed, as a null token nulls it. */
+  def rollingHash60(toks: ArrayData): java.lang.Long = {
+    val n = toks.numElements()
+    val md = MessageDigest.getInstance("MD5")
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      if (toks.isNullAt(i)) return null
+      val h = hash60(md, toks.getUTF8String(i).toString) % 1000000L
+      acc = (acc * 31 + h) % MinHashPrime
+      i += 1
+    }
+    acc
+  }
+
+  /** [[CountInSetExpr]]: occurrences of members of `set`. */
+  def countInSet(arr: ArrayData, set: java.util.Set[String]): Int = {
+    val n = arr.numElements()
+    var c = 0
+    var i = 0
+    while (i < n) {
+      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i).toString)) c += 1
+      i += 1
+    }
+    c
+  }
+
+  /** [[FloatDotWeightsExpr]]: Σ (double) v[i] · w[i] over non-null v[i]. */
+  def floatDotWeights(v: ArrayData, w: Array[Double]): Double = {
+    val n = math.min(v.numElements(), w.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (!v.isNullAt(i)) s += v.getFloat(i).toDouble * w(i)
+      i += 1
+    }
+    s
+  }
+}
+
+/** Frequency-weighted SimHash from an `array<long>` of token hashes:
+  * bit j = sign of Σ_tokens (bit j of hash ? +1 : -1). One pass.
+  *
+  * `bits` must not exceed the entropy of the token-hash family (60 for
+  * [[HashSketch.hash60]]) — a wider output would carry constant bits that
+  * halve every band's effective bucket count without adding selectivity. */
+case class SimHashExpr(child: Expression, bits: Int)
+    extends UnaryExpression {
+  require(bits > 0 && bits <= 60, s"simhash width must be in 1..60, got $bits")
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash"
+
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.simhash(input.asInstanceOf[ArrayData], bits)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "simhash", bits)(_))
+
+  override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
+}
+
+/** MinHash LSH band keys from an `array<long>` of shingle hashes.
+  *
+  * Universal-hash family instead of per-permutation md5 re-hashing: each
+  * shingle is md5-hashed ONCE upstream; permutation p maps it through
+  * (a_p · (h mod P) + b_p) mod P. One pass computes all `perms` minima,
+  * then emits `bands` keys "b:min_min_min_min". */
+case class MinHashBandKeysExpr(child: Expression, perms: Int, bands: Int)
+    extends UnaryExpression {
+  require(perms % bands == 0, "perms must divide into bands")
+  @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "minhash_band_keys"
+
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.minhashBandKeys(input.asInstanceOf[ArrayData], as, bs, bands)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "minhashBandKeys", as, bs, bands)(_))
+
+  override protected def withNewChildInternal(c: Expression): MinHashBandKeysExpr =
+    copy(child = c)
+}
+
+/** Full MinHash signature (the per-permutation minima as `array<long>`)
+  * from an `array<long>` of shingle hashes — the same
+  * [[HashSketch.minhashMins]] as [[MinHashBandKeysExpr]], without the
+  * band formatting. Used where the signature itself is the output (the
+  * estimation-accuracy rung compares signature positions pairwise). */
+case class MinHashSigExpr(child: Expression, perms: Int)
+    extends UnaryExpression {
+  @transient private lazy val (as, bs) = HashSketch.permCoefficients(perms)
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash_sig"
+
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.minhashSig(input.asInstanceOf[ArrayData], as, bs)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "minhashSig", as, bs)(_))
+
+  override protected def withNewChildInternal(c: Expression): MinHashSigExpr =
+    copy(child = c)
+}
+
+/** Count of positions where two `array<long>` columns hold equal values
+  * (up to the shorter length) — the signature-agreement counter for the
+  * MinHash estimation rung. The composable form (`aggregate(zip_with(
+  * ...))`) runs an interpreted lambda per element and breaks the stage
+  * out of whole-stage codegen; this is one compiled loop. */
+case class ArrayEqCountExpr(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "array_eq_count"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    HashSketch.arrayEqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "arrayEqCount")(_, _))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): ArrayEqCountExpr =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Distinct word n-gram shingles from an `array<string>` token column, in
+  * one compiled pass.
+  *
+  * The composable form — `transform(sequence(0, size(toks)-n), i =>
+  * array_join(slice(toks, i+1, n), ' '))` — holds the TOKEN subtree inside
+  * the lambda body while iterating a `sequence`, so the upstream
+  * split/regex pipeline re-evaluates once per shingle POSITION per row
+  * (measured: minutes over 5k docs). Here tokens evaluate once; shingles
+  * build off a materialized array with first-occurrence dedup (same order
+  * `array_distinct` yields).
+  *
+  * For token arrays shorter than n: one shingle = the whole joined text
+  * (so every non-empty doc has ≥ 1 shingle). */
+case class ShingleSetExpr(child: Expression, n: Int)
+    extends UnaryExpression {
+  require(n >= 1, "shingle size must be >= 1")
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "shingle_set"
+
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.shingleSet(input.asInstanceOf[ArrayData], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "shingleSet", n)(_))
+
   override protected def withNewChildInternal(c: Expression): ShingleSetExpr =
     copy(child = c)
 }
@@ -322,7 +350,7 @@ case class ShingleSetExpr(child: Expression, n: Int)
   *
   * The HOF version runs an INTERPRETED lambda per element (and drags the
   * whole projection out of whole-stage codegen); this is one compiled loop
-  * sharing a single MessageDigest per row batch. Bit-identical to
+  * sharing a single MessageDigest per row. Bit-identical to
   * `CAST(CONV(SUBSTR(MD5(prefix||t),1,15),16,10) AS BIGINT)` — the
   * [[Vectors.hash60]] / DuckDB-oracle form. Null elements map to null. */
 case class ArrayHash60Expr(child: Expression, prefix: String)
@@ -330,32 +358,10 @@ case class ArrayHash60Expr(child: Expression, prefix: String)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "array_hash60"
 
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.arrayHash60(input.asInstanceOf[ArrayData], prefix)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("arrayHash60", this, classOf[ArrayHash60Expr].getName)
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($x);"
-    })
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        md.reset()
-        val d = md.digest((prefix + arr.getUTF8String(i).toString).getBytes("UTF-8"))
-        out(i) = java.lang.Long.parseLong(
-          d.take(8).map("%02x".format(_)).mkString.take(15), 16)
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "arrayHash60", prefix)(_))
 
   override protected def withNewChildInternal(c: Expression): ArrayHash60Expr =
     copy(child = c)
@@ -375,35 +381,15 @@ case class RollingHash60Expr(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "rolling_hash60"
 
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.rollingHash60(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("rollingHash", this, classOf[RollingHash60Expr].getName)
-      s"""
-         |Object r = $ref.compute($x);
-         |if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = ((Long) r).longValue(); }
+      val r = ctx.freshName("r")
+      s"""java.lang.Long $r = ${HashSketch.call(ctx, "rollingHash60")(x)};
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
          |""".stripMargin
     })
-
-  override def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val md = java.security.MessageDigest.getInstance("MD5")
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      if (toks.isNullAt(i)) return null
-      md.reset()
-      val d = md.digest(toks.getUTF8String(i).toString.getBytes("UTF-8"))
-      val h = java.lang.Long.parseLong(
-        d.take(8).map("%02x".format(_)).mkString.take(15), 16) % 1000000L
-      acc = (acc * 31 + h) % HashSketch.MinHashPrime
-      i += 1
-    }
-    acc
-  }
 
   override protected def withNewChildInternal(c: Expression): RollingHash60Expr =
     copy(child = c)
@@ -424,26 +410,10 @@ case class CountInSetExpr(child: Expression, values: Seq[String])
     s
   }
 
-  /** Public seam for generated code (nullSafeEval is protected). */
-  def compute(input: Any): Any = nullSafeEval(input)
-
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.countInSet(input.asInstanceOf[ArrayData], set)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ref = ctx.addReferenceObj("countInSet", this, classOf[CountInSetExpr].getName)
-      s"${ev.value} = ((java.lang.Integer) $ref.compute($x)).intValue();"
-    })
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i).toString)) c += 1
-      i += 1
-    }
-    c
-  }
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "countInSet", set)(_))
 
   override protected def withNewChildInternal(c: Expression): CountInSetExpr =
     copy(child = c)
@@ -457,73 +427,41 @@ case class FloatDotWeightsExpr(child: Expression, weights: Array[Double])
   override def dataType: DataType = DoubleType
   override def prettyName: String = "float_dot_weights"
 
+  override def nullSafeEval(input: Any): Any =
+    HashSketch.floatDotWeights(input.asInstanceOf[ArrayData], weights)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val ws = ctx.addReferenceObj("dotWeights", weights, "double[]")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $ws.length);
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i)) $s += (double) $x.getFloat($i) * $ws[$i];
-         |}
-         |${ev.value} = $s;
-         |""".stripMargin
-    })
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), weights.length)
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!v.isNullAt(i)) s += v.getFloat(i).toDouble * weights(i)
-      i += 1
-    }
-    s
-  }
+    defineCodeGen(ctx, ev, HashSketch.call(ctx, "floatDotWeights", weights)(_))
 
   override protected def withNewChildInternal(c: Expression): FloatDotWeightsExpr =
     copy(child = c)
 }
 
 object HashExpr {
-  def shingleSet(tokens: Column, n: Int): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      ShingleSetExpr(org.apache.spark.sql.GraftExprBridge.expression(tokens), n))
+  /** The column face of the native expression `build` makes over `c`. */
+  private def face(c: Column)(build: Expression => Expression): Column =
+    GraftExprBridge.column(build(GraftExprBridge.expression(c)))
 
-  def simhash(tokenHashes: Column, bits: Int): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      SimHashExpr(org.apache.spark.sql.GraftExprBridge.expression(tokenHashes), bits))
+  def shingleSet(tokens: Column, n: Int): Column = face(tokens)(ShingleSetExpr(_, n))
+
+  def simhash(tokenHashes: Column, bits: Int): Column = face(tokenHashes)(SimHashExpr(_, bits))
 
   def minhashBandKeys(shingleHashes: Column, perms: Int, bands: Int): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      MinHashBandKeysExpr(org.apache.spark.sql.GraftExprBridge.expression(shingleHashes), perms, bands))
+    face(shingleHashes)(MinHashBandKeysExpr(_, perms, bands))
 
   def minhashSig(shingleHashes: Column, perms: Int): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      MinHashSigExpr(org.apache.spark.sql.GraftExprBridge.expression(shingleHashes), perms))
+    face(shingleHashes)(MinHashSigExpr(_, perms))
 
   def arrayEqCount(a: Column, b: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      ArrayEqCountExpr(org.apache.spark.sql.GraftExprBridge.expression(a),
-        org.apache.spark.sql.GraftExprBridge.expression(b)))
+    face(a)(ArrayEqCountExpr(_, GraftExprBridge.expression(b)))
 
   def floatDotWeights(vec: Column, weights: Array[Double]): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      FloatDotWeightsExpr(org.apache.spark.sql.GraftExprBridge.expression(vec), weights))
+    face(vec)(FloatDotWeightsExpr(_, weights))
 
   def arrayHash60(arr: Column, prefix: String = ""): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      ArrayHash60Expr(org.apache.spark.sql.GraftExprBridge.expression(arr), prefix))
+    face(arr)(ArrayHash60Expr(_, prefix))
 
-  def rollingHash60(tokens: Column): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      RollingHash60Expr(org.apache.spark.sql.GraftExprBridge.expression(tokens)))
+  def rollingHash60(tokens: Column): Column = face(tokens)(RollingHash60Expr(_))
 
   def countInSet(arr: Column, values: Seq[String]): Column =
-    org.apache.spark.sql.GraftExprBridge.column(
-      CountInSetExpr(org.apache.spark.sql.GraftExprBridge.expression(arr), values))
+    face(arr)(CountInSetExpr(_, values))
 }

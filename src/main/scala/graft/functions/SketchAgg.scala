@@ -34,101 +34,90 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * This is a [[TypedImperativeAggregate]], Spark's container for
   * aggregation state that has no fixed-width unsafe-row encoding (the
-  * buffer is a string→count map). It still participates in partial
+  * buffer is a key→count map). It still participates in partial
   * aggregation: update runs map-side, serialized ≤k-entry buffers cross
   * the network, merge runs reduce-side — the same partial/final shape as
   * any built-in aggregate.
+  *
+  * The child's type, read at analysis, picks the [[MisraGriesKeys]]: a
+  * bigint child emits `array<bigint>`, any other child `array<string>`.
   */
 case class MisraGriesAgg(
     child: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.HashMap[String, Long]] {
+    extends TypedImperativeAggregate[mutable.Map[Any, Long]] {
 
   require(k > 0, "Misra-Gries capacity k must be positive")
 
+  // an unresolved child has no type yet; the analyzer copies this
+  // aggregate when it resolves the child, so the copy reads it afresh
+  @transient private lazy val keys: MisraGriesKeys =
+    if (child.resolved && child.dataType == LongType) MisraGriesKeys.Longs
+    else MisraGriesKeys.Strings
+
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "misra_gries"
+  override def dataType: DataType = ArrayType(keys.elementType, containsNull = false)
+  override def prettyName: String = keys.prettyName
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty[String, Long]
+  override def createAggregationBuffer(): mutable.Map[Any, Long] = keys.newMap()
 
-  override def update(buffer: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
+  override def update(buffer: mutable.Map[Any, Long],
+      input: InternalRow): mutable.Map[Any, Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val key = v.asInstanceOf[UTF8String].toString
+      val key = keys.fromInput(v)
       buffer.get(key) match {
         case Some(c) => buffer.update(key, c + 1L)
         case None if buffer.size < k => buffer.update(key, 1L)
-        case None =>
-          // classic MG step: a miss with a full table decrements every
-          // counter; zeros free their slots. Amortized O(1): each
-          // decrement pass cancels k+1 prior increments. Mutating a
-          // mutable.HashMap while iterating it is undefined by the
-          // collection contract (even value-only updates), so snapshot
-          // the entries first.
-          val dead = mutable.ArrayBuffer.empty[String]
-          buffer.toArray.foreach { case (kk, c) =>
-            if (c == 1L) dead += kk else buffer.update(kk, c - 1L)
-          }
-          dead.foreach(buffer.remove)
+        // classic MG step: a miss with a full table decrements every
+        // counter; zeros free their slots. Amortized O(1): each
+        // decrement pass cancels k+1 prior increments.
+        case None => decrementAll(buffer, 1L)
       }
     }
     buffer
   }
 
-  override def merge(buffer: mutable.HashMap[String, Long],
-      other: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    other.iterator.foreach { case (kk, c) =>
-      buffer.update(kk, buffer.getOrElse(kk, 0L) + c)
-    }
+  override def merge(buffer: mutable.Map[Any, Long],
+      other: mutable.Map[Any, Long]): mutable.Map[Any, Long] = {
+    other.foreach { case (kk, c) => buffer.update(kk, buffer.getOrElse(kk, 0L) + c) }
     if (buffer.size > k) {
       // subtract the (k+1)-th largest count from everything; at most k
       // strictly-positive counters survive (Mergeable Summaries, §3.1)
       val counts = buffer.valuesIterator.toArray
       java.util.Arrays.sort(counts)
-      val threshold = counts(counts.length - (k + 1))
-      val dead = mutable.ArrayBuffer.empty[String]
-      buffer.toArray.foreach { case (kk, c) =>
-        if (c - threshold <= 0L) dead += kk else buffer.update(kk, c - threshold)
-      }
-      dead.foreach(buffer.remove)
+      decrementAll(buffer, counts(counts.length - (k + 1)))
     }
     buffer
   }
 
-  override def eval(buffer: mutable.HashMap[String, Long]): Any =
-    new GenericArrayData(
-      buffer.keysIterator.toArray.sorted.map(UTF8String.fromString(_)))
+  /** Subtract `by` from every counter, dropping those that reach zero. A
+    * map must not change while iterated, so the keys are snapshotted. */
+  private def decrementAll(buffer: mutable.Map[Any, Long], by: Long): Unit =
+    buffer.keysIterator.toArray[Any].foreach { kk =>
+      val c = buffer(kk)
+      if (c <= by) buffer.remove(kk) else buffer.update(kk, c - by)
+    }
 
-  override def serialize(buffer: mutable.HashMap[String, Long]): Array[Byte] = {
+  override def eval(buffer: mutable.Map[Any, Long]): Any =
+    new GenericArrayData(buffer.keysIterator.toArray[Any].sorted(keys.ordering).map(keys.toOutput))
+
+  override def serialize(buffer: mutable.Map[Any, Long]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)
     out.writeInt(buffer.size)
-    buffer.iterator.foreach { case (kk, c) =>
-      val b = kk.getBytes("UTF-8")
-      out.writeInt(b.length); out.write(b); out.writeLong(c)
-    }
+    buffer.foreach { case (kk, c) => keys.write(out, kk); out.writeLong(c) }
     out.flush()
     bos.toByteArray
   }
 
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
+  override def deserialize(bytes: Array[Byte]): mutable.Map[Any, Long] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = mutable.HashMap.empty[String, Long]
-    var i = 0
-    while (i < n) {
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      m.update(new String(b, "UTF-8"), in.readLong())
-      i += 1
-    }
+    val m = keys.newMap()
+    for (_ <- 0 until in.readInt()) m.update(keys.read(in), in.readLong())
     m
   }
 
@@ -141,125 +130,60 @@ case class MisraGriesAgg(
     copy(child = newChildren.head)
 }
 
-/** [[MisraGriesAgg]] specialised to LONG keys. Same algorithm, same
-  * n/(k+1) superset guarantee, but the buffer is a primitive
-  * `mutable.LongMap` — no UTF8String→String conversion, no string
-  * hashing, ~3× less memory per counter. For composite keys that pack
-  * into 64 bits (e.g. a part-pair as `a<<32|b`) this is the variant to
-  * use: at k=2²⁰ the string form spends most of pass 1 materialising
-  * and hashing java Strings that exist only to name a pair of ints. */
-case class MisraGriesLongAgg(
-    child: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[mutable.LongMap[Long]] {
+/** What [[MisraGriesAgg]] needs to know of its key type: the counter map,
+  * the input-to-key conversion, the output order and element, and the
+  * buffer serde of one key. */
+private[functions] sealed abstract class MisraGriesKeys(
+    val elementType: DataType, val prettyName: String) {
+  def newMap(): mutable.Map[Any, Long]
+  def fromInput(v: Any): Any
+  def ordering: Ordering[Any]
+  def toOutput(key: Any): Any
+  def write(out: DataOutputStream, key: Any): Unit
+  def read(in: DataInputStream): Any
+}
 
-  require(k > 0, "Misra-Gries capacity k must be positive")
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "misra_gries_long"
-
-  override def createAggregationBuffer(): mutable.LongMap[Long] =
-    mutable.LongMap.empty[Long]
-
-  override def update(buffer: mutable.LongMap[Long],
-      input: InternalRow): mutable.LongMap[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = v.asInstanceOf[Long]
-      buffer.get(key) match {
-        case Some(c) => buffer.update(key, c + 1L)
-        case None if buffer.size < k => buffer.update(key, 1L)
-        case None =>
-          // miss with a full table: decrement every counter, zeros free
-          // their slots (amortized O(1) — each pass cancels k+1 prior
-          // increments). LongMap also forbids structural mutation while
-          // iterating; snapshot first.
-          val keys = buffer.keysIterator.toArray
-          var i = 0
-          while (i < keys.length) {
-            val kk = keys(i)
-            val c = buffer(kk)
-            if (c == 1L) buffer.remove(kk) else buffer.update(kk, c - 1L)
-            i += 1
-          }
-      }
+private[functions] object MisraGriesKeys {
+  /** String keys (`text_heavy_hitters`' tokens), held as java Strings. */
+  object Strings extends MisraGriesKeys(StringType, "misra_gries") {
+    def newMap(): mutable.Map[Any, Long] =
+      mutable.HashMap.empty[String, Long].asInstanceOf[mutable.Map[Any, Long]]
+    def fromInput(v: Any): Any = v.asInstanceOf[UTF8String].toString
+    def ordering: Ordering[Any] = Ordering.String.asInstanceOf[Ordering[Any]]
+    def toOutput(key: Any): Any = UTF8String.fromString(key.asInstanceOf[String])
+    def write(out: DataOutputStream, key: Any): Unit = {
+      val b = key.asInstanceOf[String].getBytes("UTF-8")
+      out.writeInt(b.length); out.write(b)
     }
-    buffer
-  }
-
-  override def merge(buffer: mutable.LongMap[Long],
-      other: mutable.LongMap[Long]): mutable.LongMap[Long] = {
-    other.foreach { case (kk, c) =>
-      buffer.update(kk, buffer.getOrElse(kk, 0L) + c)
+    def read(in: DataInputStream): Any = {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      new String(b, "UTF-8")
     }
-    if (buffer.size > k) {
-      // subtract the (k+1)-th largest count; ≤k positive counters survive
-      val counts = buffer.valuesIterator.toArray
-      java.util.Arrays.sort(counts)
-      val threshold = counts(counts.length - (k + 1))
-      val keys = buffer.keysIterator.toArray
-      var i = 0
-      while (i < keys.length) {
-        val kk = keys(i)
-        val c = buffer(kk)
-        if (c - threshold <= 0L) buffer.remove(kk) else buffer.update(kk, c - threshold)
-        i += 1
-      }
-    }
-    buffer
   }
 
-  override def eval(buffer: mutable.LongMap[Long]): Any = {
-    val keys = buffer.keysIterator.toArray
-    java.util.Arrays.sort(keys)
-    new GenericArrayData(keys)
+  /** Long keys, counted in a primitive `mutable.LongMap`: no
+    * UTF8String→String conversion, no string hashing, ~3× less memory per
+    * counter. For composite keys that pack into 64 bits (e.g. a part-pair
+    * as `a<<32|b`) this is the form to use: at k=2²⁰ the string form
+    * spends most of pass 1 materialising and hashing java Strings that
+    * exist only to name a pair of ints. */
+  object Longs extends MisraGriesKeys(LongType, "misra_gries_long") {
+    def newMap(): mutable.Map[Any, Long] =
+      mutable.LongMap.empty[Long].asInstanceOf[mutable.Map[Any, Long]]
+    def fromInput(v: Any): Any = v
+    def ordering: Ordering[Any] = Ordering.Long.asInstanceOf[Ordering[Any]]
+    def toOutput(key: Any): Any = key
+    def write(out: DataOutputStream, key: Any): Unit = out.writeLong(key.asInstanceOf[Long])
+    def read(in: DataInputStream): Any = in.readLong()
   }
-
-  override def serialize(buffer: mutable.LongMap[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buffer.size)
-    buffer.foreach { case (kk, c) => out.writeLong(kk); out.writeLong(c) }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.LongMap[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val m = mutable.LongMap.empty[Long]
-    var i = 0
-    while (i < n) {
-      val kk = in.readLong()
-      m.update(kk, in.readLong())
-      i += 1
-    }
-    m
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): MisraGriesLongAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesLongAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MisraGriesLongAgg =
-    copy(child = newChildren.head)
 }
 
 object SketchAgg {
-  /** Column form: ≤k candidate items (sorted array<string>) containing
-    * every value with frequency > n/(k+1). */
+  /** Column form: ≤k candidate items containing every value with frequency
+    * > n/(k+1), sorted; `array<bigint>` over a bigint column, else
+    * `array<string>`. */
   def misraGries(c: Column, k: Int): Column =
     GraftExprBridge.column(
       MisraGriesAgg(GraftExprBridge.expression(c), k).toAggregateExpression())
-
-  /** Long-keyed variant: ≤k candidates (sorted array<bigint>) with the
-    * same frequency > n/(k+1) superset guarantee. */
-  def misraGriesLong(c: Column, k: Int): Column =
-    GraftExprBridge.column(
-      MisraGriesLongAgg(GraftExprBridge.expression(c), k).toAggregateExpression())
 }

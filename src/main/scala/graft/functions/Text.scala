@@ -31,12 +31,14 @@ object Text {
     * compiled pass ([[RollingHash60Expr]]) — the aggregate/transform HOF
     * form ran an interpreted lambda per token; same left fold, same
     * values, bit-identical in any engine. */
-  def rollingHash(c: Column): Column =
-    HashExpr.rollingHash60(tokens(normalized(c)))
+  def rollingHash(c: Column): Column = HashExpr.rollingHash60(normTokens(c))
 
   /** Canonical text: lowercase, whitespace collapsed. */
   def normalized(c: Column): Column =
     lower(regexp_replace(trim(c), "\\s+", " "))
+
+  /** The whitespace tokens of the canonical text. */
+  def normTokens(c: Column): Column = tokens(normalized(c))
 
   /** Deterministic document fingerprint = md5 of normalized text.
     * Used for exact dedup keys and cheap equality pre-filter. */
@@ -45,8 +47,7 @@ object Text {
   /** Distinct word n-gram shingle set (for Jaccard / MinHash) — one
     * compiled pass ([[ShingleSetExpr]]); tokens shorter than n collapse to
     * a single whole-text shingle. */
-  def shingleSet(c: Column, n: Int): Column =
-    HashExpr.shingleSet(tokens(normalized(c)), n)
+  def shingleSet(c: Column, n: Int): Column = HashExpr.shingleSet(normTokens(c), n)
 
   // ---- minhash / simhash -------------------------------------------------
 
@@ -70,7 +71,7 @@ object Text {
     * the md5-derived token hash, supporting 4×15-bit LSH bands (32k
     * buckets/band) for hamming-≤3 dedup at scale. */
   def simhash60(c: Column): Column =
-    HashExpr.simhash(HashExpr.arrayHash60(tokens(normalized(c)), "simhash|"), 60)
+    HashExpr.simhash(HashExpr.arrayHash60(normTokens(c), "simhash|"), 60)
 
   // ---- language ID -------------------------------------------------------
   // Marker-word heuristic: count distinct marker hits per language over the
@@ -84,8 +85,7 @@ object Text {
 
   def langScore(c: Column, lang: String): Column = {
     val words = markers.toMap.apply(lang)
-    size(array_intersect(array_distinct(tokens(normalized(c))),
-      array(words.map(lit): _*)))
+    size(array_intersect(array_distinct(normTokens(c)), array(words.map(lit): _*)))
   }
 
   /** Predicted language code; ties resolve in declaration order (en first). */
@@ -108,12 +108,11 @@ object Text {
   def punctCount(c: Column): Column =
     length(c) - length(regexp_replace(c, "[.,!?;:]", ""))
 
-  def stopwordCount(c: Column): Column =
-    HashExpr.countInSet(tokens(normalized(c)), stopwords)
+  def stopwordCount(c: Column): Column = HashExpr.countInSet(normTokens(c), stopwords)
 
   /** Mean token length (double; identical IEEE ops on both engines). */
   def avgTokenLen(c: Column): Column = {
-    val toks = tokens(normalized(c))
+    val toks = normTokens(c)
     (length(array_join(toks, "")).cast("double")) / size(toks).cast("double")
   }
 }

@@ -150,7 +150,7 @@ object AnalyticsQueries {
     * text_heavy_hitters:
     *
     * Pass 1 streams the order-width-bounded pair stream through ONE
-    * Misra–Gries aggregate ([[graft.functions.MisraGriesLongAgg]], native
+    * Misra–Gries aggregate ([[graft.functions.SketchAgg.misraGries]], native
     * mergeable TypedImperativeAggregate over the pair packed into one
     * long): each partition ships a ≤K-entry
     * summary, never the pair table. Pass 2 recounts ONLY the candidates —
@@ -224,7 +224,7 @@ object AnalyticsQueries {
     // eager 1-row checkpoint: runs the sketch pass (populating the li
     // cache) and pins the ≤K summary + pair total on the executors
     val summary = orderPairs(li).agg(
-      graft.functions.SketchAgg.misraGriesLong(pairKey, k).as("cand"),
+      graft.functions.SketchAgg.misraGries(pairKey, k).as("cand"),
       count(lit(1)).as("n_pairs")).localCheckpoint()
     val candDf = summary.select(explode($"cand").as("pair_key"))
     val liRecount =

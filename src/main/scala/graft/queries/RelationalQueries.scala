@@ -106,9 +106,6 @@ object RelationalQueries {
   /** Row type for the typed-Dataset demonstration. */
   final case class OrderRow(o_custkey: Long, o_orderstatus: String)
 
-  /** Output-type rule: RESULT columns are never DECIMAL — see [[F.moneySum]]. */
-  private def moneySum(c: org.apache.spark.sql.Column) = F.moneySum(c)
-
   // ---------------------------------------------------------------- q1 ----
   /** A1/A4/A5/A10 + P2 + pushdown filter (ref: fct_sales_by_date.sql:6-17
     * aggregate shapes). */
@@ -118,8 +115,8 @@ object RelationalQueries {
     li.filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
       .groupBy($"l_returnflag", $"l_linestatus")
       .agg(
-        moneySum($"l_quantity").as("sum_qty"),
-        moneySum($"l_extendedprice").as("sum_base_price"),
+        F.moneySum($"l_quantity").as("sum_qty"),
+        F.moneySum($"l_extendedprice").as("sum_base_price"),
         sum(F.money($"l_extendedprice") * (lit(1).cast("decimal(18,2)") - F.money($"l_discount")))
           .cast("double").as("sum_disc_price"),
         (sum(F.money($"l_extendedprice")).cast("double") / count(lit(1))).as("avg_price"),
@@ -361,7 +358,7 @@ object RelationalQueries {
         count(lit(1)).as("n_orders"),
         min($"o_orderdate").as("first_order"),
         max($"o_orderdate").as("last_order"),
-        moneySum($"o_totalprice").as("total_spent"),
+        F.moneySum($"o_totalprice").as("total_spent"),
         (sum(F.money($"o_totalprice")).cast("double") / count(lit(1))).as("avg_order_value"))
       .orderBy($"o_custkey")
   }
@@ -544,7 +541,7 @@ object RelationalQueries {
       .filter($"o_orderdate" > $"wm")
       .groupBy($"o_orderdate".cast("date").as("order_day"))
       .agg(count(lit(1)).as("n_orders"),
-        moneySum($"o_totalprice").as("day_total"))
+        F.moneySum($"o_totalprice").as("day_total"))
       .orderBy($"order_day")
   }
 
@@ -558,7 +555,7 @@ object RelationalQueries {
       .groupBy(window($"ts", "1 day").as("w"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct($"user_id").as("n_users"),
-        moneySum($"value").as("total_value"))
+        F.moneySum($"value").as("total_value"))
       // window() yields TIMESTAMP_LTZ; the source column is NTZ. Cast so the
       // parquet output is not UTC-adjusted (isAdjustedToUTC=false) and
       // engines read back the same naive value (session is UTC).
@@ -672,7 +669,7 @@ object RelationalQueries {
     import s.implicits._
     val agg = eventsStream(s, dir)
       .groupBy(window($"ts", "1 day").as("w"))
-      .agg(count(lit(1)).as("n_events"), moneySum($"value").as("total_value"))
+      .agg(count(lit(1)).as("n_events"), F.moneySum($"value").as("total_value"))
       .select($"w.start".cast("timestamp_ntz").as("day"),
         $"n_events", $"total_value")
     drainToTable(s, agg, "st_stream_parity", "complete").orderBy($"day")

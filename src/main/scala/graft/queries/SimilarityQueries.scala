@@ -353,7 +353,7 @@ object SimilarityQueries {
   private val dedupSubstringRuns: Q = (s, dir) => {
     import s.implicits._
     val toks = spread(Tables(s, dir, "documents"))
-      .select($"doc_id", Text.tokens(Text.normalized($"text")).as("t"))
+      .select($"doc_id", Text.normTokens($"text").as("t"))
     val sh = toks.select($"doc_id",
         posexplode(expr(
           s"transform(sequence(1, greatest(size(t) - ${SubW - 1}, 1)), " +

@@ -41,7 +41,7 @@ object TextQueries {
     * sketch-then-verify plan a 100 TB corpus needs:
     *
     * Pass 1 builds a Misra–Gries k-counter summary per partition
-    * ([[graft.functions.MisraGriesAgg]], a native TypedImperativeAggregate
+    * ([[graft.functions.SketchAgg.misraGries]], a native TypedImperativeAggregate
     * — partial update map-side, one ≤k-entry buffer per partition on the
     * wire, associative merge reduce-side). The summary is a guaranteed
     * SUPERSET of every token with frequency > n/k, but its counts are
@@ -61,7 +61,7 @@ object TextQueries {
   private val textHeavyHitters: Q = (s, dir) => {
     import s.implicits._
     val toks = Tables(s, dir, "documents")
-      .select(explode(Text.tokens(Text.normalized($"text"))).as("tok"))
+      .select(explode(Text.normTokens($"text")).as("tok"))
     // n_total rides the sketch pass (one extra counter in the same
     // aggregate), so the corpus is scanned exactly twice
     val first = toks.agg(
@@ -112,7 +112,7 @@ object TextQueries {
     import s.implicits._
     val toks = Tables(s, dir, "documents")
       .select($"doc_id",
-        explode(array_distinct(Text.tokens(Text.normalized($"text")))).as("tok"))
+        explode(array_distinct(Text.normTokens($"text"))).as("tok"))
     val dfreq = toks.groupBy($"tok").agg(count(lit(1)).as("df"))
     toks.join(dfreq, Seq("tok"))
       .groupBy($"doc_id")
@@ -206,7 +206,7 @@ object TextQueries {
     * per-paragraph lambda it would re-tokenize per paragraph (the same
     * per-element re-evaluation trap measured at ~50× in text_winnowing). */
   private def paraArray: Column =
-    element_at(transform(array(Text.tokens(Text.normalized(col("text")))), tk =>
+    element_at(transform(array(Text.normTokens(col("text"))), tk =>
       transform(sequence(lit(0), ((size(tk) + ParaW - 1) / ParaW).cast("int") - 1),
         g => array_join(slice(tk, g * ParaW + 1, lit(ParaW)), " "))), 1)
 
@@ -278,7 +278,7 @@ object TextQueries {
     // the tokenizer MUST be bound before any lambda references it: an
     // inline expression inside `transform`'s lambda body re-evaluates per
     // ELEMENT (measured ~50× per row = a 10 s sf0.1 key; bound, 1 s)
-    val digest = bound(Text.tokens(Text.normalized($"text"))) { toks =>
+    val digest = bound(Text.normTokens($"text")) { toks =>
     // gram hashes: hash60(tok_i .. tok_{i+k-1}) for i = 1..n-k+1
     // (sequence(1, hi) DESCENDS when hi < 1, so short docs guard to empty)
     val grams = when(size(toks) >= WinK, transform(
@@ -401,7 +401,7 @@ object TextQueries {
     // output sort's sampling pass each re-run the projection over the one
     // parquet split); counts are order-free
     val toks = SimilarityQueries.spread(Tables(s, dir, "documents"))
-      .select(explode(Text.tokens(Text.normalized($"text"))).as("tok"))
+      .select(explode(Text.normTokens($"text")).as("tok"))
     def bucket(i: Int, tok: Column) =
       pmod(Vectors.hash60(concat(lit(s"cms${i}_"), tok)), lit(CmsW.toLong))
     val sketch = toks

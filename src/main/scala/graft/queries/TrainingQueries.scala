@@ -66,7 +66,7 @@ object TrainingQueries {
     * wide fan-outs like 32 aggregates need a single-pass expression). */
   private val textRepetition: Q = (s, dir) => {
     import s.implicits._
-    val t = Text.tokens(Text.normalized($"text"))
+    val t = Text.normTokens($"text")
     val bigrams = tokenBigrams(t)
     // spread (r18): `Probe stages` measured two single-task CPU stages
     // (0.96 s + 0.61 s at sf0.1) — pure per-row projection over the one
@@ -130,7 +130,7 @@ object TrainingQueries {
   private def chunked(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables(s, dir, "documents")
-      .select($"doc_id", Text.tokens(Text.normalized($"text")).as("toks"))
+      .select($"doc_id", Text.normTokens($"text").as("toks"))
       .withColumn("n", size($"toks"))
       .select($"doc_id", $"toks", $"n",
         posexplode(sequence(lit(0), greatest($"n" - 1, lit(0)), lit(ChunkStride)))
@@ -279,7 +279,7 @@ object TrainingQueries {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
     val tf = docs
-      .select($"doc_id", explode(Text.tokens(Text.normalized($"text"))).as("term"))
+      .select($"doc_id", explode(Text.normTokens($"text")).as("term"))
       .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy($"term").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -445,7 +445,7 @@ object TrainingQueries {
   private val textVocab: Q = (s, dir) => {
     import s.implicits._
     val tf = Tables(s, dir, "documents")
-      .select($"doc_id", explode(Text.tokens(Text.normalized($"text"))).as("term"))
+      .select($"doc_id", explode(Text.normTokens($"text")).as("term"))
       .groupBy($"term")
       .agg(countDistinct($"doc_id").as("df"), count(lit(1)).as("tf_total"))
       .filter($"df" >= 2)
@@ -475,7 +475,7 @@ object TrainingQueries {
   private val textLmScore: Q = (s, dir) => {
     import s.implicits._
     val toks = Tables(s, dir, "documents")
-      .select($"doc_id", Text.tokens(Text.normalized($"text")).as("t"))
+      .select($"doc_id", Text.normTokens($"text").as("t"))
     val bigrams = toks.select($"doc_id", explode(tokenBigrams($"t")).as("bg"))
     val lmBi = bigrams.filter($"doc_id" % 50 === 0)
       .groupBy($"bg").agg(count(lit(1)).as("c12"))
@@ -544,7 +544,7 @@ object TrainingQueries {
   private def bpeWords(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables(s, dir, "documents")
-      .select(explode(Text.tokens(Text.normalized($"text"))).as("word"))
+      .select(explode(Text.normTokens($"text")).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("wc"))
       .filter(length($"word") >= 2)
   }
@@ -759,7 +759,7 @@ object TrainingQueries {
     // split, two consumers + the output sort's sampling pass); every
     // downstream aggregate is an order-free integer sum
     val toks = SimilarityQueries.spread(Tables(s, dir, "documents"))
-      .select($"doc_id", Text.tokens(Text.normalized($"text")).as("t"))
+      .select($"doc_id", Text.normTokens($"text").as("t"))
     // distinct hashed buckets per doc, computed inside the array before
     // the explode — presence semantics with no per-doc dedup shuffle
     val feats = toks.select($"doc_id",
@@ -851,7 +851,7 @@ object TrainingQueries {
     Tables(s, dir, "documents")
       .filter($"doc_id" < 10)
       .select($"doc_id",
-        posexplode(Text.tokens(Text.normalized($"text"))).as(Seq("pos", "tok")))
+        posexplode(Text.normTokens($"text")).as(Seq("pos", "tok")))
       .orderBy($"doc_id", $"pos")
   }
 

@@ -1,8 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.functions.SketchAgg
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.{MisraGriesAgg, SketchAgg}
 import graft.queries.TextQueries
 
 /** Misra–Gries heavy-hitter aggregate: the superset guarantee, the size
@@ -91,7 +97,7 @@ class SketchAggSpec extends SparkSpec {
       val n = data.size
       val parts = 1 + rnd.nextInt(24)
       val df = data.toDF("v").repartition(parts)
-      val cand = df.agg(SketchAgg.misraGriesLong($"v", k).as("c"))
+      val cand = df.agg(SketchAgg.misraGries($"v", k).as("c"))
         .head().getSeq[Long](0)
       assert(cand.size <= k, s"trial $trial: summary exceeded k=$k")
       assert(cand == cand.sorted, s"trial $trial: eval must emit sorted keys")
@@ -103,6 +109,35 @@ class SketchAggSpec extends SparkSpec {
         .filter { case (_, c) => c * k > n }.toMap
       assert(verified === exact,
         s"trial $trial (k=$k, parts=$parts, n=$n): $verified != $exact")
+    }
+  }
+
+  test("one aggregate: the child's type picks the output element type and " +
+      "the counter map, and a serialize/deserialize round trip keeps the counters") {
+    import spark.implicits._
+    def outType(df: org.apache.spark.sql.DataFrame): DataType =
+      df.agg(SketchAgg.misraGries($"v", 4).as("c")).schema("c").dataType
+    assert(outType(Seq("a", "b", "a").toDF("v")) == ArrayType(StringType, containsNull = false))
+    assert(outType(Seq(1L, 2L, 1L).toDF("v")) == ArrayType(LongType, containsNull = false))
+
+    val cases = Seq(
+      (StringType, Seq("x", "y", "x", "z", "x", "y").map(UTF8String.fromString),
+        "misra_gries", Seq("x", "y", "z").map(UTF8String.fromString)),
+      (LongType, Seq(7L << 32 | 8L, -3L, 7L << 32 | 8L, 5L, 7L << 32 | 8L, -3L),
+        "misra_gries_long", Seq(-3L, 5L, 7L << 32 | 8L)))
+    for ((t, input, name, sortedKeys) <- cases) {
+      val agg = MisraGriesAgg(BoundReference(0, t, nullable = true), k = 8)
+      assert(agg.dataType == ArrayType(t, containsNull = false))
+      assert(agg.prettyName == name)
+      val buf = input.foldLeft(agg.createAggregationBuffer())(
+        (b, v) => agg.update(b, InternalRow(v)))
+      assert(buf.isInstanceOf[mutable.LongMap[_]] == (t == LongType), s"$t counter map")
+      assert(buf.size == 3)
+      val back = agg.deserialize(agg.serialize(buf))
+      assert(back.isInstanceOf[mutable.LongMap[_]] == (t == LongType), s"$t after serde")
+      assert(back.toMap == buf.toMap, s"$t: counters changed in the round trip")
+      assert(agg.eval(back).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+        .toSeq[Any](t) == sortedKeys)
     }
   }
 }

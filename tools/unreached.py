@@ -7,15 +7,17 @@ in src/main or perfbench/src references.
 Report only: always exits 0. Comments are stripped before counting (string
 literals are kept, so a name used inside SQL text counts as referenced). A
 top-level `object`/`class`/`trait` counts as reached when its name appears
-in another file; a member `def` (declared at two-space indent) when its name
-appears anywhere except its own declaration. References from src/test are
-counted separately and printed next to each unreached symbol, so a symbol
-reached only by its own spec shows as `tests=N`.
+in another file, or in its own file outside its own body (a body runs from
+its declaration to the next top-level declaration), so an expression class
+that only its file's column face builds is reached; a member `def` (declared
+at two-space indent) when its name appears anywhere except its own
+declaration. References from src/test are counted separately and printed
+next to each unreached symbol, so a symbol reached only by its own spec
+shows as `tests=N`.
 
 Known false positives: `override`s and implementations of abstract members
 that Spark calls (Expression/aggregate APIs), the `SparkEntry.entry`
-driver contract, objects that only `runMain` starts (`graft.Probe`), and
-expression classes used only inside their own file.
+driver contract, and objects that only `runMain` starts (`graft.Probe`).
 """
 import os
 import re
@@ -92,11 +94,15 @@ def main():
     found = []
     for path, text in sorted(main_src.items()):
         rel = os.path.relpath(path, repo)
-        for no, line in enumerate(text.split("\n"), 1):
+        lines = text.split("\n")
+        starts = [i for i, line in enumerate(lines) if TYPE_DECL.match(line)]
+        for no, line in enumerate(lines, 1):
             t, d = TYPE_DECL.match(line), DEF_DECL.match(line)
             if t:
                 kind, name = t.group(1), t.group(2)
-                n = refs(name, program) - tally[path][name]
+                end = next((s for s in starts if s >= no), len(lines))
+                body = Counter(words.findall("\n".join(lines[no - 1:end])))
+                n = refs(name, program) - body[name]
             elif d:
                 kind, name = "def", d.group(1)
                 n = refs(name, program) - words.findall(line).count(name)
