@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * (sf0.01, 4 cpus: 13–17 s of Janino time summed over task threads, and
   * a pass ~30% longer); sized, a repeated pass compiles 6–30, the
   * multi-`countDistinct` stages whose generated source differs from run to
-  * run (ROADMAP item 6). A cached class retains ~35–40 KB of heap (its
+  * run (ROADMAP item 3). A cached class retains ~35–40 KB of heap (its
   * source, the cache key, and Janino's bytecode), so the medallion's set
   * costs ~13 MB and the full suite's ~170 MB. The cache is JVM-global and
   * takes its size from the session conf active when the first class is

@@ -8,9 +8,9 @@ import java.util.Comparator
   * only handles empty dirs), or earlier by [[deleteNow]] once its contents
   * are materialized elsewhere.
   *
-  * Per-process roots that outlive the JVM on purpose (`graft_incr_p<pid>`,
-  * `graft_e2e_p<pid>`, `graft_s8sync_p<pid>`: the DuckDB oracle reads them
-  * after the run) are never registered here. */
+  * Per-process roots that outlive the JVM on purpose ([[processRoot]]:
+  * `graft_incr_p<pid>`, `graft_e2e_p<pid>`, `graft_s8sync_p<pid>`; the
+  * DuckDB oracle reads them after the run) are never registered here. */
 object TempDirs {
 
   private val pending = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
@@ -31,6 +31,11 @@ object TempDirs {
     pending.remove(dir)
     delete(dir)
   }
+
+  /** `${java.io.tmpdir}/graft_<name>_p<pid>`, embedded in the oracle SQL
+    * this process dumps: concurrent processes never race each other. */
+  def processRoot(name: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${name}_p${ProcessHandle.current.pid}"
 
   private[graft] def isPending(dir: Path): Boolean = pending.contains(dir)
 

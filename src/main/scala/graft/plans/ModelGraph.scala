@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.util.concurrent.{ExecutorCompletionService, Executors, TimeUnit}
-
 import scala.collection.mutable
-import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,15 +98,11 @@ object ModelGraph {
   /** Materialize the graph under `base` honoring each model's
     * materialization — the `dbt run` analog.
     *
-    * Models run DEPENDENCY-DRIVEN (like `dbt run --threads`): each model
-    * starts as soon as its own `deps` have materialized and one of
-    * `parallelism` threads is free (a pool created per call, so its threads
-    * inherit the caller's Spark local properties); among ready models, the
-    * one heading the longest chain of models below it goes first.
-    * Concurrent writes overlap their stages across the cluster, and no
-    * model waits for an unrelated slower one. Results are identical to a
-    * sequential run: a model sees only its declared deps, and those are
-    * final when it starts.
+    * Models run DEPENDENCY-DRIVEN (like `dbt run --threads`) on
+    * [[graft.Overlap]]'s `parallelism` threads and failure contract: a
+    * model starts once its `deps` have landed, the one heading the longest
+    * chain below it first. Results equal a sequential run's: a model sees
+    * only its declared deps, final when it starts.
     *
     * Every landed model is a plain parquet directory `baseDir/<name>`
     * ([[graft.sources.ParquetFormat]]), re-read with the schema just
@@ -118,14 +111,7 @@ object ModelGraph {
     *
     * Cache contract: a [[View]] that two or more models read is persisted
     * for the run, so its plan runs once instead of once per reader, and is
-    * released (blocking unpersist) before `run` returns or throws.
-    *
-    * Failure contract: when a model throws, no model starts after it (its
-    * dependents never run), models already running finish, the cached
-    * views are released, and only then does `run` throw an exception that
-    * names the failed model and carries its cause (a second concurrent
-    * failure rides along as suppressed). No Spark job of the run is active
-    * once `run` has returned or thrown. */
+    * released (blocking unpersist) before `run` returns or throws. */
   def run(spark: SparkSession, models: Seq[Model],
       sources: Map[String, DataFrame], baseDir: String,
       parallelism: Int = 4): Map[String, DataFrame] = {
@@ -204,49 +190,16 @@ object ModelGraph {
     order.reverseIterator.foreach { m =>
       below(m.name) = readers(m.name).map(r => below(r.name) + 1).foldLeft(0)(math.max)
     }
-    val threads = math.max(1, parallelism)
-    val done = mutable.Map.empty[String, DataFrame] ++ sources
-    val cached = mutable.ArrayBuffer.empty[DataFrame]
-    val pool = Executors.newFixedThreadPool(threads)
-    val finished = new ExecutorCompletionService[(Model, Try[DataFrame])](pool)
-    var waiting = order // not started yet, in topological order
-    var running = 0
-    var failure: Option[Throwable] = None
-
-    def startReady(): Unit = {
-      val ready = waiting.filter(_.deps.forall(done.contains)).sortBy(m => -below(m.name))
-      ready.take(threads - running).foreach { m =>
-        waiting = waiting.filterNot(_ eq m)
-        val deps = m.deps.map(d => d -> done(d)).toMap
-        finished.submit(() => m -> Try(materialize(m, deps)))
-        running += 1
+    val cached = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]
+    val tasks = order.map { m =>
+      graft.Overlap.Task[DataFrame](m.name, m.deps.filterNot(sources.contains), below(m.name)) { done =>
+        val df = materialize(m, m.deps.map(d => d -> sources.getOrElse(d, done(d))).toMap)
+        // a frame the caller already cached stays the caller's to release
+        if (shared(m.name) && df.storageLevel == StorageLevel.NONE) cached.add(df.persist())
+        df
       }
     }
-
-    try {
-      startReady()
-      while (running > 0) {
-        val (m, result) = finished.take().get()
-        running -= 1
-        result match {
-          case Success(df) =>
-            // a frame the caller already cached stays the caller's to release
-            if (shared(m.name) && df.storageLevel == StorageLevel.NONE) cached += df.persist()
-            done(m.name) = df
-            if (failure.isEmpty) startReady()
-          case Failure(e) => failure match {
-            case None => failure = Some(
-              new RuntimeException(s"ModelGraph.run: model ${m.name} failed: $e", e))
-            case Some(first) => first.addSuppressed(e)
-          }
-        }
-      }
-      failure.foreach(throw _)
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      cached.foreach(_.unpersist(blocking = true))
-    }
-    done.toMap -- sources.keys
+    try graft.Overlap.run("ModelGraph.run: model", parallelism, tasks)
+    finally cached.forEach(_.unpersist(blocking = true))
   }
 }

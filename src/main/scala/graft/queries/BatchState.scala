@@ -15,17 +15,12 @@ import graft.sources.ParquetFormat
   * E2EQueries), so a bug in the state WRITE — not just the probe math —
   * lands in the hash compare.
   *
-  * The root is PER-PROCESS (`graft_incr_p<pid>`): a bench pass overlapping
-  * the correctness run can never wipe or race the artifacts the oracle
-  * reads, and Verify dumps oracle SQL embedding its own root. Each key
+  * The root is PER-PROCESS ([[graft.TempDirs.processRoot]]). Each key
   * overwrites its own subdir per call, so reruns are deterministic.
   */
 private[graft] object BatchState {
 
-  /** Per-process state root — embedded verbatim in oracle SQL generated
-    * by the same process. */
-  val root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_incr_p${ProcessHandle.current.pid}"
+  val root: String = graft.TempDirs.processRoot("incr")
 
   /** Write `df` as `name`'s persisted batch-1 state, then read it back —
     * every downstream consumer sees the LANDED bytes, not the plan that

@@ -35,9 +35,8 @@ import graft.sources.{DataGen, ParquetFormat, Sources}
   * DuckDB certifies here is every byte AFTER the generator.
   *
   * Harness-stability contract (VERDICT r8 #2 / ADVICE r8):
-  *  - the landing root is PER-PROCESS (`graft_e2e_p<pid>`), so a bench
-  *    pass overlapping the correctness run can never wipe or race the
-  *    artifacts the oracle reads — each process replays its own files;
+  *  - the landing root is PER-PROCESS ([[graft.TempDirs.processRoot]]),
+  *    so each process replays its own files;
   *  - every landed table is written as ONE file (`coalesce(1)` before
   *    the writers — also the reference's one-file-per-table landing,
   *    0_ingest_historic_synthetic_data.py:266-268), so DuckDB never
@@ -50,20 +49,16 @@ import graft.sources.{DataGen, ParquetFormat, Sources}
   * increment is too) — every operator in the chain is the already-proven
   * distributed path (envelope explode, narrow normalize, one dedup
   * shuffle per table, broadcast anti-join upsert, broadcast dim joins +
-  * one mart agg shuffle); the 8 table ingests fan out as concurrent
-  * Spark jobs exactly like the reference DAG's parallel tasks.
+  * one mart agg shuffle); the 8 table ingests fan out on [[graft.Overlap]]
+  * as concurrent Spark jobs, like the reference DAG's parallel tasks.
   */
 object E2EQueries {
 
   private type Q = (SparkSession, String) => DataFrame
 
-  /** Per-process landing/warehouse root — embedded verbatim in the oracle
-    * SQL generated by the SAME process (Verify runs the key, then dumps
-    * the oracle), wiped and rewritten at key start so in-process reruns
-    * are deterministic. Concurrent processes (bench vs correctness) land
-    * at different roots and cannot race each other's artifacts. */
-  private val Root: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_e2e_p${ProcessHandle.current.pid}"
+  /** Landing/warehouse root, wiped and rewritten at key start so
+    * in-process reruns are deterministic. */
+  private val Root: String = graft.TempDirs.processRoot("e2e")
 
   // ------------------------------------------------------------ schemas --
   // Landing-side record schemas: the generator's column contract
@@ -166,11 +161,9 @@ object E2EQueries {
       Seq("EVENT_ID"), Seq("CREATED_AT", "LOADED_AT")))
 
   /** One daily iteration: land the generated batch (one file per table),
-    * then ingest all 8 entities into the parquet warehouse. The ingests
-    * are independent — run them as concurrent Spark jobs, the same
-    * fan-out the reference DAG schedules as parallel Airflow tasks
-    * (ingest wall is job-overhead-bound, not compute-bound, so overlap
-    * is the whole win). */
+    * then ingest all 8 entities into the parquet warehouse, as concurrent
+    * Spark jobs on [[graft.Overlap]] — the reference DAG's parallel Airflow
+    * tasks (ingest wall is job-overhead-bound, so overlap is the win). */
   private def runDay(s: SparkSession, batch: Map[String, DataFrame],
       batchId: String, day: String): Unit = {
     DataGen.writeAll(batch.view.mapValues(_.coalesce(1)).toMap,
@@ -185,10 +178,9 @@ object E2EQueries {
         if (t.json) "json_envelope" else "csv", batchId, loadedAt, t.types))
       Ingest.ingest(s"$Root/wh/${t.name}", Seq(norm), t.pks, t.order.map(col))
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.traverse(tables)(t => Future(ingestOne(t))), Duration.Inf)
+    // one thread per table: the 8 ingests are small, job-overhead-bound jobs
+    graft.Overlap.all("E2EQueries.runDay: ingest", tables.size,
+      tables.map(t => t.name -> (() => ingestOne(t))))
   }
 
   private val e2eGenerateIngest: Q = (s, dir) => {
@@ -259,11 +251,8 @@ object E2EQueries {
 
   // ------------------------------------------------------ S8 table sync --
 
-  /** Per-process destination root for [[s8SyncFingerprint]] — same
-    * isolation contract as [[Root]]: a bench pass overlapping the
-    * correctness run syncs into its own store. */
-  private val SyncRoot: String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_s8sync_p${ProcessHandle.current.pid}"
+  /** Destination root for [[s8SyncFingerprint]]. */
+  private val SyncRoot: String = graft.TempDirs.processRoot("s8sync")
 
   /** S8 warehouse→warehouse sync, oracle-graded (VERDICT r11 #7 — the one
     * §2.1 component that was graded only by specs). Runs the REAL

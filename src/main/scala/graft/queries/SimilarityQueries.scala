@@ -1165,21 +1165,6 @@ object SimilarityQueries {
     cosineScored(broadcast(q).join(n, $"query_id" =!= $"neighbor_id"))
   }
 
-  /** Run two INDEPENDENT eager-pipeline builders on concurrent driver
-    * threads (r18, guide §2.6 "overlap independent jobs"): each k-means
-    * training is a chain of small barrier jobs (per-iteration
-    * localCheckpoints), so overlapping two chains back-fills the executor
-    * slots the other chain's barriers leave idle. The computations share
-    * no state — concurrency cannot change any value. */
-  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fa = Future(a)
-    val fb = Future(b)
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-  }
-
   /** Cosine of a candidate pair carrying the vectors `ea`/`eb` and their
     * precomputed norms `na`/`nb` — the score of the pairwise near-dup keys. */
   private def pairCos: org.apache.spark.sql.Column =
@@ -1400,12 +1385,12 @@ object SimilarityQueries {
     val split = 3L * corpusCount(s, dir) / 4L
     val emb = spread(Tables(s, dir, "embeddings"))
     val q = emb.select($"vec_id".as("id"), KMeans.quantize($"embedding").as("qv"))
-    // the two trainings are independent — overlap their barrier chains
-    // (r18, guide §2.6 via concurrently)
-    val (frozen, fresh) = concurrently(
-      KMeans.fit(emb.filter($"vec_id" < split), "vec_id", "embedding",
-        IvfCentroids, IvfTrainIters),
-      KMeans.fit(emb, "vec_id", "embedding", IvfCentroids, IvfTrainIters))
+    // two independent chains of small barrier jobs: overlapped on two
+    // threads, each back-fills the slots the other's barriers leave idle
+    val (frozen, fresh) = graft.Overlap.both("ann_ivf_drift: training",
+      "frozen" -> (() => KMeans.fit(emb.filter($"vec_id" < split), "vec_id", "embedding",
+        IvfCentroids, IvfTrainIters)),
+      "fresh" -> (() => KMeans.fit(emb, "vec_id", "embedding", IvfCentroids, IvfTrainIters)))
     val pred = $"id" >= split && $"id" < split + DriftQ
     val approx =
       trainedProbeTop3(s, q, frozen, pred).withColumn("method", lit("frozen"))
@@ -1637,10 +1622,10 @@ object SimilarityQueries {
     val emb = spread(Tables(s, dir, "embeddings"))
     val q = emb.select($"vec_id".as("id"), KMeans.quantize($"embedding").as("qv"))
     // the coarse quantizer and the 8 subspace codebooks train
-    // independently — overlap their barrier chains (r18, guide §2.6)
-    val (coarse, pq) = concurrently(
-      KMeans.fit(emb, "vec_id", "embedding", IvfCentroids, IvfTrainIters),
-      pqParts(s, q))
+    // independently — overlap their barrier chains on two threads
+    val (coarse, pq) = graft.Overlap.both("ann_ivfpq_recall: training",
+      "coarse" -> (() => KMeans.fit(emb, "vec_id", "embedding", IvfCentroids, IvfTrainIters)),
+      "pq" -> (() => pqParts(s, q)))
     val (codesArr, lutArr) = pq
     val queries = q.filter($"id" < 10).select($"id".as("query_id"), $"qv".as("qq"))
     val scored = ivfCandidates(q, coarse, queries)

@@ -354,21 +354,17 @@ object DataGen {
     * output_formats): envelope JSON for customers/products/orders/reviews,
     * header CSV for categories/subcategories/order_items/interactions —
     * exactly what [[Sources.readJsonEnvelope]]/[[Sources.readCsv]] ingest.
-    * Per-table writes are independent — they run as concurrent Spark jobs
-    * (the daily-loop wall is job-overhead-bound, so overlap is the win,
-    * same as the ingest fan-out in E2EQueries.runDay). */
+    * Per-table writes run as concurrent Spark jobs on [[graft.Overlap]],
+    * one thread per table: the daily-loop wall is job-overhead-bound. */
   def writeAll(data: Map[String, DataFrame], dir: String,
       generatedAt: String): Unit = {
     val jsonTables = Set("customers", "products", "orders", "reviews")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Await.result(Future.traverse(data.toSeq) { case (name, df) =>
-      Future {
+    graft.Overlap.all("DataGen.writeAll: table", data.size, data.toSeq.map { case (name, df) =>
+      name -> { () =>
         if (jsonTables(name))
           Writers.writeJsonEnvelope(df, name, s"$dir/json/$name.json", generatedAt)
         else Writers.writeCsv(df, s"$dir/csv/$name")
       }
-    }, Duration.Inf)
+    })
   }
 }

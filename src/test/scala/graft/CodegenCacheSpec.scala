@@ -15,7 +15,7 @@ class CodegenCacheSpec extends SparkSpec {
 
   /** Classes a steady build may still compile: the few multi-`countDistinct`
     * stages whose generated source differs from run to run (measured 6–30
-    * at sf0.001–0.01; ROADMAP item 6). */
+    * at sf0.001–0.01; ROADMAP item 3). */
   private val MaxRecompiles = 60
 
   private def build(): Unit =

@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 /** The scale-fence policy module: the one compare at its boundary, the
   * override read, the shared refusal wording, and a source scan that keeps
   * every budget key declared in [[Fence]] alone. */
@@ -48,28 +44,17 @@ class FenceSpec extends SparkSpec {
 
   test("every budget is declared once in Fence, under its own key") {
     val keys = "Budget\\(\"(graft\\.[A-Za-z]+)\"".r
-      .findAllMatchIn(read(fenceSource)).map(_.group(1)).toList
+      .findAllMatchIn(MainSources.read(MainSources.root.resolve("graft/Fence.scala")))
+      .map(_.group(1)).toList
     assert(keys.size == 10 && keys.distinct == keys, s"budget keys: $keys")
   }
 
   test("no graft.* conf key or system property is read outside Fence.scala") {
     val confLiteral = "\"graft\\.[a-z]".r
-    val offenders = mainSources.filterNot(_ == fenceSource).flatMap { p =>
-      read(p).linesIterator.zipWithIndex.collect {
-        case (line, i) if confLiteral.findFirstIn(line).nonEmpty ||
-            line.contains("sys.props") => s"$p:${i + 1}: ${line.trim}"
-      }
+    val offenders = MainSources.offenders("graft/Fence.scala") { line =>
+      confLiteral.findFirstIn(line).nonEmpty || line.contains("sys.props")
     }
     assert(offenders.isEmpty,
       s"declare budgets in Fence.scala and read them through Fence:\n${offenders.mkString("\n")}")
   }
-
-  private val mainRoot = Paths.get("src/main/scala")
-  private val fenceSource = mainRoot.resolve("graft/Fence.scala")
-  private def mainSources: Seq[Path] = {
-    val walk = Files.walk(mainRoot)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
-  private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 }
